@@ -82,7 +82,8 @@ def build(jars, srcs):
     argfile.write_text("\n".join(str(p) for p in srcs) + "\n")
     log(f"compiling {len(srcs)} sources")
     t0 = time.time()
-    r = subprocess.run(["java", "-Xss8m", "-Xmx2g", "-cp", f"{jars}/*", "scala.tools.nsc.Main",
+    r = subprocess.run(["java", "-Xss8m", "-Xmx2g", "-XX:-UsePerfData", f"-Djava.io.tmpdir={OUT / 'tmp'}",
+                        "-cp", f"{jars}/*", "scala.tools.nsc.Main",
                         "-usejavacp", "-nowarn", "-d", str(tmp), f"@{argfile}"],
                        stdout=sys.stderr, stderr=sys.stderr, timeout=840)
     if r.returncode != 0:
@@ -128,8 +129,7 @@ def main():
 
     srcs = sources()
     jars = jar_dir()
-    OUT.mkdir(exist_ok=True)
-    (OUT / "tmp").mkdir(exist_ok=True)
+    (OUT / "tmp").mkdir(parents=True, exist_ok=True)
     classes = build(jars, srcs)
     cores = len(os.sched_getaffinity(0))
     work = OUT / "work" / f"{a.workload}-{a.seed}"
