@@ -172,7 +172,10 @@ def main():
         print(f"{k:34s} {m['value']:14.6g} {m['unit']}")
     for k, (v, unit) in extra.items():
         print(f"{k:34s} {v:14.6g} {unit}")
-    print(json.dumps({"correct": failed == 0, "attempted": attempted, "failed": failed,
+    # a traced run is also incorrect when its layers do not add up to
+    # Extract.apply within 10% (README.md, trace.residual_ratio)
+    correct = failed == 0 and r.get("residual_ok", True)
+    print(json.dumps({"correct": correct, "attempted": attempted, "failed": failed,
                       "metrics": metrics}))
 
 

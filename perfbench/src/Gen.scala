@@ -99,6 +99,9 @@ object Gen {
 
   /** Common-Crawl-style day-partitioned pages: mostly 10-100 KB HTML (log-
     * uniform), with gzip-wrapped pages, WARC files and plain text beside them.
+    * The 90/4/3/3 split is an assumption, not a measured crawl mix: HTML
+    * dominates a web crawl, and the other three are kept small but frequent
+    * enough that every run extracts each of them dozens of times.
     */
   def crawl(seed: Long): Seq[Doc] = {
     val rng = new SplittableRandom(seed * 0x9E3779B97F4A7C15L + 1)
@@ -127,22 +130,31 @@ object Gen {
     }
   }
 
+  /** The office_docs kinds, each drawn as often as `CorpusGen.kindOf` routes
+    * ids to it: the seed corpus's own mix (FIXTURES.md §2) restricted to its
+    * non-HTML document kinds, i.e. pdf 12, docx 5, image 6, scanned_pdf 2 and
+    * one each for doc, odt, odp, xls, ppt, eml and epub, out of 32.
+    */
+  private val OfficeKinds = Seq("pdf", "scanned_pdf", "docx", "doc", "odt", "odp", "xls", "ppt", "image", "eml", "epub")
+  /** Archives are not in that mix (the corpus builds them for a dedicated
+    * query), so their share is an assumption: one container type (zip, tar,
+    * 7z, rar) as often as one of the single-residue kinds, 4 out of 36.
+    */
+  private val ArchiveWeight = 4
+
   /** File-based users' mix: PDFs (text, compressed, tagged, scanned), office
     * files, OCR images, archives, mail and EPUB at seed-table text sizes.
     */
   def office(seed: Long): Seq[Doc] = {
     val rng = new SplittableRandom(seed * 0x9E3779B97F4A7C15L + 2)
     val ids = new Ids(rng)
-    // (kind, weight in percent); "pdf" ids rotate compressed / tagged / annotated
-    val mix = Seq("pdf" -> 20, "scanned_pdf" -> 5, "docx" -> 8, "odt" -> 5, "xls" -> 5,
-      "ppt" -> 5, "doc" -> 5, "image" -> 20, "archive" -> 15, "eml" -> 6, "epub" -> 6)
-    val cum = mix.scanLeft(0)(_ + _._2).tail
+    // "pdf" ids rotate compressed / tagged / annotated
+    val residues = OfficeKinds.flatMap(residuesOf)
     Seq.fill(Sizes.OfficeDocs) {
-      val u = rng.nextInt(100)
-      val kind = mix(cum.indexWhere(u < _))._1
+      val archive = rng.nextInt(residues.size + ArchiveWeight) >= residues.size
       val lang = CrawlLangs(rng.nextInt(CrawlLangs.length))
       val text = words(rng, 20 + rng.nextInt(60))
-      if (kind == "archive") {
+      if (archive) {
         val id = ids.next(HtmlResidues)
         val container = Seq("zip", "tar", "7z", "rar")(((id / 100) % 4).toInt)
         // archivePayload's documented closed form (the x_archive oracle)
@@ -155,7 +167,7 @@ object Gen {
             case _     => MimeSniffer.Rar
           })
       } else {
-        val id = ids.next(residuesOf(kind))
+        val id = ids.next(residues)
         corpusDoc(id, 0, text, lang, CorpusGen.payload(id, text, lang))
       }
     }
@@ -177,14 +189,14 @@ object Gen {
     }
     parquet(s"$out/expected/part-0.parquet",
       "message expected { required binary url (STRING); required binary text (STRING); " +
-      "required int32 status; required binary content_type (STRING); required binary warc_day (STRING); }") { (f, w) =>
+      "required int32 status; required binary content_type (STRING); }") { (f, w) =>
       docs.foreach(d => w.write(f.newGroup().append("url", d.url).append("text", d.text).append("status", d.status)
-        .append("content_type", d.contentType).append("warc_day", dayName(d.day))))
+        .append("content_type", d.contentType)))
     }
     writeMix(docs.map(_.payload), out)
   }
 
-  def dayName(d: Int): String = f"2024-01-${d + 1}%02d"
+  private def dayName(d: Int): String = f"2024-01-${d + 1}%02d"
   private def dayMicros(d: Int, i: Int): Long = (1704067200L + d * 86400L + (i * 7919L) % 86400L) * 1000000L
 
   /** Sniffed format → (docs, bytes); printed and kept as `mix.tsv`. */
@@ -194,6 +206,13 @@ object Gen {
     val lines = mix.map { case (f, n, b) => s"$f\t$n\t$b" }
     Files.write(Paths.get(s"$out/mix.tsv"), (("format\tdocs\tbytes" +: lines).mkString("\n") + "\n").getBytes(UTF_8))
     System.err.println("[perfbench] format mix (format, docs, bytes):\n  " + lines.mkString("\n  "))
+  }
+
+  /** 0 until n in a seeded (Fisher-Yates) order. */
+  private def shuffled(n: Int, rng: SplittableRandom): Array[Int] = {
+    val a = Array.range(0, n)
+    for (i <- n - 1 to 1 by -1) { val j = rng.nextInt(i + 1); val t = a(i); a(i) = a(j); a(j) = t }
+    a
   }
 
   /** Already-extracted text rows with injected exact duplicates, near
@@ -218,11 +237,7 @@ object Gen {
     val vecs = Array.fill(n)(vec())
     for (i <- 0 until n) { langs(i) = lang(); texts(i) = text(langs(i), 80 + rng.nextInt(120)) }
     // disjoint injection slots over a seeded permutation of row positions
-    val perm = {
-      val a = Array.range(0, n)
-      for (i <- n - 1 to 1 by -1) { val j = rng.nextInt(i + 1); val t = a(i); a(i) = a(j); a(j) = t }
-      a.iterator
-    }
+    val perm = shuffled(n, rng).iterator
     val truth = Seq.newBuilder[String]
     for (_ <- 0 until Sizes.DupGroups) {
       val g = Seq.fill(2 + rng.nextInt(2))(perm.next())
@@ -251,7 +266,7 @@ object Gen {
       truth += s"sem\t${math.min(a, b)},${math.max(a, b)}"
     }
     // the seed also fixes the row order
-    val order = Array.range(0, n).sortBy(_ => rng.nextLong())
+    val order = shuffled(n, rng)
     val labels = Array.fill(n)(rng.nextInt(Sizes.Cells))
     for (file <- 0 until files)
       parquet(s"$out/input/part-$file.parquet",
@@ -321,7 +336,7 @@ object Formats {
     case _                    => "other"
   }
   /** Every format the crawl and office_docs mixes can sniff to. */
-  val All: Seq[String] = Seq("html", "plain", "gzip", "warc", "pdf", "docx", "odt", "cfb", "bmp",
+  val All: Seq[String] = Seq("html", "plain", "gzip", "warc", "pdf", "docx", "odt", "odp", "cfb", "bmp",
     "png", "jpeg", "gif", "tiff", "zip", "tar", "7z", "rar", "xz", "bzip2", "zstd", "lz4", "snappy",
     "eml", "epub")
 }

@@ -4,7 +4,11 @@ import extractous.gen.CorpusGen
 import org.apache.spark.PerfbenchStats
 import org.apache.spark.sql.SparkSession
 
-import java.lang.management.ManagementFactory
+import com.sun.management.GarbageCollectionNotificationInfo
+
+import java.lang.management.{ManagementFactory, MemoryType}
+import javax.management.{Notification, NotificationEmitter, NotificationListener}
+import javax.management.openmbean.CompositeData
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -12,7 +16,8 @@ import scala.jdk.CollectionConverters._
   *
   *   1. set-up: SparkSession, open the input table, extract the first
   *      document (`first_doc_ms` marks the end of set-up);
-  *   2. leg A: closed-loop passes at `local[cores]`, about 40% of the budget;
+  *   2. leg A: one untimed warm-up pass, which also samples the live heap,
+  *      then closed-loop passes at `local[cores]`, about 40% of the budget;
   *   3. leg B (untraced only): `Extract.apply` latency from one thread,
   *      25% of the budget, with the Spark session stopped;
   *   4. leg C: the same passes at `local[1]`, about 35% of the budget;
@@ -81,7 +86,10 @@ object Main {
 
     // ---- leg A: local[cores], closed loop --------------------------------
     phase("expected values loaded")
-    account(w.pass(spark, full = false)) // warm-up: JIT, file listing caches
+    // warm-up (JIT, file listing caches), untimed, so it also samples the
+    // live heap
+    val heap = new LiveHeap
+    heap.during(everyMs = 200)(account(w.pass(spark)))
     phase("warm-up pass done")
     val legA = mutable.ArrayBuffer.empty[(PassOut, Boolean)]
     val nA = passes(seconds * 0.4, w.passSeconds._1)
@@ -91,7 +99,7 @@ object Main {
       // between the two halves is the tracing overhead
       val listen = trace && (legA.size % 4 == 0 || legA.size % 4 == 3)
       if (listen) { stats.reset(); spark.sparkContext.addSparkListener(stats) }
-      val p = account(w.pass(spark, full = true))
+      val p = account(w.pass(spark))
       if (listen) {
         PerfbenchStats.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(stats)
@@ -100,7 +108,7 @@ object Main {
       legA += ((p, listen))
       System.err.println(f"[perfbench] pass A${legA.size}: ${p.docs} docs in ${p.seconds}%.3f s${if (listen) " (listener on)" else ""}")
     }
-    val peakOldGen = if (trace) 0L else liveOldGen()
+    val peakLive = heap.stop()
     val docsPerS = rate(legA.filterNot(_._2).map(_._1))
     phase("leg A done")
 
@@ -116,7 +124,7 @@ object Main {
     phase("local[1] session up")
     val legC = mutable.ArrayBuffer.empty[PassOut]
     while (legC.size < passes(seconds * 0.35, w.passSeconds._2)) {
-      legC += account(w.pass(spark, full = false))
+      legC += account(w.pass(spark))
       System.err.println(f"[perfbench] pass C${legC.size}: ${legC.last.docs} docs in ${legC.last.seconds}%.3f s")
     }
     val docsPerS1 = rate(legC)
@@ -128,7 +136,7 @@ object Main {
       out("docs_per_s_1core") = docsPerS1
       out("doc_lat_p50_us") = l.p50Us
       out("doc_lat_p999_us") = l.p999Us
-      out("peak_live_heap_mb") = peakOldGen / 1e6
+      out("peak_live_heap_mb") = peakLive / 1e6
       out("latency_calls") = l.calls
       out("latency_beyond_p999") = l.beyondP999
     } else {
@@ -136,8 +144,12 @@ object Main {
       val layer = w.layers(spark)
       layer("trace.overhead_ratio") = 1.0 - traced / docsPerS
       layer("spark.par_eff") = docsPerS / (cores * docsPerS1)
-      if (math.abs(layer.getOrElse("trace.residual_ratio", 0.0)) > 0.1)
-        System.err.println(s"[perfbench] warning: layer sum is off Extract.apply by ${layer("trace.residual_ratio")}")
+      // the sum-of-stages check: a traced run whose layers miss more than
+      // 10% of Extract.apply's CPU is reported as incorrect
+      val residual = layer.getOrElse("trace.residual_ratio", 0.0)
+      out("residual_ok") = math.abs(residual) <= 0.1
+      if (math.abs(residual) > 0.1)
+        System.err.println(s"[perfbench] error: layer sum is off Extract.apply by $residual (limit 0.1)")
       out("layers") = mutable.LinkedHashMap(LayerNames.all.map(l => l._1 -> layer.getOrElse(l._1, 0.0)): _*)
       out("layer_units") = mutable.LinkedHashMap(LayerNames.all.map(l => l._1 -> l._2): _*)
     }
@@ -148,28 +160,65 @@ object Main {
     spark.stop()
     Json.write(resultFile, out)
   }
+}
 
-  /** Largest old-generation occupancy after any collection so far, in bytes;
-    * a full collection first, so the value includes the live set at the end
-    * of leg A.
-    */
-  def liveOldGen(): Long = {
+/** Peak live heap, in bytes: heap occupancy at the end of each full
+  * collection, from the collectors' notifications, from construction until
+  * `stop`. Young collections are not counted: the old generation they
+  * leave holds tenured garbage, which grows with promotion timing rather
+  * than with what the program keeps. `during` forces a full collection
+  * every `everyMs` while a pass runs, so memory held only within a pass (a
+  * broadcast, a shuffle buffer) shows; `stop` forces one more, for what
+  * stays live across passes.
+  */
+final class LiveHeap extends NotificationListener {
+  private val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+    .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+  private val emitters = ManagementFactory.getGarbageCollectorMXBeans.asScala.collect { case e: NotificationEmitter => e }
+  private var peak = 0L
+  private var seen = 0L
+  emitters.foreach(_.addNotificationListener(this, null, null))
+
+  def handleNotification(n: Notification, handback: AnyRef): Unit =
+    if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+      val info = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
+      if (info.getGcAction == "end of major GC") {
+        val used = info.getGcInfo.getMemoryUsageAfterGc.asScala.collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
+        synchronized { peak = math.max(peak, used); seen += 1; notifyAll() }
+      }
+    }
+
+  def during[A](everyMs: Long)(f: => A): A = {
+    @volatile var running = true
+    val sampler = new Thread(() => while (running) { Thread.sleep(everyMs); if (running) System.gc() }, "perfbench-live-heap")
+    sampler.setDaemon(true)
+    sampler.start()
+    try f finally { running = false; sampler.interrupt(); sampler.join() }
+  }
+
+  def stop(): Long = {
+    val before = synchronized(seen)
     System.gc()
-    ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(p => p.getName.contains("Old Gen") || p.getName.contains("Tenured"))
-      .flatMap(p => Option(p.getCollectionUsage)).map(_.getUsed).foldLeft(0L)(math.max)
+    // notifications arrive on another thread; wait for the forced one
+    val until = System.currentTimeMillis() + 5000
+    synchronized { while (seen == before && System.currentTimeMillis() < until) wait(100) }
+    emitters.foreach(_.removeNotificationListener(this))
+    synchronized {
+      System.err.println(s"[perfbench] live heap: $seen full collections observed")
+      peak
+    }
   }
 }
 
 /** One workload: its first-document probe, its closed-loop pass and its
-  * checks. `full = false` is the pass the `local[1]` leg repeats.
+  * checks. Every leg runs the same pass.
   */
 trait Workload {
   /** Typical seconds of one leg-A and one leg-C pass on a 4-vCPU host. */
   def passSeconds: (Double, Double)
   def firstDoc(spark: SparkSession): Unit
   def prepare(spark: SparkSession): Unit
-  def pass(spark: SparkSession, full: Boolean): Main.PassOut
+  def pass(spark: SparkSession): Main.PassOut
   def latencyDocs(spark: SparkSession): Array[Latency.Doc]
   /** Reads the listener after a traced pass of leg A. */
   def observe(stats: PerfbenchStats, p: Main.PassOut): Unit

@@ -86,8 +86,8 @@ object SparkTotals {
   */
 abstract class ExtractionWorkload(protected val data: String) extends Workload {
   protected val input = s"$data/input"
-  /** url → (xxhash64 of expected text, status, content type, day). */
-  protected var expected: Map[String, (Long, Int, String, String)] = Map.empty
+  /** url → (xxhash64 of expected text, status, content type). */
+  protected var expected: Map[String, (Long, Int, String)] = Map.empty
   protected val totals = new SparkTotals
   protected var timedStartMs = 0L
   protected var timedEndMs = 0L
@@ -96,17 +96,17 @@ abstract class ExtractionWorkload(protected val data: String) extends Workload {
     xf.extractFrame(spark.read.parquet(input).limit(1), CorpusGen.flagshipConfig).select("status").collect()
 
   def prepare(spark: SparkSession): Unit =
-    expected = hashed(spark.read.parquet(s"$data/expected"), "warc_day")
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getInt(2), r.getString(3), r.getString(4)))).toMap
+    expected = hashed(spark.read.parquet(s"$data/expected"))
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getInt(2), r.getString(3)))).toMap
 
-  protected def hashed(df: DataFrame, extra: String*) =
-    df.select(Seq(col("url"), xxhash64(col("text")), col("status"), col("content_type")) ++ extra.map(col): _*).collect()
+  protected def hashed(df: DataFrame) =
+    df.select(col("url"), xxhash64(col("text")), col("status"), col("content_type")).collect()
 
   /** Rows of `got` (url, hash, status, content type) that differ from
     * `want`, plus expected rows that are missing.
     */
   protected def mismatches(got: Array[org.apache.spark.sql.Row],
-      want: Map[String, (Long, Int, String, String)]): Long = {
+      want: Map[String, (Long, Int, String)]): Long = {
     val seen = mutable.HashSet.empty[String]
     val bad = got.count { r =>
       seen += r.getString(0)
@@ -197,23 +197,20 @@ object Decomposition {
 }
 
 final class Crawl(dataDir: String) extends ExtractionWorkload(dataDir) {
-  val passSeconds = (2.5, 1.1)
+  val passSeconds = (2.5, 3.3)
   private var passNo = 0
   private var snapshots = 0
-  /** The `local[1]` leg re-runs the first commit group only. */
-  private val lastSubsetDay = Gen.dayName(Sizes.CrawlGroupDays - 1)
   private val jobTotals = mutable.Map.empty[String, Double].withDefaultValue(0.0)
 
-  def pass(spark: SparkSession, full: Boolean): Main.PassOut = {
+  def pass(spark: SparkSession): Main.PassOut = {
     passNo += 1
     val table = s"$data/tables/t$passNo"
     val (summary, secs) = timed(ExtractJob.run(spark, input, table, CorpusGen.flagshipConfig,
-      groupSize = Sizes.CrawlGroupDays, toDay = if (full) None else Some(lastSubsetDay)))
+      groupSize = Sizes.CrawlGroupDays))
     snapshots = summary.snapshots.size
-    val want = if (full) expected else expected.filter(_._2._4 <= lastSubsetDay)
-    val bad = mismatches(hashed(new SnapshotTable(table).read(spark)), want)
+    val bad = mismatches(hashed(new SnapshotTable(table).read(spark)), expected)
     Dirs.delete(table)
-    Main.PassOut(want.size, secs, bad)
+    Main.PassOut(expected.size, secs, bad)
   }
 
   def observe(stats: PerfbenchStats, p: Main.PassOut): Unit = {
@@ -252,7 +249,7 @@ final class Crawl(dataDir: String) extends ExtractionWorkload(dataDir) {
 
 final class OfficeDocs(dataDir: String) extends ExtractionWorkload(dataDir) {
   val passSeconds = (0.6, 0.75)
-  def pass(spark: SparkSession, full: Boolean): Main.PassOut = {
+  def pass(spark: SparkSession): Main.PassOut = {
     val (got, secs) = timed(hashed(xf.extractFrame(spark.read.parquet(input), CorpusGen.flagshipConfig)))
     Main.PassOut(expected.size, secs, mismatches(got, expected))
   }
@@ -309,7 +306,7 @@ final class Curate(data: String) extends Workload {
     d.join(sem.filter(col("kept") === 1).select(col("id")), Seq("id"), "left_semi").select("id", "lang_pred")
   }
 
-  def pass(spark: SparkSession, full: Boolean): Main.PassOut = {
+  def pass(spark: SparkSession): Main.PassOut = {
     passStartMs = System.currentTimeMillis()
     val (kept, secs) = Timing.seconds(pipeline(spark).select("id").collect().map(_.getLong(0)).toSet)
     passEndMs = System.currentTimeMillis()
