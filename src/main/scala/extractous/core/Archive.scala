@@ -6,16 +6,6 @@ import extractous.ocr.Ocr
 import extractous.sniff.MimeSniffer
 import extractous.text.{TextEmitter, XmlEmitter}
 
-/** Archive recursion (Tika-style): ZIP and ustar TAR containers extract as
-  * the concatenation of their members' extracted text, in archive order —
-  * each member re-enters the full sniff→dispatch pipeline, sharing the
-  * wrapper nesting budget with gzip. A member that fails is skipped and the
-  * first failure recorded as a `" <- "` context frame; an archive that parses
-  * but yields no extractable member fails the row with a status — the
-  * "wrong text never" posture everywhere else in this engine. The reference
-  * covers archives through Tika's recursive container parsing (its format
-  * list defers to Tika, /root/reference/README.md:271-273).
-  */
 /** The single member-emission policy shared by ALL container formats
   * (zip/tar/7z/rar via [[ArchiveExtractor.emit]], WARC via
   * [[WarcExtractor.extract]]): each member re-enters the full sniff→dispatch
@@ -55,78 +45,61 @@ private[core] final class MemberEmitter(cfg: ExtractorConfig) {
   }
 }
 
+/** Archive recursion (Tika-style): ZIP and ustar TAR containers extract as
+  * the concatenation of their members' extracted text, in archive order —
+  * each member re-enters the full sniff→dispatch pipeline, sharing the one
+  * nesting budget of every codec and container ([[Extract.nestingGate]],
+  * [[Extract.MaxDepth]]). A member that fails is skipped and the
+  * first failure recorded as a `" <- "` context frame; an archive that parses
+  * but yields no extractable member fails the row with a status — the
+  * "wrong text never" posture everywhere else in this engine. The reference
+  * covers archives through Tika's recursive container parsing (its format
+  * list defers to Tika, reference README.md:271-273).
+  */
 object ArchiveExtractor {
   val TarMime = "application/x-tar"
 
-  /** Depth gate runs BEFORE any member decompression (same gate-first
-    * posture Warc.scala documents): a nested archive bomb must not buy a
-    * full inflate of up to MaxTotalBytes per layer before being refused.
-    */
-  private def depthGate(mime: String, label: String, depth: Int): Option[ExtractResult] =
-    if (depth >= 3)
-      Some(ExtractResult.fail(ExtractStatus.UnsupportedFormat, s"$label: nesting too deep", mime))
-    else None
+  def zip(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult =
+    container(MimeSniffer.Zip, "zip", cfg, ocr, depth)(zipMembers(bytes))
 
-  def zip(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult = {
-    depthGate(MimeSniffer.Zip, "zip", depth).foreach(return _)
-    val members =
-      try zipMembers(bytes)
-      catch {
-        case e: Exception =>
-          return ExtractResult.fail(ExtractStatus.ExtractionFailed, s"zip: ${e.getMessage}", MimeSniffer.Zip)
-      }
-    emit(members, MimeSniffer.Zip, "zip", cfg, ocr, depth)
-  }
-
-  def tar(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult = {
-    depthGate(TarMime, "tar", depth).foreach(return _)
-    val members =
-      try tarMembers(bytes)
-      catch {
-        case e: Exception =>
-          return ExtractResult.fail(ExtractStatus.ExtractionFailed, s"tar: ${e.getMessage}", TarMime)
-      }
-    emit(members, TarMime, "tar", cfg, ocr, depth)
-  }
+  def tar(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult =
+    container(TarMime, "tar", cfg, ocr, depth)(tarMembers(bytes))
 
   /** .7z descent: Copy, LZMA and LZMA2 folders decode (incl. compressed
     * headers); other coders and out-of-scope structures refuse with −8
     * (see [[extractous.core.SevenZip]]).
     */
-  def sevenZ(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult = {
-    depthGate(MimeSniffer.SevenZ, "7z", depth).foreach(return _)
-    val members =
-      try SevenZip.members(bytes)
-      catch {
-        case e: UnsupportedArchiveException =>
-          return ExtractResult.fail(ExtractStatus.UnsupportedFormat, s"7z: ${e.getMessage}", MimeSniffer.SevenZ)
-        case e: Exception =>
-          return ExtractResult.fail(ExtractStatus.ExtractionFailed, s"7z: ${e.getMessage}", MimeSniffer.SevenZ)
-      }
-    emit(members, MimeSniffer.SevenZ, "7z", cfg, ocr, depth)
-  }
+  def sevenZ(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult =
+    container(MimeSniffer.SevenZ, "7z", cfg, ocr, depth)(SevenZip.members(bytes))
 
   /** RAR5 descent: store-mode members extract (header + data CRC checked);
     * compressed members (proprietary algorithm, no published spec),
     * encryption, and RAR4 refuse with −8 (see [[extractous.core.Rar]]).
     */
-  def rar(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult = {
-    depthGate(MimeSniffer.Rar, "rar", depth).foreach(return _)
-    val members =
-      try Rar.members(bytes)
-      catch {
-        case e: UnsupportedArchiveException =>
-          return ExtractResult.fail(ExtractStatus.UnsupportedFormat, s"rar: ${e.getMessage}", MimeSniffer.Rar)
-        case e: Exception =>
-          return ExtractResult.fail(ExtractStatus.ExtractionFailed, s"rar: ${e.getMessage}", MimeSniffer.Rar)
-      }
-    emit(members, MimeSniffer.Rar, "rar", cfg, ocr, depth)
-  }
+  def rar(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult =
+    container(MimeSniffer.Rar, "rar", cfg, ocr, depth)(Rar.members(bytes))
+
+  /** The one archive entry. [[Extract.nestingGate]] runs BEFORE the member
+    * walk, so a nested archive bomb never buys a full inflate of up to
+    * MaxTotalBytes per layer before it is refused. A walk that meets an
+    * out-of-scope structure refuses with −8; structural damage fails with −4.
+    */
+  private def container(mime: String, label: String, cfg: ExtractorConfig, ocr: Ocr, depth: Int)(
+      members: => Seq[(String, Array[Byte])]): ExtractResult =
+    Extract.nestingGate(mime, label, depth) {
+      val walked: Either[ExtractResult, Seq[(String, Array[Byte])]] =
+        try Right(members)
+        catch {
+          case e: UnsupportedArchiveException =>
+            Left(ExtractResult.fail(ExtractStatus.UnsupportedFormat, s"$label: ${e.getMessage}", mime))
+          case e: Exception =>
+            Left(ExtractResult.fail(ExtractStatus.ExtractionFailed, s"$label: ${e.getMessage}", mime))
+        }
+      walked.fold(identity, emit(_, mime, label, cfg, ocr, depth))
+    }
 
   private def emit(members: Seq[(String, Array[Byte])], mime: String, label: String,
       cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult = {
-    // depth was already gated by every caller (depthGate runs BEFORE member
-    // decompression); no second gate here — one policy, one place
     if (members.isEmpty)
       return ExtractResult.fail(ExtractStatus.ExtractionFailed, s"$label: no entries", mime)
     val me = new MemberEmitter(cfg)

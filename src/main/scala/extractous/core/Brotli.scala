@@ -414,7 +414,7 @@ object Brotli {
   }
 
   /** Decode a complete brotli stream. */
-  def decode(in: Array[Byte], maxOut: Int = 256 * 1024 * 1024): Array[Byte] = {
+  def decode(in: Array[Byte], maxOut: Int = Extract.MaxLayerBytes): Array[Byte] = {
     val b = new Bits(in)
     // WBITS (§9.1)
     val wbits =

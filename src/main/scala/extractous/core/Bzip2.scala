@@ -76,7 +76,7 @@ object Bzip2 {
     * NON-stream bytes throw — truncating to the first stream would be
     * silent data loss.
     */
-  def decode(bytes: Array[Byte], cap: Int = 256 * 1024 * 1024): Array[Byte] = {
+  def decode(bytes: Array[Byte], cap: Int = Extract.MaxLayerBytes): Array[Byte] = {
     if (!looksLikeBzip2(bytes)) throw new IllegalArgumentException("bzip2: bad magic")
     val out = new java.io.ByteArrayOutputStream(math.min(bytes.length.toLong * 4, 1L << 20).toInt)
     var streamStart = 0

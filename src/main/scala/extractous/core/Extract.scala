@@ -28,11 +28,12 @@ object Extract {
   }
 
   /** [[dispatch]] with the poison-document guarantee applied: any per-row
-    * failure maps to a status, never an escaping throw. This is BOTH the
-    * top-level entry's catch AND the per-MEMBER catch inside container loops
-    * (zip/tar/7z/rar/WARC): a corrupt gzip member must be skipped with a
-    * `" <- "` frame like any other failing member, not fail the whole
-    * container row by throwing through the member loop.
+    * failure maps to a status, never an escaping throw. This is the
+    * top-level entry's catch, the per-MEMBER catch inside container loops
+    * (zip/tar/7z/rar/WARC) AND the catch around every codec layer's inner
+    * payload: a corrupt gzip member must be skipped with a `" <- "` frame
+    * like any other failing member, and a payload that throws inside a codec
+    * layer keeps that layer's frame.
     */
   private[core] def dispatchSafe(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult =
     try dispatch(bytes, cfg, ocr, depth)
@@ -53,8 +54,59 @@ object Extract {
 
   private def trim(s: String): String = if (s == null) "" else if (s.length > 500) s.substring(0, 500) else s
 
-  private def dispatch(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr): ExtractResult =
-    dispatch(bytes, cfg, ocr, depth = 0)
+  /** Decoded-output budget of one wrapper layer (a codec stream or a
+    * compressed HTTP body): a decompression bomb hits it and fails the row,
+    * never the executor.
+    */
+  private[extractous] val MaxLayerBytes: Int = 256 * 1024 * 1024
+
+  /** Wrapper and container layers (codecs, zip/tar/7z/rar, WARC) share one
+    * nesting budget: a payload `MaxDepth` layers down is refused.
+    */
+  private[extractous] val MaxDepth: Int = 3
+
+  /** THE nesting gate for every codec and container. It runs before any
+    * decoding or member walk, so a nested bomb never buys a full inflate per
+    * layer before it is refused with -8.
+    */
+  private[core] def nestingGate(mime: String, label: String, depth: Int)(body: => ExtractResult): ExtractResult =
+    if (depth >= MaxDepth)
+      ExtractResult.fail(ExtractStatus.UnsupportedFormat, s"$label: nesting too deep", mime)
+    else body
+
+  /** Every single-stream codec: sniffed MIME → (frame label, bounded decoder). */
+  private val codecs: Map[String, (String, Array[Byte] => Array[Byte])] = Map(
+    MimeSniffer.Gzip -> ("gzip", gunzip(_, MaxLayerBytes)),
+    MimeSniffer.Xz -> ("xz", Xz.decode(_, MaxLayerBytes)),
+    MimeSniffer.Bzip2 -> ("bzip2", Bzip2.decode(_, MaxLayerBytes)),
+    MimeSniffer.Zstd -> ("zstd", Zstd.decode(_, MaxLayerBytes)),
+    MimeSniffer.Lz4 -> ("lz4", Lz4.decode(_, MaxLayerBytes)),
+    MimeSniffer.Snappy -> ("snappy", Snappy.decodeFramed(_, MaxLayerBytes)))
+
+  /** Decode one codec layer and re-dispatch the inner bytes poison-safe, the
+    * same entry container members use. Failures inside the payload carry the
+    * decoding context as a `" <- <label> layer N"` frame (the reference's
+    * debug chain, errors.go:301-316), and the result is tagged with its
+    * `Content-Encoding`. A valid but out-of-scope stream (filter chains,
+    * dictionaries, randomized or reserved blocks) refuses with -8; structural
+    * damage in the codec stream itself throws, surfacing as -4 upstream.
+    */
+  private def unwrap(mime: String, bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult = {
+    val (label, decode) = codecs(mime)
+    nestingGate(mime, label, depth) {
+      // dispatchSafe never throws, so the catch sees only the decoder's refusals
+      try {
+        val r = dispatchSafe(decode(bytes), cfg, ocr, depth + 1)
+        val framed =
+          if (r.status != ExtractStatus.Ok && r.error.nonEmpty) r.copy(error = s"${r.error} <- $label layer ${depth + 1}")
+          else r
+        framed.copy(metadata = framed.metadata + ("Content-Encoding" -> Seq(label)))
+      } catch {
+        case e: UnsupportedArchiveException =>
+          ExtractResult.fail(ExtractStatus.UnsupportedFormat, trim(e.getMessage), mime)
+      }
+    }
+  }
 
   private[core] def dispatch(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult = {
     // Empty/null fast path: empty text, non-null metadata, status OK
@@ -74,122 +126,7 @@ object Extract {
       case MimeSniffer.Csv => extractous.mail.CsvExtractor.extract(bytes, cfg)
       case MimeSniffer.Markdown => extractous.mail.MarkdownExtractor.extract(bytes, cfg)
       case MimeSniffer.Epub => extractous.epub.EpubExtractor.extract(bytes, cfg)
-      case MimeSniffer.Gzip =>
-        // gzip-wrapped payload (common in crawls): inflate (bounded, bomb-safe)
-        // and re-dispatch on the inner bytes; depth-capped
-        if (depth >= 3)
-          ExtractResult.fail(ExtractStatus.UnsupportedFormat, "gzip nesting too deep", MimeSniffer.Gzip)
-        else {
-          val inner = gunzip(bytes, maxOut = 256 * 1024 * 1024)
-          val r = dispatch(inner, cfg, ocr, depth + 1)
-          // debug chain (reference errors.go:301-316): failures inside a
-          // wrapped payload carry their decoding context as a " <- " frame
-          val chained =
-            if (r.status != ExtractStatus.Ok && r.error.nonEmpty)
-              r.copy(error = s"${r.error} <- gzip layer ${depth + 1}")
-            else r
-          chained.copy(metadata = chained.metadata + ("Content-Encoding" -> Seq("gzip")))
-        }
-      case MimeSniffer.Xz =>
-        // xz-wrapped payload (.xz/.tar.xz): decode through the LZMA2 path
-        // and re-dispatch on the inner bytes; shares the wrapper depth cap
-        if (depth >= 3)
-          ExtractResult.fail(ExtractStatus.UnsupportedFormat, "xz nesting too deep", MimeSniffer.Xz)
-        else
-          try {
-            val inner = Xz.decode(bytes)
-            val r = dispatch(inner, cfg, ocr, depth + 1)
-            val chained =
-              if (r.status != ExtractStatus.Ok && r.error.nonEmpty)
-                r.copy(error = s"${r.error} <- xz layer ${depth + 1}")
-              else r
-            chained.copy(metadata = chained.metadata + ("Content-Encoding" -> Seq("xz")))
-          } catch {
-            // out-of-scope filter chains refuse with -8 (honest), while
-            // structural damage falls through to the top-level -4 mapping
-            case e: UnsupportedArchiveException =>
-              ExtractResult.fail(ExtractStatus.UnsupportedFormat, trim(e.getMessage), MimeSniffer.Xz)
-          }
-      case MimeSniffer.Bzip2 =>
-        // bzip2-wrapped payload (.bz2/.tar.bz2): decode and re-dispatch on
-        // the inner bytes; shares the wrapper depth cap
-        if (depth >= 3)
-          ExtractResult.fail(ExtractStatus.UnsupportedFormat, "bzip2 nesting too deep", MimeSniffer.Bzip2)
-        else
-          try {
-            val inner = Bzip2.decode(bytes)
-            val r = dispatch(inner, cfg, ocr, depth + 1)
-            val chained =
-              if (r.status != ExtractStatus.Ok && r.error.nonEmpty)
-                r.copy(error = s"${r.error} <- bzip2 layer ${depth + 1}")
-              else r
-            chained.copy(metadata = chained.metadata + ("Content-Encoding" -> Seq("bzip2")))
-          } catch {
-            // deprecated randomized blocks refuse with -8 (honest), while
-            // structural damage falls through to the top-level -4 mapping
-            case e: UnsupportedArchiveException =>
-              ExtractResult.fail(ExtractStatus.UnsupportedFormat, trim(e.getMessage), MimeSniffer.Bzip2)
-          }
-      case MimeSniffer.Zstd =>
-        // zstd-wrapped payload (.zst/.tar.zst, RFC 8878): decode and
-        // re-dispatch on the inner bytes; shares the wrapper depth cap
-        if (depth >= 3)
-          ExtractResult.fail(ExtractStatus.UnsupportedFormat, "zstd nesting too deep", MimeSniffer.Zstd)
-        else
-          try {
-            val inner = Zstd.decode(bytes)
-            val r = dispatch(inner, cfg, ocr, depth + 1)
-            val chained =
-              if (r.status != ExtractStatus.Ok && r.error.nonEmpty)
-                r.copy(error = s"${r.error} <- zstd layer ${depth + 1}")
-              else r
-            chained.copy(metadata = chained.metadata + ("Content-Encoding" -> Seq("zstd")))
-          } catch {
-            // valid-but-out-of-scope frames (dictionaries) refuse with -8
-            // (honest), while structural damage falls through to -4
-            case e: UnsupportedArchiveException =>
-              ExtractResult.fail(ExtractStatus.UnsupportedFormat, trim(e.getMessage), MimeSniffer.Zstd)
-          }
-      case MimeSniffer.Lz4 =>
-        // lz4-wrapped payload (.lz4/.tar.lz4 frame or legacy format): decode
-        // and re-dispatch on the inner bytes; shares the wrapper depth cap
-        if (depth >= 3)
-          ExtractResult.fail(ExtractStatus.UnsupportedFormat, "lz4 nesting too deep", MimeSniffer.Lz4)
-        else
-          try {
-            val inner = Lz4.decode(bytes)
-            val r = dispatch(inner, cfg, ocr, depth + 1)
-            val chained =
-              if (r.status != ExtractStatus.Ok && r.error.nonEmpty)
-                r.copy(error = s"${r.error} <- lz4 layer ${depth + 1}")
-              else r
-            chained.copy(metadata = chained.metadata + ("Content-Encoding" -> Seq("lz4")))
-          } catch {
-            // valid-but-out-of-scope frames (dictionary IDs) refuse with -8
-            // (honest), while structural damage falls through to -4
-            case e: UnsupportedArchiveException =>
-              ExtractResult.fail(ExtractStatus.UnsupportedFormat, trim(e.getMessage), MimeSniffer.Lz4)
-          }
-      case MimeSniffer.Snappy =>
-        // framed-snappy payload (.sz): decode and re-dispatch on the inner
-        // bytes; shares the wrapper depth cap
-        if (depth >= 3)
-          ExtractResult.fail(ExtractStatus.UnsupportedFormat, "snappy nesting too deep", MimeSniffer.Snappy)
-        else
-          try {
-            val inner = Snappy.decodeFramed(bytes)
-            val r = dispatch(inner, cfg, ocr, depth + 1)
-            val chained =
-              if (r.status != ExtractStatus.Ok && r.error.nonEmpty)
-                r.copy(error = s"${r.error} <- snappy layer ${depth + 1}")
-              else r
-            chained.copy(metadata = chained.metadata + ("Content-Encoding" -> Seq("snappy")))
-          } catch {
-            // unskippable reserved chunks refuse with -8 (honest), while
-            // structural damage falls through to -4
-            case e: UnsupportedArchiveException =>
-              ExtractResult.fail(ExtractStatus.UnsupportedFormat, trim(e.getMessage), MimeSniffer.Snappy)
-          }
+      case m if codecs.contains(m) => unwrap(m, bytes, cfg, ocr, depth)
       case MimeSniffer.Plain => plain(bytes, cfg)
       case MimeSniffer.Pdf => PdfExtractor.extract(bytes, cfg, ocr)
       case m @ (MimeSniffer.Docx | MimeSniffer.Xlsx | MimeSniffer.Pptx |

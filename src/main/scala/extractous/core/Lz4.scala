@@ -40,7 +40,7 @@ object Lz4 {
   /** Decode a whole `.lz4` payload — concatenated frames share one global
     * `maxOut` budget, so N frames can't multiply a bomb.
     */
-  def decode(bytes: Array[Byte], maxOut: Long = 256L * 1024 * 1024): Array[Byte] = {
+  def decode(bytes: Array[Byte], maxOut: Long = Extract.MaxLayerBytes): Array[Byte] = {
     val out = new AccessibleBaos(math.min(bytes.length.toLong * 3, 1 << 20).toInt)
     var p = 0
     while (p < bytes.length) {

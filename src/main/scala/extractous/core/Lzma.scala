@@ -29,7 +29,7 @@ object Lzma {
     * @param outSize declared unpacked size
     * @param cap     decompression-bomb cap on outSize
     */
-  def decode(props: Array[Byte], data: Array[Byte], outSize: Long, cap: Int = 256 * 1024 * 1024): Array[Byte] = {
+  def decode(props: Array[Byte], data: Array[Byte], outSize: Long, cap: Int = Extract.MaxLayerBytes): Array[Byte] = {
     if (props.length < 5) throw new IllegalArgumentException("lzma: short properties")
     if (outSize < 0 || outSize > cap)
       throw new IllegalArgumentException(s"lzma: declared output $outSize exceeds $cap-byte cap")
@@ -46,7 +46,7 @@ object Lzma {
     * (with/without dict reset), ≥0x80 compressed chunk carrying reset bits
     * and 21-bit unpack / 16-bit pack sizes.
     */
-  def decodeLzma2(data: Array[Byte], outSize: Long, cap: Int = 256 * 1024 * 1024): Array[Byte] = {
+  def decodeLzma2(data: Array[Byte], outSize: Long, cap: Int = Extract.MaxLayerBytes): Array[Byte] = {
     if (outSize < 0 || outSize > cap)
       throw new IllegalArgumentException(s"lzma2: declared output $outSize exceeds $cap-byte cap")
     val out = new Array[Byte](outSize.toInt)

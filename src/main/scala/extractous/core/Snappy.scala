@@ -41,7 +41,7 @@ object Snappy {
     (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
 
   /** Decode a framed `.sz` payload. */
-  def decodeFramed(bytes: Array[Byte], maxOut: Long = 256L * 1024 * 1024): Array[Byte] = {
+  def decodeFramed(bytes: Array[Byte], maxOut: Long = Extract.MaxLayerBytes): Array[Byte] = {
     if (!looksLikeFramedSnappy(bytes)) bad("missing sNaPpY stream identifier")
     val out = new ByteArrayOutputStream(math.min(bytes.length.toLong * 3, 1 << 20).toInt)
     var p = 10
@@ -79,7 +79,7 @@ object Snappy {
   }
 
   /** Decode one raw snappy block (varint preamble + elements). */
-  def rawDecode(bytes: Array[Byte], off: Int, len: Int, maxOut: Long = 256L * 1024 * 1024): Array[Byte] = {
+  def rawDecode(bytes: Array[Byte], off: Int, len: Int, maxOut: Long = Extract.MaxLayerBytes): Array[Byte] = {
     val out = new ByteArrayOutputStream(math.min(len.toLong * 3, 1 << 20).toInt)
     rawDecodeInto(bytes, off, len, out, maxOut)
     out.toByteArray

@@ -14,7 +14,8 @@ import extractous.text.Normalize
   *
   * Semantics mirror [[ArchiveExtractor]]: extractable records re-enter the
   * full sniff→dispatch pipeline in file order and the result is their
-  * extracted texts concatenated. Extractable records are:
+  * extracted texts concatenated, under the one nesting budget of every
+  * codec and container ([[Extract.nestingGate]]). Extractable records are:
   *   - `response` records carrying `application/http; msgtype=response`:
   *     the HTTP message is parsed (status line + headers), `Transfer-Encoding:
   *     chunked` is de-chunked and `Content-Encoding: gzip` inflated (crawls
@@ -29,7 +30,7 @@ import extractous.text.Normalize
   * −4 upstream.
   *
   * `.warc.gz` needs no code here: Common Crawl gzips each record as its own
-  * member and concatenates, and the gzip wrapper rung inflates ALL members
+  * member and concatenates, and the gzip codec layer inflates ALL members
   * ([[Extract.gunzip]] via GZIPInputStream's concatenated-member support)
   * before re-sniffing the inner bytes as WARC.
   */
@@ -38,11 +39,14 @@ object WarcExtractor {
   final case class Record(warcType: String, targetUri: String, date: String,
       contentType: String, block: Array[Byte])
 
-  def extract(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult = {
-    // depth gate FIRST — it is free, and a deeply-nested bomb must not buy a
-    // full structural walk + block copies before being rejected
-    if (depth >= 3)
-      return ExtractResult.fail(ExtractStatus.UnsupportedFormat, "warc: nesting too deep", MimeSniffer.Warc)
+  /** [[Extract.nestingGate]] runs FIRST — it is free, and a deeply-nested
+    * bomb must not buy a full structural walk + block copies before it is
+    * refused.
+    */
+  def extract(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult =
+    Extract.nestingGate(MimeSniffer.Warc, "warc", depth)(extractRecords(bytes, cfg, ocr, depth))
+
+  private def extractRecords(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult = {
     val recs =
       try records(bytes)
       catch {
@@ -194,10 +198,10 @@ object WarcExtractor {
     // modern codings (gzip, deflate, br, zstd) all decode.
     encoding match {
       case "" | "identity"       =>
-      case "gzip" | "x-gzip"     => body = Extract.gunzip(body, maxOut = 256 * 1024 * 1024)
+      case "gzip" | "x-gzip"     => body = Extract.gunzip(body, maxOut = Extract.MaxLayerBytes)
       case "deflate"             => body = inflate(body)
-      case "zstd"                => body = Zstd.decode(body, maxOut = 256 * 1024 * 1024)
-      case "br"                  => body = Brotli.decode(body, maxOut = 256 * 1024 * 1024)
+      case "zstd"                => body = Zstd.decode(body, maxOut = Extract.MaxLayerBytes)
+      case "br"                  => body = Brotli.decode(body, maxOut = Extract.MaxLayerBytes)
       case other                 =>
         throw new IllegalArgumentException(s"http: unsupported content-encoding '$other'")
     }
@@ -219,7 +223,7 @@ object WarcExtractor {
           val n = inf.inflate(buf)
           if (n == 0 && !inf.finished()) throw new IllegalArgumentException("http: truncated deflate body")
           out.write(buf, 0, n)
-          if (out.size() > 256 * 1024 * 1024) throw new IllegalStateException("http: deflate body exceeds cap")
+          if (out.size() > Extract.MaxLayerBytes) throw new IllegalStateException("http: deflate body exceeds cap")
         }
         out.toByteArray
       } finally inf.end()

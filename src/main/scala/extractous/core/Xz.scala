@@ -115,7 +115,7 @@ object Xz {
     * region, and the stream header must sit exactly where that arithmetic
     * says — so a corrupt boundary fails loudly instead of mis-framing.
     */
-  def decode(bytes: Array[Byte], cap: Int = 256 * 1024 * 1024): Array[Byte] = {
+  def decode(bytes: Array[Byte], cap: Int = Extract.MaxLayerBytes): Array[Byte] = {
     if (!looksLikeXz(bytes)) throw new IllegalArgumentException("xz: bad magic")
     var limit = bytes.length
     var parts: List[Array[Byte]] = Nil

@@ -436,7 +436,7 @@ object Zstd {
   }
 
   /** Decode a (possibly multi-frame) zstd payload. */
-  def decode(bytes: Array[Byte], maxOut: Long = 256L * 1024 * 1024): Array[Byte] = {
+  def decode(bytes: Array[Byte], maxOut: Long = Extract.MaxLayerBytes): Array[Byte] = {
     val out = new ByteArrayOutputStream(math.min(bytes.length.toLong * 4, 1L << 20).toInt)
     var p = 0
     var sawFrame = false

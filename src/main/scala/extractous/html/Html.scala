@@ -15,11 +15,6 @@ import scala.collection.mutable.ArrayBuffer
   * reference-style behavior.
   */
 object HtmlTokenizer {
-  sealed trait Tok
-  final case class StartTag(name: String, attrs: Map[String, String], selfClosing: Boolean) extends Tok
-  final case class EndTag(name: String) extends Tok
-  final case class Text(raw: String) extends Tok
-
   private val rawTextTags = Set("script", "style", "textarea")
 
   /** Attributes any downstream consumer reads (HTML pipeline: class/id/href +
@@ -30,11 +25,9 @@ object HtmlTokenizer {
     // EPUB packaging attributes (container.xml rootfile + OPF manifest/spine)
     "full-path", "idref")
 
-  /** Callback form of the tokenizer — THE single tokenization implementation
-    * (the Iterator API below is an eager adapter over it). The extraction hot
-    * path ([[HtmlDom.parse]]) consumes this directly, so a document tokenizes
-    * without allocating a Tok wrapper per token. Token order and boundaries
-    * are identical to the former Iterator implementation.
+  /** THE tokenizer: text, start-tag and end-tag callbacks in document order.
+    * Every consumer ([[HtmlDom.parse]], the link kernels) uses it directly, so
+    * a document tokenizes without allocating a wrapper per token.
     */
   def foreachTok(s: String)(onText: String => Unit,
       onStart: (String, Map[String, String], Boolean) => Unit,
@@ -131,19 +124,6 @@ object HtmlTokenizer {
         onText(s.substring(i, end)); i = end
       }
     }
-  }
-
-  /** Materialized token stream (cold-path API: link graph, probes). The hot
-    * path uses [[foreachTok]]; every known caller consumes all tokens, so the
-    * eager adapter changes only laziness, not the sequence.
-    */
-  def tokenize(s: String): Iterator[Tok] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Tok]
-    foreachTok(s)(
-      raw => buf += Text(raw),
-      (name, attrs, selfClosing) => buf += StartTag(name, attrs, selfClosing),
-      name => buf += EndTag(name))
-    buf.iterator
   }
 
   private val named = Map(

@@ -1,5 +1,6 @@
 package extractous.spark
 
+import extractous.html.HtmlTokenizer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -86,17 +87,14 @@ object LinkKernel {
     val html = html0.toString
     val (origin, path, scheme) = baseParts(base0.toString)
     val out = Vector.newBuilder[UTF8String]
-    val toks = extractous.html.HtmlTokenizer.tokenize(html)
-    while (toks.hasNext) {
-      toks.next() match {
-        case extractous.html.HtmlTokenizer.StartTag("a", attrs, _) =>
-          attrs.get("href").foreach { raw0 =>
-            val abs = resolve(raw0, origin, path, scheme)
-            if (abs.nonEmpty) out += UTF8String.fromString(abs)
-          }
-        case _ =>
-      }
-    }
+    HtmlTokenizer.foreachTok(html)(
+      onText = _ => (),
+      onStart = (name, attrs, _) =>
+        if (name == "a") attrs.get("href").foreach { raw0 =>
+          val abs = resolve(raw0, origin, path, scheme)
+          if (abs.nonEmpty) out += UTF8String.fromString(abs)
+        },
+      onEnd = _ => ())
     new GenericArrayData(out.result().toArray[Any])
   }
 
@@ -138,19 +136,15 @@ object LinkKernel {
         openUrl = null; acc = null
       }
     }
-    val toks = extractous.html.HtmlTokenizer.tokenize(html)
-    while (toks.hasNext) {
-      toks.next() match {
-        case extractous.html.HtmlTokenizer.StartTag("a", attrs, _) =>
+    HtmlTokenizer.foreachTok(html)(
+      onText = raw => if (acc != null) acc.append(HtmlTokenizer.decodeEntities(raw)),
+      onStart = (name, attrs, _) =>
+        if (name == "a") {
           flush()
           val abs = attrs.get("href").map(resolve(_, origin, path, scheme)).getOrElse("")
           if (abs.nonEmpty) { openUrl = abs; acc = new java.lang.StringBuilder }
-        case extractous.html.HtmlTokenizer.EndTag("a") => flush()
-        case extractous.html.HtmlTokenizer.Text(raw) if acc != null =>
-          acc.append(extractous.html.HtmlTokenizer.decodeEntities(raw))
-        case _ =>
-      }
-    }
+        },
+      onEnd = name => if (name == "a") flush())
     flush()
     new GenericArrayData(out.result().toArray)
   }

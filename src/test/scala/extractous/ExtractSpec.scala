@@ -2,7 +2,7 @@ package extractous
 
 import extractous.config._
 import extractous.core.Extract
-import extractous.gen.CorpusGen
+import extractous.gen.{BzipWriter, CorpusGen, Lz4Writer, SnappyWriter, TarWriter, XzWriter, ZstdWriter}
 import extractous.model.ExtractStatus
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -202,6 +202,68 @@ class ExtractSpec extends AnyFunSuite {
     gz.write(("x" * 10000).getBytes("UTF-8")); gz.close()
     val r = Extract(bos.toByteArray.take(40))
     assert(r.status < 0)
+  }
+
+  // ---- one unwrap policy for every single-stream codec ----
+  // Each codec wraps through its in-repo writer; Extract must give every one
+  // the same Content-Encoding tag, " <- <codec> layer N" frame and depth cap.
+  private val codecWriters: Seq[(String, Array[Byte] => Array[Byte])] = Seq(
+    "gzip" -> CorpusGen.gzMember,
+    "xz" -> (XzWriter.xz(_)),
+    "bzip2" -> (BzipWriter.bz2(_)),
+    "zstd" -> ZstdWriter.zst,
+    "lz4" -> Lz4Writer.lz4,
+    "snappy" -> SnappyWriter.sz)
+
+  private def utf8(s: String): Array[Byte] = s.getBytes("UTF-8")
+
+  /** A well-framed .xz whose footer magic is broken: it sniffs as xz and its
+    * decoder throws, so the failure happens one layer inside the wrapper.
+    */
+  private def corruptXz: Array[Byte] = {
+    val x = XzWriter.xz(utf8("inner payload"))
+    x(x.length - 1) = 0
+    x
+  }
+
+  for ((label, wrap) <- codecWriters) {
+    test(s"$label layer: tags Content-Encoding and frames a corrupt payload with ' <- $label layer 1'") {
+      val ok = Extract(wrap(utf8("codec wrapped body")))
+      assert(ok.status == ExtractStatus.Ok, ok.error)
+      assert(ok.text == "codec wrapped body")
+      assert(ok.metadata("Content-Encoding") == Seq(label))
+
+      val bad = Extract(wrap(corruptXz))
+      assert(bad.status == ExtractStatus.ExtractionFailed)
+      assert(bad.error == s"extraction failed: xz: bad footer magic <- $label layer 1")
+      assert(bad.metadata("Content-Encoding") == Seq(label))
+    }
+
+    test(s"$label layer: nesting past the shared cap refuses with -8") {
+      def nest(n: Int): Array[Byte] = (1 to n).foldLeft(utf8("deep body"))((b, _) => wrap(b))
+      val atCap = Extract(nest(Extract.MaxDepth))
+      assert(atCap.status == ExtractStatus.Ok, atCap.error)
+      assert(atCap.text == "deep body")
+
+      val past = Extract(nest(Extract.MaxDepth + 1))
+      assert(past.status == ExtractStatus.UnsupportedFormat)
+      val frames = (Extract.MaxDepth to 1 by -1).map(n => s" <- $label layer $n").mkString
+      assert(past.error == s"$label: nesting too deep$frames")
+    }
+  }
+
+  test("codecs and containers share one depth budget: gzip(tar(xz(text))) decodes, one more layer is refused") {
+    def gzTarXz(inner: Array[Byte]) =
+      CorpusGen.gzMember(TarWriter.tar(Seq("a.xz" -> XzWriter.xz(inner))))
+    val ok = Extract(gzTarXz(utf8("mixed nest body")))
+    assert(ok.status == ExtractStatus.Ok, ok.error)
+    assert(ok.text == "mixed nest body")
+    assert(ok.metadata("Content-Encoding") == Seq("gzip"))
+
+    val deep = Extract(gzTarXz(SnappyWriter.sz(utf8("mixed nest body"))))
+    assert(deep.status == ExtractStatus.ExtractionFailed && deep.text == "")
+    assert(deep.error == "tar: no extractable members: snappy: nesting too deep" +
+      " <- xz layer 3 <- tar member 'a.xz' <- gzip layer 1")
   }
 
   test("generic xml document extracts character data in order") {
