@@ -5,8 +5,13 @@ import extractous.gen.CorpusGen
 import extractous.model.ExtractResult
 import extractous.spark.{functions => xf}
 import extractous.table.{LineageRow, SnapshotTable}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, Paths}
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** The production extraction job (spark-submit entry): corpus table in →
   * extracted table out, resumable from snapshot checkpoints.
@@ -26,8 +31,9 @@ import org.apache.spark.sql.functions._
   *     atomic snapshot with per-partition lineage rows. A restarted job skips
   *     every committed day (idempotent resume);
   *   - provenance columns (`part_id`, `input_file`) ride in the output table;
-  *     lineage aggregates are computed from the staged output (narrow re-read
-  *     of 3 columns), not by a second pass over the raw corpus.
+  *     lineage rows and status counts are folded by the write job itself
+  *     (`Dataset.observe`), so neither the raw corpus nor the staged output
+  *     is read a second time.
   */
 object ExtractJob {
 
@@ -55,13 +61,9 @@ object ExtractJob {
     // SnapshotTable.expire), which a concurrent-writer deployment must not
     // violate here either.
     try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(java.nio.file.Paths.get(tableDir)).iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(".staging-"))
-        .foreach { stale =>
-          java.nio.file.Files.walk(stale).iterator().asScala
-            .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-        }
+      SnapshotTable.listed(Files.list(Paths.get(tableDir)))(_
+        .filter(p => p.getFileName.toString.startsWith(".staging-")).toSeq)
+        .foreach(SnapshotTable.deleteRecursively)
     } catch { case _: Exception => () }
 
     val committed = table.committedDays
@@ -84,34 +86,71 @@ object ExtractJob {
       // stage INSIDE the table dir: the commit's ATOMIC_MOVE renames are then
       // guaranteed same-filesystem (a /tmp staging dir on another mount would
       // throw AtomicMoveNotSupportedException)
-      val staging = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(tableDir), ".staging-").toString
-      out.write.mode("overwrite").partitionBy("warc_day").parquet(staging)
+      val staging = Files.createTempDirectory(Paths.get(tableDir), ".staging-")
+      // lineage + status metrics folded by the write's own result stage: the
+      // observe node sits above any salt exchange, where Spark applies each
+      // task's accumulator update once even under retries or speculation
+      val obs = Observation()
+      out.observe(obs, udaf(GroupTally).apply(col("part_id"), col("input_file"),
+          coalesce(col("n_bytes").cast("long"), lit(0L)), col("status")).as("tally"))
+        .write.mode("overwrite").partitionBy("warc_day").parquet(staging.toString)
 
-      // lineage + status metrics from the staged output: pruned 4-column read
-      // (never touches the text column again), two small aggregates
-      val staged = spark.read.parquet(staging).select("part_id", "input_file", "n_bytes", "status")
-      val lineage = staged
-        .groupBy(col("part_id"))
-        .agg(collect_set(col("input_file")).as("input_files"),
-          count(lit(1)).as("doc_count"),
-          sum(col("n_bytes")).as("bytes"))
-        .collect()
-        .map(r => LineageRow(r.getInt(0), r.getSeq[String](1).sorted, r.getLong(2), r.getLong(3),
-          ExtractResult.Version))
-        .sortBy(_.partition_id).toSeq
-      val statusCounts = staged.groupBy(col("status")).count().collect()
-        .map(r => r.getInt(0).toString -> r.getLong(1)).toMap
+      val (lineage, statusCounts) = observed(obs, group.toSeq)
       totalDocs += lineage.map(_.doc_count).sum
-      snapshots += table.commit(staging, group.toSeq, lineage, ExtractResult.Version, statusCounts)
+      snapshots += table.commit(staging.toString, group.toSeq, lineage, ExtractResult.Version, statusCounts)
       // drop the drained staging dir (only _SUCCESS/empty day dirs remain)
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(staging)).iterator().asScala
-          .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-      } catch { case _: Exception => () }
+      try SnapshotTable.deleteRecursively(staging) catch { case _: Exception => () }
     }
     JobSummary(snapshots.result(), todo.toSeq, totalDocs)
+  }
+
+  /** `Observation.get` waits without limit. The write has already returned when
+    * this is read, so its metrics are one listener-bus hop away; a group whose
+    * lineage does not arrive within this bound fails instead of committing.
+    */
+  private val ObservedMetricsWait = 2.minutes
+
+  /** One day group's lineage rows (sorted by partition, input files distinct
+    * and sorted) and status histogram (keys are `status.toString`).
+    */
+  private def observed(obs: Observation, group: Seq[String]): (Seq[LineageRow], Map[String, Long]) = {
+    val tally =
+      try Await.result(obs.future, ObservedMetricsWait).getStruct(0)
+      catch { case e: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"no lineage observed for days ${group.mkString(",")} within $ObservedMetricsWait", e)
+      }
+    val lineage = tally.getMap[Int, Row](0).toSeq.map { case (part, p) =>
+      LineageRow(part, p.getSeq[String](0).sorted, p.getLong(1), p.getLong(2), ExtractResult.Version)
+    }.sortBy(_.partition_id)
+    val statusCounts = tally.getMap[Int, Long](1).map { case (s, n) => s.toString -> n }.toMap
+    (lineage, statusCounts)
+  }
+
+  private[jobs] final case class PartTally(files: Set[String], docs: Long, bytes: Long)
+  private[jobs] final case class Tally(parts: Map[Int, PartTally], statuses: Map[Int, Long])
+
+  /** (part_id, input_file, n_bytes, status) → per-partition lineage plus the
+    * status histogram. The buffer is bounded by write tasks × input files and
+    * the status codes: the same metadata a grouped collect would ship.
+    */
+  private[jobs] object GroupTally extends Aggregator[(Int, String, Long, Int), Tally, Tally] {
+    def zero: Tally = Tally(Map.empty, Map.empty)
+    def reduce(t: Tally, row: (Int, String, Long, Int)): Tally = {
+      val (part, file, bytes, status) = row
+      val p = t.parts.getOrElse(part, PartTally(Set.empty, 0L, 0L))
+      Tally(t.parts.updated(part, PartTally(p.files + file, p.docs + 1, p.bytes + bytes)),
+        t.statuses.updated(status, t.statuses.getOrElse(status, 0L) + 1))
+    }
+    def merge(a: Tally, b: Tally): Tally = Tally(
+      b.parts.foldLeft(a.parts) { case (m, (part, q)) =>
+        m.updated(part, m.get(part).fold(q)(p =>
+          PartTally(p.files ++ q.files, p.docs + q.docs, p.bytes + q.bytes)))
+      },
+      b.statuses.foldLeft(a.statuses) { case (m, (s, n)) => m.updated(s, m.getOrElse(s, 0L) + n) })
+    def finish(t: Tally): Tally = t
+    def bufferEncoder: Encoder[Tally] = Encoders.product[Tally]
+    def outputEncoder: Encoder[Tally] = Encoders.product[Tally]
   }
 
   /** spark-submit entry: ExtractJob <inputDir> <tableDir> [groupSize] [salt] */

@@ -49,6 +49,7 @@ final case class Manifest(
     replaced_days: Option[Seq[String]] = None)
 
 final class SnapshotTable(val root: String) {
+  import SnapshotTable.{deleteRecursively, listed}
   private val mapper = new ObjectMapper()
   mapper.registerModule(DefaultScalaModule)
   mapper.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
@@ -136,13 +137,6 @@ final class SnapshotTable(val root: String) {
       .toSeq)
     (existing :+ -1L).max + 1
   }
-
-  /** Files.list/Files.walk hold an open directory fd until closed — a
-    * long-running driver committing many snapshots would otherwise leak fds
-    * toward the ulimit. Every listing in this class drains through here.
-    */
-  private def listed[A](st: java.util.stream.Stream[Path])(f: Iterator[Path] => A): A =
-    try f(st.iterator().asScala) finally st.close()
 
   private def publish(m: Manifest): Long = {
     val tmp = manifestsDir.resolve(s".snap-${m.snapshot_id}.tmp")
@@ -351,7 +345,17 @@ final class SnapshotTable(val root: String) {
       .foreach(deleteRecursively)
     id
   }
+}
 
-  private def deleteRecursively(p: Path): Unit =
+object SnapshotTable {
+  /** Files.list/Files.walk hold an open directory fd until closed — a
+    * long-running driver committing many snapshots would otherwise leak fds
+    * toward the ulimit. Every listing of table and staging dirs drains
+    * through here.
+    */
+  private[extractous] def listed[A](st: java.util.stream.Stream[Path])(f: Iterator[Path] => A): A =
+    try f(st.iterator().asScala) finally st.close()
+
+  private[extractous] def deleteRecursively(p: Path): Unit =
     listed(Files.walk(p))(_.toSeq).reverse.foreach(Files.delete)
 }

@@ -3,8 +3,13 @@ package extractous
 import extractous.core.Extract
 import extractous.gen.CorpusGen
 import extractous.jobs.{CorpusWriter, ExtractJob}
-import extractous.table.SnapshotTable
+import extractous.model.ExtractResult
+import extractous.table.{LineageRow, SnapshotTable}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Snapshot table + resumable job: atomic commits, manifest-driven reads,
@@ -252,6 +257,55 @@ class TableSpec extends AnyFunSuite {
     val files = lineage.flatMap(_.input_files)
     assert(files.nonEmpty && files.forall(f => f.nonEmpty && f.contains("parquet")),
       s"salted lineage lost input files: ${files.take(3)}")
+  }
+
+  test("lineage and status counts equal a groupBy over each snapshot's committed rows (salt off and on)") {
+    for (salt <- Seq(false, true)) {
+      val tableDir = java.nio.file.Files.createTempDirectory("tlineage").toString
+      val s = ExtractJob.run(spark, corpusDir, tableDir, groupSize = 10, salt = salt)
+      assert(s.snapshots.size == 3)
+      val table = new SnapshotTable(tableDir)
+      s.snapshots.foreach { id =>
+        val m = table.manifest(id)
+        val rows = table.read(spark, asOf = Some(id))
+          .filter(date_format(col("warc_day"), "yyyy-MM-dd").isin(m.committed_days: _*))
+        val lineage = rows.groupBy(col("part_id"))
+          .agg(collect_set(col("input_file")), count(lit(1)), sum(col("n_bytes")))
+          .collect()
+          .map(r => LineageRow(r.getInt(0), r.getSeq[String](1).sorted, r.getLong(2), r.getLong(3),
+            ExtractResult.Version))
+          .sortBy(_.partition_id).toSeq
+        val statuses = rows.groupBy(col("status")).count().collect()
+          .map(r => r.getInt(0).toString -> r.getLong(1)).toMap
+        assert(m.lineage == lineage, s"salt=$salt snapshot $id lineage")
+        assert(m.status_counts == statuses, s"salt=$salt snapshot $id status_counts")
+      }
+    }
+  }
+
+  test("the job never reads back its staging output") {
+    val tableDir = java.nio.file.Files.createTempDirectory("tnoreread").toString
+    val input = corpusDir // written before the listener starts recording
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.optimizedPlan.foreach {
+          case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+            fs.location.rootPaths.foreach(p => scanned.add(p.toString))
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ExtractJob.run(spark, input, tableDir, groupSize = 10, salt = true)
+      ListenerBusDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val paths = scanned.toArray.map(_.toString)
+    // the listener saw the job's own scans (the day list reads the corpus)
+    assert(paths.exists(_.contains(input)), paths.mkString(", "))
+    val staged = paths.filter(p => p.contains(tableDir) && p.contains("/.staging-"))
+    assert(staged.isEmpty, s"staging output was scanned: ${staged.mkString(", ")}")
   }
 
   test("readers ignore uncommitted orphan files") {
