@@ -3,8 +3,9 @@ package extractous.core
 import extractous.config.ExtractorConfig
 import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.ocr.Ocr
+import extractous.office.ZipUtil
 import extractous.sniff.MimeSniffer
-import extractous.text.{TextEmitter, XmlEmitter}
+import extractous.text.BlockSink
 
 /** The single member-emission policy shared by ALL container formats
   * (zip/tar/7z/rar via [[ArchiveExtractor.emit]], WARC via
@@ -12,19 +13,18 @@ import extractous.text.{TextEmitter, XmlEmitter}
   * pipeline POISON-SAFE ([[Extract.dispatchSafe]] — a member whose decoder
   * throws, e.g. a truncated .gz, is skipped like any other failing member
   * instead of failing the whole container row), member text folds in
-  * line-wise under the canonical policy, and only the FIRST failure is kept
+  * line-wise ([[BlockSink.addMember]]), and only the FIRST failure is kept
   * as a `" <- "` context frame. One policy, one place — the two container
   * families must not drift.
   */
 private[core] final class MemberEmitter(cfg: ExtractorConfig) {
-  val emitter = new TextEmitter(cfg.maxStringLength)
-  val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+  val sink = new BlockSink(cfg)
   private var okCount = 0
   private var firstErrMsg = ""
 
   def ok: Int = okCount
   def firstErr: String = firstErrMsg
-  def isFull: Boolean = emitter.isFull
+  def isFull: Boolean = sink.isFull
   def recordError(frame: String): Unit = if (firstErrMsg.isEmpty) firstErrMsg = frame
 
   /** Dispatch one member and fold its text in; failures are recorded
@@ -34,13 +34,7 @@ private[core] final class MemberEmitter(cfg: ExtractorConfig) {
     val r = Extract.dispatchSafe(data, cfg, ocr, depth + 1)
     if (r.status == ExtractStatus.Ok) {
       okCount += 1
-      if (r.text.nonEmpty) {
-        // member text is already canonical — re-add line-wise (addBlock
-        // collapses internal whitespace, which would flatten member newlines)
-        r.text.split("\n", -1).iterator.takeWhile(_ => !emitter.isFull)
-          .foreach(emitter.addBlock)
-        if (cfg.xmlOutput) xe.addElement(tag, r.text)
-      }
+      sink.addMember(tag, r.text)
     } else recordError(s"${r.error} <- $frame")
   }
 }
@@ -60,7 +54,7 @@ object ArchiveExtractor {
   val TarMime = "application/x-tar"
 
   def zip(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult =
-    container(MimeSniffer.Zip, "zip", cfg, ocr, depth)(zipMembers(bytes))
+    container(MimeSniffer.Zip, "zip", cfg, ocr, depth)(ZipUtil.members(bytes))
 
   def tar(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult =
     container(TarMime, "tar", cfg, ocr, depth)(tarMembers(bytes))
@@ -110,40 +104,7 @@ object ArchiveExtractor {
       ExtractResult.fail(ExtractStatus.ExtractionFailed,
         s"$label: no extractable members: ${me.firstErr}", mime)
     else
-      ExtractResult.ok(me.emitter.result(), if (cfg.xmlOutput) me.xe.result() else "",
-        Map("Content-Type" -> Seq(mime),
-          s"$label:member-count" -> Seq(members.length.toString)), mime)
-  }
-
-  /** Ordered zip member walk — same decompression-bomb budgets as
-    * [[extractous.office.ZipUtil]], but archive order preserved (member
-    * emission order is the semantic contract here, unlike OOXML lookups).
-    */
-  private def zipMembers(bytes: Array[Byte]): Seq[(String, Array[Byte])] = {
-    val zis = new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(bytes))
-    val out = Seq.newBuilder[(String, Array[Byte])]
-    var total = 0L
-    var entry = zis.getNextEntry
-    while (entry != null) {
-      if (!entry.isDirectory) {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var entryTotal = 0L
-        var n = zis.read(buf)
-        while (n >= 0) {
-          entryTotal += n; total += n
-          if (entryTotal > extractous.office.ZipUtil.MaxEntryBytes ||
-              total > extractous.office.ZipUtil.MaxTotalBytes)
-            throw new IllegalStateException(s"zip entry '${entry.getName}' exceeds inflate budget")
-          bos.write(buf, 0, n)
-          n = zis.read(buf)
-        }
-        out += (entry.getName -> bos.toByteArray)
-      }
-      entry = zis.getNextEntry
-    }
-    zis.close()
-    out.result()
+      me.sink.ok(Map("Content-Type" -> Seq(mime), s"$label:member-count" -> Seq(members.length.toString)), mime)
   }
 
   /** ustar (POSIX.1-1988) header walk: 512-byte headers with octal size,

@@ -7,7 +7,7 @@ import extractous.ocr.{GlyphTemplateOcr, Ocr}
 import extractous.office.OfficeExtractor
 import extractous.pdf.PdfExtractor
 import extractous.sniff.MimeSniffer
-import extractous.text.{Encoding, Normalize, TextEmitter, XmlEmitter}
+import extractous.text.{BlockSink, Encoding}
 
 /** The flagship pure function: `(payload bytes, config) → ExtractResult` —
   * the Spark-native replacement for the reference's stateful Extractor handle
@@ -112,8 +112,7 @@ object Extract {
     // Empty/null fast path: empty text, non-null metadata, status OK
     // (/root/reference/extractor.go:457-459, integration_test.go:317-339).
     if (bytes == null || bytes.isEmpty)
-      return ExtractResult.ok("", if (cfg.xmlOutput) "<doc>\n</doc>" else "",
-        Map("Content-Type" -> Seq(MimeSniffer.Empty)), MimeSniffer.Empty)
+      return new BlockSink(cfg).ok(Map("Content-Type" -> Seq(MimeSniffer.Empty)), MimeSniffer.Empty)
 
     MimeSniffer.sniff(bytes) match {
       case MimeSniffer.Html => HtmlExtractor.extract(bytes, cfg)
@@ -237,14 +236,9 @@ object Extract {
   }
 
   private def plainDecoded(s: String, charset: String, cfg: ExtractorConfig): ExtractResult = {
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
-    s.split("\n", -1).iterator.takeWhile(_ => !emitter.isFull).foreach { line =>
-      emitter.addBlock(line)
-      if (cfg.xmlOutput) xe.addElement("p", line)
-    }
-    ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-      Map("Content-Type" -> Seq(s"text/plain; charset=$charset")), MimeSniffer.Plain)
+    val sink = new BlockSink(cfg)
+    sink.addLines("p", s)
+    sink.ok(Map("Content-Type" -> Seq(s"text/plain; charset=$charset")), MimeSniffer.Plain)
   }
 
   /** Generic XML document: every element is a block boundary, character data
@@ -252,16 +246,13 @@ object Extract {
     */
   private def xmlDoc(bytes: Array[Byte], cfg: ExtractorConfig): ExtractResult = {
     val root = extractous.html.HtmlDom.parse(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+    val sink = new BlockSink(cfg)
     def walk(n: extractous.html.HNode): Unit = n match {
-      case extractous.html.HText(t) =>
-        if (!emitter.isFull && Normalize.line(t).nonEmpty) { emitter.addBlock(t); xe.addElement("p", t) }
+      case extractous.html.HText(t) => if (!sink.isFull) sink.add("p", t)
       case e: extractous.html.HElem => e.children.foreach(walk)
     }
     walk(root)
-    ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-      Map("Content-Type" -> Seq(MimeSniffer.Xml)), MimeSniffer.Xml)
+    sink.ok(Map("Content-Type" -> Seq(MimeSniffer.Xml)), MimeSniffer.Xml)
   }
 
   /** Standalone scanned image → OCR. OCR failures map to status -10 and never
@@ -270,12 +261,8 @@ object Extract {
   private def image(bytes: Array[Byte], mime: String, cfg: ExtractorConfig, ocr: Ocr): ExtractResult = {
     try {
       val text = ocr.recognize(bytes, cfg.ocr)
-      val emitter = new TextEmitter(cfg.maxStringLength)
-      val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
-      text.split("\n", -1).iterator.takeWhile(_ => !emitter.isFull).foreach { line =>
-        emitter.addBlock(line)
-        if (cfg.xmlOutput) xe.addElement("p", line)
-      }
+      val sink = new BlockSink(cfg)
+      sink.addLines("p", text)
       // record the effective OCR parameters (Tika-style parser provenance) —
       // the config knobs are observable downstream per document
       val meta = Map(
@@ -284,7 +271,7 @@ object Extract {
         "X-OCR-Density" -> Seq(cfg.ocr.density.toString),
         "X-OCR-Depth" -> Seq(cfg.ocr.depth.toString),
         "X-OCR-Preprocessing" -> Seq(cfg.ocr.enableImagePreprocessing.toString))
-      ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "", meta, mime)
+      sink.ok(meta, mime)
     } catch {
       case e: Exception =>
         ExtractResult.fail(ExtractStatus.OcrFailed, trim(s"OCR failed: ${e.getMessage}"), mime)

@@ -83,11 +83,10 @@ object WarcExtractor {
       ExtractResult.fail(ExtractStatus.ExtractionFailed,
         s"warc: no extractable records: ${me.firstErr}", MimeSniffer.Warc)
     else
-      ExtractResult.ok(me.emitter.result(), if (cfg.xmlOutput) me.xe.result() else "",
-        Map("Content-Type" -> Seq(MimeSniffer.Warc),
-          "warc:record-count" -> Seq(recs.length.toString),
-          "warc:response-count" -> Seq(responses.toString),
-          "WARC-Target-URI" -> uris.result()), MimeSniffer.Warc)
+      me.sink.ok(Map("Content-Type" -> Seq(MimeSniffer.Warc),
+        "warc:record-count" -> Seq(recs.length.toString),
+        "warc:response-count" -> Seq(responses.toString),
+        "WARC-Target-URI" -> uris.result()), MimeSniffer.Warc)
   }
 
   /** Structural record walk. Each record: `WARC/1.0|1.1` CRLF, header lines

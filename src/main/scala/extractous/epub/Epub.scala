@@ -1,10 +1,11 @@
 package extractous.epub
 
 import extractous.config.ExtractorConfig
-import extractous.html.{HElem, HNode, HText, HtmlDom}
+import extractous.html.{HElem, HNode, HtmlDom}
+import extractous.html.HtmlDom.{attr, findAll, textOf}
 import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.office.ZipUtil
-import extractous.text.{Normalize, TextEmitter, XmlEmitter}
+import extractous.text.{BlockSink, Normalize}
 
 /** EPUB extraction — zip + OPF + XHTML, all on existing plumbing (the
   * reference covers EPUB through Tika, /root/reference/README.md:14).
@@ -18,20 +19,7 @@ import extractous.text.{Normalize, TextEmitter, XmlEmitter}
 object EpubExtractor {
   val Mime = "application/epub+zip"
 
-  private def attr(e: HElem, name: String): Option[String] =
-    e.attrs.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
-
-  private def findAll(n: HNode, tag: String): Seq[HElem] = n match {
-    case e: HElem =>
-      val self = if (e.name.equalsIgnoreCase(tag) || Normalize.lowerAscii(e.name).endsWith(":" + tag)) Seq(e) else Seq.empty
-      self ++ e.children.flatMap(findAll(_, tag))
-    case _ => Seq.empty
-  }
-
-  private def textOf(n: HNode): String = n match {
-    case HText(t) => t
-    case e: HElem => e.children.map(textOf).mkString
-  }
+  private val BlockTags = Set("h1", "h2", "h3", "h4", "h5", "h6", "p", "li")
 
   def extract(bytes: Array[Byte], cfg: ExtractorConfig): ExtractResult = {
     try {
@@ -54,31 +42,24 @@ object EpubExtractor {
       if (spine.isEmpty) throw new IllegalArgumentException("OPF has no spine")
       val title = findAll(opf, "title").headOption.map(t => Normalize.line(textOf(t)))
 
-      val emitter = new TextEmitter(cfg.maxStringLength)
-      val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
-      spine.iterator.takeWhile(_ => !emitter.isFull).foreach { idref =>
+      val sink = new BlockSink(cfg)
+      spine.iterator.takeWhile(_ => !sink.isFull).foreach { idref =>
         val href = hrefById.getOrElse(idref,
           throw new IllegalArgumentException(s"spine idref '$idref' not in manifest"))
         val chapter = entries.getOrElse(opfDir + href,
           throw new IllegalArgumentException(s"missing chapter ${opfDir + href}"))
         val dom = HtmlDom.parse(new String(chapter, java.nio.charset.StandardCharsets.UTF_8))
         def walk(n: HNode): Unit = n match {
-          case e: HElem if Set("h1", "h2", "h3", "h4", "h5", "h6", "p", "li")(Normalize.lowerAscii(e.name)) =>
-            val t = Normalize.line(textOf(e))
-            if (t.nonEmpty && !emitter.isFull) {
-              emitter.addBlock(t)
-              if (cfg.xmlOutput) {
-                val nm = Normalize.lowerAscii(e.name)
-                xe.addElement(if (nm.startsWith("h")) nm else "p", t)
-              }
-            }
-          case e: HElem => e.children.foreach(walk)
+          case e: HElem =>
+            val nm = Normalize.lowerAscii(e.name)
+            if (!BlockTags(nm)) e.children.foreach(walk)
+            else if (!sink.isFull) sink.add(if (nm.startsWith("h")) nm else "p", textOf(e))
           case _ =>
         }
         walk(dom)
       }
       val meta = Map("Content-Type" -> Seq(Mime)) ++ title.map("dc:title" -> Seq(_))
-      ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "", meta, Mime)
+      sink.ok(meta, Mime)
     } catch {
       case e: Exception =>
         ExtractResult.fail(ExtractStatus.ExtractionFailed, s"epub: ${e.getMessage}", Mime)

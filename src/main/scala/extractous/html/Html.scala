@@ -2,7 +2,7 @@ package extractous.html
 
 import extractous.config.{ExtractorConfig, HtmlMode}
 import extractous.model.ExtractResult
-import extractous.text.{Normalize, TextEmitter, XmlEmitter}
+import extractous.text.{BlockSink, Normalize}
 import scala.collection.mutable.ArrayBuffer
 
 /** From-scratch streaming HTML pipeline: single-pass tokenizer → permissive DOM
@@ -197,6 +197,26 @@ object HtmlDom {
         })
     root
   }
+
+  /** All character data under `n`, concatenated in document order. */
+  def textOf(n: HNode): String = n match {
+    case HText(t) => t
+    case e: HElem => e.children.map(textOf).mkString
+  }
+
+  /** `n` and its descendants named `tag` (ASCII case-insensitive, with or
+    * without a namespace prefix), in document order.
+    */
+  def findAll(n: HNode, tag: String): Seq[HElem] = n match {
+    case e: HElem =>
+      val self = if (e.name.equalsIgnoreCase(tag) || Normalize.lowerAscii(e.name).endsWith(":" + tag)) Seq(e) else Seq.empty
+      self ++ e.children.flatMap(findAll(_, tag))
+    case _ => Seq.empty
+  }
+
+  /** The value of attribute `name`, case-insensitively. */
+  def attr(e: HElem, name: String): Option[String] =
+    e.attrs.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
 }
 
 /** One emitted candidate block with the features the classifier needs. */
@@ -351,20 +371,15 @@ object HtmlExtractor {
       case HtmlMode.MainContent => all.filter(isContent)
       case HtmlMode.AllText     => all
     }
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val title = headMeta.getOrElse("dc:title", Seq.empty).headOption
-    if (cfg.htmlMode == HtmlMode.AllText) title.foreach(emitter.addBlock)
+    val sink = new BlockSink(cfg)
+    // the title is always an XML element, but text only in AllText mode
+    headMeta.getOrElse("dc:title", Seq.empty).headOption.foreach { t =>
+      if (cfg.htmlMode == HtmlMode.AllText) sink.add("title", t) else sink.addElement("title", t)
+    }
     // block text is Normalize.line output (flush) — skip the re-normalize
-    kept.iterator.takeWhile(_ => !emitter.isFull).foreach(b => emitter.addNormalizedBlock(b.text))
-    val xml =
-      if (!cfg.xmlOutput) ""
-      else {
-        val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
-        title.foreach(t => xe.addElement("title", t))
-        kept.iterator.takeWhile(_ => !xe.isFull).foreach(b => xe.addElement(if (b.tag.startsWith("h") && b.tag.length == 2) b.tag else "p", b.text))
-        xe.result()
-      }
-    val meta = headMeta + ("Content-Type" -> Seq("text/html; charset=UTF-8"))
-    ExtractResult.ok(emitter.result(), xml, meta, "text/html")
+    kept.iterator.takeWhile(_ => !sink.isFull).foreach { b =>
+      sink.addNormalized(if (b.tag.startsWith("h") && b.tag.length == 2) b.tag else "p", b.text)
+    }
+    sink.ok(headMeta + ("Content-Type" -> Seq("text/html; charset=UTF-8")), "text/html")
   }
 }

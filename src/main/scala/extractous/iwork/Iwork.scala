@@ -1,10 +1,11 @@
 package extractous.iwork
 
 import extractous.config.ExtractorConfig
-import extractous.html.{HElem, HNode, HText, HtmlDom}
+import extractous.html.HtmlDom
+import extractous.html.HtmlDom.{findAll, textOf}
 import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.office.ZipUtil
-import extractous.text.{Normalize, TextEmitter, XmlEmitter}
+import extractous.text.{BlockSink, Normalize}
 
 /** iWork '09 extraction (Pages) — the last named format of the reference's
   * Tika long tail (/root/reference/README.md:14 "60+ formats" defers to Tika;
@@ -23,18 +24,6 @@ object IworkExtractor {
   val Iwork = extractous.sniff.MimeSniffer.Iwork
   val Pages = "application/vnd.apple.pages"
 
-  private def findAll(n: HNode, tag: String): Seq[HElem] = n match {
-    case e: HElem =>
-      val self = if (e.name.equalsIgnoreCase(tag) || Normalize.lowerAscii(e.name).endsWith(":" + tag)) Seq(e) else Seq.empty
-      self ++ e.children.flatMap(findAll(_, tag))
-    case _ => Seq.empty
-  }
-
-  private def textOf(n: HNode): String = n match {
-    case HText(t) => t
-    case e: HElem => e.children.map(textOf).mkString
-  }
-
   def extract(bytes: Array[Byte], cfg: ExtractorConfig): ExtractResult = {
     try {
       val entries = ZipUtil.entries(bytes)
@@ -46,25 +35,22 @@ object IworkExtractor {
       if (!isPages)
         return ExtractResult.fail(ExtractStatus.UnsupportedFormat,
           "iwork: index.xml root is not a Pages sl:document", Iwork)
-      val emitter = new TextEmitter(cfg.maxStringLength)
-      val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+      val sink = new BlockSink(cfg)
       var nPara = 0
       findAll(dom, "p").iterator
         .filter(_.name.equalsIgnoreCase("sf:p"))
-        .takeWhile(_ => !emitter.isFull)
+        .takeWhile(_ => !sink.isFull)
         .foreach { p =>
           val t = Normalize.line(textOf(p))
           if (t.nonEmpty) {
             nPara += 1
-            emitter.addBlock(t)
-            if (cfg.xmlOutput) xe.addElement("p", t)
+            sink.addNormalized("p", t)
           }
         }
       if (nPara == 0)
         ExtractResult.fail(ExtractStatus.ExtractionFailed, "iwork: no sf:p paragraphs", Pages)
       else
-        ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-          Map("Content-Type" -> Seq(Pages), "iwork:paragraph-count" -> Seq(nPara.toString)), Pages)
+        sink.ok(Map("Content-Type" -> Seq(Pages), "iwork:paragraph-count" -> Seq(nPara.toString)), Pages)
     } catch {
       case e: Exception =>
         ExtractResult.fail(ExtractStatus.ExtractionFailed, s"iwork: ${e.getMessage}", Iwork)

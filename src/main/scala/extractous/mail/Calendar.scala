@@ -2,7 +2,7 @@ package extractous.mail
 
 import extractous.config.ExtractorConfig
 import extractous.model.{ExtractResult, ExtractStatus}
-import extractous.text.{Normalize, TextEmitter, XmlEmitter}
+import extractous.text.{BlockSink, Normalize}
 
 /** iCalendar (RFC 5545) and vCard (RFC 6350) — both are folded-line
   * `NAME;PARAMS:VALUE` formats, so they share one content-line reader:
@@ -77,8 +77,7 @@ object CalendarExtractor {
                  else Seq("SUMMARY", "DESCRIPTION", "LOCATION")
     // per-component emission order: group lines into BEGIN..END components,
     // emit wanted properties in the fixed order within each component
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+    val sink = new BlockSink(cfg)
     var emitted = 0
     var comp = List.empty[(String, String)]
     var inComponent = false
@@ -87,9 +86,8 @@ object CalendarExtractor {
       wanted.foreach { w =>
         comp.reverse.collect { case (n, v) if n == w => v }.foreach { v =>
           unescape(v).split("\n", -1).foreach { l =>
-            if (!emitter.isFull && l.nonEmpty) {
-              emitter.addBlock(l)
-              if (cfg.xmlOutput) xe.addElement("p", l)
+            if (!sink.isFull && l.nonEmpty) {
+              sink.add("p", l)
               emitted += 1
             }
           }
@@ -116,7 +114,6 @@ object CalendarExtractor {
       ExtractResult.fail(ExtractStatus.ExtractionFailed,
         s"calendar: no extractable components", mime)
     else
-      ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-        Map("Content-Type" -> Seq(mime), "calendar:component-count" -> Seq(events.toString)), mime)
+      sink.ok(Map("Content-Type" -> Seq(mime), "calendar:component-count" -> Seq(events.toString)), mime)
   }
 }

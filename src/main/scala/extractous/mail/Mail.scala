@@ -3,7 +3,7 @@ package extractous.mail
 import extractous.config.ExtractorConfig
 import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.sniff.MimeSniffer
-import extractous.text.{Normalize, TextEmitter, XmlEmitter}
+import extractous.text.{BlockSink, Normalize}
 
 /** RFC-822 / MIME email (.eml) extraction — the reference covers email through
   * Tika (/root/reference/README.md:14 "60+ formats"; crawls carry mailing-list
@@ -131,21 +131,14 @@ object MailExtractor {
     try {
       val (headers, body) = splitHeadersBody(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
       val text = bestBody(headers, body)
-      val emitter = new TextEmitter(cfg.maxStringLength)
-      val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
-      headers.get("subject").foreach { s =>
-        emitter.addBlock(s)
-        if (cfg.xmlOutput) xe.addElement("h1", s)
-      }
-      text.split("\n", -1).iterator.takeWhile(_ => !emitter.isFull).foreach { line =>
-        emitter.addBlock(line)
-        if (cfg.xmlOutput) xe.addElement("p", line)
-      }
+      val sink = new BlockSink(cfg)
+      headers.get("subject").foreach(sink.add("h1", _))
+      sink.addLines("p", text)
       val meta = Map("Content-Type" -> Seq(Mime)) ++
         headers.get("subject").map("subject" -> Seq(_)) ++
         headers.get("from").map("from" -> Seq(_)) ++
         headers.get("to").map("to" -> Seq(_))
-      ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "", meta, Mime)
+      sink.ok(meta, Mime)
     } catch {
       case e: Exception =>
         ExtractResult.fail(ExtractStatus.ExtractionFailed, s"eml: ${e.getMessage}", Mime)
@@ -170,32 +163,21 @@ object MarkdownExtractor {
 
   def extract(bytes: Array[Byte], cfg: ExtractorConfig): ExtractResult = {
     val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+    val sink = new BlockSink(cfg)
     var inFence = false
-    s.split("\n", -1).iterator.takeWhile(_ => !emitter.isFull).foreach { raw =>
+    s.split("\n", -1).iterator.takeWhile(_ => !sink.isFull).foreach { raw =>
       val line = raw.stripLineEnd
       if (line.trim.startsWith("```")) inFence = !inFence
-      else if (inFence) { emitter.addBlock(line); if (cfg.xmlOutput) xe.addElement("pre", line) }
+      else if (inFence) sink.add("pre", line)
       else {
         val t = line.trim
-        if (t.startsWith("#")) {
-          val level = math.min(6, t.takeWhile(_ == '#').length)
-          val body = stripInline(t.dropWhile(_ == '#'))
-          emitter.addBlock(body)
-          if (cfg.xmlOutput) xe.addElement(s"h$level", body)
-        } else if (t.startsWith("- ") || t.startsWith("* ") || t.matches("""\d+\. .*""")) {
-          val body = stripInline(t.replaceFirst("""^([-*]|\d+\.) """, ""))
-          emitter.addBlock(body)
-          if (cfg.xmlOutput) xe.addElement("p", body)
-        } else if (t.nonEmpty) {
-          val body = stripInline(t)
-          emitter.addBlock(body)
-          if (cfg.xmlOutput) xe.addElement("p", body)
-        }
+        if (t.startsWith("#"))
+          sink.add(s"h${math.min(6, t.takeWhile(_ == '#').length)}", stripInline(t.dropWhile(_ == '#')))
+        else if (t.startsWith("- ") || t.startsWith("* ") || t.matches("""\d+\. .*"""))
+          sink.add("p", stripInline(t.replaceFirst("""^([-*]|\d+\.) """, "")))
+        else if (t.nonEmpty) sink.add("p", stripInline(t))
       }
     }
-    ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-      Map("Content-Type" -> Seq(Mime)), Mime)
+    sink.ok(Map("Content-Type" -> Seq(Mime)), Mime)
   }
 }

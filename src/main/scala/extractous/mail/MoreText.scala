@@ -2,7 +2,7 @@ package extractous.mail
 
 import extractous.config.ExtractorConfig
 import extractous.model.{ExtractResult, ExtractStatus}
-import extractous.text.{TextEmitter, XmlEmitter}
+import extractous.text.BlockSink
 
 /** Delimited text (CSV/TSV, RFC 4180): quote-aware row/cell split — quoted
   * fields may contain the delimiter, doubled quotes, and embedded newlines —
@@ -110,17 +110,11 @@ object CsvExtractor {
       val delim = detectDelim(s).getOrElse(
         return ExtractResult.fail(ExtractStatus.ExtractionFailed, "csv: no uniform delimiter", Mime))
       val rows = parse(s, delim)
-      val emitter = new TextEmitter(cfg.maxStringLength)
-      val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
-      rows.iterator.takeWhile(_ => !emitter.isFull).foreach { cells =>
-        val line = cells.mkString(" ")
-        emitter.addBlock(line)
-        if (cfg.xmlOutput) xe.addElement("row", line)
-      }
-      ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-        Map("Content-Type" -> Seq(Mime),
-          "csv:delimiter" -> Seq(if (delim == '\t') "tab" else delim.toString),
-          "csv:row-count" -> Seq(rows.length.toString)), Mime)
+      val sink = new BlockSink(cfg)
+      sink.addAll("row", rows.iterator.map(_.mkString(" ")))
+      sink.ok(Map("Content-Type" -> Seq(Mime),
+        "csv:delimiter" -> Seq(if (delim == '\t') "tab" else delim.toString),
+        "csv:row-count" -> Seq(rows.length.toString)), Mime)
     } catch {
       case e: Exception =>
         ExtractResult.fail(ExtractStatus.ExtractionFailed, s"csv: ${e.getMessage}", Mime)
@@ -166,28 +160,22 @@ object MboxExtractor {
       val msgs = messages.result()
       if (msgs.isEmpty)
         return ExtractResult.fail(ExtractStatus.ExtractionFailed, "mbox: no messages", Mime)
-      val emitter = new TextEmitter(cfg.maxStringLength)
-      val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+      val sink = new BlockSink(cfg)
       var ok = 0
       var firstErr = ""
-      msgs.iterator.takeWhile(_ => !emitter.isFull).zipWithIndex.foreach { case (m, k) =>
+      msgs.iterator.takeWhile(_ => !sink.isFull).zipWithIndex.foreach { case (m, k) =>
         val r = MailExtractor.extract(m.getBytes(java.nio.charset.StandardCharsets.UTF_8), cfg)
         if (r.status == ExtractStatus.Ok) {
           ok += 1
-          if (r.text.nonEmpty) {
-            r.text.split("\n", -1).iterator.takeWhile(_ => !emitter.isFull)
-              .foreach(emitter.addBlock)
-            if (cfg.xmlOutput) xe.addElement("message", r.text)
-          }
+          sink.addMember("message", r.text)
         } else if (firstErr.isEmpty) firstErr = s"${r.error} <- mbox message ${k + 1}"
       }
       if (ok == 0)
         ExtractResult.fail(ExtractStatus.ExtractionFailed,
           s"mbox: no extractable messages: $firstErr", Mime)
       else
-        ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-          Map("Content-Type" -> Seq(Mime),
-            "mbox:message-count" -> Seq(msgs.length.toString)), Mime)
+        sink.ok(Map("Content-Type" -> Seq(Mime),
+          "mbox:message-count" -> Seq(msgs.length.toString)), Mime)
     } catch {
       case e: Exception =>
         ExtractResult.fail(ExtractStatus.ExtractionFailed, s"mbox: ${e.getMessage}", Mime)

@@ -2,7 +2,7 @@ package extractous.office
 
 import extractous.config.ExtractorConfig
 import extractous.model.{ExtractResult, ExtractStatus}
-import extractous.text.{TextEmitter, XmlEmitter}
+import extractous.text.BlockSink
 
 /** OLE2 / Compound File Binary container (MS-CFB, the .doc/.xls/.ppt shell)
   * and a Word-97 binary text extractor — legacy crawls are full of these; the
@@ -246,15 +246,10 @@ object DocExtractor {
         if (raw.length >= 8 && nuls * 10 > raw.length)
           return ExtractResult.fail(ExtractStatus.UnsupportedFormat,
             "doc: 16-bit (unicode-piece) text area unsupported without piece table", Mime)
-        val emitter = new TextEmitter(cfg.maxStringLength)
-        val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+        val sink = new BlockSink(cfg)
         // \r is the Word paragraph mark; 0x07 ends table cells/rows
-        raw.split("[\r\u0007]", -1).iterator.takeWhile(_ => !emitter.isFull).foreach { p =>
-          emitter.addBlock(p)
-          if (cfg.xmlOutput) xe.addElement("p", p)
-        }
-        ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-          Map("Content-Type" -> Seq(Mime)), Mime)
+        sink.addAll("p", raw.split("[\r\u0007]", -1).iterator)
+        sink.ok(Map("Content-Type" -> Seq(Mime)), Mime)
     }
   }
 }

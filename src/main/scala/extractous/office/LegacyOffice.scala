@@ -2,7 +2,7 @@ package extractous.office
 
 import extractous.config.ExtractorConfig
 import extractous.model.{ExtractResult, ExtractStatus}
-import extractous.text.{Normalize, TextEmitter, XmlEmitter}
+import extractous.text.{BlockSink, Normalize}
 
 /** CFB application dispatch + the legacy .xls/.ppt stream walkers.
   *
@@ -70,16 +70,12 @@ object MsgExtractor {
       if (parts.isEmpty)
         return ExtractResult.fail(ExtractStatus.UnsupportedFormat,
           "msg: no subject/sender/body property streams", Mime)
-      val emitter = new TextEmitter(cfg.maxStringLength)
-      val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
-      parts.iterator.takeWhile(_ => !emitter.isFull).foreach { p =>
-        emitter.addBlock(p)
-        if (cfg.xmlOutput) xe.addElement("p", p)
-      }
+      val sink = new BlockSink(cfg)
+      sink.addAll("p", parts.iterator)
       val meta = Map("Content-Type" -> Seq(Mime)) ++
         subject.map(s => "subject" -> Seq(s)) ++
         sender.map(s => "message:from-name" -> Seq(s))
-      ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "", meta, Mime)
+      sink.ok(meta, Mime)
     } catch {
       case e: Exception =>
         ExtractResult.fail(ExtractStatus.ExtractionFailed, s"msg: ${e.getMessage}", Mime)
@@ -138,16 +134,13 @@ object XlsExtractor {
         pos += 4 + len
       }
       val strings = sst.result()
-      val emitter = new TextEmitter(cfg.maxStringLength)
-      val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
-      refs.result().iterator.takeWhile(_ => !emitter.isFull).foreach { i =>
+      val sink = new BlockSink(cfg)
+      refs.result().iterator.takeWhile(_ => !sink.isFull).foreach { i =>
         if (i < 0 || i >= strings.length)
           throw new IllegalArgumentException(s"xls: LABELSST index $i out of SST range")
-        emitter.addBlock(strings(i))
-        if (cfg.xmlOutput) xe.addElement("p", strings(i))
+        sink.add("p", strings(i))
       }
-      ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-        Map("Content-Type" -> Seq(Mime)), Mime)
+      sink.ok(Map("Content-Type" -> Seq(Mime)), Mime)
     } catch {
       case e: Exception =>
         ExtractResult.fail(ExtractStatus.ExtractionFailed, s"xls: ${e.getMessage}", Mime)
@@ -166,13 +159,12 @@ object PptExtractor {
   def extract(container: Cfb.Container, cfg: ExtractorConfig): ExtractResult = {
     val st = container.stream("PowerPoint Document").get
     try {
-      val emitter = new TextEmitter(cfg.maxStringLength)
-      val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+      val sink = new BlockSink(cfg)
       def u16(p: Int): Int = (st(p) & 0xff) | ((st(p + 1) & 0xff) << 8)
       def i32(p: Int): Int = u16(p) | (u16(p + 2) << 16)
       def walk(from: Int, to: Int): Unit = {
         var pos = from
-        while (pos + 8 <= to && !emitter.isFull) {
+        while (pos + 8 <= to && !sink.isFull) {
           val verInstance = u16(pos)
           val typ = u16(pos + 2)
           val len = i32(pos + 4)
@@ -182,21 +174,16 @@ object PptExtractor {
             walk(pos + 8, pos + 8 + len) // container: children are contiguous
           } else typ match {
             case 0x0fa8 => // TextBytesAtom (8-bit latin-1)
-              val t = new String(st, pos + 8, len, java.nio.charset.StandardCharsets.ISO_8859_1)
-              emitter.addBlock(t)
-              if (cfg.xmlOutput) xe.addElement("p", t)
+              sink.add("p", new String(st, pos + 8, len, java.nio.charset.StandardCharsets.ISO_8859_1))
             case 0x0fa0 => // TextCharsAtom (UTF-16LE)
-              val t = new String(st, pos + 8, len, java.nio.charset.StandardCharsets.UTF_16LE)
-              emitter.addBlock(t)
-              if (cfg.xmlOutput) xe.addElement("p", t)
+              sink.add("p", new String(st, pos + 8, len, java.nio.charset.StandardCharsets.UTF_16LE))
             case _ => // atom we don't consume
           }
           pos += 8 + len
         }
       }
       walk(0, st.length)
-      ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-        Map("Content-Type" -> Seq(Mime)), Mime)
+      sink.ok(Map("Content-Type" -> Seq(Mime)), Mime)
     } catch {
       case e: Exception =>
         ExtractResult.fail(ExtractStatus.ExtractionFailed, s"ppt: ${e.getMessage}", Mime)

@@ -1,10 +1,12 @@
 package extractous.office
 
 import extractous.config.ExtractorConfig
+import extractous.core.Extract
 import extractous.html.{HElem, HNode, HText, HtmlDom}
+import extractous.html.HtmlDom.textOf
 import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.sniff.MimeSniffer
-import extractous.text.{TextEmitter, XmlEmitter}
+import extractous.text.BlockSink
 import java.io.ByteArrayInputStream
 import java.util.zip.ZipInputStream
 
@@ -15,52 +17,66 @@ import java.util.zip.ZipInputStream
   * and the VBA-macro flag (presence marker — we do not decode vbaProject.bin).
   */
 object ZipUtil {
-  /** Decompression-bomb budget: per-entry and whole-archive inflated-output
-    * caps — a zip bomb fails the row with an exception (status -4 upstream),
-    * never the executor JVM (same pattern as Extract.gunzip / Pdf.inflate).
+  /** Whole-archive inflated-output budget. With the per-entry budget
+    * (default [[Extract.MaxLayerBytes]]) it makes a zip bomb fail the row
+    * with an exception (status -4 upstream), never the executor JVM.
     */
-  val MaxEntryBytes: Long = 256L * 1024 * 1024
   val MaxTotalBytes: Long = 512L * 1024 * 1024
 
-  /** Read all entries (name → bytes). Throws on malformed zip data. */
-  def entries(bytes: Array[Byte]): Map[String, Array[Byte]] = {
+  /** The one zip walk: file entries in archive order (directories skipped),
+    * and the number of entries seen, directories included. Throws on
+    * malformed zip data and on an entry past either budget.
+    */
+  private def walk(bytes: Array[Byte], maxEntry: Long, maxTotal: Long): (Seq[(String, Array[Byte])], Int) = {
     val zis = new ZipInputStream(new ByteArrayInputStream(bytes))
-    val out = Map.newBuilder[String, Array[Byte]]
-    var entry = zis.getNextEntry
+    val out = Seq.newBuilder[(String, Array[Byte])]
     var seen = 0
     var total = 0L
-    while (entry != null) {
-      if (!entry.isDirectory) {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var entryTotal = 0L
-        var n = zis.read(buf)
-        while (n >= 0) {
-          entryTotal += n; total += n
-          if (entryTotal > MaxEntryBytes || total > MaxTotalBytes)
-            throw new IllegalStateException(s"zip entry '${entry.getName}' exceeds inflate budget")
-          bos.write(buf, 0, n)
-          n = zis.read(buf)
+    try {
+      var entry = zis.getNextEntry
+      while (entry != null) {
+        if (!entry.isDirectory) {
+          val bos = new java.io.ByteArrayOutputStream()
+          val buf = new Array[Byte](8192)
+          var entryTotal = 0L
+          var n = zis.read(buf)
+          while (n >= 0) {
+            entryTotal += n; total += n
+            if (entryTotal > maxEntry || total > maxTotal)
+              throw new IllegalStateException(s"zip entry '${entry.getName}' exceeds inflate budget")
+            bos.write(buf, 0, n)
+            n = zis.read(buf)
+          }
+          out += (entry.getName -> bos.toByteArray)
         }
-        out += (entry.getName -> bos.toByteArray)
+        seen += 1
+        entry = zis.getNextEntry
       }
-      seen += 1
-      entry = zis.getNextEntry
-    }
-    zis.close()
+    } finally zis.close()
+    (out.result(), seen)
+  }
+
+  /** File entries in archive order — the archive walk, where member order is
+    * the emission order.
+    */
+  def members(bytes: Array[Byte], maxEntry: Long = Extract.MaxLayerBytes,
+      maxTotal: Long = MaxTotalBytes): Seq[(String, Array[Byte])] =
+    walk(bytes, maxEntry, maxTotal)._1
+
+  /** File entries by name (a later duplicate wins) — the package lookup of
+    * OOXML, ODF, EPUB and iWork. Throws when the archive has no entries at all.
+    */
+  def entries(bytes: Array[Byte], maxEntry: Long = Extract.MaxLayerBytes,
+      maxTotal: Long = MaxTotalBytes): Map[String, Array[Byte]] = {
+    val (files, seen) = walk(bytes, maxEntry, maxTotal)
     if (seen == 0) throw new IllegalArgumentException("zip: no entries")
-    out.result()
+    files.toMap
   }
 }
 
 object OfficeExtractor {
   private def xml(bytes: Array[Byte]): HElem =
     HtmlDom.parse(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-
-  private def textOf(n: HNode): String = n match {
-    case HText(t) => t
-    case HElem(_, _, ch) => ch.map(textOf).mkString
-  }
 
   /** Collect dc:title / dc:creator from docProps/core.xml when present. */
   private def coreProps(entries: Map[String, Array[Byte]]): Map[String, Seq[String]] = {
@@ -122,8 +138,7 @@ object OfficeExtractor {
     val content = entries.getOrElse("content.xml",
       return ExtractResult.fail(ExtractStatus.ExtractionFailed, "odf: missing content.xml", mime))
     val root = xml(content)
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+    val sink = new BlockSink(cfg)
 
     // all descendant character data of one paragraph-ish node, ODF whitespace
     // elements (text:tab, text:s, text:line-break) folded to spaces
@@ -144,17 +159,13 @@ object OfficeExtractor {
     def walk(e: HElem): Unit = e.children.foreach {
       case el: HElem =>
         el.name match {
-          case "text:h" =>
-            val t = paraText(el)
-            if (t.nonEmpty) { emitter.addBlock(t); xe.addElement("h1", t) }
-          case "text:p" =>
-            val t = paraText(el)
-            if (t.nonEmpty) { emitter.addBlock(t); xe.addElement("p", t) }
+          case "text:h" => sink.add("h1", paraText(el))
+          case "text:p" => sink.add("p", paraText(el))
           case "table:table-row" =>
             val cells = el.children.collect {
               case c: HElem if c.name == "table:table-cell" => paraText(c).trim
             }.filter(_.nonEmpty)
-            if (cells.nonEmpty) { val t = cells.mkString(" "); emitter.addBlock(t); xe.addElement("p", t) }
+            sink.add("p", cells.mkString(" "))
           case _ => walk(el)
         }
       case _ =>
@@ -176,15 +187,14 @@ object OfficeExtractor {
       }
       find(m)
     }
-    ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "", meta, mime)
+    sink.ok(meta, mime)
   }
 
   private def docx(entries: Map[String, Array[Byte]], cfg: ExtractorConfig): ExtractResult = {
     val doc = entries.getOrElse("word/document.xml",
       return ExtractResult.fail(ExtractStatus.ExtractionFailed, "docx: missing word/document.xml", MimeSniffer.Docx))
     val root = xml(doc)
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+    val sink = new BlockSink(cfg)
     val o = cfg.office
 
     // Collect text of one w:p paragraph honoring the include/skip predicates.
@@ -217,9 +227,7 @@ object OfficeExtractor {
     }
 
     def walkBody(e: HElem): Unit = e.children.foreach {
-      case el: HElem if el.name == "w:p" =>
-        val t = paragraphText(el)
-        if (t.nonEmpty) { emitter.addBlock(t); xe.addElement("p", t) }
+      case el: HElem if el.name == "w:p" => sink.add("p", paragraphText(el))
       case el: HElem => walkBody(el)
       case _ =>
     }
@@ -232,7 +240,7 @@ object OfficeExtractor {
       val sources = printableStrings(bin, minLen = 8)
       if (sources.nonEmpty) meta += ("X-VBA-Macros" -> sources)
     }
-    ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "", meta, MimeSniffer.Docx)
+    sink.ok(meta, MimeSniffer.Docx)
   }
 
   private def xlsx(entries: Map[String, Array[Byte]], cfg: ExtractorConfig): ExtractResult = {
@@ -249,8 +257,7 @@ object OfficeExtractor {
       out.result()
     }.getOrElse(Vector.empty)
 
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+    val sink = new BlockSink(cfg)
     // numeric order: lexicographic would put sheet10 before sheet2 (pptx idiom)
     val sheets = entries.keys.filter(k => k.startsWith("xl/worksheets/sheet") && k.endsWith(".xml")).toSeq
       .sortBy(k => k.stripPrefix("xl/worksheets/sheet").stripSuffix(".xml").toIntOption.getOrElse(0))
@@ -265,19 +272,18 @@ object OfficeExtractor {
       def walkRows(e: HElem): Unit = e.children.foreach {
         case el: HElem if el.name == "row" =>
           val cells = el.children.collect { case c: HElem if c.name == "c" => cellValue(c) }.filter(_.nonEmpty)
-          if (cells.nonEmpty) { val t = cells.mkString(" "); emitter.addBlock(t); xe.addElement("p", t) }
+          sink.add("p", cells.mkString(" "))
         case el: HElem => walkRows(el)
         case _ =>
       }
       walkRows(root)
     }
     val meta = coreProps(entries) + ("Content-Type" -> Seq(MimeSniffer.Xlsx))
-    ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "", meta, MimeSniffer.Xlsx)
+    sink.ok(meta, MimeSniffer.Xlsx)
   }
 
   private def pptx(entries: Map[String, Array[Byte]], cfg: ExtractorConfig): ExtractResult = {
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+    val sink = new BlockSink(cfg)
     val slides = entries.keys.filter(k => k.startsWith("ppt/slides/slide") && k.endsWith(".xml")).toSeq
       .sortBy(k => k.stripPrefix("ppt/slides/slide").stripSuffix(".xml").toIntOption.getOrElse(0))
     slides.foreach { name =>
@@ -291,14 +297,13 @@ object OfficeExtractor {
             case _                           =>
           }
           collect(el)
-          val t = sb.toString
-          if (t.nonEmpty) { emitter.addBlock(t); xe.addElement("p", t) }
+          sink.add("p", sb.toString)
         case el: HElem => walkParas(el)
         case _ =>
       }
       walkParas(root)
     }
     val meta = coreProps(entries) + ("Content-Type" -> Seq(MimeSniffer.Pptx))
-    ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "", meta, MimeSniffer.Pptx)
+    sink.ok(meta, MimeSniffer.Pptx)
   }
 }

@@ -3,7 +3,7 @@ package extractous.pdf
 import extractous.config.{ExtractorConfig, PdfOcrStrategy}
 import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.ocr.Ocr
-import extractous.text.{Normalize, TextEmitter, XmlEmitter}
+import extractous.text.{BlockSink, Normalize}
 import scala.collection.mutable.ArrayBuffer
 
 /** From-scratch PDF layout parser per the north rule: COS object lexer,
@@ -827,8 +827,7 @@ object PdfExtractor {
     if (pgs.isEmpty) return ExtractResult.fail(ExtractStatus.ExtractionFailed, "pdf: no page tree", "application/pdf")
 
     val strategy = cfg.pdf.ocrStrategy
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+    val sink = new BlockSink(cfg)
     val seenImageDigests = scala.collection.mutable.HashSet.empty[String]
     var imageCount = 0
     var ocrFailure: Option[String] = None
@@ -846,18 +845,16 @@ object PdfExtractor {
         case PdfOcrStrategy.Auto => !hasText
       }
       // assembleTagged lines are already Normalize.line canonical (applied at
-      // line build) — skip the emitter's defensive re-normalize scan
+      // line build) — skip the sink's normalize scan
       if (useText) assembleTagged(page.runs).foreach { case (line, mcTag) =>
-        emitter.addNormalizedBlock(line)
         val tag = mcTag.filter(_ => cfg.pdf.extractMarkedContent)
           .map(Normalize.lowerAscii).filter(t => t.matches("h[1-6]|p")).getOrElse("p")
-        xe.addElement(tag, line)
+        sink.addNormalized(tag, line)
       }
       if (useOcr && page.images.nonEmpty) {
         page.images.foreach { img =>
           try {
-            val t = ocr.recognize(img, cfg.ocr)
-            t.split("\n").foreach { l => emitter.addBlock(l); xe.addElement("p", l) }
+            sink.addLines("p", ocr.recognize(img, cfg.ocr))
           } catch {
             case e: Exception => ocrFailure = Some(s"ocr: ${e.getMessage}")
           }
@@ -870,12 +867,10 @@ object PdfExtractor {
           if (!cfg.pdf.extractUniqueInlineImagesOnly || seenImageDigests.add(digest)) imageCount += 1
         }
       }
-      if (cfg.pdf.extractAnnotationText) page.annots.foreach { a =>
-        emitter.addBlock(a); xe.addElement("p", a)
-      }
+      if (cfg.pdf.extractAnnotationText) page.annots.foreach(sink.add("p", _))
     }
 
-    if (ocrFailure.isDefined && emitter.result().isEmpty)
+    if (ocrFailure.isDefined && sink.isEmpty)
       return ExtractResult.fail(ExtractStatus.OcrFailed, ocrFailure.get, "application/pdf")
 
     // document info metadata
@@ -891,6 +886,6 @@ object PdfExtractor {
     infoStr("Producer").foreach(t => meta += ("pdf:producer" -> Seq(t)))
     if (cfg.pdf.extractInlineImages) meta += ("X-Image-Count" -> Seq(imageCount.toString))
 
-    ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "", meta, "application/pdf")
+    sink.ok(meta, "application/pdf")
   }
 }

@@ -29,7 +29,7 @@ object CorpusStats {
     *
     * Driver-histogram bound: the round-4 version collected the FULL
     * distinct-length histogram, whose worst case is max-doc-length rows
-    * (up to 10⁸ with the default 100 MB `maxStringLength` — gigabytes on the
+    * (up to 10⁸ with the default 100 MB text-length cap — gigabytes on the
     * driver). Lengths are now EXACT below `exactCap` and log-bucketed above
     * it (key = 2^⌊log₂ len⌋, the bucket's lower bound), so the histogram is
     * ≤ `exactCap` + 64 rows by construction regardless of corpus tail.

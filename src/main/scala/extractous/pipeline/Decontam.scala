@@ -34,16 +34,6 @@ object Decontam {
   def normTokens(c: Column): Column =
     filter(split(lower(c), "[^a-z0-9\\u4e00-\\u9fff]+"), t => t =!= "")
 
-  /** All word n-grams of `c` as space-joined strings; empty array when the
-    * document has fewer than n tokens.
-    */
-  def ngrams(c: Column, n: Int): Column = {
-    val ts = normTokens(c)
-    when(size(ts) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), size(ts) - (n - 1)),
-        i => concat_ws(" ", slice(ts, i, lit(n)))))
-  }
-
   /** 64-bit keys of all word n-grams, WITHOUT materializing gram strings:
     * each token is xxhash64'd once and gram keys combine the token hashes
     * with rotate-21-XOR — order-sensitive ("a b" ≠ "b a"), full 64-bit key

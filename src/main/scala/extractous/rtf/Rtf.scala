@@ -2,7 +2,7 @@ package extractous.rtf
 
 import extractous.config.ExtractorConfig
 import extractous.model.ExtractResult
-import extractous.text.{TextEmitter, XmlEmitter}
+import extractous.text.BlockSink
 
 /** Minimal from-scratch RTF-to-text: control-word scanner with destination
   * -group skipping (fonttbl/colortbl/stylesheet/info/pict and `{\*` groups),
@@ -15,16 +15,15 @@ object RtfExtractor {
 
   def extract(bytes: Array[Byte], cfg: ExtractorConfig): ExtractResult = {
     val s = new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
-    val emitter = new TextEmitter(cfg.maxStringLength)
-    val xe = new XmlEmitter(cfg.maxStringLength, cfg.xmlOutput)
+    val sink = new BlockSink(cfg)
     val cur = new java.lang.StringBuilder
     def flush(): Unit = {
-      if (cur.length() > 0) { emitter.addBlock(cur.toString); xe.addElement("p", cur.toString); cur.setLength(0) }
+      if (cur.length() > 0) { sink.add("p", cur.toString); cur.setLength(0) }
     }
     var i = 0
     var skipDepth = -1 // brace depth at which a skipped destination group started
     var depth = 0
-    while (i < s.length && !emitter.isFull) {
+    while (i < s.length && !sink.isFull) {
       s.charAt(i) match {
         case '{' =>
           depth += 1; i += 1
@@ -72,7 +71,6 @@ object RtfExtractor {
       }
     }
     flush()
-    ExtractResult.ok(emitter.result(), if (cfg.xmlOutput) xe.result() else "",
-      Map("Content-Type" -> Seq("application/rtf")), "application/rtf")
+    sink.ok(Map("Content-Type" -> Seq("application/rtf")), "application/rtf")
   }
 }

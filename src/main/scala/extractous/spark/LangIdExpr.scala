@@ -65,7 +65,7 @@ object LangIdModel {
   /** Gram statistics saturate within a few hundred bytes (Cavnar & Trenkle
     * report reliable ID at 300 B); capping the analyzed prefix bounds the
     * per-row cost on real 20–100 KB pages to O(1) instead of O(page) with
-    * a sort — the same defensive bound the truncating TextEmitter applies
+    * a sort — the same defensive bound the truncating BlockSink applies
     * to extraction. 4 KB is ~13× the saturation point.
     */
   final val MaxChars = 4096

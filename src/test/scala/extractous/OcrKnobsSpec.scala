@@ -21,7 +21,7 @@ class OcrKnobsSpec extends AnyFunSuite {
     val img = Bmp.encode(GlyphFont.renderWithBait(Seq("DOC 7", "hello")))
     assert(GlyphTemplateOcr.recognize(img, OcrConfig()) == "DOC 7\nhello\n?")
     // raw recognizer keeps the (now-blank) bait row as a trailing empty line;
-    // TextEmitter drops empty blocks downstream
+    // the BlockSink drops empty blocks downstream
     assert(GlyphTemplateOcr.recognize(img, OcrConfig(enableImagePreprocessing = true)) == "DOC 7\nhello\n")
   }
 

@@ -3,7 +3,7 @@ package extractous
 import extractous.config.{ExtractorConfig, OfficeConfig}
 import extractous.gen.DocxWriter
 import extractous.model.ExtractStatus
-import extractous.office.OfficeExtractor
+import extractous.office.{OfficeExtractor, ZipUtil}
 import extractous.sniff.MimeSniffer
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,5 +82,34 @@ class OfficeSpec extends AnyFunSuite {
       "ppt/slides/slide10.xml" -> slide("ten").getBytes("UTF-8")))
     val r = OfficeExtractor.extract(zipb, MimeSniffer.Pptx, cfg)
     assert(r.text == "one\ntwo\nthree\nten") // numeric slide ordering, not lexicographic
+  }
+
+  test("zip walk: an entry past the per-entry inflate budget throws, without inflating it whole") {
+    val MB = 1024 * 1024
+    val bomb = DocxWriter.zip(Seq("zeros.bin" -> new Array[Byte](4 * MB)))
+    assert(bomb.length < 64 * 1024) // deflated zeros: the budget, not the input size, is what bounds memory
+    assert(ZipUtil.members(bomb, maxEntry = 4 * MB).map(_._2.length) == Seq(4 * MB))
+    Seq[Array[Byte] => Any](ZipUtil.members(_, maxEntry = MB), ZipUtil.entries(_, maxEntry = MB)).foreach { walk =>
+      val e = intercept[IllegalStateException](walk(bomb))
+      assert(e.getMessage == "zip entry 'zeros.bin' exceeds inflate budget")
+    }
+  }
+
+  test("zip walk: entries that together pass the whole-archive budget throw") {
+    val KB = 1024
+    val zip = DocxWriter.zip((1 to 5).map(i => s"part$i.bin" -> new Array[Byte](300 * KB)))
+    assert(ZipUtil.members(zip, maxTotal = 1500 * KB).map(_._1) == (1 to 5).map(i => s"part$i.bin"))
+    Seq[Array[Byte] => Any](ZipUtil.members(_, maxTotal = 1000 * KB), ZipUtil.entries(_, maxTotal = 1000 * KB)).foreach { walk =>
+      val e = intercept[IllegalStateException](walk(zip))
+      assert(e.getMessage == "zip entry 'part4.bin' exceeds inflate budget")
+    }
+  }
+
+  test("zip walk: entries keeps the later of two same-named entries, members keeps both in order") {
+    // the writer refuses duplicate names: write "x.txt", then rename it in place
+    val zip = new String(DocxWriter.zip(Seq("a.txt" -> "one".getBytes, "b.txt" -> "two".getBytes,
+      "x.txt" -> "three".getBytes)), "ISO-8859-1").replace("x.txt", "a.txt").getBytes("ISO-8859-1")
+    assert(ZipUtil.members(zip).map { case (n, b) => n -> new String(b) } == Seq("a.txt" -> "one", "b.txt" -> "two", "a.txt" -> "three"))
+    assert(new String(ZipUtil.entries(zip)("a.txt")) == "three")
   }
 }

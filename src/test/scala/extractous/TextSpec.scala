@@ -1,10 +1,15 @@
 package extractous
 
-import extractous.config.CharSet
-import extractous.text.{Encoding, Normalize, TextEmitter, XmlEmitter}
+import extractous.config.{CharSet, ExtractorConfig}
+import extractous.text.{BlockSink, Encoding, Normalize}
 import org.scalatest.funsuite.AnyFunSuite
 
 class TextSpec extends AnyFunSuite {
+  private def sink(maxLen: Int, xml: Boolean = false) =
+    new BlockSink(ExtractorConfig(maxStringLength = maxLen, xmlOutput = xml))
+  private def textOf(s: BlockSink): String = s.ok(Map.empty, "text/plain").text
+  private def xmlOf(s: BlockSink): String = s.ok(Map.empty, "text/plain").xml
+
   test("normalize collapses runs and trims") {
     assert(Normalize.line("  a\t\tb   c  ") == "a b c")
     assert(Normalize.line("\n\r x  y ") == "x y")
@@ -15,44 +20,45 @@ class TextSpec extends AnyFunSuite {
     assert(Normalize.text("a\n\n  \nb\nc  ") == "a\nb\nc")
   }
   test("emitter joins blocks with single newline, no trailing") {
-    val e = new TextEmitter(1000)
-    e.addBlock(" one "); e.addBlock(""); e.addBlock("two")
-    assert(e.result() == "one\ntwo")
+    val e = sink(1000)
+    e.add("p", " one "); e.add("p", ""); e.add("p", "two")
+    assert(textOf(e) == "one\ntwo")
   }
   test("emitter truncates at exactly maxLen chars") {
-    val e = new TextEmitter(5)
-    e.addBlock("abcdefgh")
-    assert(e.result() == "abcde")
+    val e = sink(5)
+    e.add("p", "abcdefgh")
     assert(e.isFull)
-    assert(!e.addBlock("more"))
+    e.add("p", "more")
+    assert(textOf(e) == "abcde")
   }
   test("emitter truncation across blocks counts separator") {
-    val e = new TextEmitter(5)
-    e.addBlock("abc"); e.addBlock("def")
+    val e = sink(5)
+    e.add("p", "abc"); e.add("p", "def")
     // "abc\nd" = 5 chars
-    assert(e.result() == "abc\nd")
+    assert(textOf(e) == "abc\nd")
   }
   test("emitter never ends on separator") {
-    val e = new TextEmitter(4)
-    e.addBlock("abcd"); e.addBlock("x")
-    assert(e.result() == "abcd")
+    val e = sink(4)
+    e.add("p", "abcd"); e.add("p", "x")
+    assert(textOf(e) == "abcd")
   }
   test("truncation property: length <= maxLen (seeded random)") {
     val rnd = new scala.util.Random(42)
     (1 to 200).foreach { _ =>
       val n = 1 + rnd.nextInt(200)
       val blocks = List.fill(rnd.nextInt(8))(rnd.alphanumeric.take(rnd.nextInt(120)).mkString(" "))
-      val e = new TextEmitter(n)
-      blocks.foreach(e.addBlock)
-      val r = e.result()
+      val e = sink(n)
+      blocks.foreach(e.add("p", _))
+      val r = textOf(e)
       assert(r.length <= n, s"n=$n got ${r.length}")
       assert(!r.endsWith("\n"))
     }
   }
   test("xml emitter escapes") {
-    val x = new XmlEmitter(1000)
-    x.addElement("p", "a < b & c > d")
-    assert(x.result() == "<doc>\n<p>a &lt; b &amp; c &gt; d</p>\n</doc>")
+    val x = sink(1000, xml = true)
+    x.add("p", "a < b & c > d")
+    assert(xmlOf(x) == "<doc>\n<p>a &lt; b &amp; c &gt; d</p>\n</doc>")
+    assert(xmlOf(sink(1000)) == "", "the xml column is empty when XML mode is off")
   }
   test("ascii encoding folds non-ascii") {
     assert(Encoding("héllo", CharSet.UsAscii) == "h?llo")
@@ -61,32 +67,34 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("truncation never splits a surrogate pair") {
-    val e = new TextEmitter(4)
-    e.addBlock("abc😀z")
-    assert(e.result() == "abc") // cutting at 4 would strand the high surrogate
-    val e2 = new TextEmitter(5)
-    e2.addBlock("abc😀z")
-    assert(e2.result() == "abc😀") // whole pair fits
+    val e = sink(4)
+    e.add("p", "abc😀z")
+    assert(textOf(e) == "abc") // cutting at 4 would strand the high surrogate
+    val e2 = sink(5)
+    e2.add("p", "abc😀z")
+    assert(textOf(e2) == "abc😀") // whole pair fits
     val rnd = new scala.util.Random(7)
     (1 to 200).foreach { _ =>
       val s = (1 to 20).map(_ => if (rnd.nextBoolean()) "😀" else "ab").mkString
-      val e3 = new TextEmitter(1 + rnd.nextInt(12))
-      e3.addBlock(s)
-      val r = e3.result()
+      val e3 = sink(1 + rnd.nextInt(12))
+      e3.add("p", s)
+      val r = textOf(e3)
       if (r.nonEmpty) assert(!Character.isHighSurrogate(r.charAt(r.length - 1)), s"input=$s")
     }
   }
 
   test("xml emitter caps an oversized element during emission, not after") {
-    val x = new XmlEmitter(10)
+    val x = sink(10, xml = true)
     x.addElement("p", "a" * 1000)
-    assert(x.isFull)
-    assert(x.result().length < 40, x.result()) // text budget + tag overhead, never the full element
+    x.addElement("p", "more") // the cap was hit: nothing further is appended
+    val xml = xmlOf(x)
+    assert(!xml.contains("more"), xml)
+    assert(xml.length < 40, xml) // text budget + tag overhead, never the full element
     // maxLen 9 minus the 5-char "<doc>" prefix leaves a 4-char text budget;
     // cutting at 4 would strand the high surrogate → backs off to "abc"
-    val x2 = new XmlEmitter(9)
+    val x2 = sink(9, xml = true)
     x2.addElement("p", "abc😀zzz")
-    assert(x2.result() == "<doc>\n<p>abc</p>\n</doc>")
+    assert(xmlOf(x2) == "<doc>\n<p>abc</p>\n</doc>")
   }
 
   test("lowerAscii/upperAscii: locale-independent, length-preserving, non-ASCII untouched") {
