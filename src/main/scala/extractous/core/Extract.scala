@@ -1,7 +1,7 @@
 package extractous.core
 
 import extractous.config.{CharSet, ExtractorConfig, PdfOcrStrategy}
-import extractous.html.HtmlExtractor
+import extractous.html.{HtmlDom, HtmlExtractor}
 import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.ocr.{GlyphTemplateOcr, Ocr}
 import extractous.office.OfficeExtractor
@@ -38,8 +38,10 @@ object Extract {
   private[core] def dispatchSafe(bytes: Array[Byte], cfg: ExtractorConfig, ocr: Ocr, depth: Int): ExtractResult =
     try dispatch(bytes, cfg, ocr, depth)
     catch {
+      // backstop for the recursion left (CFB, legacy Office, nested multipart,
+      // the PDF lexer); the row keeps its sniffed type for per-format counts
       case e: StackOverflowError =>
-        ExtractResult.fail(ExtractStatus.ExtractionFailed, "extraction failed: deep recursion")
+        ExtractResult.fail(ExtractStatus.ExtractionFailed, "extraction failed: deep recursion", MimeSniffer.sniff(bytes))
       case e: OutOfMemoryError =>
         ExtractResult.fail(ExtractStatus.OutOfMemory, "out of memory")
       // fatal deployment/control conditions must NOT become per-row -4:
@@ -245,13 +247,8 @@ object Extract {
     * becomes blocks in document order (Tika-style XML-to-text semantics).
     */
   private def xmlDoc(bytes: Array[Byte], cfg: ExtractorConfig): ExtractResult = {
-    val root = extractous.html.HtmlDom.parse(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
     val sink = new BlockSink(cfg)
-    def walk(n: extractous.html.HNode): Unit = n match {
-      case extractous.html.HText(t) => if (!sink.isFull) sink.add("p", t)
-      case e: extractous.html.HElem => e.children.foreach(walk)
-    }
-    walk(root)
+    HtmlDom.walk(HtmlDom.parse(bytes))(t => if (!sink.isFull) sink.add("p", t))
     sink.ok(Map("Content-Type" -> Seq(MimeSniffer.Xml)), MimeSniffer.Xml)
   }
 

@@ -1,8 +1,8 @@
 package extractous.epub
 
 import extractous.config.ExtractorConfig
-import extractous.html.{HElem, HNode, HtmlDom}
-import extractous.html.HtmlDom.{attr, findAll, textOf}
+import extractous.html.HtmlDom
+import extractous.html.HtmlDom.{attr, findAll, outermost, textOf}
 import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.office.ZipUtil
 import extractous.text.{BlockSink, Normalize}
@@ -26,16 +26,14 @@ object EpubExtractor {
       val entries = ZipUtil.entries(bytes)
       val container = entries.getOrElse("META-INF/container.xml",
         throw new IllegalArgumentException("no META-INF/container.xml"))
-      val containerDom = HtmlDom.parse(new String(container, java.nio.charset.StandardCharsets.UTF_8))
+      val containerDom = HtmlDom.parse(container)
       val opfPath = findAll(containerDom, "rootfile").headOption.flatMap(attr(_, "full-path"))
         .getOrElse(throw new IllegalArgumentException("container.xml names no rootfile"))
       val opfDir = opfPath.lastIndexOf('/') match {
         case -1 => ""
         case i  => opfPath.substring(0, i + 1)
       }
-      val opf = HtmlDom.parse(new String(
-        entries.getOrElse(opfPath, throw new IllegalArgumentException(s"missing OPF $opfPath")),
-        java.nio.charset.StandardCharsets.UTF_8))
+      val opf = HtmlDom.parse(entries.getOrElse(opfPath, throw new IllegalArgumentException(s"missing OPF $opfPath")))
       val hrefById = findAll(opf, "item").flatMap(i =>
         for (id <- attr(i, "id"); href <- attr(i, "href")) yield id -> href).toMap
       val spine = findAll(opf, "itemref").flatMap(attr(_, "idref"))
@@ -48,15 +46,9 @@ object EpubExtractor {
           throw new IllegalArgumentException(s"spine idref '$idref' not in manifest"))
         val chapter = entries.getOrElse(opfDir + href,
           throw new IllegalArgumentException(s"missing chapter ${opfDir + href}"))
-        val dom = HtmlDom.parse(new String(chapter, java.nio.charset.StandardCharsets.UTF_8))
-        def walk(n: HNode): Unit = n match {
-          case e: HElem =>
-            val nm = Normalize.lowerAscii(e.name)
-            if (!BlockTags(nm)) e.children.foreach(walk)
-            else if (!sink.isFull) sink.add(if (nm.startsWith("h")) nm else "p", textOf(e))
-          case _ =>
+        outermost(HtmlDom.parse(chapter))(e => BlockTags(e.name)).iterator.takeWhile(_ => !sink.isFull).foreach { e =>
+          sink.add(if (e.name.startsWith("h")) e.name else "p", textOf(e))
         }
-        walk(dom)
       }
       val meta = Map("Content-Type" -> Seq(Mime)) ++ title.map("dc:title" -> Seq(_))
       sink.ok(meta, Mime)

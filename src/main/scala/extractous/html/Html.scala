@@ -3,6 +3,7 @@ package extractous.html
 import extractous.config.{ExtractorConfig, HtmlMode}
 import extractous.model.ExtractResult
 import extractous.text.{BlockSink, Normalize}
+import java.util.Arrays.copyOf
 import scala.collection.mutable.ArrayBuffer
 
 /** From-scratch streaming HTML pipeline: single-pass tokenizer → permissive DOM
@@ -165,6 +166,13 @@ sealed trait HNode
 final case class HText(text: String) extends HNode
 final case class HElem(name: String, attrs: Map[String, String], children: ArrayBuffer[HNode]) extends HNode
 
+/** The parsed tree and THE one traversal over it: [[walk]], a pre-order walk
+  * on an explicit stack. [[textOf]], [[findAll]] and [[outermost]] are built
+  * on it, and every reader of a parsed document (HTML, XML, OOXML, ODF, EPUB,
+  * iWork, HTML mail) calls these; nothing recurses over `HNode`. So a
+  * document's status never depends on its depth or on the thread's stack
+  * size, and no depth cap is needed: a tree is bounded by its input.
+  */
 object HtmlDom {
   import HtmlTokenizer._
   private val voidTags = Set("br", "img", "hr", "meta", "link", "input", "area", "base", "col", "embed", "source", "track", "wbr")
@@ -173,46 +181,118 @@ object HtmlDom {
     "p" -> Set("p"), "li" -> Set("li"), "tr" -> Set("tr", "td", "th"),
     "td" -> Set("td", "th"), "th" -> Set("td", "th"), "option" -> Set("option"))
 
+  def parse(bytes: Array[Byte]): HElem = parse(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+
+  /** Open elements of one name. */
+  private final class Count { var n = 0 }
+
   def parse(html: String): HElem = {
     val root = HElem("#root", Map.empty, ArrayBuffer.empty)
-    var stack = List(root)
+    // the open elements, root first, and the open count of each one's name:
+    // an end tag with no open element of its name costs O(1), not a scan.
+    // The counts start at the first end tag that does not close the
+    // innermost element, so well-formed markup never pays for them.
+    var open = new Array[HElem](16)
+    var counts = new Array[Count](16)
+    var top = 0
+    open(0) = root
+    var byName: java.util.HashMap[String, Count] = null
+    def track(i: Int): Unit = {
+      var c = byName.get(open(i).name)
+      if (c == null) { c = new Count; byName.put(open(i).name, c) }
+      c.n += 1
+      counts(i) = c
+    }
+    def pop(): Unit = { if (byName != null) counts(top).n -= 1; top -= 1 }
     HtmlTokenizer.foreachTok(html)(
-      raw => if (raw.nonEmpty) stack.head.children += HText(decodeEntities(raw)),
+      raw => if (raw.nonEmpty) open(top).children += HText(decodeEntities(raw)),
       (name, attrs, selfClosing) => {
         impliedClose.get(name).foreach { closes =>
           // pop WHILE the head matches, not once: a new <tr> after an open
           // <td> must close the td AND the enclosing tr, or the new row
           // nests inside the old one and inherits its boiler/content scope
-          while (stack.head.name != "#root" && closes(stack.head.name)) stack = stack.tail
+          while (top > 0 && closes(open(top).name)) pop()
         }
         val el = HElem(name, attrs, ArrayBuffer.empty)
-        stack.head.children += el
-        if (!selfClosing && !voidTags(name)) stack = el :: stack
+        open(top).children += el
+        if (!selfClosing && !voidTags(name)) {
+          top += 1
+          if (top == open.length) { open = copyOf(open, top * 2); counts = copyOf(counts, top * 2) }
+          open(top) = el
+          if (byName != null) track(top)
+        }
       },
       name =>
-        // pop to the matching open tag if present anywhere on the stack
-        if (stack.exists(_.name == name)) {
-          while (stack.head.name != name) stack = stack.tail
-          if (stack.head.name != "#root") stack = stack.tail
+        if (open(top).name == name) pop()
+        else {
+          if (byName == null) { byName = new java.util.HashMap; (1 to top).foreach(track) }
+          // pop to the matching open tag if present anywhere on the stack
+          val c = byName.get(name)
+          if (c != null && c.n > 0) {
+            while (open(top).name != name) pop()
+            pop()
+          }
         })
     root
   }
 
+  /** THE traversal of `n` and its descendants in document order. Character
+    * data goes to `text`; an element goes to `enter`, which returns whether
+    * to walk its children, and after them to `exit`. Callers keep
+    * per-element state in their own LIFO: push on enter, pop on exit.
+    */
+  def walk(n: HNode)(text: String => Unit, enter: HElem => Boolean = _ => true,
+      exit: HElem => Unit = _ => ()): Unit = n match {
+    case HText(t) => text(t)
+    case root: HElem if enter(root) =>
+      var open = new Array[HElem](8) // the entered elements, innermost last
+      var next = new Array[Int](8) // the index of each one's next child
+      var top = 0
+      open(0) = root
+      while (top >= 0) {
+        val e = open(top)
+        if (next(top) == e.children.length) { exit(e); top -= 1 }
+        else {
+          next(top) += 1
+          e.children(next(top) - 1) match {
+            case HText(t) => text(t)
+            case c: HElem if enter(c) =>
+              top += 1
+              if (top == open.length) { open = copyOf(open, top * 2); next = copyOf(next, top * 2) }
+              open(top) = c
+              next(top) = 0
+            case _ =>
+          }
+        }
+      }
+    case _ =>
+  }
+
   /** All character data under `n`, concatenated in document order. */
   def textOf(n: HNode): String = n match {
-    case HText(t) => t
-    case e: HElem => e.children.map(textOf).mkString
+    case HElem(_, _, ArrayBuffer(HText(t))) => t // one text child (w:t, a:t, v): no copy
+    case _ =>
+      val sb = new java.lang.StringBuilder
+      walk(n)(sb.append(_))
+      sb.toString
+  }
+
+  private def collect(n: HNode, pred: HElem => Boolean, inside: Boolean): Seq[HElem] = {
+    val out = Vector.newBuilder[HElem]
+    walk(n)(_ => (), e => if (pred(e)) { out += e; inside } else true)
+    out.result()
   }
 
   /** `n` and its descendants named `tag` (ASCII case-insensitive, with or
     * without a namespace prefix), in document order.
     */
-  def findAll(n: HNode, tag: String): Seq[HElem] = n match {
-    case e: HElem =>
-      val self = if (e.name.equalsIgnoreCase(tag) || Normalize.lowerAscii(e.name).endsWith(":" + tag)) Seq(e) else Seq.empty
-      self ++ e.children.flatMap(findAll(_, tag))
-    case _ => Seq.empty
-  }
+  def findAll(n: HNode, tag: String): Seq[HElem] =
+    collect(n, e => e.name.equalsIgnoreCase(tag) || Normalize.lowerAscii(e.name).endsWith(":" + tag), inside = true)
+
+  /** `n` and its descendants that match `pred`, in document order, without
+    * looking inside a match: the outermost matches only.
+    */
+  def outermost(n: HNode)(pred: HElem => Boolean): Seq[HElem] = collect(n, pred, inside = false)
 
   /** The value of attribute `name`, case-insensitively. */
   def attr(e: HElem, name: String): Option[String] =
@@ -250,6 +330,11 @@ object HtmlExtractor {
   private val contentTags = Set("article", "main")
   private val boilerHints = Seq("nav", "menu", "footer", "sidebar", "banner", "advert", "ads", "ad-", "-ad", "promo", "cookie", "breadcrumb", "share", "social", "comment", "related", "widget", "masthead")
   private val contentHints = Seq("content", "article", "main", "post", "story", "body-text", "entry")
+  // scope and kind bits of one open element in `blocks`
+  private final val Boiler = 1
+  private final val Content = 2
+  private final val IsBlock = 4
+  private final val IsAnchor = 8
 
   private def classHint(attrs: Map[String, String], hints: Seq[String]): Boolean = {
     // the old `class + " " + id` join was never empty (the separator), so
@@ -266,7 +351,8 @@ object HtmlExtractor {
   }
 
   /** Flatten DOM into candidate blocks, tracking anchor-text chars and
-    * boilerplate/content ancestor scope.
+    * boilerplate/content ancestor scope. The `#root` of [[HtmlDom.parse]] is
+    * the outermost block.
     */
   def blocks(root: HElem): (Vector[Block], Map[String, Seq[String]]) = {
     val out = Vector.newBuilder[Block]
@@ -290,60 +376,61 @@ object HtmlExtractor {
       }
     }
 
-    def flush(scopeBoiler: Boolean, scopeContent: Boolean): Unit = {
+    // `scope`: the Boiler/Content bits of the element that holds the block
+    def flush(scope: Int): Unit = {
       val raw = if (single != null) single else cur.toString
       val text = Normalize.line(raw)
-      if (text.nonEmpty) out += Block(curTag, text, math.min(curLink, raw.length), raw.length, scopeBoiler, scopeContent)
+      if (text.nonEmpty)
+        out += Block(curTag, text, math.min(curLink, raw.length), raw.length, (scope & Boiler) != 0, (scope & Content) != 0)
       cur.setLength(0); single = null; curLink = 0; curTag = "p"
     }
 
     def headingTag(n: String): String = if (n.length == 2 && n.charAt(0) == 'h' && n.charAt(1).isDigit) n else "p"
 
-    def walk(el: HElem, inBoiler: Boolean, inContent: Boolean): Unit = {
-      el.children.foreach {
-        case HText(t) =>
-          appendText(t)
-          if (anchorDepth > 0) curLink += t.count(!Character.isWhitespace(_))
-        case e: HElem if skipTags(e.name) =>
-          if (e.name == "head") collectHead(e, meta)
-        case e: HElem =>
-          val b = inBoiler || boilerTags(e.name) || classHint(e.attrs, boilerHints)
-          val c = inContent || contentTags(e.name) || classHint(e.attrs, contentHints)
-          if (e.name == "br") {
-            flush(inBoiler, inContent)
-          } else if (blockTags(e.name)) {
-            flush(inBoiler, inContent)
-            val saveTag = headingTag(e.name)
-            curTag = saveTag
-            walk(e, b, c)
-            flush(b, c)
-          } else {
-            // inline element: no whitespace injected — HTML joins inline
-            // content exactly as written ("a<b>b</b>c" renders "abc")
-            val wasAnchor = e.name == "a" && e.attrs.contains("href")
-            if (wasAnchor) anchorDepth += 1
-            walk(e, b, c)
-            if (wasAnchor) anchorDepth -= 1
+    // title and meta anywhere in a head; a title's own text only
+    def collectHead(head: HElem): Unit =
+      HtmlDom.outermost(head)(e => e.name == "title" || e.name == "meta").foreach { e =>
+        val (k, v) =
+          if (e.name == "title") ("dc:title", Normalize.line(e.children.collect { case HText(x) => x }.mkString))
+          else (Normalize.lowerAscii(e.attrs.getOrElse("name", e.attrs.getOrElse("property", ""))),
+            HtmlTokenizer.decodeEntities(e.attrs.getOrElse("content", "")))
+        if (k.nonEmpty && v.nonEmpty) meta(k) = meta.getOrElse(k, Vector.empty) :+ v
+      }
+
+    // caller-side LIFO, one entry per entered element: its scope and kind bits
+    var scopes = new Array[Int](64)
+    var depth = 0
+    HtmlDom.walk(root)(
+      { t =>
+        appendText(t)
+        if (anchorDepth > 0) curLink += t.count(!Character.isWhitespace(_))
+      },
+      { e =>
+        val parent = if (depth == 0) 0 else scopes(depth - 1)
+        val bits =
+          if (skipTags(e.name)) { if (e.name == "head") collectHead(e); -1 }
+          else if (e.name == "br") { flush(parent); -1 }
+          else {
+            val scope =
+              (if ((parent & Boiler) != 0 || boilerTags(e.name) || classHint(e.attrs, boilerHints)) Boiler else 0) |
+              (if ((parent & Content) != 0 || contentTags(e.name) || classHint(e.attrs, contentHints)) Content else 0)
+            if (blockTags(e.name)) { flush(parent); curTag = headingTag(e.name); scope | IsBlock }
+            else if (e.name == "a" && e.attrs.contains("href")) { anchorDepth += 1; scope | IsAnchor }
+            else scope // inline: no whitespace injected, "a<b>b</b>c" renders "abc"
           }
-      }
-    }
-
-    def collectHead(head: HElem, m: scala.collection.mutable.LinkedHashMap[String, Vector[String]]): Unit = {
-      head.children.foreach {
-        case e: HElem if e.name == "title" =>
-          val t = Normalize.line(e.children.collect { case HText(x) => x }.mkString)
-          if (t.nonEmpty) m("dc:title") = m.getOrElse("dc:title", Vector.empty) :+ t
-        case e: HElem if e.name == "meta" =>
-          val n = Normalize.lowerAscii(e.attrs.getOrElse("name", e.attrs.getOrElse("property", "")))
-          val v = HtmlTokenizer.decodeEntities(e.attrs.getOrElse("content", ""))
-          if (n.nonEmpty && v.nonEmpty) m(n) = m.getOrElse(n, Vector.empty) :+ v
-        case e: HElem => collectHead(e, m)
-        case _ =>
-      }
-    }
-
-    walk(root, inBoiler = false, inContent = false)
-    flush(scopeBoiler = false, scopeContent = false)
+        if (bits >= 0) {
+          if (depth == scopes.length) scopes = copyOf(scopes, depth * 2)
+          scopes(depth) = bits
+          depth += 1
+        }
+        bits >= 0
+      },
+      { _ =>
+        depth -= 1
+        val bits = scopes(depth)
+        if ((bits & IsBlock) != 0) flush(bits)
+        else if ((bits & IsAnchor) != 0) anchorDepth -= 1
+      })
     (out.result(), meta.map { case (k, v) => k -> (v: Seq[String]) }.toMap)
   }
 
@@ -364,8 +451,7 @@ object HtmlExtractor {
   }
 
   def extract(bytes: Array[Byte], cfg: ExtractorConfig): ExtractResult = {
-    val html = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-    val dom = HtmlDom.parse(html)
+    val dom = HtmlDom.parse(bytes)
     val (all, headMeta) = blocks(dom)
     val kept = cfg.htmlMode match {
       case HtmlMode.MainContent => all.filter(isContent)

@@ -30,7 +30,7 @@ object IworkExtractor {
       val xml = entries.getOrElse("index.xml",
         return ExtractResult.fail(ExtractStatus.UnsupportedFormat,
           "iwork: no index.xml (post-2013 IWA packages are not supported)", Iwork))
-      val dom = HtmlDom.parse(new String(xml, java.nio.charset.StandardCharsets.UTF_8))
+      val dom = HtmlDom.parse(xml)
       val isPages = findAll(dom, "document").exists(e => Normalize.lowerAscii(e.name).startsWith("sl:"))
       if (!isPages)
         return ExtractResult.fail(ExtractStatus.UnsupportedFormat,

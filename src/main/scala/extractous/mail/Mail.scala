@@ -119,12 +119,15 @@ object MailExtractor {
     } else Some(decodeBody(body, headers.getOrElse("content-transfer-encoding", "7bit"), charsetOf(headers)))
   }
 
+  /** All character data of an HTML body, one space between siblings. */
   private def htmlText(s: String): String = {
-    def walk(n: extractous.html.HNode): String = n match {
-      case extractous.html.HText(t) => t
-      case e: extractous.html.HElem => e.children.map(walk).mkString(" ")
-    }
-    walk(extractous.html.HtmlDom.parse(s))
+    val sb = new java.lang.StringBuilder
+    var first = true // the next node is the first child of its parent
+    extractous.html.HtmlDom.walk(extractous.html.HtmlDom.parse(s))(
+      { t => if (!first) sb.append(' '); sb.append(t); first = false },
+      { _ => if (!first) sb.append(' '); first = true; true },
+      { _ => first = false })
+    sb.toString
   }
 
   def extract(bytes: Array[Byte], cfg: ExtractorConfig): ExtractResult = {

@@ -2,8 +2,8 @@ package extractous.office
 
 import extractous.config.ExtractorConfig
 import extractous.core.Extract
-import extractous.html.{HElem, HNode, HText, HtmlDom}
-import extractous.html.HtmlDom.textOf
+import extractous.html.{HElem, HtmlDom}
+import extractous.html.HtmlDom.{outermost, textOf}
 import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.sniff.MimeSniffer
 import extractous.text.BlockSink
@@ -75,27 +75,22 @@ object ZipUtil {
 }
 
 object OfficeExtractor {
-  private def xml(bytes: Array[Byte]): HElem =
-    HtmlDom.parse(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Collect dc:title / dc:creator from docProps/core.xml when present. */
-  private def coreProps(entries: Map[String, Array[Byte]]): Map[String, Seq[String]] = {
-    entries.get("docProps/core.xml").map { b =>
-      val root = xml(b)
-      var m = Map.empty[String, Seq[String]]
-      def walk(e: HElem): Unit = e.children.foreach {
-        case el: HElem =>
-          el.name match {
-            case "dc:title"   => val t = textOf(el).trim; if (t.nonEmpty) m += ("dc:title" -> Seq(t))
-            case "dc:creator" => val t = textOf(el).trim; if (t.nonEmpty) m += ("dc:creator" -> Seq(t))
-            case _            => walk(el)
-          }
-        case _ =>
+  /** dc:title / dc:creator at any depth; the last non-empty one of each wins. */
+  private def dublinCore(root: HElem): Map[String, Seq[String]] =
+    outermost(root)(e => e.name == "dc:title" || e.name == "dc:creator")
+      .foldLeft(Map.empty[String, Seq[String]]) { (m, e) =>
+        val t = textOf(e).trim
+        if (t.nonEmpty) m + (e.name -> Seq(t)) else m
       }
-      walk(root)
-      m
-    }.getOrElse(Map.empty)
-  }
+
+  /** The parts `<prefix><N>.xml` in N order (lexicographic puts 10 before 2). */
+  private def numbered(entries: Map[String, Array[Byte]], prefix: String): Seq[Array[Byte]] =
+    entries.keys.filter(k => k.startsWith(prefix) && k.endsWith(".xml")).toSeq
+      .sortBy(k => k.stripPrefix(prefix).stripSuffix(".xml").toIntOption.getOrElse(0)).map(entries)
+
+  /** Dublin Core from docProps/core.xml when present. */
+  private def coreProps(entries: Map[String, Array[Byte]]): Map[String, Seq[String]] =
+    entries.get("docProps/core.xml").map(b => dublinCore(HtmlDom.parse(b))).getOrElse(Map.empty)
 
   /** Printable-ASCII runs of at least `minLen` chars in a binary stream — the
     * macro-source recovery a strings-scan of vbaProject.bin yields (the
@@ -137,101 +132,80 @@ object OfficeExtractor {
   private def odf(entries: Map[String, Array[Byte]], mime: String, cfg: ExtractorConfig): ExtractResult = {
     val content = entries.getOrElse("content.xml",
       return ExtractResult.fail(ExtractStatus.ExtractionFailed, "odf: missing content.xml", mime))
-    val root = xml(content)
     val sink = new BlockSink(cfg)
 
     // all descendant character data of one paragraph-ish node, ODF whitespace
     // elements (text:tab, text:s, text:line-break) folded to spaces
     def paraText(e: HElem): String = {
       val sb = new StringBuilder
-      def walk(n: HNode): Unit = n match {
-        case HText(t) => sb.append(t)
-        case el: HElem =>
-          el.name match {
-            case "text:tab" | "text:s" | "text:line-break" => sb.append(' ')
-            case _                                         => el.children.foreach(walk)
-          }
-      }
-      walk(e)
+      HtmlDom.walk(e)(sb.append(_), el => el.name match {
+        case "text:tab" | "text:s" | "text:line-break" => sb.append(' '); false
+        case _                                         => true
+      })
       sb.toString
     }
 
-    def walk(e: HElem): Unit = e.children.foreach {
-      case el: HElem =>
-        el.name match {
-          case "text:h" => sink.add("h1", paraText(el))
-          case "text:p" => sink.add("p", paraText(el))
-          case "table:table-row" =>
-            val cells = el.children.collect {
-              case c: HElem if c.name == "table:table-cell" => paraText(c).trim
-            }.filter(_.nonEmpty)
-            sink.add("p", cells.mkString(" "))
-          case _ => walk(el)
-        }
-      case _ =>
-    }
-    walk(root)
-
-    // meta.xml Dublin Core
-    var meta: Map[String, Seq[String]] = Map("Content-Type" -> Seq(mime))
-    entries.get("meta.xml").foreach { b =>
-      val m = xml(b)
-      def find(e: HElem): Unit = e.children.foreach {
-        case el: HElem =>
-          el.name match {
-            case "dc:title"   => val t = textOf(el).trim; if (t.nonEmpty) meta += ("dc:title" -> Seq(t))
-            case "dc:creator" => val t = textOf(el).trim; if (t.nonEmpty) meta += ("dc:creator" -> Seq(t))
-            case _            => find(el)
-          }
+    val blocks = Set("text:h", "text:p", "table:table-row")
+    outermost(HtmlDom.parse(content))(e => blocks(e.name)).foreach { el =>
+      el.name match {
+        case "text:h" => sink.add("h1", paraText(el))
+        case "text:p" => sink.add("p", paraText(el))
         case _ =>
+          val cells = el.children.collect {
+            case c: HElem if c.name == "table:table-cell" => paraText(c).trim
+          }.filter(_.nonEmpty)
+          sink.add("p", cells.mkString(" "))
       }
-      find(m)
     }
+
+    val meta = Map("Content-Type" -> Seq(mime)) ++
+      entries.get("meta.xml").map(b => dublinCore(HtmlDom.parse(b))).getOrElse(Map.empty)
     sink.ok(meta, mime)
   }
 
   private def docx(entries: Map[String, Array[Byte]], cfg: ExtractorConfig): ExtractResult = {
     val doc = entries.getOrElse("word/document.xml",
       return ExtractResult.fail(ExtractStatus.ExtractionFailed, "docx: missing word/document.xml", MimeSniffer.Docx))
-    val root = xml(doc)
     val sink = new BlockSink(cfg)
     val o = cfg.office
 
-    // Collect text of one w:p paragraph honoring the include/skip predicates.
+    // Text of one w:p paragraph honoring the include/skip predicates; raw text
+    // outside w:t is formatting noise. A text box's non-empty paragraphs join
+    // the paragraph holding the box, space-separated. `bufs`, innermost first:
+    // a buffer per open paragraph, null inside a text box but outside its
+    // paragraphs; `openers`: the element that opened each entry but the last.
     def paragraphText(p: HElem): String = {
-      val sb = new StringBuilder
-      def walk(e: HElem): Unit = e.children.foreach {
-        case HText(_) => // raw text outside w:t is formatting noise
-        case el: HElem =>
-          el.name match {
-            case "w:t"            => sb.append(textOf(el))
-            case "w:tab"          => sb.append(' ')
-            case "w:br" | "w:cr"  => sb.append(' ')
-            case "w:del"          => if (o.includeDeletedContent) walk(el)
-            case "w:deltext"      => if (o.includeDeletedContent) sb.append(textOf(el))
-            case "w:movefrom"     => if (o.includeMoveFromContent) walk(el)
-            case "w:txbxcontent"  => if (o.includeShapeBasedContent) walkBlocks(el)
-            case "w:ins"          => walk(el) // insertions always included
-            case _                => walk(el)
+      var bufs = List(new StringBuilder)
+      var openers = List.empty[HElem]
+      def open(el: HElem, buf: StringBuilder): Boolean = { bufs ::= buf; openers ::= el; true }
+      HtmlDom.walk(p)(_ => (), { el =>
+        val sb = bufs.head
+        if (sb == null) el.name != "w:p" || open(el, new StringBuilder)
+        else el.name match {
+          case "w:t"                     => sb.append(textOf(el)); false
+          case "w:tab" | "w:br" | "w:cr" => sb.append(' '); false
+          case "w:del"                   => o.includeDeletedContent
+          case "w:deltext"               => if (o.includeDeletedContent) sb.append(textOf(el)); false
+          case "w:movefrom"              => o.includeMoveFromContent
+          case "w:txbxcontent"           => o.includeShapeBasedContent && open(el, null)
+          case _                         => true // w:ins and the rest: walk through
+        }
+      }, { el =>
+        if (openers.nonEmpty && (openers.head eq el)) {
+          val done = bufs.head
+          openers = openers.tail
+          bufs = bufs.tail
+          if (done != null && done.nonEmpty) {
+            val host = bufs.tail.head // below the text box this paragraph sits in
+            if (host.nonEmpty) host.append(' ')
+            host.append(done)
           }
-      }
-      def walkBlocks(e: HElem): Unit = e.children.foreach {
-        case el: HElem if el.name == "w:p" =>
-          val t = paragraphText(el)
-          if (t.nonEmpty) { if (sb.nonEmpty) sb.append(' '); sb.append(t) }
-        case el: HElem => walkBlocks(el)
-        case _ =>
-      }
-      walk(p)
-      sb.toString
+        }
+      })
+      bufs.head.toString
     }
 
-    def walkBody(e: HElem): Unit = e.children.foreach {
-      case el: HElem if el.name == "w:p" => sink.add("p", paragraphText(el))
-      case el: HElem => walkBody(el)
-      case _ =>
-    }
-    walkBody(root)
+    outermost(HtmlDom.parse(doc))(_.name == "w:p").foreach(p => sink.add("p", paragraphText(p)))
 
     var meta: Map[String, Seq[String]] = coreProps(entries) +
       ("Content-Type" -> Seq(MimeSniffer.Docx))
@@ -245,38 +219,21 @@ object OfficeExtractor {
 
   private def xlsx(entries: Map[String, Array[Byte]], cfg: ExtractorConfig): ExtractResult = {
     // shared strings
-    val shared: Vector[String] = entries.get("xl/sharedStrings.xml").map { b =>
-      val root = xml(b)
-      val out = Vector.newBuilder[String]
-      def walk(e: HElem): Unit = e.children.foreach {
-        case el: HElem if el.name == "si" => out += textOf(el)
-        case el: HElem                    => walk(el)
-        case _                            =>
-      }
-      walk(root)
-      out.result()
-    }.getOrElse(Vector.empty)
+    val shared: Vector[String] = entries.get("xl/sharedStrings.xml")
+      .map(b => outermost(HtmlDom.parse(b))(_.name == "si").iterator.map(textOf).toVector).getOrElse(Vector.empty)
 
     val sink = new BlockSink(cfg)
-    // numeric order: lexicographic would put sheet10 before sheet2 (pptx idiom)
-    val sheets = entries.keys.filter(k => k.startsWith("xl/worksheets/sheet") && k.endsWith(".xml")).toSeq
-      .sortBy(k => k.stripPrefix("xl/worksheets/sheet").stripSuffix(".xml").toIntOption.getOrElse(0))
-    sheets.foreach { name =>
-      val root = xml(entries(name))
+    numbered(entries, "xl/worksheets/sheet").foreach { sheet =>
       def cellValue(c: HElem): String = {
         val isShared = c.attrs.get("t").contains("s")
         val v = c.children.collectFirst { case el: HElem if el.name == "v" => textOf(el) }.getOrElse("")
         if (isShared) shared.lift(v.trim.toIntOption.getOrElse(-1)).getOrElse("")
         else v.trim
       }
-      def walkRows(e: HElem): Unit = e.children.foreach {
-        case el: HElem if el.name == "row" =>
-          val cells = el.children.collect { case c: HElem if c.name == "c" => cellValue(c) }.filter(_.nonEmpty)
-          sink.add("p", cells.mkString(" "))
-        case el: HElem => walkRows(el)
-        case _ =>
+      outermost(HtmlDom.parse(sheet))(_.name == "row").foreach { row =>
+        val cells = row.children.collect { case c: HElem if c.name == "c" => cellValue(c) }.filter(_.nonEmpty)
+        sink.add("p", cells.mkString(" "))
       }
-      walkRows(root)
     }
     val meta = coreProps(entries) + ("Content-Type" -> Seq(MimeSniffer.Xlsx))
     sink.ok(meta, MimeSniffer.Xlsx)
@@ -284,24 +241,10 @@ object OfficeExtractor {
 
   private def pptx(entries: Map[String, Array[Byte]], cfg: ExtractorConfig): ExtractResult = {
     val sink = new BlockSink(cfg)
-    val slides = entries.keys.filter(k => k.startsWith("ppt/slides/slide") && k.endsWith(".xml")).toSeq
-      .sortBy(k => k.stripPrefix("ppt/slides/slide").stripSuffix(".xml").toIntOption.getOrElse(0))
-    slides.foreach { name =>
-      val root = xml(entries(name))
-      def walkParas(e: HElem): Unit = e.children.foreach {
-        case el: HElem if el.name == "a:p" =>
-          val sb = new StringBuilder
-          def collect(x: HElem): Unit = x.children.foreach {
-            case t: HElem if t.name == "a:t" => sb.append(textOf(t))
-            case t: HElem                    => collect(t)
-            case _                           =>
-          }
-          collect(el)
-          sink.add("p", sb.toString)
-        case el: HElem => walkParas(el)
-        case _ =>
+    numbered(entries, "ppt/slides/slide").foreach { slide =>
+      outermost(HtmlDom.parse(slide))(_.name == "a:p").foreach { p =>
+        sink.add("p", outermost(p)(_.name == "a:t").iterator.map(textOf).mkString)
       }
-      walkParas(root)
     }
     val meta = coreProps(entries) + ("Content-Type" -> Seq(MimeSniffer.Pptx))
     sink.ok(meta, MimeSniffer.Pptx)

@@ -553,11 +553,17 @@ object PdfExtractor {
     val pagesRoot = root.flatMap(r => dictGet(r, "Pages", objs) match { case d: Dict => Some(d); case _ => None })
     val out = Vector.newBuilder[Page]
 
-    def walk(node: Dict): Unit = {
-      dictGet(node, "Type", objs) match {
+    // pre-order on an explicit stack, each node once: a /Kids entry that
+    // points back up the tree (or at itself) is skipped, not walked forever
+    var todo = pagesRoot.toList
+    val seen = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[Dict, java.lang.Boolean](4))
+    while (todo.nonEmpty) {
+      val node = todo.head
+      todo = todo.tail
+      if (seen.add(node)) dictGet(node, "Type", objs) match {
         case Name("Pages") =>
           dictGet(node, "Kids", objs) match {
-            case Arr(kids) => kids.foreach(k => resolve(k, objs) match { case d: Dict => walk(d); case _ => })
+            case Arr(kids) => kids.reverseIterator.foreach(k => resolve(k, objs) match { case d: Dict => todo ::= d; case _ => })
             case _ =>
           }
         case _ =>
@@ -587,7 +593,6 @@ object PdfExtractor {
           out += Page(node, runs, images, annots)
       }
     }
-    pagesRoot.foreach(walk)
     out.result()
   }
 

@@ -1,7 +1,7 @@
 package extractous
 
 import extractous.config.{ExtractorConfig, HtmlMode}
-import extractous.html.{HtmlExtractor, HtmlTokenizer}
+import extractous.html.{HtmlDom, HtmlExtractor, HtmlTokenizer}
 import org.scalatest.funsuite.AnyFunSuite
 
 class HtmlSpec extends AnyFunSuite {
@@ -185,5 +185,38 @@ class HtmlSpec extends AnyFunSuite {
       assert(after.text.contains("real text stays here"))
       assert(!after.text.contains("var x=1"))
     } finally java.util.Locale.setDefault(saved)
+  }
+
+  test("HtmlDom.walk: pre-order text, enter and exit; a refused element is neither walked nor exited") {
+    val dom = HtmlDom.parse("<a>1<b>2<c>3</c></b><skip>4<d>5</d></skip>6</a>7")
+    val events = Vector.newBuilder[String]
+    HtmlDom.walk(dom)(t => events += t, { e => events += s"<${e.name}>"; e.name != "skip" }, e => events += s"</${e.name}>")
+    assert(events.result() == Vector("<#root>", "<a>", "1", "<b>", "2", "<c>", "3", "</c>", "</b>", "<skip>", "6", "</a>", "7", "</#root>"))
+  }
+
+  test("HtmlDom queries: textOf, findAll descends into matches, outermost does not") {
+    val dom = HtmlDom.parse("<x:p>a<p>b<p2>c</p2></p><q><x:P>d</x:P></q></x:p>")
+    assert(HtmlDom.textOf(dom) == "abcd")
+    assert(HtmlDom.findAll(dom, "p").map(HtmlDom.textOf) == Seq("abcd", "bc", "d"))
+    assert(HtmlDom.outermost(dom)(_.name.endsWith("p")).map(HtmlDom.textOf) == Seq("abcd"))
+    assert(HtmlDom.outermost(dom)(_.name == "p").map(HtmlDom.textOf) == Seq("bc"))
+    val deep = HtmlDom.parse("<i>" * 200000 + "leaf")
+    assert(HtmlDom.textOf(deep) == "leaf")
+    assert(HtmlDom.findAll(deep, "i").size == 200000)
+    assert(HtmlDom.outermost(deep)(_.name == "i").map(_.name) == Seq("i"))
+  }
+
+  test("HtmlDom.parse: end tags close through to the nearest open element of their name, or do nothing") {
+    def shape(html: String): String = {
+      val sb = new StringBuilder
+      HtmlDom.walk(HtmlDom.parse(html))(t => sb.append(t), { e => if (e.name != "#root") sb.append(s"(${e.name}"); true },
+        e => if (e.name != "#root") sb.append(")"))
+      sb.toString
+    }
+    assert(shape("<b>1<i>2</b>3</i>4") == "(b1(i2))34")
+    assert(shape("<b>1</i>2</b>3") == "(b12)3")
+    assert(shape("<p>1<p>2<b>3<p>4</b>5") == "(p1)(p2(b3(p4))5)")
+    assert(shape("<tr><td>1<td>2<tr><td>3</tr>4") == "(tr(td1)(td2))(tr(td3))4")
+    assert(shape("<div><b>x</div></b>y") == "(div(bx))y")
   }
 }

@@ -80,7 +80,125 @@ object OutputModeDigests {
       Seq(0L, 3L, 100L, 200L).map(id => Case(s"warc/$id", CorpusGen.warcPayload(id, text, "en")))
   }
 
-  def cases: Seq[Case] = corpus ++ extras
+  private def docx(body: String): Array[Byte] = DocxWriter.zip(Seq(
+    "[Content_Types].xml" -> "<Types/>".getBytes(UTF_8),
+    "word/document.xml" ->
+      s"""<?xml version="1.0"?><w:document xmlns:w="w"><w:body>$body</w:body></w:document>""".getBytes(UTF_8)))
+
+  private def epub(chapter: String): Array[Byte] = DocxWriter.zip(Seq(
+    "mimetype" -> "application/epub+zip".getBytes(UTF_8),
+    "META-INF/container.xml" ->
+      """<?xml version="1.0"?><container><rootfiles><rootfile full-path="c.opf"/></rootfiles></container>""".getBytes(UTF_8),
+    "c.opf" -> ("""<?xml version="1.0"?><package><metadata><dc:title>Nested <b>blocks</b></dc:title></metadata>""" +
+      """<manifest><item id="c1" href="c1.xhtml"/></manifest><spine><itemref idref="c1"/></spine></package>""").getBytes(UTF_8),
+    "c1.xhtml" -> s"""<?xml version="1.0"?><html><body>$chapter</body></html>""".getBytes(UTF_8)),
+    storedNames = Set("mimetype"))
+
+  /** Tree shapes each markup extractor walks: nested, empty and mixed
+    * content, elements in odd places. Nesting stays at most 100 deep.
+    */
+  private def domShapes: Seq[Case] = {
+    def run(t: String) = s"<w:r><w:t>$t</w:t></w:r>"
+    def para(inner: String) = s"<w:p>$inner</w:p>"
+    def box(paras: String*) = s"<w:r><w:pict><w:txbxContent>${paras.mkString}</w:txbxContent></w:pict></w:r>"
+    val docxBoxes = docx(
+      para(run("Host before") + box(para(run("box one")), para(""), para(run("box two") + "<w:r><w:tab/></w:r>" + run("tabbed"))) +
+        run(" host after")) +
+      para(box(para(run("only box")))) +
+      para(box(para(run("outer box") + box(para(run("inner box"))) + run("outer tail")), "<w:t>stray in box</w:t>")) +
+      para(box(para(""), para(""))) +
+      para(box(para(box(para(box(para(run("three deep")))))))) +
+      para("<w:del>" + box(para(run("deleted box"))) + "</w:del>" + run("kept")) +
+      para("<w:ins>" + run("inserted") + "</w:ins><w:del><w:r><w:delText>deleted</w:delText></w:r></w:del>" +
+        "<w:moveFrom>" + run("moved") + "</w:moveFrom><w:r><w:br/><w:t>after break</w:t><w:cr/></w:r>") +
+      "<w:tbl><w:tr><w:tc>" + para(run("cell para")) + "</w:tc></w:tr></w:tbl>" +
+      "<w:sdt><w:sdtContent>" + para(run("in sdt")) + "</w:sdtContent></w:sdt>" +
+      para(run("direct") + para(run("nested p"))) +
+      "<w:t>body text outside paragraphs</w:t>" + para(""))
+    val odt = DocxWriter.zip(Seq(
+      "mimetype" -> OdfWriter.OdtMime.getBytes(UTF_8),
+      "content.xml" -> ("""<?xml version="1.0"?><office:document-content><office:body><office:text>""" +
+        """<text:h>Head<text:tab/>ing</text:h><text:p>one<text:s/>two<text:s text:c="3"/>three<text:line-break/>four</text:p>""" +
+        """<text:p>span <text:span>inner <text:span>deeper<text:tab/></text:span></text:span>tail</text:p>""" +
+        """<text:list><text:list-item><text:p>list item</text:p></text:list-item></text:list>""" +
+        """<text:p>outer <text:note><text:note-body><text:p>note para</text:p></text:note-body></text:note> after</text:p>""" +
+        """<text:section><text:section><text:p>in sections</text:p></text:section></text:section>""" +
+        """<table:table><table:table-row><table:table-cell><text:p>c1</text:p></table:table-cell>""" +
+        """<table:table-cell></table:table-cell><table:table-cell><text:p> c<text:s/>3 </text:p><text:p>more</text:p></table:table-cell>""" +
+        """<table:covered-table-cell><text:p>covered</text:p></table:covered-table-cell></table:table-row>""" +
+        """<table:table-row><table:table-cell/></table:table-row></table:table>loose text""" +
+        """</office:text></office:body></office:document-content>""").getBytes(UTF_8),
+      "meta.xml" -> ("""<?xml version="1.0"?><office:document-meta><office:meta><dc:title></dc:title>""" +
+        """<x><dc:title>Odd <b>title</b></dc:title></x><dc:creator> maker </dc:creator></office:meta></office:document-meta>""").getBytes(UTF_8)),
+      storedNames = Set("mimetype"))
+    val xlsx = DocxWriter.zip(Seq(
+      "[Content_Types].xml" -> "<Types/>".getBytes(UTF_8),
+      "xl/sharedStrings.xml" -> ("""<?xml version="1.0"?><sst><si><t>plain</t></si><si><r><t>rich </t></r><r><t>runs</t></r></si>""" +
+        """<si><t></t></si><si><t> padded </t><rPh><t>phonetic</t></rPh></si></sst>""").getBytes(UTF_8),
+      "xl/worksheets/sheet2.xml" -> ("""<?xml version="1.0"?><worksheet><sheetData>""" +
+        """<row><c t="s"><v>0</v></c><c t="inlineStr"><is><t>inline</t></is></c><c><v> 42 </v></c><c/><c t="s"><v>1</v></c></row>""" +
+        """<row><c t="s"><v>2</v></c><c></c></row><row><c t="s"><v>99</v></c><c t="s"><v>x</v></c><c t="s"><v>3</v></c></row>""" +
+        """<row><c><f>SUM(A1)</f><v>7</v></c><c t="str"><v>text formula</v></c></row></sheetData></worksheet>""").getBytes(UTF_8),
+      "xl/worksheets/sheet10.xml" -> """<?xml version="1.0"?><worksheet><sheetData><row><c><v>ten</v></c></row></sheetData></worksheet>""".getBytes(UTF_8),
+      "xl/worksheets/sheet1.xml" -> """<?xml version="1.0"?><worksheet><sheetData><row><c><v>one</v></c></row></sheetData></worksheet>""".getBytes(UTF_8)))
+    def slide(body: String) = s"""<?xml version="1.0"?><p:sld><p:cSld><p:spTree>$body</p:spTree></p:cSld></p:sld>""".getBytes(UTF_8)
+    val pptx = DocxWriter.zip(Seq(
+      "[Content_Types].xml" -> "<Types/>".getBytes(UTF_8),
+      "ppt/slides/slide1.xml" -> slide(
+        """<p:sp><p:txBody><a:p><a:r><a:t>Hello </a:t></a:r><a:r><a:rPr b="1"/><a:t>bold</a:t></a:r><a:br/><a:r><a:t> world</a:t></a:r></a:p>""" +
+        """<a:p></a:p><a:p><a:fld><a:t>field 1</a:t></a:fld><a:endParaRPr/></a:p></p:txBody></p:sp>"""),
+      "ppt/slides/slide2.xml" -> slide(
+        """<p:grpSp><p:sp><p:txBody><a:p><a:r><a:t>grouped</a:t></a:r></a:p></p:txBody></p:sp></p:grpSp>""" +
+        """<p:graphicFrame><a:tbl><a:tr><a:tc><a:txBody><a:p><a:r><a:t>cell</a:t></a:r></a:p></a:txBody></a:tc></a:tr></a:tbl></p:graphicFrame>""" +
+        """<a:t>stray run</a:t>""")))
+    val epubNested = epub(
+      "<ul><li><p>item para</p></li><li>plain item <b>bold</b></li><li><ol><li>inner item</li></ol></li></ul>" +
+      "<div><p>div para</p><h2>Sub <i>heading</i></h2></div><p>outer <span><p>inner p</p></span> tail</p>" +
+      "<blockquote>quote text</blockquote><table><tr><td><p>cell para</p></td></tr></table>" +
+      "<section><h1>Deep</h1>" + "<div>" * 90 + "<p>ninety divs</p>" + "</div>" * 90 + "</section>")
+    val xmlMixed = ("""<?xml version="1.0"?><doc>lead <b>bold</b> tail<empty/><list><item>one</item>""" +
+      """<item>two &amp; three</item></list>mixed <i>in<u>ner</u></i>end<!-- comment --><x/>  <y>  </y>last</doc>""").getBytes(UTF_8)
+    val htmlOnly = "<html><body><p>Para one</p><div>a<b>b</b>c</div>x &lt; y<br>line<ul><li>i1<li>i2</ul></body></html>"
+    def alt(b: String, html: String) =
+      s"Content-Type: multipart/alternative; boundary=\"$b\"\r\n\r\n--$b\r\nContent-Type: text/html; charset=utf-8\r\n\r\n$html\r\n--$b--\r\n"
+    val mailHtml = ("From: a@example.com\r\nSubject: Html only\r\nMIME-Version: 1.0\r\n" + alt("alt1", htmlOnly)).getBytes(UTF_8)
+    val mailNested = ("From: a@example.com\r\nSubject: Nested html\r\nMIME-Version: 1.0\r\n" +
+      "Content-Type: multipart/mixed; boundary=\"mix\"\r\n\r\n--mix\r\n" + alt("alt2", "<div><p>nested</p>" + "<span>" * 50 +
+        "deep" + "</span>" * 50 + "<i>x</i><i></i><i>y</i></div>") + "\r\n--mix--\r\n").getBytes(UTF_8)
+    val html = ("""<html><head><meta name="Description" content="desc &amp; more"><noscript><meta property="og:title" content="OG">""" +
+      """</noscript><title>Main <b>title</b> here</title><title>Second title</title><meta name="empty" content=""></head>""" +
+      """<body><title>body title</title><meta name="late" content="body meta">""" +
+      """<nav><div class="content">nav content scope <a href="/x">link</a></div><p>plain nav para with enough words to count</p></nav>""" +
+      """<article><div class="sidebar"><p>Sidebar inside article one two three four five six</p></div>""" +
+      """<p>Para with <a href="/a">an anchor <b>bold anchor</b></a> and trailing text words here to pass</p></article>""" +
+      """<div class="main-content"><aside><p>aside inside content scope words words words</p></aside></div>""" +
+      """<div class="menu"><div id="post"><div class="footer-links"><p>three scopes deep with a few words</p></div></div></div>""" +
+      """<div><p>Block <a href="/1">one</a><br>after br <a>no href</a> text words words words words</p>""" +
+      """<p><a href="/2">all <a href="/3">nested links</a> here</a></p></div>""" +
+      """<table><tr><td>a cell with five words<td>b cell with five words<tr><td>c row two with words</table>""" +
+      """<footer><p>Footer words one two three four five six seven eight nine ten</p></footer>""" +
+      """<head><title>late head title</title><meta name="description" content="second description"></head>""" +
+      """<h2>A heading with <em>several</em> words</h2><script>var x = "<p>not text</p>";</script>""" +
+      """<p>Unclosed <b>bold <i>italic</p><p>next para after unclosed tags with words</p>""" +
+      "<div>" * 90 + "<p>ninety divs deep with several more words</p>" + "</div>" * 90 +
+      """</body></html>""").getBytes(UTF_8)
+    Seq(
+      Case("dom/docx_textbox", docxBoxes),
+      Case("dom/docx_textbox_toggles", docxBoxes, c => c.copy(office = c.office.copy(
+        includeDeletedContent = true, includeMoveFromContent = true, includeShapeBasedContent = false))),
+      Case("dom/docx_textbox_deleted", docxBoxes, c => c.copy(office = c.office.copy(includeDeletedContent = true))),
+      Case("dom/odt_whitespace", odt),
+      Case("dom/xlsx_cells", xlsx),
+      Case("dom/pptx_runs", pptx),
+      Case("dom/epub_nested", epubNested),
+      Case("dom/xml_mixed", xmlMixed),
+      Case("dom/eml_html_only", mailHtml),
+      Case("dom/eml_nested_html", mailNested),
+      Case("dom/html_odd", html),
+      Case("dom/html_odd_alltext", html, _.copy(htmlMode = HtmlMode.AllText)))
+  }
+
+  def cases: Seq[Case] = corpus ++ extras ++ domShapes
 
   def digest(c: Case, cfg: ExtractorConfig): String = {
     val r = Extract(c.bytes, c.tweak(cfg))
@@ -125,7 +243,9 @@ class OutputModeSpec extends AnyFunSuite {
       assert(names.exists(_.endsWith(s"/$k")), s"corpus kind $k missing")
     }
     Seq("html_alltext", "pdf_marked", "xlsx", "pptx", "ods", "pages", "msg_unicode", "rtf", "xml", "tar", "7z",
-      "gz", "csv/100", "cal/0", "mbox/0", "archive/0", "warc/0").foreach(n => assert(names(n), n))
+      "gz", "csv/100", "cal/0", "mbox/0", "archive/0", "warc/0", "dom/docx_textbox", "dom/odt_whitespace",
+      "dom/xlsx_cells", "dom/pptx_runs", "dom/epub_nested", "dom/xml_mixed", "dom/eml_html_only",
+      "dom/html_odd").foreach(n => assert(names(n), n))
     assert(pinned.map(_._2).toSet == OutputModeDigests.configs.map(_._1).toSet)
   }
 }
