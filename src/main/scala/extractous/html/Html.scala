@@ -188,22 +188,15 @@ object HtmlDom {
 
   def parse(html: String): HElem = {
     val root = HElem("#root", Map.empty, ArrayBuffer.empty)
-    // the open elements, root first, and the open count of each one's name:
-    // an end tag with no open element of its name costs O(1), not a scan.
-    // The counts start at the first end tag that does not close the
-    // innermost element, so well-formed markup never pays for them.
+    // the open elements, root first, and the open count of each one's name,
+    // kept on every push and pop: an end tag with no open element of its
+    // name costs O(1), not a scan of the stack
     var open = new Array[HElem](16)
     var counts = new Array[Count](16)
     var top = 0
     open(0) = root
-    var byName: java.util.HashMap[String, Count] = null
-    def track(i: Int): Unit = {
-      var c = byName.get(open(i).name)
-      if (c == null) { c = new Count; byName.put(open(i).name, c) }
-      c.n += 1
-      counts(i) = c
-    }
-    def pop(): Unit = { if (byName != null) counts(top).n -= 1; top -= 1 }
+    val byName = new java.util.HashMap[String, Count]
+    def pop(): Unit = { counts(top).n -= 1; top -= 1 }
     HtmlTokenizer.foreachTok(html)(
       raw => if (raw.nonEmpty) open(top).children += HText(decodeEntities(raw)),
       (name, attrs, selfClosing) => {
@@ -219,20 +212,18 @@ object HtmlDom {
           top += 1
           if (top == open.length) { open = copyOf(open, top * 2); counts = copyOf(counts, top * 2) }
           open(top) = el
-          if (byName != null) track(top)
+          counts(top) = byName.computeIfAbsent(name, _ => new Count)
+          counts(top).n += 1
         }
       },
-      name =>
-        if (open(top).name == name) pop()
-        else {
-          if (byName == null) { byName = new java.util.HashMap; (1 to top).foreach(track) }
-          // pop to the matching open tag if present anywhere on the stack
-          val c = byName.get(name)
-          if (c != null && c.n > 0) {
-            while (open(top).name != name) pop()
-            pop()
-          }
-        })
+      name => {
+        // pop to the matching open tag if present anywhere on the stack
+        val c = byName.get(name)
+        if (c != null && c.n > 0) {
+          while (open(top).name != name) pop()
+          pop()
+        }
+      })
     root
   }
 

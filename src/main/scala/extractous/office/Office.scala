@@ -75,6 +75,8 @@ object ZipUtil {
 }
 
 object OfficeExtractor {
+  private val OdfBlocks = Set("text:h", "text:p", "table:table-row")
+
   /** dc:title / dc:creator at any depth; the last non-empty one of each wins. */
   private def dublinCore(root: HElem): Map[String, Seq[String]] =
     outermost(root)(e => e.name == "dc:title" || e.name == "dc:creator")
@@ -145,8 +147,7 @@ object OfficeExtractor {
       sb.toString
     }
 
-    val blocks = Set("text:h", "text:p", "table:table-row")
-    outermost(HtmlDom.parse(content))(e => blocks(e.name)).foreach { el =>
+    outermost(HtmlDom.parse(content))(e => OdfBlocks(e.name)).foreach { el =>
       el.name match {
         case "text:h" => sink.add("h1", paraText(el))
         case "text:p" => sink.add("p", paraText(el))
