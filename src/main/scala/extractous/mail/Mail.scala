@@ -16,12 +16,19 @@ import extractous.text.{BlockSink, Normalize}
 object MailExtractor {
   val Mime = "message/rfc822"
 
+  // compiled once: a part's headers and parameters are parsed per part at
+  // every nesting level
+  private val Folding = java.util.regex.Pattern.compile("\n[ \t]+")
+  private val CharsetParam = "(?i)charset=\"?([^\";\\s]+)\"?".r
+  // RFC 2045 parameter names are case-insensitive (Boundary=…)
+  private val BoundaryParam = "(?i)boundary=\"?([^\";]+)\"?".r
+
   private def splitHeadersBody(s: String): (Map[String, String], String) = {
     val norm = s.replace("\r\n", "\n")
     val at = norm.indexOf("\n\n")
     val (head, body) = if (at < 0) (norm, "") else (norm.substring(0, at), norm.substring(at + 2))
     // unfold continuation lines, then split on first ':'
-    val unfolded = head.replaceAll("\n[ \t]+", " ")
+    val unfolded = Folding.matcher(head).replaceAll(" ")
     val headers = unfolded.split("\n").iterator.flatMap { line =>
       val c = line.indexOf(':')
       if (c <= 0) None else Some(Normalize.lowerAscii(line.substring(0, c).trim) -> line.substring(c + 1).trim)
@@ -36,7 +43,7 @@ object MailExtractor {
     */
   private def charsetOf(headers: Map[String, String]): java.nio.charset.Charset = {
     val ct = headers.getOrElse("content-type", "")
-    "(?i)charset=\"?([^\";\\s]+)\"?".r.findFirstMatchIn(ct).map(_.group(1)) match {
+    CharsetParam.findFirstMatchIn(ct).map(_.group(1)) match {
       case Some(label) =>
         try java.nio.charset.Charset.forName(label)
         catch { case _: Exception => java.nio.charset.StandardCharsets.UTF_8 }
@@ -70,53 +77,71 @@ object MailExtractor {
     case _ => body // 7bit / 8bit / binary
   }
 
-  /** Decoded text of the best body part, recursing through nested multipart
-    * (multipart/mixed wrapping multipart/alternative is the STANDARD shape
-    * of any email with an attachment — a non-recursive walk failed those
-    * rows outright). Preference at every level: first text/plain, else
-    * first text/html (as text), else the first nested multipart that
-    * yields either.
-    */
-  private def bestBody(headers: Map[String, String], body: String): String =
-    bestBodyOpt(headers, body)
-      .getOrElse(throw new IllegalArgumentException("eml: no text part in multipart body"))
+  private def isMultipart(headers: Map[String, String]): Boolean =
+    Normalize.lowerAscii(headers.getOrElse("content-type", "")).startsWith("multipart/")
 
-  private def bestBodyOpt(headers: Map[String, String], body: String): Option[String] = {
-    val ct = headers.getOrElse("content-type", "text/plain")
-    if (Normalize.lowerAscii(ct).startsWith("multipart/")) {
-      // RFC 2045 parameter names are case-insensitive (Boundary=…)
-      val b = "(?i)boundary=\"?([^\";]+)\"?".r.findFirstMatchIn(ct)
-        .getOrElse(throw new IllegalArgumentException("eml: multipart without boundary"))
-        .group(1)
-      val parts = body.split(java.util.regex.Pattern.quote("--" + b)).toSeq
-        .drop(1).takeWhile(p => !p.startsWith("--"))
-        // strip ONLY the boundary line's own newline — eating every leading
-        // newline would consume a headerless part's header/body separator
-        // and feed its first paragraph to the header parser. A part whose
-        // next line is blank has NO headers (RFC 2046 allows it; defaults
-        // apply): empty header map, rest is body.
-        .map { p0 =>
-          val p = p0.replaceFirst("^\\r?\\n", "")
-          if (p.startsWith("\r\n")) (Map.empty[String, String], p.substring(2))
-          else if (p.startsWith("\n")) (Map.empty[String, String], p.substring(1))
-          else splitHeadersBody(p)
-        }
+  /** The parts of a multipart body: the pieces between `--boundary` lines
+    * after the preamble, up to the close delimiter, as (headers, body).
+    */
+  private def partsOf(headers: Map[String, String], body: String): Seq[(Map[String, String], String)] = {
+    val delim = "--" + BoundaryParam.findFirstMatchIn(headers.getOrElse("content-type", ""))
+      .getOrElse(throw new IllegalArgumentException("eml: multipart without boundary"))
+      .group(1)
+    // the pieces between delimiters, trailing empty ones dropped (what
+    // String.split returns)
+    val pieces = scala.collection.mutable.ArrayBuffer.empty[String]
+    var from = 0
+    var at = body.indexOf(delim)
+    while (at >= 0) {
+      pieces += body.substring(from, at)
+      from = at + delim.length
+      at = body.indexOf(delim, from)
+    }
+    pieces += body.substring(from)
+    while (pieces.nonEmpty && pieces.last.isEmpty) pieces.remove(pieces.length - 1)
+    pieces.iterator.drop(1).takeWhile(p => !p.startsWith("--"))
+      // strip ONLY the boundary line's own newline — eating every leading
+      // newline would consume a headerless part's header/body separator
+      // and feed its first paragraph to the header parser. A part whose
+      // next line is blank has NO headers (RFC 2046 allows it; defaults
+      // apply): empty header map, rest is body.
+      .map { p0 =>
+        val p = if (p0.startsWith("\r\n")) p0.substring(2) else if (p0.startsWith("\n")) p0.substring(1) else p0
+        if (p.startsWith("\r\n")) (Map.empty[String, String], p.substring(2))
+        else if (p.startsWith("\n")) (Map.empty[String, String], p.substring(1))
+        else splitHeadersBody(p)
+      }.toVector
+  }
+
+  /** Decoded text of the best body part. Nested multiparts
+    * (multipart/mixed wrapping multipart/alternative is the STANDARD shape
+    * of any email with an attachment) are walked in preorder on an explicit
+    * stack, so nesting depth costs heap, never thread stack. Preference at
+    * every level: first text/plain, else first text/html (as text), else
+    * the first nested multipart that yields either.
+    */
+  private def bestBody(headers: Map[String, String], body: String): String = {
+    if (!isMultipart(headers))
+      return decodeBody(body, headers.getOrElse("content-transfer-encoding", "7bit"), charsetOf(headers))
+    val pending = new java.util.ArrayDeque[(Map[String, String], String)]()
+    pending.push((headers, body))
+    while (!pending.isEmpty) {
+      val (h, b) = pending.pop()
+      val parts = partsOf(h, b)
       // RFC 2046 default for a part without Content-Type is text/plain
       def partOf(typ: String) = parts.find(p => Normalize.lowerAscii(p._1.getOrElse("content-type", "text/plain")).startsWith(typ))
       partOf("text/plain").orElse(partOf("text/html")) match {
         case Some((ph, pb)) =>
           val decoded = decodeBody(pb, ph.getOrElse("content-transfer-encoding", "7bit"), charsetOf(ph))
-          Some(
-            if (Normalize.lowerAscii(ph.getOrElse("content-type", "")).startsWith("text/html")) htmlText(decoded)
-            else decoded)
+          return if (Normalize.lowerAscii(ph.getOrElse("content-type", "")).startsWith("text/html")) htmlText(decoded)
+            else decoded
         case None =>
-          // no direct text part at this level: descend into nested multiparts
-          parts.iterator
-            .filter(p => Normalize.lowerAscii(p._1.getOrElse("content-type", "")).startsWith("multipart/"))
-            .flatMap { case (ph, pb) => bestBodyOpt(ph, pb) }
-            .nextOption()
+          // no direct text part at this level: its nested multiparts, the
+          // first on top
+          parts.reverseIterator.filter(p => isMultipart(p._1)).foreach(pending.push)
       }
-    } else Some(decodeBody(body, headers.getOrElse("content-transfer-encoding", "7bit"), charsetOf(headers)))
+    }
+    throw new IllegalArgumentException("eml: no text part in multipart body")
   }
 
   /** All character data of an HTML body, one space between siblings. */

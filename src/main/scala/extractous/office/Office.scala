@@ -225,11 +225,14 @@ object OfficeExtractor {
 
     val sink = new BlockSink(cfg)
     numbered(entries, "xl/worksheets/sheet").foreach { sheet =>
-      def cellValue(c: HElem): String = {
-        val isShared = c.attrs.get("t").contains("s")
-        val v = c.children.collectFirst { case el: HElem if el.name == "v" => textOf(el) }.getOrElse("")
-        if (isShared) shared.lift(v.trim.toIntOption.getOrElse(-1)).getOrElse("")
-        else v.trim
+      def child(c: HElem, name: String): String =
+        c.children.collectFirst { case el: HElem if el.name == name => textOf(el) }.getOrElse("")
+      def cellValue(c: HElem): String = c.attrs.get("t") match {
+        case Some("s") => shared.lift(child(c, "v").trim.toIntOption.getOrElse(-1)).getOrElse("")
+        // an inline string holds its text in <is> (plain <t> or rich runs),
+        // read like a shared-string item
+        case Some("inlineStr") => child(c, "is")
+        case _ => child(c, "v").trim
       }
       outermost(HtmlDom.parse(sheet))(_.name == "row").foreach { row =>
         val cells = row.children.collect { case c: HElem if c.name == "c" => cellValue(c) }.filter(_.nonEmpty)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.Column
   * profiles) — no external tokenizer files, fully deterministic: pair
   * counts tie-break lexicographically, training runs until every vocabulary
   * word is a single token (asserted in PipelineSpec). Counting is one
-  * imperative narrow pass per row ([[extractous.spark.BpeCountExpr]]).
+  * imperative narrow pass per row ([[extractous.spark.signatures.bpe_count]]).
   *
   * Closed-form behavior the oracle leans on: in-vocab words cost exactly 1
   * token; words over characters unseen in training (digits) can never merge

@@ -43,7 +43,7 @@ object Decontam {
     * same contract as hashing the gram string.
     *
     * Implementation is the imperative one-pass
-    * [[extractous.spark.NgramKeysExpr]] — bit-identical to the HOF
+    * [[extractous.spark.NgramKeys]] — bit-identical to the HOF
     * formulation below (QualitySpec property-tests the equality), which
     * cost ~38 µs PER GRAM in interpreted lambda overhead and made the
     * gram stage the slowest part of decontamination and substring dedup.

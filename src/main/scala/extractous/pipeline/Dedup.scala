@@ -172,7 +172,7 @@ object Dedup {
     * tokens joined with single spaces — what a Lee-et-al-2022 dedup pass
     * actually writes back. Same gram/flag plan as substringFlags (long-keyed
     * exchanges only); the cut itself is one imperative two-pointer pass per
-    * row ([[extractous.spark.CutSpansExpr]]) over (text, sorted flagged
+    * row ([[extractous.spark.CutSpans]]) over (text, sorted flagged
     * positions). Docs with no flagged span return their full normalized
     * token stream, so output text is uniformly normalized.
     */
@@ -194,7 +194,7 @@ object Dedup {
   }
 
   /** Distinct word n-gram shingles of a single-space-tokenized text column.
-    * Imperative one-pass kernel (extractous.spark.ShinglesExpr) — the
+    * Imperative one-pass kernel (extractous.spark.ShingleKernel) — the
     * near-dup plan evaluates shingles three times (signature + both verify
     * sides) and the HOF formulation cost ~2.8 s per evaluation at sf0.1.
     * Recompute-per-use is deliberate: a narrow recompute beats persisting
@@ -215,8 +215,8 @@ object Dedup {
   }
 
   /** MinHash signature (array<bigint> of length numHashes): sig_j = min over
-    * shingles of (a_j·h(s) + b_j) mod P — a custom imperative Catalyst
-    * expression (extractous.spark.MinHashSigExpr): one tight pass per row,
+    * shingles of (a_j·h(s) + b_j) mod P — an imperative row kernel
+    * (extractous.spark.MinHashSig): one tight pass per row,
     * zero intermediate arrays (the HOF formulation was ~20× slower).
     */
   def minhashSignature(shinglesCol: Column, numHashes: Int = 64): Column =
@@ -479,8 +479,8 @@ object Dedup {
   }
 
   /** 64-bit SimHash over tokens: bit i of the fingerprint is the sign of the
-    * sum over tokens of ±1 by bit i of hash(token). Imperative custom
-    * expression (extractous.spark.SimHashExpr) — narrow, allocation-free.
+    * sum over tokens of ±1 by bit i of hash(token). Imperative row
+    * kernel (extractous.spark.SimHashExpr) — narrow, allocation-free.
     */
   def simhash(textCol: Column): Column =
     extractous.spark.signatures.simhash64(tokens(textCol))

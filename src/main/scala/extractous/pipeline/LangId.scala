@@ -18,7 +18,7 @@ import org.apache.spark.sql.Column
   * costing the full profile depth; argmin wins, ties break lexicographically.
   *
   * Scale shape: one imperative narrow per-row pass
-  * ([[extractous.spark.LangIdExpr]]), zero shuffle, zero UDFs; the model is
+  * ([[extractous.spark.LangIdModel]]), zero shuffle, zero UDFs; the model is
   * a few KB of class-load-time constants on every executor.
   */
 object LangId {

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Dot product of two numeric array columns — imperative kernel
-    * ([[extractous.spark.DotProductExpr]]), bit-identical to the HOF
+    * ([[extractous.spark.VectorMath.vecDot]]), bit-identical to the HOF
     * formulation `aggregate(zip_with(a, b, _ * _), 0.0, _ + _)` it replaced
     * (same summation order, same null semantics; equivalence property-tested
     * in SimilaritySpec). The HOF pair is interpreted per ELEMENT and the kNN/
@@ -35,7 +35,7 @@ object Similarity {
     * must not throw DIVIDE_BY_ZERO under Spark 4's ANSI defaults and kill
     * the job — a poison row never kills the job anywhere in this engine.
     * Zero-norm pairs score 0 (never near anything), matching the zero-safe
-    * posture of quantizeInt8 and NearestCellsExpr.
+    * posture of quantizeInt8 and nearest_cells.
     */
   def cosine(a: Column, b: Column): Column = {
     val ad = a.cast("array<double>")
@@ -120,9 +120,9 @@ object Similarity {
     *      metadata-sized) is aggregated once and materialized to the driver,
     *      exactly like any ANN index build. This is the only driver-side
     *      collect and it is NOT per-row data.
-    *   2. ASSIGNMENT — a narrow projection: [[extractous.spark.NearestCellsExpr]]
-    *      computes the argmax cell map-side with the centroid table embedded
-    *      in the serialized expression. Zero exchanges (the previous
+    *   2. ASSIGNMENT — a narrow projection: [[extractous.spark.vectors.nearest_cells]]
+    *      computes the argmax cell map-side with the centroid table a
+    *      constant of the serialized plan. Zero exchanges (the previous
     *      `row_number() OVER (PARTITION BY vid)` formulation shuffled the full
     *      |corpus|·|cells| product just to pick this argmax).
     *   3. PROBE+RANK — probes broadcast, cell join stays map-side, and the

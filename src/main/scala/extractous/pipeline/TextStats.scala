@@ -134,7 +134,7 @@ object TextStats {
     * it with `list_reduce` over `ascii(substr(c, i, 1))`).
     *
     * Implementation is the imperative one-pass
-    * [[extractous.spark.FingerprintExpr]]: the earlier HOF formulation
+    * [[extractous.spark.FingerprintHash]]: the earlier HOF formulation
     * (`aggregate(transform(sequence(1, length(c)), i -> ascii(substr(c, i,
     * 1))), ...)`) was O(n²) per row — each `substr(i, 1)` scans the
     * UTF8String from the start — which is fatal on real 20–100 KB pages
@@ -199,7 +199,7 @@ object TextStats {
       gopherReport(content, minWords) ++ c4Report(content) ++ entropyReport(content)
 
   def gopherReport(content: Column, minWords: Int = 50): Seq[(String, Column)] = {
-    // One imperative pass ([[extractous.spark.GopherExpr]]) — the HOF
+    // One imperative pass ([[extractous.spark.GopherKernel]]) — the HOF
     // formulation below re-scans the document ~15 times (two tokenizations,
     // several whole-string regexp passes, per-line filters), a real linear
     // constant at 20–100 KB/page. Identical fixed-point arithmetic
@@ -265,7 +265,7 @@ object TextStats {
   /** C4 cleaning + page gate (Raffel et al. 2020 §2.2), the OTHER standard
     * published crawl-cleaning recipe next to Gopher: line-level, keep only
     * lines ending in terminal punctuation with ≥3 words and no "javascript"
-    * (one imperative pass, [[extractous.spark.C4CleanExpr]]); page-level,
+    * (one imperative pass, [[extractous.spark.C4Kernel]]); page-level,
     * drop pages with <5 sentences, any "lorem ipsum", any `{`, or any word
     * from the blocklist (C4 uses the LDNOOBW list; it ships as a literal
     * regex alternation — metadata-sized, zero joins, same posture as the
@@ -306,7 +306,7 @@ object TextStats {
     * groupBys (doc_id, gram) — at 10^12 documents that shuffle carries ~10^14
     * gram rows, dominated by keys that never leave their document. This one
     * never shuffles: one imperative per-row pass
-    * ([[extractous.spark.Top2GramExpr]]: hash tokens, sort the long[] of
+    * ([[extractous.spark.Top2GramHash]]: hash tokens, sort the long[] of
     * adjacent-pair hashes, run-length scan — O(g log g), zero allocation
     * beyond two primitive arrays). It replaced the HOF formulation
     * (gram-string `array_sort` + struct-accumulator `aggregate`) whose

@@ -1,9 +1,6 @@
 package extractous.spark
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
@@ -79,64 +76,32 @@ object BloomKernel {
   }
 }
 
-/** bigint fingerprint → array<long> of the K probe positions (build side;
-  * static-call codegen keeps the explode projection in whole-stage codegen).
-  */
-final case class BloomPositionsExpr(child: Expression, m: Int) extends UnaryExpression {
-  require(m > 0, "bit count must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "bloom_positions"
-  override protected def nullSafeEval(input: Any): Any =
-    BloomKernel.positions(input.asInstanceOf[Long], m)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.BloomKernel.positions($c, $m)")
-  override protected def withNewChildInternal(newChild: Expression): BloomPositionsExpr =
-    copy(child = newChild)
-}
-
-/** bigint fingerprint → boolean "maybe seen" under an embedded bitset (the
-  * filter ships with the plan like the IVF centroids; m/8 bytes — 16 KB at
-  * the default 2¹⁷ bits). CodegenFallback for the same reason as
-  * [[DsirScoreExpr]]: the bitset is instance state.
-  */
-final case class BloomContainsExpr(child: Expression, bits: Array[Long], m: Int)
-  extends UnaryExpression with CodegenFallback {
-  require(m > 0 && bits.length == (m + 63) / 64, "bitset size must match m")
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_maybe_contains"
-  override protected def nullSafeEval(input: Any): Any =
-    BloomKernel.maybeContains(input.asInstanceOf[Long], bits, m)
-  override protected def withNewChildInternal(newChild: Expression): BloomContainsExpr =
-    copy(child = newChild)
-}
-
-/** bigint fingerprint → boolean "maybe seen" under `shards` filters packed
-  * shard-major into one embedded word array; the row's shard is
-  * `floorMod(fp, shards)` — a function of the key itself, so the probe stays
-  * a narrow zero-exchange projection no matter how many shards exist.
-  */
-final case class BloomContainsShardedExpr(child: Expression, bits: Array[Long],
-    m: Int, shards: Int) extends UnaryExpression with CodegenFallback {
-  require(m > 0 && shards > 0 && bits.length == shards * ((m + 63) / 64),
-    "bitset size must be shards x words-per-shard")
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_maybe_contains_sharded"
-  override protected def nullSafeEval(input: Any): Any =
-    BloomKernel.maybeContainsSharded(input.asInstanceOf[Long], bits, m, shards)
-  override protected def withNewChildInternal(newChild: Expression): BloomContainsShardedExpr =
-    copy(child = newChild)
-}
-
 object bloom {
-  /** `bloom_positions(fp, m)` → array<bigint> of K probe positions. */
-  def bloom_positions(fp: Column, m: Int): Column =
-    ColumnBridge.column(BloomPositionsExpr(ColumnBridge.expression(fp), m))
+  /** `bloom_positions(fp, m)` → array<bigint> of the K probe positions (the
+    * build side's explode input).
+    */
+  def bloom_positions(fp: Column, m: Int): Column = {
+    require(m > 0, "bit count must be positive")
+    ColumnBridge.invoke(BloomKernel, "positions", ArrayType(LongType, containsNull = false))(fp, m)
+  }
 
-  /** `bloom_maybe_contains(fp)` against a prebuilt packed bitset. */
-  def bloom_maybe_contains(fp: Column, bits: Array[Long], m: Int): Column =
-    ColumnBridge.column(BloomContainsExpr(ColumnBridge.expression(fp), bits, m))
+  /** `bloom_maybe_contains(fp)` → boolean "maybe seen" against a prebuilt
+    * packed bitset of `m` bits (a plan constant that ships like the IVF
+    * centroids; m/8 bytes — 16 KB at the default 2¹⁷ bits).
+    */
+  def bloom_maybe_contains(fp: Column, bits: Array[Long], m: Int): Column = {
+    require(m > 0 && bits.length == (m + 63) / 64, "bitset size must match m")
+    ColumnBridge.invoke(BloomKernel, "maybeContains", BooleanType)(fp, bits, m)
+  }
 
-  /** `bloom_maybe_contains_sharded(fp)` against `shards` packed filters. */
-  def bloom_maybe_contains_sharded(fp: Column, bits: Array[Long], m: Int, shards: Int): Column =
-    ColumnBridge.column(BloomContainsShardedExpr(ColumnBridge.expression(fp), bits, m, shards))
+  /** `bloom_maybe_contains_sharded(fp)` against `shards` filters packed
+    * shard-major into one word array; the row's shard is
+    * `floorMod(fp, shards)` — a function of the key itself, so the probe
+    * stays a narrow zero-exchange projection no matter how many shards exist.
+    */
+  def bloom_maybe_contains_sharded(fp: Column, bits: Array[Long], m: Int, shards: Int): Column = {
+    require(m > 0 && shards > 0 && bits.length == shards * ((m + 63) / 64),
+      "bitset size must be shards x words-per-shard")
+    ColumnBridge.invoke(BloomKernel, "maybeContainsSharded", BooleanType)(fp, bits, m, shards)
+  }
 }

@@ -2,8 +2,7 @@ package extractous.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * formulation (explode tokens → filter to query terms → groupBy) shuffles
   * a row per matched token; at 10^11 documents the map side should reduce
   * each document to a handful of counters before anything moves. The query
-  * term list is embedded in the expression (it is query metadata, like the
-  * IVF centroid table in [[NearestCellsExpr]]).
+  * terms' UTF-8 bytes are a plan constant (query metadata, like the IVF
+  * centroid table of [[vectors.nearest_cells]]).
   *
   * Tokenization matches [[extractous.pipeline.TextStats.tokens]] (`\s+`
   * split, empties dropped): ASCII whitespace only, multi-byte UTF-8 units
@@ -59,34 +58,14 @@ object TermFreqsKernel {
   }
 }
 
-final case class TermFreqsExpr(child: Expression, terms: Seq[String])
-  extends UnaryExpression {
-
-  require(terms.nonEmpty && terms.forall(_.nonEmpty), "query terms must be non-empty")
-  require(terms.distinct == terms, "query terms must be distinct")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("dl", LongType, nullable = false),
-    StructField("tfs", ArrayType(LongType, containsNull = false), nullable = false)))
-  override def prettyName: String = "term_freqs"
-
-  @transient private lazy val termBytes: Array[Array[Byte]] =
-    terms.map(_.getBytes("UTF-8")).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    TermFreqsKernel.compute(input.asInstanceOf[UTF8String], termBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bm25Terms", termBytes, "byte[][]")
-    defineCodeGen(ctx, ev, c => s"extractous.spark.TermFreqsKernel.compute($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TermFreqsExpr =
-    copy(child = newChild)
-}
-
 object retrieval {
   /** `term_freqs(text, terms)` → struct(dl, tfs) — see [[TermFreqsKernel]]. */
-  def term_freqs(text: Column, terms: Seq[String]): Column =
-    ColumnBridge.column(TermFreqsExpr(ColumnBridge.expression(text), terms))
+  def term_freqs(text: Column, terms: Seq[String]): Column = {
+    require(terms.nonEmpty && terms.forall(_.nonEmpty), "query terms must be non-empty")
+    require(terms.distinct == terms, "query terms must be distinct")
+    ColumnBridge.invoke(TermFreqsKernel, "compute", StructType(Seq(
+      StructField("dl", LongType, nullable = false),
+      StructField("tfs", ArrayType(LongType, containsNull = false), nullable = false))))(
+      text, terms.map(_.getBytes("UTF-8")).toArray)
+  }
 }

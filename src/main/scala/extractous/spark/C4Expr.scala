@@ -1,9 +1,7 @@
 package extractous.spark
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass C4 line cleaning (Raffel et al. 2020 §2.2, the "Colossal Clean
@@ -91,19 +89,4 @@ object C4Kernel {
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(sb.toString), sentences, kept.toLong, lines.length.toLong))
   }
-}
-
-final case class C4CleanExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("clean_text", StringType, nullable = false),
-    StructField("n_sentences", LongType, nullable = false),
-    StructField("kept_lines", LongType, nullable = false),
-    StructField("total_lines", LongType, nullable = false)))
-  override def prettyName: String = "c4_clean"
-  override protected def nullSafeEval(input: Any): Any =
-    C4Kernel.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.C4Kernel.compute($c)")
-  override protected def withNewChildInternal(newChild: Expression): C4CleanExpr =
-    copy(child = newChild)
 }

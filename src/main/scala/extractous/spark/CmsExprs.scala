@@ -1,9 +1,6 @@
 package extractous.spark
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
@@ -93,42 +90,21 @@ object CmsKernel {
   }
 }
 
-/** array<string> tokens → array<long> flat CMS slot ids (build side;
-  * static-call codegen keeps the explode projection in whole-stage codegen).
-  */
-final case class CmsSlotsExpr(child: Expression, w: Int) extends UnaryExpression {
-  require(w > 0, "sketch width must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "cms_slots"
-  override protected def nullSafeEval(input: Any): Any =
-    CmsKernel.slots(input.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.CmsKernel.slots($c, $w)")
-  override protected def withNewChildInternal(newChild: Expression): CmsSlotsExpr =
-    copy(child = newChild)
-}
-
-/** bigint gram hash → bigint count estimate under an embedded counter array
-  * (D·w longs — 32 KB at the default w = 1024). CodegenFallback for the same
-  * reason as [[BloomContainsExpr]]: the counters are instance state.
-  */
-final case class CmsEstimateExpr(child: Expression, counters: Array[Long], w: Int)
-  extends UnaryExpression with CodegenFallback {
-  require(w > 0 && counters.length == CmsKernel.D * w, "counter array must be D*w")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "cms_estimate"
-  override protected def nullSafeEval(input: Any): Any =
-    CmsKernel.estimate(input.asInstanceOf[Long], counters, w)
-  override protected def withNewChildInternal(newChild: Expression): CmsEstimateExpr =
-    copy(child = newChild)
-}
-
 object cms {
-  /** `cms_slots(tokens, w)` → array<bigint> of D·(n−1) flat slot ids. */
-  def cms_slots(tokens: Column, w: Int): Column =
-    ColumnBridge.column(CmsSlotsExpr(ColumnBridge.expression(tokens), w))
+  /** `cms_slots(tokens, w)` → array<bigint> of D·(n−1) flat slot ids (the
+    * build side's explode input).
+    */
+  def cms_slots(tokens: Column, w: Int): Column = {
+    require(w > 0, "sketch width must be positive")
+    ColumnBridge.invoke(CmsKernel, "slots", ArrayType(LongType, containsNull = false))(tokens, w)
+  }
 
-  /** `cms_estimate(gram_hash)` against a prebuilt counter array. */
-  def cms_estimate(gramHash: Column, counters: Array[Long], w: Int): Column =
-    ColumnBridge.column(CmsEstimateExpr(ColumnBridge.expression(gramHash), counters, w))
+  /** `cms_estimate(gram_hash)` → bigint count estimate against a prebuilt
+    * counter array (D·w longs — 32 KB at the default w = 1024), a plan
+    * constant like the Bloom bitset.
+    */
+  def cms_estimate(gramHash: Column, counters: Array[Long], w: Int): Column = {
+    require(w > 0 && counters.length == CmsKernel.D * w, "counter array must be D*w")
+    ColumnBridge.invoke(CmsKernel, "estimate", LongType)(gramHash, counters, w)
+  }
 }

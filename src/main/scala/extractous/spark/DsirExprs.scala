@@ -1,9 +1,6 @@
 package extractous.spark
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
@@ -95,46 +92,21 @@ object DsirKernel {
   }
 }
 
-/** array<string> tokens → array<long> hashed gram buckets (profile-building
-  * side; static-call codegen keeps the explode projection in whole-stage
-  * codegen).
-  */
-final case class DsirBucketsExpr(child: Expression, b: Int) extends UnaryExpression {
-  require(b > 0, "bucket count must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "dsir_buckets"
-  override protected def nullSafeEval(input: Any): Any =
-    DsirKernel.buckets(input.asInstanceOf[ArrayData], b)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.DsirKernel.buckets($c, $b)")
-  override protected def withNewChildInternal(newChild: Expression): DsirBucketsExpr =
-    copy(child = newChild)
-}
-
-/** array<string> tokens → fixed-point importance score under an embedded
-  * per-bucket weight table (the model ships with the plan like the IVF
-  * centroids in [[NearestCellsExpr]]; B longs ≈ 64 KB at the default 8192
-  * buckets — metadata-sized). CodegenFallback for the same reason as the
-  * centroid expression: the table is instance state, and the per-row cost is
-  * dominated by the token walk, not the eval bridge.
-  */
-final case class DsirScoreExpr(child: Expression, lambda: Array[Long])
-  extends UnaryExpression with CodegenFallback {
-  require(lambda.nonEmpty, "weight table must be non-empty")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dsir_score"
-  override protected def nullSafeEval(input: Any): Any =
-    DsirKernel.score(input.asInstanceOf[ArrayData], lambda)
-  override protected def withNewChildInternal(newChild: Expression): DsirScoreExpr =
-    copy(child = newChild)
-}
-
 object dsir {
-  /** `dsir_buckets(tokens, b)` → array<bigint> of hashed uni+bigram buckets. */
-  def dsir_buckets(tokens: Column, b: Int): Column =
-    ColumnBridge.column(DsirBucketsExpr(ColumnBridge.expression(tokens), b))
+  /** `dsir_buckets(tokens, b)` → array<bigint> of hashed uni+bigram buckets
+    * (the profile build's explode input).
+    */
+  def dsir_buckets(tokens: Column, b: Int): Column = {
+    require(b > 0, "bucket count must be positive")
+    ColumnBridge.invoke(DsirKernel, "buckets", ArrayType(LongType, containsNull = false))(tokens, b)
+  }
 
-  /** `dsir_score(tokens)` under a precomputed weight table. */
-  def dsir_score(tokens: Column, lambda: Array[Long]): Column =
-    ColumnBridge.column(DsirScoreExpr(ColumnBridge.expression(tokens), lambda))
+  /** `dsir_score(tokens)` → fixed-point importance score under a
+    * precomputed per-bucket weight table (a plan constant like the IVF
+    * centroids; B longs ≈ 64 KB at the default 8192 buckets).
+    */
+  def dsir_score(tokens: Column, lambda: Array[Long]): Column = {
+    require(lambda.nonEmpty, "weight table must be non-empty")
+    ColumnBridge.invoke(DsirKernel, "score", LongType)(tokens, lambda)
+  }
 }

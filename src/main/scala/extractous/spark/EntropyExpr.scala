@@ -2,8 +2,7 @@ package extractous.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
@@ -55,20 +54,9 @@ object EntropyKernel {
   }
 }
 
-final case class EntropyExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    StructType(EntropyKernel.Fields.map(StructField(_, LongType, nullable = false)))
-  override def prettyName: String = "char_entropy"
-  override protected def nullSafeEval(input: Any): Any =
-    EntropyKernel.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.EntropyKernel.compute($c)")
-  override protected def withNewChildInternal(newChild: Expression): EntropyExpr =
-    copy(child = newChild)
-}
-
 object entropy {
   /** `char_entropy(text)` → struct(n_chars, ent_sum, ent_mean_x3). */
   def char_entropy(text: Column): Column =
-    ColumnBridge.column(EntropyExpr(ColumnBridge.expression(text)))
+    ColumnBridge.invoke(EntropyKernel, "compute",
+      StructType(EntropyKernel.Fields.map(StructField(_, LongType, nullable = false))))(text)
 }

@@ -1,9 +1,7 @@
 package extractous.spark
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass Gopher quality report (Rae et al. 2021 §A1.1). The HOF
@@ -118,16 +116,4 @@ object GopherKernel {
     new GenericInternalRow(Array[Any](nWords.toLong, meanWordLen, symbolRatio,
       bulletFrac, ellipsisFrac, dupLineFrac, dupCharFrac, alphaFrac, stops.toLong, pass))
   }
-}
-
-final case class GopherExpr(child: Expression, minWords: Int) extends UnaryExpression {
-  override def dataType: DataType =
-    StructType(GopherKernel.Fields.map(StructField(_, LongType, nullable = false)))
-  override def prettyName: String = "gopher_report"
-  override protected def nullSafeEval(input: Any): Any =
-    GopherKernel.compute(input.asInstanceOf[UTF8String], minWords)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.GopherKernel.compute($c, $minWords)")
-  override protected def withNewChildInternal(newChild: Expression): GopherExpr =
-    copy(child = newChild)
 }

@@ -1,8 +1,5 @@
 package extractous.spark
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Cavnar–Trenkle character-n-gram language model, trained at class load
@@ -225,21 +222,9 @@ object LangIdModel {
   }
 }
 
-/** string → predicted language code; narrow, codegen'd via static call. */
-final case class LangIdExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "langid_ngram"
-  override protected def nullSafeEval(input: Any): Any =
-    LangIdModel.predict(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.LangIdModel.predict($c)")
-  override protected def withNewChildInternal(newChild: Expression): LangIdExpr =
-    copy(child = newChild)
-}
-
 /** doc_id → the deterministic per-doc evaluation sample of
   * [[extractous.pipeline.LangData.sampleText]] (lang chosen by id arithmetic,
-  * stream keyed on the id) as a codegen'd narrow expression — replaces the
+  * stream keyed on the id) as a narrow kernel column — replaces the
   * t_langid query's `Dataset.map` closure, which forced a deserialize/
   * serialize round trip and broke whole-stage codegen around the predict
   * projection. Same bytes per id as the closure it replaces.
@@ -249,15 +234,4 @@ object LangSample {
     val lang = extractous.pipeline.LangData.langs((id % 12).toInt)
     UTF8String.fromString(extractous.pipeline.LangData.sampleText(lang, id, n))
   }
-}
-
-final case class LangSampleExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "lang_sample_text"
-  override protected def nullSafeEval(input: Any): Any =
-    LangSample.compute(input.asInstanceOf[Long], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.LangSample.compute($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): LangSampleExpr =
-    copy(child = newChild)
 }

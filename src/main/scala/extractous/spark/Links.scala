@@ -2,8 +2,6 @@ package extractous.spark
 
 import extractous.html.HtmlTokenizer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
@@ -22,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `javascript:`/`mailto:`/`tel:`/`data:` and fragment-only hrefs are
   *    dropped; fragments are stripped from kept links.
   *
-  * Narrow per-row expression (static-call codegen like the other kernels):
+  * Narrow per-row kernel (one `StaticInvoke` column like the other kernels):
   * the link GRAPH then aggregates `(host, host)` pairs — short keys, never
   * page payloads — so frontier/in-degree analytics shuffle bytes, not HTML.
   */
@@ -150,40 +148,18 @@ object LinkKernel {
   }
 }
 
-final case class ExtractLinksExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "extract_links"
-  override protected def nullSafeEval(html: Any, base: Any): Any =
-    LinkKernel.compute(html.asInstanceOf[UTF8String], base.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (h, b) => s"extractous.spark.LinkKernel.compute($h, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ExtractLinksExpr =
-    copy(left = l, right = r)
-}
-
-final case class ExtractAnchorsExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("url", StringType, nullable = false),
-    StructField("anchor", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "extract_anchors"
-  override protected def nullSafeEval(html: Any, base: Any): Any =
-    LinkKernel.computeAnchors(html.asInstanceOf[UTF8String], base.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (h, b) => s"extractous.spark.LinkKernel.computeAnchors($h, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ExtractAnchorsExpr =
-    copy(left = l, right = r)
-}
-
 object links {
   /** `extract_links(html, baseUrl)` → array<string> of absolute outlinks in
     * document order.
     */
   def extract_links(html: Column, base: Column): Column =
-    ColumnBridge.column(ExtractLinksExpr(ColumnBridge.expression(html), ColumnBridge.expression(base)))
+    ColumnBridge.invoke(LinkKernel, "compute", ArrayType(StringType, containsNull = false))(html, base)
 
   /** `extract_anchors(html, baseUrl)` → array<struct<url, anchor>> in
     * document order — see [[LinkKernel.computeAnchors]].
     */
   def extract_anchors(html: Column, base: Column): Column =
-    ColumnBridge.column(ExtractAnchorsExpr(ColumnBridge.expression(html), ColumnBridge.expression(base)))
+    ColumnBridge.invoke(LinkKernel, "computeAnchors", ArrayType(StructType(Seq(
+      StructField("url", StringType, nullable = false),
+      StructField("anchor", StringType, nullable = false))), containsNull = false))(html, base)
 }

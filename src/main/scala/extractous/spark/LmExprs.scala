@@ -1,9 +1,6 @@
 package extractous.spark
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
@@ -16,9 +13,9 @@ import org.apache.spark.sql.xbridge.ColumnBridge
   * the head+middle for training).
   *
   * CCNet uses a 5-gram KenLM; this is the hashed-bigram analog, sized so
-  * the model is metadata (2·B longs ≈ 128 KB at B=8192) and ships embedded
-  * in the scoring expression like the IVF centroids ([[NearestCellsExpr]])
-  * and the DSIR weight table ([[DsirScoreExpr]]).
+  * the model is metadata (2·B longs ≈ 128 KB at B=8192) and ships with the plan
+  * like the IVF centroids ([[vectors.nearest_cells]]) and the DSIR weight
+  * table ([[dsir.dsir_score]]).
   *
   * Everything is EXACT integer arithmetic so the DuckDB oracle replays the
   * whole operator — model counts, per-document scores, and the tercile
@@ -96,44 +93,20 @@ object LmKernel {
   }
 }
 
-/** array<string> tokens → array<long> model-building gram buckets
-  * (static-call codegen keeps the explode projection in whole-stage
-  * codegen).
-  */
-final case class LmBucketsExpr(child: Expression, b: Int) extends UnaryExpression {
-  require(b > 0, "bucket count must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lm_buckets"
-  override protected def nullSafeEval(input: Any): Any =
-    LmKernel.buckets(input.asInstanceOf[ArrayData], b)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.LmKernel.buckets($c, $b)")
-  override protected def withNewChildInternal(newChild: Expression): LmBucketsExpr =
-    copy(child = newChild)
-}
-
-/** array<string> tokens → fixed-point mean surprise under an embedded
-  * 2·B-entry count table. CodegenFallback for the same reason as
-  * [[DsirScoreExpr]]: the model is instance state, and the per-row cost is
-  * the token walk, not the eval bridge.
-  */
-final case class LmSurpriseExpr(child: Expression, model: Array[Long])
-  extends UnaryExpression with CodegenFallback {
-  require(model.length >= 2 && model.length % 2 == 0, "model must hold 2*B counts")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "lm_surprise"
-  override protected def nullSafeEval(input: Any): Any =
-    LmKernel.surprise(input.asInstanceOf[ArrayData], model)
-  override protected def withNewChildInternal(newChild: Expression): LmSurpriseExpr =
-    copy(child = newChild)
-}
-
 object lm {
-  /** `lm_buckets(tokens, b)` → array<bigint> of (context, B + bigram) buckets. */
-  def lm_buckets(tokens: Column, b: Int): Column =
-    ColumnBridge.column(LmBucketsExpr(ColumnBridge.expression(tokens), b))
+  /** `lm_buckets(tokens, b)` → array<bigint> of (context, B + bigram)
+    * buckets (the model build's explode input).
+    */
+  def lm_buckets(tokens: Column, b: Int): Column = {
+    require(b > 0, "bucket count must be positive")
+    ColumnBridge.invoke(LmKernel, "buckets", ArrayType(LongType, containsNull = false))(tokens, b)
+  }
 
-  /** `lm_surprise(tokens)` under a precomputed 2·B count table. */
-  def lm_surprise(tokens: Column, model: Array[Long]): Column =
-    ColumnBridge.column(LmSurpriseExpr(ColumnBridge.expression(tokens), model))
+  /** `lm_surprise(tokens)` → fixed-point mean surprise under a precomputed
+    * 2·B count table, a plan constant.
+    */
+  def lm_surprise(tokens: Column, model: Array[Long]): Column = {
+    require(model.length >= 2 && model.length % 2 == 0, "model must hold 2*B counts")
+    ColumnBridge.invoke(LmKernel, "surprise", LongType)(tokens, model)
+  }
 }

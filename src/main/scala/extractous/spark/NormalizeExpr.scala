@@ -2,8 +2,7 @@ package extractous.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
@@ -104,22 +103,11 @@ object NormalizeKernel {
   }
 }
 
-final case class NormalizeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("clean", StringType, nullable = false),
-    StructField("n_in", LongType, nullable = false),
-    StructField("n_out", LongType, nullable = false)))
-  override def prettyName: String = "normalize_text"
-  override protected def nullSafeEval(input: Any): Any =
-    NormalizeKernel.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.NormalizeKernel.compute($c)")
-  override protected def withNewChildInternal(newChild: Expression): NormalizeExpr =
-    copy(child = newChild)
-}
-
 object normalize {
   /** `normalize_text(text)` → struct(clean, n_in, n_out). */
   def normalize_text(text: Column): Column =
-    ColumnBridge.column(NormalizeExpr(ColumnBridge.expression(text)))
+    ColumnBridge.invoke(NormalizeKernel, "compute", StructType(Seq(
+      StructField("clean", StringType, nullable = false),
+      StructField("n_in", LongType, nullable = false),
+      StructField("n_out", LongType, nullable = false))))(text)
 }

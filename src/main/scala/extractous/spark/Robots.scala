@@ -1,10 +1,8 @@
 package extractous.spark
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.xbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,31 +20,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * as literal prefixes); unparseable lines are ignored — the RFC's
   * fail-open posture throughout.
   */
-final case class RobotsRulesExpr(child: Expression, agent: String)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = RobotsRulesExpr.ruleType
-  override def nullable: Boolean = false
-  override def prettyName: String = "robots_rules"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    val txt = if (v == null) "" else v.toString
-    val rules = RobotsRulesExpr.parse(txt, agent)
-    new GenericArrayData(rules.map { case (allow, prefix) =>
-      new GenericInternalRow(Array[Any](allow, UTF8String.fromString(prefix)))
-    }.toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): RobotsRulesExpr =
-    copy(child = newChild)
-}
-
 object RobotsRulesExpr {
   val ruleType: DataType = ArrayType(StructType(Seq(
     StructField("allow", BooleanType, nullable = false),
     StructField("prefix", StringType, nullable = false))), containsNull = false)
 
+  /** `robots_rules(txt)` → the rule array for `agent`; a null robots.txt
+    * parses as the empty file (no rules), so the column is never null.
+    */
   def rules(c: Column, agent: String): Column =
-    ColumnBridge.column(RobotsRulesExpr(ColumnBridge.expression(c), agent))
+    ColumnBridge.invoke(RobotsRulesExpr, "compute", ruleType, propagateNull = false)(c, agent)
+
+  def compute(txt: UTF8String, agent: String): ArrayData =
+    new GenericArrayData(parse(if (txt == null) "" else txt.toString, agent).map { case (allow, prefix) =>
+      new GenericInternalRow(Array[Any](allow, UTF8String.fromString(prefix)))
+    }.toArray[Any])
 
   /** (allow, prefix) rules applicable to `agent`. */
   def parse(txt: String, agent: String): Seq[(Boolean, String)] = {

@@ -2,19 +2,18 @@ package extractous.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Imperative signature expressions for the dedup family.
+/** Imperative signature kernels for the dedup family.
   *
   * The composed higher-order-function formulation (`transform`/`array_min` per
   * permutation) is interpreted per element and allocates one intermediate
   * array per permutation per row — measured ~10s for 5k docs. These
-  * expressions do one tight pass per row with zero intermediate allocation
+  * kernels do one tight pass per row with zero intermediate allocation
   * (SURVEY.md §2.2: custom Catalyst `Expression` beats HOF composition beats
   * UDF). Same hash family (splitmix64-derived coefficients, 32-bit hash space
   * mod a >2^32 prime), so LSH behavior is unchanged.
@@ -50,10 +49,8 @@ object SignatureHash {
   }
 }
 
-/** array<string> shingles → array<bigint> minhash signature. Static-call
-  * codegen (no CodegenFallback): the containing projection stays in
-  * whole-stage codegen and CSE applies. Coefficient arrays are cached per
-  * numHashes (executor-wide, deterministic).
+/** array<string> shingles → array<bigint> minhash signature. Coefficient
+  * arrays are cached per numHashes (executor-wide, deterministic).
   */
 object MinHashSig {
   import SignatureHash._
@@ -76,18 +73,8 @@ object MinHashSig {
         i += 1
       }
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(sig)
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
-}
-
-final case class MinHashSigExpr(child: Expression, numHashes: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[ArrayData], numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.MinHashSig.compute($c, $numHashes)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr = copy(child = newChild)
 }
 
 /** array<string> tokens → 64-bit simhash fingerprint.
@@ -100,18 +87,7 @@ final case class MinHashSigExpr(child: Expression, numHashes: Int) extends Unary
   * unverifiable). 62 effective bits (h1 < 2³⁰); bits 62-63 vote all-negative
   * and stay 0 on both engines.
   */
-final case class SimHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(input: Any): Any =
-    SimHashExpr.compute(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.SimHashExpr.compute($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHashExpr = copy(child = newChild)
-}
-
 object SimHashExpr {
-  /** Static entry point referenced by generated code. */
   def compute(arr: ArrayData): Long = {
     val votes = new Array[Int](64)
     if (arr != null) {
@@ -163,14 +139,12 @@ object SimHashExpr {
   * find codepoint i, plus an n-element int array per row. On the oracle's
   * ~0.3 KB seeds that is invisible; on real 20–100 KB pages it is the per-row
   * scale-killer for the content-keyed train/val/test splitter
-  * (`Sampling.split`). This expression decodes the UTF-8 bytes once —
-  * O(n), zero allocation — and codegens to a static call so the projection
-  * stays inside whole-stage codegen.
+  * (`Sampling.split`). This kernel decodes the UTF-8 bytes once —
+  * O(n), zero allocation.
   */
 object FingerprintHash {
   final val Mod = 1000000007L
 
-  /** Static entry point referenced by generated code. */
   def compute(s: UTF8String): Long = {
     val bytes = s.getBytes
     var h = 0L
@@ -195,17 +169,6 @@ object FingerprintHash {
   }
 }
 
-final case class FingerprintExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "poly_fingerprint"
-  override protected def nullSafeEval(input: Any): Any =
-    FingerprintHash.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.FingerprintHash.compute($c)")
-  override protected def withNewChildInternal(newChild: Expression): FingerprintExpr =
-    copy(child = newChild)
-}
-
 /** One-pass top-2-gram repetition scan (Gopher §A1.1 "fraction of 2-grams in
   * the most common 2-gram").
   *
@@ -215,14 +178,14 @@ final case class FingerprintExpr(child: Expression) extends UnaryExpression {
   * long[] and run-length-scan for the longest run. Replaces the HOF
   * formulation (gram-string materialization + `array_sort` + struct-valued
   * `aggregate` allocating a row per step) whose constant was ~20× the
-  * neighboring quality signals — same precedent as [[MinHashSigExpr]]. Gram
+  * neighboring quality signals — same precedent as [[MinHashSig]]. Gram
   * equality is by 64-bit hash: two DISTINCT grams colliding within one
   * document (≈ g²/2⁶⁵, vanishing at any real document size) is the accepted
   * trade the VERDICT endorses; equal grams always collide, so the top count
   * can only theoretically merge runs, never split them.
   *
   * Returns struct(n_2grams, top2_count, top2_frac_x1000) — the frac is
-  * computed inside the expression with the same double arithmetic as the
+  * computed inside the kernel with the same double arithmetic as the
   * oracle's `floor(1000.0 * topc / greatest(n2, 1))`, so one pass yields all
   * three columns.
   */
@@ -268,20 +231,6 @@ object Top2GramHash {
   }
 }
 
-final case class Top2GramExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_2grams", LongType, nullable = false),
-    StructField("top2_count", LongType, nullable = false),
-    StructField("top2_frac_x1000", LongType, nullable = false)))
-  override def prettyName: String = "top2gram"
-  override protected def nullSafeEval(input: Any): Any =
-    Top2GramHash.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.Top2GramHash.compute($c)")
-  override protected def withNewChildInternal(newChild: Expression): Top2GramExpr =
-    copy(child = newChild)
-}
-
 /** Positional word-n-gram keys over normalized tokens — the shared kernel of
   * decontamination and substring dedup. Bit-identical to the HOF
   * formulation it replaced (`transform(normTokens, xxhash64)` +
@@ -318,10 +267,10 @@ object NgramKeys {
     out
   }
 
-  def compute(s: UTF8String, n: Int): Array[Long] = {
+  def compute(s: UTF8String, n: Int): ArrayData = {
     val toks = normTokens(s)
     val nTok = toks.length
-    if (nTok < n) return Array.emptyLongArray
+    if (nTok < n) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val hs = new Array[Long](nTok)
     var j = 0
     while (j < nTok) {
@@ -338,22 +287,8 @@ object NgramKeys {
       out(i) = acc
       i += 1
     }
-    out
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-}
-
-final case class NgramKeysExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "ngram_keys"
-  override protected def nullSafeEval(input: Any): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-      NgramKeys.compute(input.asInstanceOf[UTF8String], n))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(extractous.spark.NgramKeys.compute($c, $n))")
-  override protected def withNewChildInternal(newChild: Expression): NgramKeysExpr =
-    copy(child = newChild)
 }
 
 /** Distinct word n-gram shingle STRINGS in one pass — input to the MinHash
@@ -371,7 +306,7 @@ object ShingleKernel {
   // near-dup plan — per-call regex compilation is pure overhead
   private val Ws = java.util.regex.Pattern.compile("\\s+")
 
-  def compute(s: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(s: UTF8String, n: Int): ArrayData = {
     val toks = Ws.split(s.trim.toString, -1)
     if (toks.length < n)
       return new GenericArrayData(Array[Any](UTF8String.fromString(toks.mkString(" "))))
@@ -395,18 +330,6 @@ object ShingleKernel {
     while (it.hasNext) { out(j) = UTF8String.fromString(it.next()); j += 1 }
     new GenericArrayData(out)
   }
-}
-
-final case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "shingles"
-  override protected def nullSafeEval(input: Any): Any =
-    ShingleKernel.compute(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.ShingleKernel.compute($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): ShinglesExpr =
-    copy(child = newChild)
 }
 
 /** Remove flagged ≥k-token spans from the NORMALIZED token stream — the
@@ -446,18 +369,6 @@ object CutSpans {
   }
 }
 
-final case class CutSpansExpr(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "cut_spans"
-  override protected def nullSafeEval(text: Any, ps: Any): Any =
-    CutSpans.compute(text.asInstanceOf[UTF8String], ps.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, p) => s"extractous.spark.CutSpans.compute($t, $p, $k)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CutSpansExpr =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Covered-token count of the union of length-k spans starting at the SORTED
   * positions `ps` — the reporting step of substring dedup. Replicates exactly
   * the HOF `when(size(ps)===1, k).otherwise(aggregate(sequence(1, size-1), k,
@@ -466,17 +377,6 @@ final case class CutSpansExpr(left: Expression, right: Expression, k: Int)
   * flagged gram. size(ps)==0 is unreachable from the wired plans (the
   * aggregate only emits groups with ≥1 position) and returns 0.
   */
-final case class SpanCoverageExpr(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "span_coverage"
-  override protected def nullSafeEval(input: Any): Any =
-    SpanCoverage.compute(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"extractous.spark.SpanCoverage.compute($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): SpanCoverageExpr =
-    copy(child = newChild)
-}
-
 object SpanCoverage {
   def compute(ps: ArrayData, k: Int): Int = {
     val n = ps.numElements()
@@ -493,31 +393,40 @@ object SpanCoverage {
 }
 
 object signatures {
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private def fields(names: Seq[String], t: DataType): StructType =
+    StructType(names.map(StructField(_, t, nullable = false)))
+
   def minhash_sig(shingles: Column, numHashes: Int = 64): Column =
-    ColumnBridge.column(MinHashSigExpr(ColumnBridge.expression(shingles), numHashes))
+    ColumnBridge.invoke(MinHashSig, "compute", Longs)(shingles, numHashes)
   def span_coverage(ps: Column, k: Int): Column =
-    ColumnBridge.column(SpanCoverageExpr(ColumnBridge.expression(ps), k))
+    ColumnBridge.invoke(SpanCoverage, "compute", IntegerType)(ps, k)
   def simhash64(tokens: Column): Column =
-    ColumnBridge.column(SimHashExpr(ColumnBridge.expression(tokens)))
+    ColumnBridge.invoke(SimHashExpr, "compute", LongType)(tokens)
   def poly_fingerprint(c: Column): Column =
-    ColumnBridge.column(FingerprintExpr(ColumnBridge.expression(c)))
+    ColumnBridge.invoke(FingerprintHash, "compute", LongType)(c)
   def top2gram(c: Column): Column =
-    ColumnBridge.column(Top2GramExpr(ColumnBridge.expression(c)))
+    ColumnBridge.invoke(Top2GramHash, "compute",
+      fields(Seq("n_2grams", "top2_count", "top2_frac_x1000"), LongType))(c)
   def langid(c: Column): Column =
-    ColumnBridge.column(LangIdExpr(ColumnBridge.expression(c)))
+    ColumnBridge.invoke(LangIdModel, "predict", StringType)(c)
   def lang_sample_text(id: Column, n: Int): Column =
-    ColumnBridge.column(LangSampleExpr(ColumnBridge.expression(id), n))
+    ColumnBridge.invoke(LangSample, "compute", StringType)(id, n)
   def bpe_count(c: Column): Column =
-    ColumnBridge.column(BpeCountExpr(ColumnBridge.expression(c)))
+    ColumnBridge.invoke(extractous.pipeline.BpeModel, "countTokens", LongType)(c)
   def ngram_keys(c: Column, n: Int): Column =
-    ColumnBridge.column(NgramKeysExpr(ColumnBridge.expression(c), n))
+    ColumnBridge.invoke(NgramKeys, "compute", Longs)(c, n)
   def cut_spans(text: Column, ps: Column, k: Int): Column =
-    ColumnBridge.column(CutSpansExpr(ColumnBridge.expression(text), ColumnBridge.expression(ps), k))
+    ColumnBridge.invoke(CutSpans, "compute", StringType)(text, ps, k)
   def shingles(c: Column, n: Int): Column =
-    ColumnBridge.column(ShinglesExpr(ColumnBridge.expression(c), n))
+    ColumnBridge.invoke(ShingleKernel, "compute", ArrayType(StringType, containsNull = false))(c, n)
   def gopher_report(c: Column, minWords: Int): Column =
-    ColumnBridge.column(GopherExpr(ColumnBridge.expression(c), minWords))
+    ColumnBridge.invoke(GopherKernel, "compute", fields(GopherKernel.Fields, LongType))(c, minWords)
 
   def c4_clean(c: Column): Column =
-    ColumnBridge.column(C4CleanExpr(ColumnBridge.expression(c)))
+    ColumnBridge.invoke(C4Kernel, "compute", StructType(Seq(
+      StructField("clean_text", StringType, nullable = false),
+      StructField("n_sentences", LongType, nullable = false),
+      StructField("kept_lines", LongType, nullable = false),
+      StructField("total_lines", LongType, nullable = false))))(c)
 }

@@ -1,14 +1,12 @@
 package extractous.spark
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
 
-/** Imperative vector expressions for the similarity family.
+/** Imperative vector kernels for the similarity family.
   *
   * Both are NARROW per-row transforms — the point is plan shape at corpus
   * scale: IVF cell assignment used to be a `row_number()` window over the
@@ -40,39 +38,13 @@ object VectorMath {
     while (i < n) { s += a(i) * b(i); i += 1 }
     s
   }
-}
 
-/** `nearest_cells(vec, n)` over a fixed centroid table: returns the `n` cell
-  * ids whose centroids have the highest cosine similarity to `vec`, ordered
-  * (sim desc, cell asc) — the deterministic tie-break the DuckDB oracle uses.
-  *
-  * The centroid table is embedded in the expression (cells × dim doubles —
-  * metadata-sized; an IVF index is always materialized once at build time) and
-  * ships to executors with the serialized plan, exactly like a broadcast var
-  * but without a join: assignment becomes a narrow projection with ZERO
-  * exchanges, vs the previous plan's |corpus|·|cells| row_number shuffle
-  * (VERDICT r2 "What's wrong #1").
-  */
-final case class NearestCellsExpr(
-    child: Expression,
-    cells: Array[Int],
-    cents: Array[Array[Double]],
-    n: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  require(cells.length == cents.length && cells.nonEmpty, "centroid table must be non-empty")
-  require(n >= 1 && n <= cells.length, s"n out of range: $n")
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "nearest_cells"
-
-  @transient private lazy val centNorms: Array[Double] =
-    cents.map(c => math.sqrt(VectorMath.dot(c, c)))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input).asInstanceOf[ArrayData]
-    if (arr == null) return null
+  /** The `n` cell ids of `cells` whose centroids (norms precomputed in
+    * `centNorms`) have the highest cosine similarity to `arr`, ordered
+    * (sim desc, cell asc) — see [[vectors.nearest_cells]].
+    */
+  def nearestCells(arr: ArrayData, cells: Array[Int], cents: Array[Array[Double]],
+      centNorms: Array[Double], n: Int): ArrayData = {
     // a vector whose dim differs from the index's would silently yield wrong
     // cosines (dot truncates to the shorter length while the norm covers the
     // full vector) and assign every row to a wrong cell — a stale/foreign
@@ -80,13 +52,13 @@ final case class NearestCellsExpr(
     if (arr.numElements() != cents(0).length)
       throw new IllegalArgumentException(
         s"nearest_cells index built for dim=${cents(0).length} but input vector has ${arr.numElements()} components")
-    val (v, vnorm) = VectorMath.dotAndNorm(arr)
+    val (v, vnorm) = dotAndNorm(arr)
     val k = cells.length
     val sims = new Array[Double](k)
     var i = 0
     while (i < k) {
       val denom = vnorm * centNorms(i)
-      sims(i) = if (denom == 0.0) 0.0 else VectorMath.dot(v, cents(i)) / denom
+      sims(i) = if (denom == 0.0) 0.0 else dot(v, cents(i)) / denom
       i += 1
     }
     // selection of top-n by (sim desc, cell asc): k is small (cells count),
@@ -106,104 +78,46 @@ final case class NearestCellsExpr(
       out(r) = cells(best)
       r += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-  override protected def withNewChildInternal(newChild: Expression): NearestCellsExpr =
-    copy(child = newChild)
-}
 
-/** `hyperplane_bands(vec)` → array<bigint> of `bands` bucket keys: band `b` is
-  * the packed sign pattern of `bitsPerBand` deterministic random hyperplanes
-  * (splitmix64-seeded components in [-1, 1], plane index `b·bitsPerBand + r`).
-  *
-  * This is banded multi-table hyperplane LSH (same banding shape as
-  * [[extractous.pipeline.Dedup.lshCandidates]] for minhash): a pair collides
-  * if ANY band matches, so recall = 1 − (1 − p^r)^b with p = 1 − θ/π, tunable
-  * to ~1 at the target threshold — unlike the previous single-table scheme
-  * whose recall for non-sign-invariant near-dups was fixed < 1 (VERDICT r2
-  * "What's wrong #2"). Bucket space per band is 2^bitsPerBand: size
-  * `bitsPerBand ≈ log2(corpusSize / targetBucketRows)` so within-bucket
-  * self-join fan-out stays bounded as the corpus grows, then pick `bands` to
-  * hit the recall target at the chosen threshold.
-  */
-final case class HyperplaneBandsExpr(
-    child: Expression,
-    bands: Int,
-    bitsPerBand: Int,
-    dim: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  require(bands >= 1 && bitsPerBand >= 1 && bitsPerBand <= 62, "bad LSH geometry")
-  // the plane seed pi*131 + d is collision-free only while d < 131; a larger
-  // dim would silently correlate hyperplanes across planes/bands and degrade
-  // the advertised recall — fail construction, don't degrade quietly
-  require(dim <= 131, s"hyperplane seed scheme supports dim ≤ 131, got $dim")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "hyperplane_bands"
-
-  // plane components in [-1, 1]; index (plane, d) is unique because d < 131
-  @transient private lazy val planes: Array[Array[Double]] =
-    Array.tabulate(bands * bitsPerBand) { pi =>
-      Array.tabulate(dim)(d =>
-        SignatureHash.mix(pi.toLong * 131 + d).toDouble / Long.MaxValue)
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input).asInstanceOf[ArrayData]
-    if (arr == null) return null
+  /** One packed sign pattern per band of `bitsPerBand` consecutive `planes`
+    * — see [[vectors.hyperplane_bands]].
+    */
+  def hyperplaneBands(arr: ArrayData, planes: Array[Array[Double]], bitsPerBand: Int): ArrayData = {
+    val nd = planes(0).length
     // a vector whose dim differs from the configured one would silently
     // bucket on a PREFIX (longer input: half the signal ignored at dim=64 vs
     // 128-dim embeddings) or on zero-padded planes (shorter input: the
     // advertised 1−(1−p^r)^b recall no longer holds) — that is a
     // configuration error, not data poison: all rows share the embedding
     // dim, so failing fast here fails the job before it lies
-    if (arr.numElements() != dim)
+    if (arr.numElements() != nd)
       throw new IllegalArgumentException(
-        s"hyperplane_bands configured for dim=$dim but input vector has ${arr.numElements()} components")
-    val nd = dim
+        s"hyperplane_bands configured for dim=$nd but input vector has ${arr.numElements()} components")
     val v = new Array[Double](nd)
     var i = 0
     while (i < nd) { v(i) = arr.getDouble(i); i += 1 }
+    val bands = planes.length / bitsPerBand
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
       var bits = 0L
       var r = 0
       while (r < bitsPerBand) {
-        if (VectorMath.dot(v, planes(b * bitsPerBand + r)) >= 0) bits |= (1L << r)
+        if (dot(v, planes(b * bitsPerBand + r)) >= 0) bits |= (1L << r)
         r += 1
       }
       out(b) = bits
       b += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneBandsExpr =
-    copy(child = newChild)
-}
 
-/** Imperative dot product of two `array<double>` columns — the pairwise
-  * scoring kernel of the similarity family. Replicates EXACTLY the HOF
-  * formulation `aggregate(zip_with(a, b, (x, y) => x * y), 0.0, (s, v) => s + v)`
-  * it replaces (same left-to-right summation order, so the doubles are
-  * bit-identical; mismatched lengths or a null element yield NULL, matching
-  * zip_with's null padding flowing through the fold) — but as one tight
-  * loop instead of two interpreted lambda evaluations per element. The kNN
-  * and SemDeDup paths evaluate this |Q|·|C| / Σ|cell|² times per query.
-  */
-final case class DotProductExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "vec_dot"
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input).asInstanceOf[ArrayData]
-    if (a == null) return null
-    val b = right.eval(input).asInstanceOf[ArrayData]
-    if (b == null) return null
+  /** Sequential dot product of two `array<double>` values; null on unequal
+    * lengths or a null element — see [[vectors.vec_dot]].
+    */
+  def vecDot(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     // zip_with pads the shorter side with null, a null product nullifies the
     // whole fold — so unequal lengths are NULL, exactly like the HOF
@@ -217,15 +131,68 @@ final case class DotProductExpr(left: Expression, right: Expression)
     }
     s
   }
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotProductExpr =
-    copy(left = newLeft, right = newRight)
 }
 
 object vectors {
-  def nearest_cells(vec: Column, cells: Array[Int], cents: Array[Array[Double]], n: Int): Column =
-    ColumnBridge.column(NearestCellsExpr(ColumnBridge.expression(vec), cells, cents, n))
-  def hyperplane_bands(vec: Column, bands: Int, bitsPerBand: Int, dim: Int): Column =
-    ColumnBridge.column(HyperplaneBandsExpr(ColumnBridge.expression(vec), bands, bitsPerBand, dim))
+  /** `nearest_cells(vec, n)` over a fixed centroid table: returns the `n`
+    * cell ids whose centroids have the highest cosine similarity to `vec`,
+    * ordered (sim desc, cell asc) — the deterministic tie-break the DuckDB
+    * oracle uses.
+    *
+    * The centroid table and its norms are plan constants (cells × dim
+    * doubles — metadata-sized; an IVF index is always materialized once at
+    * build time) and ship to executors with the serialized plan, exactly
+    * like a broadcast var but without a join: assignment becomes a narrow
+    * projection with ZERO exchanges, vs the previous plan's
+    * |corpus|·|cells| row_number shuffle (VERDICT r2 "What's wrong #1").
+    */
+  def nearest_cells(vec: Column, cells: Array[Int], cents: Array[Array[Double]], n: Int): Column = {
+    require(cells.length == cents.length && cells.nonEmpty, "centroid table must be non-empty")
+    require(n >= 1 && n <= cells.length, s"n out of range: $n")
+    val centNorms = cents.map(c => math.sqrt(VectorMath.dot(c, c)))
+    ColumnBridge.invoke(VectorMath, "nearestCells", ArrayType(IntegerType, containsNull = false),
+      returnNullable = true)(vec, cells, cents, centNorms, n)
+  }
+
+  /** `hyperplane_bands(vec)` → array<bigint> of `bands` bucket keys: band
+    * `b` is the packed sign pattern of `bitsPerBand` deterministic random
+    * hyperplanes (splitmix64-seeded components in [-1, 1], plane index
+    * `b·bitsPerBand + r`), generated once here and shipped with the plan.
+    *
+    * This is banded multi-table hyperplane LSH (same banding shape as
+    * [[extractous.pipeline.Dedup.lshCandidates]] for minhash): a pair
+    * collides if ANY band matches, so recall = 1 − (1 − p^r)^b with
+    * p = 1 − θ/π, tunable to ~1 at the target threshold — unlike the
+    * previous single-table scheme whose recall for non-sign-invariant
+    * near-dups was fixed < 1 (VERDICT r2 "What's wrong #2"). Bucket space
+    * per band is 2^bitsPerBand: size `bitsPerBand ≈ log2(corpusSize /
+    * targetBucketRows)` so within-bucket self-join fan-out stays bounded as
+    * the corpus grows, then pick `bands` to hit the recall target at the
+    * chosen threshold.
+    */
+  def hyperplane_bands(vec: Column, bands: Int, bitsPerBand: Int, dim: Int): Column = {
+    require(bands >= 1 && bitsPerBand >= 1 && bitsPerBand <= 62, "bad LSH geometry")
+    // the plane seed pi*131 + d is collision-free only while d < 131; a larger
+    // dim would silently correlate hyperplanes across planes/bands and degrade
+    // the advertised recall — fail construction, don't degrade quietly
+    require(dim <= 131, s"hyperplane seed scheme supports dim ≤ 131, got $dim")
+    // plane components in [-1, 1]; index (plane, d) is unique because d < 131
+    val planes = Array.tabulate(bands * bitsPerBand) { pi =>
+      Array.tabulate(dim)(d => SignatureHash.mix(pi.toLong * 131 + d).toDouble / Long.MaxValue)
+    }
+    ColumnBridge.invoke(VectorMath, "hyperplaneBands", ArrayType(LongType, containsNull = false),
+      returnNullable = true)(vec, planes, bitsPerBand)
+  }
+
+  /** Imperative dot product of two `array<double>` columns — the pairwise
+    * scoring kernel of the similarity family. Replicates EXACTLY the HOF
+    * formulation `aggregate(zip_with(a, b, (x, y) => x * y), 0.0, (s, v) => s + v)`
+    * it replaces (same left-to-right summation order, so the doubles are
+    * bit-identical; mismatched lengths or a null element yield NULL, matching
+    * zip_with's null padding flowing through the fold) — but as one tight
+    * loop instead of two interpreted lambda evaluations per element. The kNN
+    * and SemDeDup paths evaluate this |Q|·|C| / Σ|cell|² times per query.
+    */
   def vec_dot(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    ColumnBridge.invoke(VectorMath, "vecDot", DoubleType, returnNullable = true)(a, b)
 }

@@ -2,13 +2,11 @@ package extractous.spark
 
 import extractous.core.Wet
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.xbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
-/** WET conversion-record framing as a row expression: the exact
+/** WET conversion-record framing as a row kernel: the exact
   * [[Wet.recordString]] framing (ONE implementation — the kernel builds the
   * header through the same code path the file sink uses), emitted per row
   * inside whole-stage codegen. The text payload is never converted to a
@@ -25,25 +23,10 @@ object WetKernel {
   private val Trailer = UTF8String.fromString("\r\n\r\n")
 }
 
-final case class WetRecordExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "wet_record"
-  override protected def nullSafeEval(url: Any, date: Any, text: Any): Any =
-    WetKernel.record(url.asInstanceOf[UTF8String], date.asInstanceOf[UTF8String],
-      text.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (u, d, t) => s"extractous.spark.WetKernel.record($u, $d, $t)")
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): WetRecordExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object wet {
   /** `wet_record(url, date, text)` → the framed WET conversion record
     * (string form, trailing CRLF CRLF separator included).
     */
   def wet_record(url: Column, date: Column, text: Column): Column =
-    ColumnBridge.column(WetRecordExpr(ColumnBridge.expression(url),
-      ColumnBridge.expression(date), ColumnBridge.expression(text)))
+    ColumnBridge.invoke(WetKernel, "record", StringType)(url, date, text)
 }

@@ -112,10 +112,16 @@ object Normalize {
   *     characters of the joined text; the block that crosses the cap keeps
   *     its prefix, never ending between the halves of a surrogate pair;
   *   - XML, only when `xmlOutput` (the column is "" otherwise): a `<doc>`
-  *     root with one escaped `<tag>` element per block, '\n'-separated. Its
-  *     cap counts the serialized document, markup included; the element that
-  *     crosses it is cut at the remaining budget (surrogate-safe) and still
-  *     closed, so the output stays well-formed.
+  *     root with one escaped `<tag>` element per block, '\n'-separated. An
+  *     element is added only while the serialized document is shorter than
+  *     the cap, and its text, counted unescaped, is cut to the room left
+  *     (surrogate-safe). So the document up to the last element's opening
+  *     markup, plus that element's unescaped text, is at most the cap. The
+  *     last element's markup (`\n<tag>`, `</tag>`), the growth from escaping
+  *     its `&`, `<` and `>`, and the closing `\n</doc>` come on top: the
+  *     column holds at most cap + 2·|tag| + 13 characters plus that growth
+  *     (79 at cap 64 for a `p` element with nothing to escape). The cut
+  *     element is still closed, so the output stays well-formed.
   *
   * The XML always holds at least as many characters as the text it mirrors,
   * so once the text is full the XML is too: [[isFull]] (the text at its cap)

@@ -1347,7 +1347,7 @@ object SparkEntry {
       // sample generation + prediction as codegen'd narrow expressions — the
       // previous Dataset.map closure forced a per-row deserialize/serialize
       // round trip and broke whole-stage codegen; values are identical
-      // (LangSampleExpr replays the same (lang, id, 60) sampleText call)
+      // (lang_sample_text replays the same (lang, id, 60) sampleText call)
       import extractous.pipeline.LangData
       val langArr = array(LangData.langs.map(lit): _*)
       s.read.parquet(s"$dir/documents.parquet")

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.xbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{DataType, ObjectType}
 
 /** Spark 4 split the public `Column` API from Catalyst; the supported bridge
   * (`org.apache.spark.sql.classic.ExpressionUtils`) is `private[sql]`, so this
@@ -12,4 +14,28 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The one shape of every per-row kernel: a column that calls the public
+    * method `method` of the top-level Scala object `kernel` once per row,
+    * through Catalyst's `StaticInvoke`. Generated code calls the object's
+    * static forwarder directly, so the projection stays inside whole-stage
+    * codegen; interpreted plans call the same method reflectively.
+    *
+    * A `Column` argument is a child expression, handed over in its internal
+    * form (`UTF8String`, `ArrayData`, `InternalRow`, primitives). Any other
+    * argument is a plan constant: a primitive becomes a typed literal, and an
+    * object (a bitset, a count table, centroids) an `ObjectType` literal the
+    * kernel receives as-is — it ships with the plan, like a broadcast.
+    *
+    * A null in any column argument yields null without calling the kernel,
+    * unless `propagateNull` is false; `returnNullable` declares that the
+    * kernel itself may return null (a boxed value for a primitive type).
+    */
+  def invoke(kernel: AnyRef, method: String, dataType: DataType,
+      propagateNull: Boolean = true, returnNullable: Boolean = false)(args: Any*): Column =
+    column(StaticInvoke(kernel.getClass, dataType, method, args.map {
+      case c: Column => expression(c)
+      case v @ (_: Int | _: Long | _: Double | _: Boolean) => Literal(v)
+      case o: AnyRef => Literal(o, ObjectType(o.getClass))
+    }, propagateNull = propagateNull, returnNullable = returnNullable))
 }

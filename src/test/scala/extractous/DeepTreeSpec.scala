@@ -52,6 +52,14 @@ class DeepTreeSpec extends AnyFunSuite {
     ("From: a@example.com\r\nSubject: deep\r\nMIME-Version: 1.0\r\nContent-Type: multipart/alternative; boundary=\"b\"\r\n\r\n" +
       s"--b\r\nContent-Type: text/html\r\n\r\n$html\r\n--b--\r\n").getBytes(UTF_8)
 
+  /** A text/plain part wrapped in `n` nested multipart/mixed parts. */
+  private def nestedMail(n: Int): Array[Byte] = {
+    val mail = (1 to n).foldLeft("Content-Type: text/plain\r\n\r\nmime marker\r\n") { (part, i) =>
+      s"Content-Type: multipart/mixed; boundary=\"b$i\"\r\n\r\n--b$i\r\n$part--b$i--\r\n"
+    }
+    ("From: a@example.com\r\nSubject: nested\r\nMIME-Version: 1.0\r\n" + mail).getBytes(UTF_8)
+  }
+
   // enough words to count as main content
   private val para = "a deep paragraph marker with more than ten words in it"
 
@@ -67,6 +75,7 @@ class DeepTreeSpec extends AnyFunSuite {
       ("docx text boxes x5k", docx(nest("<w:p><w:r><w:pict><w:txbxContent>", "</w:txbxContent></w:pict></w:r></w:p>", 5000,
         "<w:p><w:r><w:t>box marker</w:t></w:r></w:p>")), "box marker"),
       ("html mail 20k deep", htmlMail(nest("<div>", "</div>", 20000, "mail marker")), "mail marker"),
+      ("multipart mail 1000 deep", nestedMail(1000), "mime marker"),
       ("epub div x20k", epub(nest("<div>", "</div>", 20000, "<p>epub marker</p>")), "epub marker"),
       ("odt section x20k", odt(nest("<text:section>", "</text:section>", 20000, "<text:p>odt marker</text:p>")), "odt marker"),
       ("odt span x20k", odt("<text:p>" + nest("<text:span>", "</text:span>", 20000, "span marker") + "</text:p>"), "span marker"))
@@ -84,6 +93,23 @@ class DeepTreeSpec extends AnyFunSuite {
       }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("nested multipart: the first text part in preorder wins, and a level's own text part beats its nested ones") {
+    def multi(b: String, parts: String*) =
+      s"Content-Type: multipart/mixed; boundary=\"$b\"\r\n\r\n" + parts.map(p => s"--$b\r\n$p\r\n").mkString + s"--$b--"
+    def plain(t: String) = s"Content-Type: text/plain\r\n\r\n$t"
+    val pdf = "Content-Type: application/pdf\r\n\r\n%PDF-"
+    def text(body: String) = {
+      val r = Extract(("From: a@example.com\r\nSubject: pick\r\nMIME-Version: 1.0\r\n" + body).getBytes(UTF_8), cfg)
+      assert(r.status == ExtractStatus.Ok, r.error)
+      assert(r.contentType == MimeSniffer.Eml)
+      r.text
+    }
+    assert(text(multi("a", pdf, multi("b", pdf, multi("c", plain("deep first"))), multi("d", plain("second")))) ==
+      "pick\ndeep first")
+    assert(text(multi("a", multi("b", plain("nested")), "Content-Type: text/html\r\n\r\n<p>direct html</p>")) ==
+      "pick\ndirect html")
   }
 
   test("an unmatched end tag costs O(1): n open <b> then n </i> parses in time linear in n") {
@@ -139,15 +165,6 @@ class DeepTreeSpec extends AnyFunSuite {
     assert(r.error == "extraction failed: deep recursion")
     assert(r.contentType == MimeSniffer.Pdf)
     assert(r.metadata("Content-Type") == Seq(MimeSniffer.Pdf))
-    // multipart nested 1000 deep on a small stack: the MIME walk still
-    // recurses per level. Whether the stack runs out depends on how much of
-    // it is compiled, and where decides the message; the type holds either way
-    val inner = "Content-Type: text/plain\r\n\r\nbottom\r\n"
-    val mail = (1 to 1000).foldLeft(inner) { (part, i) =>
-      s"Content-Type: multipart/mixed; boundary=\"b$i\"\r\n\r\n--b$i\r\n$part--b$i--\r\n"
-    }
-    val bytes = ("From: a@example.com\r\nSubject: nested\r\nMIME-Version: 1.0\r\n" + mail).getBytes(UTF_8)
-    assert(onStack(256L << 10)(Extract(bytes, cfg)).contentType == MimeSniffer.Eml)
   }
 
   test("Dublin Core: the last non-empty dc:title and dc:creator at any depth win (DOCX core.xml, ODF meta.xml)") {

@@ -61,6 +61,16 @@ class OfficeSpec extends AnyFunSuite {
     val r = OfficeExtractor.extract(zipb, MimeSniffer.Xlsx, cfg)
     assert(r.text == "alpha 42\nbeta")
   }
+  test("xlsx inline-string cells keep their text, plain or in rich runs") {
+    val sheet = """<?xml version="1.0"?><worksheet xmlns="x"><sheetData>
+      <row><c r="A1" t="inlineStr"><is><t>inline</t></is></c><c r="B1"><v> 7 </v></c></row>
+      <row><c r="A2" t="inlineStr"><is><r><t>rich </t></r><r><t>runs</t></r></is></c><c r="B2" t="inlineStr"/></row>
+      </sheetData></worksheet>"""
+    val zipb = DocxWriter.zip(Seq(
+      "[Content_Types].xml" -> "<Types/>".getBytes("UTF-8"),
+      "xl/worksheets/sheet1.xml" -> sheet.getBytes("UTF-8")))
+    assert(OfficeExtractor.extract(zipb, MimeSniffer.Xlsx, cfg).text == "inline 7\nrich runs")
+  }
   test("xlsx sheets in numeric order (sheet10 after sheet2, not lexicographic)") {
     def sheet(v: String) =
       s"""<?xml version="1.0"?><worksheet xmlns="x"><sheetData><row><c r="A1"><v>$v</v></c></row></sheetData></worksheet>"""

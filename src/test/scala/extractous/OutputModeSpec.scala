@@ -236,6 +236,35 @@ class OutputModeSpec extends AnyFunSuite {
     assert(diff.isEmpty, diff.mkString("changed: ", ", ", ""))
   }
 
+  test("xml64: the document before the last element's markup, with its text unescaped, fits the cap") {
+    val cap = 64
+    val cfg = OutputModeDigests.configs.collectFirst { case ("xml64", c) => c }.get
+    assert(cfg.maxStringLength == cap)
+    val over = OutputModeDigests.cases.flatMap { c =>
+      val xml = Extract(c.bytes, c.tweak(cfg)).xml
+      if (xml.isEmpty) None
+      else {
+        assert(xml.startsWith("<doc>") && xml.endsWith("\n</doc>"), c.name)
+        val body = xml.dropRight("\n</doc>".length)
+        if (body == "<doc>") None
+        else {
+          val tag = body.substring(body.lastIndexOf("</") + 2, body.length - 1)
+          val open = body.lastIndexOf(s"\n<$tag>")
+          val text = body.substring(open + tag.length + 3, body.length - tag.length - 3)
+          val growth = 4 * "&amp;".r.findAllIn(text).size + 3 * "&(lt|gt);".r.findAllIn(text).size
+          val counted = open + text.length - growth
+          assert(xml.length == counted + 2 * tag.length + 13 + growth, c.name)
+          Some(c.name -> counted)
+        }
+      }
+    }
+    assert(over.nonEmpty)
+    val beyond = over.filter(_._2 > cap)
+    assert(beyond.isEmpty, beyond.mkString("over the cap: ", ", ", ""))
+    // the bound is reached, not just respected: cut elements fill the cap
+    assert(over.count(_._2 == cap) > 0)
+  }
+
   test("the pinned cases reach every extractor and both output modes") {
     val names = pinned.map(_._1).toSet
     Seq("html", "pdf", "scanned_pdf", "docx", "odt", "odp", "xls", "ppt", "doc", "eml", "markdown",

@@ -319,7 +319,7 @@ class PipelineSpec extends AnyFunSuite {
     plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).foreach { l =>
       assert(!l.contains("text#"), s"text column in a shuffle key:\n$l")
     }
-    assert(plan.contains("ngram_keys"), s"imperative gram-key kernel missing:\n$plan")
+    assert(plan.contains("NgramKeys.compute("), s"imperative gram-key kernel missing:\n$plan")
   }
 
   test("normalizeUrl/scrubPii plans are narrow: zero exchanges") {

@@ -99,7 +99,7 @@ class SimilaritySpec extends AnyFunSuite {
       l.contains("Exchange") && !l.contains("BroadcastExchange"))
     assert(shuffles <= 1, s"IVF plan has $shuffles shuffles (expected ≤1: the top-k agg):\n$plan")
     assert(plan.contains("topk_by_score"), s"bounded top-k aggregate missing:\n$plan")
-    assert(plan.contains("nearest_cells"), s"map-side argmax assignment missing:\n$plan")
+    assert(plan.contains("VectorMath.nearestCells("), s"map-side argmax assignment missing:\n$plan")
   }
 
   test("brute knn plan: bounded top-k aggregate, no Window") {
@@ -129,24 +129,24 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("dim mismatch fails the job instead of silently corrupting assignments/buckets") {
+    import extractous.spark.vectors
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types._
-    val vec96 = Literal.create(new GenericArrayData((0 until 96).map(_.toDouble).toArray),
-      ArrayType(DoubleType))
+    import org.apache.spark.sql.xbridge.ColumnBridge
+    def vec(dim: Int) = ColumnBridge.column(Literal.create(
+      new GenericArrayData((0 until dim).map(_.toDouble).toArray), ArrayType(DoubleType)))
+    def eval(c: org.apache.spark.sql.Column): Any = ColumnBridge.expression(c).eval(null)
     val cents = Array(Array.fill(64)(0.5), Array.fill(64)(-0.5))
-    val e1 = intercept[IllegalArgumentException](
-      extractous.spark.NearestCellsExpr(vec96, Array(0, 1), cents, 1).eval(null))
+    val e1 = intercept[IllegalArgumentException](eval(vectors.nearest_cells(vec(96), Array(0, 1), cents, 1)))
     assert(e1.getMessage.contains("dim=64"))
-    val e2 = intercept[IllegalArgumentException](
-      extractous.spark.HyperplaneBandsExpr(vec96, 4, 8, 64).eval(null))
+    val e2 = intercept[IllegalArgumentException](eval(vectors.hyperplane_bands(vec(96), 4, 8, 64)))
     assert(e2.getMessage.contains("dim=64"))
     // shorter input is equally a config error (zero-padding breaks recall)
-    val vec32 = Literal.create(new GenericArrayData((0 until 32).map(_.toDouble).toArray),
-      ArrayType(DoubleType))
-    intercept[IllegalArgumentException](
-      extractous.spark.HyperplaneBandsExpr(vec32, 4, 8, 64).eval(null))
+    intercept[IllegalArgumentException](eval(vectors.hyperplane_bands(vec(32), 4, 8, 64)))
   }
+
+
 
   test("semdedup: keeps the outlier of each near-dup group, spares distinct items") {
     import spark.implicits._
