@@ -6,10 +6,16 @@ import extractous.model.ExtractResult
 import extractous.spark.{functions => xf}
 import extractous.table.{LineageRow, SnapshotTable}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StringType}
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.time.LocalDate
+import java.util.UUID
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
+import scala.collection.mutable
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
@@ -27,13 +33,30 @@ import scala.concurrent.duration._
   *     need output files balanced despite host-skewed inputs (host-0 carries
   *     ~50% of pages in the synthetic corpus). Off by default because it adds
   *     the only shuffle in the pipeline;
+  *   - the days come from the input's partition index (the `warc_day`
+  *     values partition discovery already found, as `yyyy-MM-dd`), so
+  *     listing them runs no Spark job; `fromDay`/`toDay` are inclusive
+  *     string bounds on that list. A day dir whose files hold no rows is
+  *     committed with no files;
   *   - work is committed in groups of `groupSize` days: each group = one
   *     atomic snapshot with per-partition lineage rows. A restarted job skips
   *     every committed day (idempotent resume);
-  *   - provenance columns (`part_id`, `input_file`) ride in the output table;
-  *     lineage rows and status counts are folded by the write job itself
-  *     (`Dataset.observe`), so neither the raw corpus nor the staged output
-  *     is read a second time.
+  *   - up to `defaultParallelism + 1` groups are in flight at once: each
+  *     plans and runs its write on a pool thread that `run` owns, so one
+  *     group's short write job does not leave the other cores idle while the
+  *     driver plans and commits. The `+ 1` keeps a group committing on the
+  *     driver while the others' tasks fill every slot, even at `local[1]`.
+  *     The calling thread commits the groups strictly in day order, one at
+  *     a time, so snapshot ids ascend with the days;
+  *   - a failing group stops the run: every group before it stays
+  *     committed, the writes of the groups after it are cancelled and
+  *     awaited, their staging dirs are deleted, and its exception
+  *     propagates. A rerun resumes from the committed days;
+  *   - a pass runs no Spark job besides the input's schema read and one
+  *     write per group: provenance columns (`part_id`, `input_file`) ride in
+  *     the output table, and lineage rows and status counts are folded by the
+  *     write job itself (`Dataset.observe`), so neither the raw corpus nor
+  *     the staged output is read a second time.
   */
 object ExtractJob {
 
@@ -45,13 +68,7 @@ object ExtractJob {
       fromDay: Option[String] = None, toDay: Option[String] = None): JobSummary = {
     val table = new SnapshotTable(tableDir)
     table.init()
-    val input0 = spark.read.parquet(inputDir)
-    val input = (fromDay, toDay) match {
-      case (Some(f), Some(t)) => input0.filter(col("warc_day") >= f && col("warc_day") <= t)
-      case (Some(f), None)    => input0.filter(col("warc_day") >= f)
-      case (None, Some(t))    => input0.filter(col("warc_day") <= t)
-      case _                  => input0
-    }
+    val input = spark.read.parquet(inputDir)
 
     // sweep staging dirs orphaned by a crash between write and commit: a
     // fresh run stages anew, so anything still named .staging-* is provably
@@ -67,41 +84,112 @@ object ExtractJob {
     } catch { case _: Exception => () }
 
     val committed = table.committedDays
-    // partition dirs read back as DATE; compare/collect as canonical strings
-    val allDays = input.select(date_format(col("warc_day"), "yyyy-MM-dd"))
-      .distinct().collect().map(_.getString(0)).sorted
-    val todo = allDays.filterNot(committed)
+    val todo = partitionDays(input)
+      .filter(d => fromDay.forall(d >= _) && toDay.forall(d <= _) && !committed(d))
+    val pending = todo.grouped(groupSize)
 
-    val snapshots = Seq.newBuilder[Long]
-    var totalDocs = 0L
-    todo.grouped(groupSize).foreach { group =>
-      // provenance stamped BEFORE any repartition: input_file_name() returns
-      // "" once rows cross an exchange, which would silently blank lineage
-      val slice0 = input.filter(col("warc_day").isin(group: _*))
-        .withColumn("input_file", input_file_name())
-      val slice = if (salt) slice0.repartition(spark.sparkContext.defaultParallelism, col("url")) else slice0
-      val out = xf.extractFrame(slice, cfg, keep = Seq("warc_day", "input_file"))
-        .withColumn("part_id", spark_partition_id())
-        .withColumn("n_bytes", octet_length(col("text")))
+    val sc = spark.sparkContext
+    val window = sc.defaultParallelism + 1
+    val pool = Executors.newFixedThreadPool(window, { (r: Runnable) =>
+      val t = new Thread(r, "extract-job-write")
+      t.setDaemon(true)
+      t
+    })
+    def launch(days: Seq[String]): InFlight = {
       // stage INSIDE the table dir: the commit's ATOMIC_MOVE renames are then
       // guaranteed same-filesystem (a /tmp staging dir on another mount would
       // throw AtomicMoveNotSupportedException)
       val staging = Files.createTempDirectory(Paths.get(tableDir), ".staging-")
-      // lineage + status metrics folded by the write's own result stage: the
-      // observe node sits above any salt exchange, where Spark applies each
-      // task's accumulator update once even under retries or speculation
       val obs = Observation()
-      out.observe(obs, udaf(GroupTally).apply(col("part_id"), col("input_file"),
-          coalesce(col("n_bytes").cast("long"), lit(0L)), col("status")).as("tally"))
-        .write.mode("overwrite").partitionBy("warc_day").parquet(staging.toString)
-
-      val (lineage, statusCounts) = observed(obs, group.toSeq)
-      totalDocs += lineage.map(_.doc_count).sum
-      snapshots += table.commit(staging.toString, group.toSeq, lineage, ExtractResult.Version, statusCounts)
-      // drop the drained staging dir (only _SUCCESS/empty day dirs remain)
-      try SnapshotTable.deleteRecursively(staging) catch { case _: Exception => () }
+      // a tag, not a job group: the writes keep the caller's job group, so
+      // cancelling that still reaches them
+      val tag = s"extract-job-${UUID.randomUUID()}"
+      InFlight(days, staging, obs, tag, pool.submit(new Callable[Unit] {
+        def call(): Unit = {
+          sc.addJobTag(tag)
+          try write(spark, input, days, cfg, salt, obs, staging.toString)
+          finally sc.removeJobTag(tag)
+        }
+      }))
     }
-    JobSummary(snapshots.result(), todo.toSeq, totalDocs)
+
+    val inFlight = mutable.Queue.empty[InFlight]
+    val snapshots = Seq.newBuilder[Long]
+    var totalDocs = 0L
+    try {
+      while (pending.hasNext || inFlight.nonEmpty) {
+        while (pending.hasNext && inFlight.size < window) inFlight += launch(pending.next())
+        // commit strictly in day order: the oldest group first, whatever
+        // order the writes finish in
+        val g = inFlight.head
+        try g.written.get() catch { case e: ExecutionException => throw e.getCause }
+        val (lineage, statusCounts) = observed(g.obs, g.days)
+        totalDocs += lineage.map(_.doc_count).sum
+        snapshots += table.commit(g.staging.toString, g.days, lineage, ExtractResult.Version, statusCounts)
+        inFlight.dequeue()
+        // drop the drained staging dir (only _SUCCESS/empty day dirs remain)
+        try SnapshotTable.deleteRecursively(g.staging) catch { case _: Exception => () }
+      }
+    } catch { case e: Throwable =>
+      // the groups before the failing one stay committed; cancel the running
+      // writes of the rest (one still planning runs to its end), wait until
+      // none of them can still write, then drop their staging so a rerun
+      // starts clean from the committed days
+      inFlight.foreach(g => sc.cancelJobsWithTag(g.tag))
+      inFlight.foreach { g =>
+        try g.written.get() catch { case _: Throwable => () }
+        try SnapshotTable.deleteRecursively(g.staging) catch { case _: Exception => () }
+      }
+      throw e
+    } finally pool.shutdown()
+    JobSummary(snapshots.result(), todo, totalDocs)
+  }
+
+  /** One day group between launch and commit: its staging dir, the write's
+    * observed metrics, the Spark job tag of its write and the write itself.
+    */
+  private final case class InFlight(days: Seq[String], staging: Path, obs: Observation, tag: String,
+      written: Future[Unit])
+
+  /** The input's days, sorted, from its partition index (no Spark job):
+    * `warc_day` partition values read back as DATE, or as strings when type
+    * inference is off; both compare as canonical `yyyy-MM-dd` strings.
+    */
+  private def partitionDays(input: DataFrame): Seq[String] = {
+    val spec = input.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
+    } match {
+      case Some(index: PartitioningAwareFileIndex) => index.partitionSpec()
+      case other => throw new IllegalArgumentException(s"input is not a partitioned file table: $other")
+    }
+    val i = spec.partitionColumns.fieldIndex("warc_day")
+    spec.partitions.map { p =>
+      spec.partitionColumns(i).dataType match {
+        case DateType   => LocalDate.ofEpochDay(p.values.getInt(i)).toString
+        case StringType => p.values.getUTF8String(i).toString
+        case t          => throw new IllegalArgumentException(s"warc_day partition values are $t, not dates")
+      }
+    }.distinct.sorted
+  }
+
+  /** Extract one day group into `staging`, partitioned by day; lineage and
+    * status counts are folded by the write's own result stage into `obs`.
+    */
+  private def write(spark: SparkSession, input: DataFrame, days: Seq[String], cfg: ExtractorConfig,
+      salt: Boolean, obs: Observation, staging: String): Unit = {
+    // provenance stamped BEFORE any repartition: input_file_name() returns
+    // "" once rows cross an exchange, which would silently blank lineage
+    val slice0 = input.filter(col("warc_day").isin(days: _*))
+      .withColumn("input_file", input_file_name())
+    val slice = if (salt) slice0.repartition(spark.sparkContext.defaultParallelism, col("url")) else slice0
+    val out = xf.extractFrame(slice, cfg, keep = Seq("warc_day", "input_file"))
+      .withColumn("part_id", spark_partition_id())
+      .withColumn("n_bytes", octet_length(col("text")))
+    // the observe node sits above any salt exchange, where Spark applies each
+    // task's accumulator update once even under retries or speculation
+    out.observe(obs, udaf(GroupTally).apply(col("part_id"), col("input_file"),
+        coalesce(col("n_bytes").cast("long"), lit(0L)), col("status")).as("tally"))
+      .write.mode("overwrite").partitionBy("warc_day").parquet(staging)
   }
 
   /** `Observation.get` waits without limit. The write has already returned when

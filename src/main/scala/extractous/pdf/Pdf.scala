@@ -47,6 +47,17 @@ final class CosLexer(buf: Array[Byte], var pos: Int, val end: Int) {
 
   /** Next COS token/value. Operators (content streams) come back as Op. */
   def next(): V = {
+    var v = token()
+    while (v eq null) v = token()
+    v
+  }
+
+  /** One COS token/value, or null after skipping a stray `)`, `{` or `}`.
+    * [[next]] skips a run of them in an explicit loop, so its length never
+    * reaches the thread's stack whether or not the compiler turns a
+    * self-call in tail position into a jump.
+    */
+  private def token(): V = {
     skipWs()
     if (pos >= end) return Null
     val c = peek
@@ -103,7 +114,7 @@ final class CosLexer(buf: Array[Byte], var pos: Int, val end: Int) {
           case "true"  => Bool(true)
           case "false" => Bool(false)
           case "null"  => Null
-          case ""      => pos += 1; next()
+          case ""      => pos += 1; null
           case other   => Op(other)
         }
     }

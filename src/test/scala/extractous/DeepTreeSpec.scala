@@ -60,6 +60,18 @@ class DeepTreeSpec extends AnyFunSuite {
     ("From: a@example.com\r\nSubject: nested\r\nMIME-Version: 1.0\r\n" + mail).getBytes(UTF_8)
   }
 
+  /** 100k stray `}`, which the COS lexer skips, between the catalog's
+    * entries and inside the page's content stream.
+    */
+  private val strayBracesPdf: Array[Byte] = {
+    val braces = "}" * 100000
+    PdfWriter.assembleObjects(Seq(
+      s"<< /Type /Catalog $braces /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>",
+      stream(s"BT /F1 12 Tf 72 720 Td $braces (Hello braces) Tj ET")).map(_.getBytes(UTF_8)), "/Root 1 0 R")
+  }
+
   // enough words to count as main content
   private val para = "a deep paragraph marker with more than ten words in it"
 
@@ -78,7 +90,8 @@ class DeepTreeSpec extends AnyFunSuite {
       ("multipart mail 1000 deep", nestedMail(1000), "mime marker"),
       ("epub div x20k", epub(nest("<div>", "</div>", 20000, "<p>epub marker</p>")), "epub marker"),
       ("odt section x20k", odt(nest("<text:section>", "</text:section>", 20000, "<text:p>odt marker</text:p>")), "odt marker"),
-      ("odt span x20k", odt("<text:p>" + nest("<text:span>", "</text:span>", 20000, "span marker") + "</text:p>"), "span marker"))
+      ("odt span x20k", odt("<text:p>" + nest("<text:span>", "</text:span>", 20000, "span marker") + "</text:p>"), "span marker"),
+      ("pdf stray } x100k", strayBracesPdf, "Hello braces"))
 
   test("hostile nesting extracts byte-identically on 256 KB, 1 MB and 8 MB thread stacks, with status 0 and its type") {
     val failures = hostile.flatMap { case (name, bytes, marker) =>

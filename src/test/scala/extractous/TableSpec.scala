@@ -6,11 +6,18 @@ import extractous.jobs.{CorpusWriter, ExtractJob}
 import extractous.model.ExtractResult
 import extractous.table.{LineageRow, SnapshotTable}
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Snapshot table + resumable job: atomic commits, manifest-driven reads,
   * time travel, idempotent resume, per-partition lineage (north rule).
@@ -302,7 +309,7 @@ class TableSpec extends AnyFunSuite {
       ListenerBusDrain.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     val paths = scanned.toArray.map(_.toString)
-    // the listener saw the job's own scans (the day list reads the corpus)
+    // the listener saw the job's own scans (each group's write reads the corpus)
     assert(paths.exists(_.contains(input)), paths.mkString(", "))
     val staged = paths.filter(p => p.contains(tableDir) && p.contains("/.staging-"))
     assert(staged.isEmpty, s"staging output was scanned: ${staged.mkString(", ")}")
@@ -319,5 +326,128 @@ class TableSpec extends AnyFunSuite {
     val orphanSrc = day.listFiles().head
     java.nio.file.Files.copy(orphanSrc.toPath, day.toPath.resolve("orphan-not-committed.parquet"))
     assert(table.read(spark).count() == before, "manifest-driven read must ignore orphans")
+  }
+
+  /** A copy of the directory tree at `dir`, so a test may change its files. */
+  private def copyOf(dir: String): String = {
+    val src = Paths.get(dir)
+    val dst = Files.createTempDirectory("jobcopy")
+    Using.resource(Files.walk(src))(_.iterator().asScala.foreach { p =>
+      val t = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    })
+    dst.toString
+  }
+
+  /** The input's `warc_day` partition values, sorted. */
+  private def dayDirs(input: String): Seq[String] =
+    new java.io.File(input).list().toSeq.filter(_.startsWith("warc_day=")).map(_.stripPrefix("warc_day=")).sorted
+
+  private def stagingLeft(tableDir: String): Seq[String] =
+    new java.io.File(tableDir).list().toSeq.filter(_.startsWith(".staging-"))
+
+  /** Every committed row as JSON, sorted: the table's whole content. */
+  private def rowsOf(t: SnapshotTable): Seq[String] = {
+    import spark.implicits._
+    t.read(spark).select(to_json(struct(col("*")))).as[String].collect().toSeq.sorted
+  }
+
+  /** Each snapshot's days, lineage, status counts and file count, oldest first. */
+  private def manifestsOf(t: SnapshotTable) =
+    t.chain().reverse.map(m => (m.committed_days, m.lineage, m.status_counts, m.files.size))
+
+  test("a failing day group: the groups before it stay committed, no staging is left, and a rerun equals an uninterrupted run") {
+    val input = copyOf(corpusDir)
+    val days = dayDirs(input)
+    assert(days.size == 30)
+    // one data file of the middle group's sixth day, zeroed at its own length
+    val bad = Using.resource(Files.list(Paths.get(input, s"warc_day=${days(15)}")))(
+      _.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq).head
+    val original = Files.readAllBytes(bad)
+    val tableDir = Files.createTempDirectory("tfail").toString
+    Files.write(bad, new Array[Byte](original.length))
+    try intercept[Exception](ExtractJob.run(spark, input, tableDir, groupSize = 10))
+    finally Files.write(bad, original)
+    val table = new SnapshotTable(tableDir)
+    assert(table.chain().size == 1)
+    assert(table.committedDays == days.take(10).toSet)
+    assert(stagingLeft(tableDir).isEmpty, stagingLeft(tableDir))
+
+    val resumed = ExtractJob.run(spark, input, tableDir, groupSize = 10)
+    assert(resumed.daysProcessed == days.drop(10))
+    assert(stagingLeft(tableDir).isEmpty, stagingLeft(tableDir))
+    val wholeDir = Files.createTempDirectory("twhole").toString
+    ExtractJob.run(spark, input, wholeDir, groupSize = 10)
+    val whole = new SnapshotTable(wholeDir)
+    assert(manifestsOf(table) == manifestsOf(whole))
+    assert(rowsOf(table) == rowsOf(whole))
+  }
+
+  test("a pass runs one write job per day group and no job besides the schema read; snapshots ascend in day order") {
+    val sc = spark.sparkContext
+    val days = dayDirs(corpusDir)
+    // more groups than the in-flight window of defaultParallelism + 1
+    val n = math.min(days.size, sc.defaultParallelism + 3)
+    val tableDir = Files.createTempDirectory("tjobs").toString
+    // execution id (if any) and job tags of every job, and the plan of every
+    // SQL execution
+    val jobs = new ConcurrentLinkedQueue[(Option[Long], Option[String])]()
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.add((prop("spark.sql.execution.id").map(_.toLong), prop("spark.job.tags")))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    val (readJobs, s) = try {
+      spark.read.parquet(corpusDir)
+      ListenerBusDrain.drain(sc)
+      val read = jobs.asScala.toSeq
+      jobs.clear()
+      val s = ExtractJob.run(spark, corpusDir, tableDir, groupSize = 1, toDay = Some(days(n - 1)))
+      ListenerBusDrain.drain(sc)
+      (read, s)
+    } finally sc.removeSparkListener(listener)
+
+    assert(s.daysProcessed == days.take(n))
+    assert(s.snapshots == s.snapshots.sorted && s.snapshots.distinct.size == n, s.snapshots)
+    val table = new SnapshotTable(tableDir)
+    assert(s.snapshots.map(table.manifest(_).committed_days) == days.take(n).map(Seq(_)))
+
+    val all = jobs.asScala.toSeq
+    def writesStaging(id: Long) = Option(plans.get(id)).exists(p =>
+      p.contains("InsertIntoHadoopFsRelationCommand") && p.contains(s"$tableDir/.staging-"))
+    val (writes, other) = all.partition(_._1.exists(writesStaging))
+    assert(writes.size == n, s"${writes.size} write jobs for $n groups")
+    assert(writes.map(_._1).distinct.size == n, "every group's write is its own single-job execution")
+    // each write carries a job tag of its own, which a failing run cancels
+    assert(writes.flatMap(_._2).distinct.size == n, writes)
+    assert(readJobs.size <= 1 && other.size == readJobs.size,
+      s"jobs besides the writes: ${other.size}; a bare schema read runs ${readJobs.size}")
+  }
+
+  test("a day whose files hold zero rows is committed with no files, and a rerun does not list it again") {
+    val input = copyOf(corpusDir)
+    val last = dayDirs(input).last
+    val empty = java.time.LocalDate.parse(last).plusDays(10).toString
+    spark.read.parquet(corpusDir).drop("warc_day").limit(0).coalesce(1)
+      .write.parquet(s"$input/warc_day=$empty")
+    assert(new java.io.File(s"$input/warc_day=$empty").list().exists(_.endsWith(".parquet")))
+    val tableDir = Files.createTempDirectory("tempty").toString
+    val s = ExtractJob.run(spark, input, tableDir, groupSize = 1, fromDay = Some(last))
+    assert(s.daysProcessed == Seq(last, empty))
+    val table = new SnapshotTable(tableDir)
+    val m = table.manifest(s.snapshots.last)
+    assert(m.committed_days == Seq(empty))
+    assert(m.files.isEmpty && m.lineage.isEmpty && m.status_counts.isEmpty, m)
+    assert(table.committedDays == Set(last, empty))
+    val again = ExtractJob.run(spark, input, tableDir, groupSize = 1, fromDay = Some(last))
+    assert(again.daysProcessed.isEmpty && again.snapshots.isEmpty)
   }
 }

@@ -19,6 +19,13 @@ and quartiles, the change's wins (ties count for neither side) and whether a
 gain claim holds: at least nine tenths of the pairs run won (a failed pair is
 no win), and the medians apart by more than the base's quartile distance, in
 the better direction.
+
+With `--trace-keys k1,k2,...` every run is traced (`perfbench/run.py --trace
+1`) and the same table is printed for those per-layer keys instead, each
+taking its better direction from BENCHMARK.json's `per_layer` list:
+
+    python3 tools/ab_pairs.py --workload crawl --pairs 3 --base HEAD~1 --first-seed 7 \
+        --trace-keys jobs.lineage_s,table.commit_driver_s,spark.par_eff
 """
 import argparse
 import json
@@ -44,10 +51,10 @@ def export(rev, dest):
         sys.exit(f"git archive {rev} failed")
 
 
-def bench(root, workload, seed, seconds):
+def bench(root, workload, seed, seconds, trace):
     """One benchmark run from `root`; the parsed JSON result line, or None."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(int(trace))]
     r = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
     lines = r.stdout.strip().splitlines()
     if r.returncode != 0 or not lines:
@@ -70,12 +77,23 @@ def main():
     ap.add_argument("--base", required=True, help="git revision to compare the working tree with")
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--trace-keys", default="",
+                    help="comma-separated per-layer keys: run traced and compare these instead")
     a = ap.parse_args()
 
     if subprocess.run(["git", "diff", "--quiet", a.base, "--", "perfbench"], cwd=ROOT).returncode != 0:
         sys.exit(f"perfbench/ differs between {a.base} and the working tree; pairs would not compare like with like")
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
-    metrics = [(m["name"], m["better"]) for m in spec["end_to_end"]]
+    trace = bool(a.trace_keys)
+    if trace:
+        better = {m["name"]: m["better"] for m in spec["per_layer"]}
+        keys = a.trace_keys.split(",")
+        unknown = [k for k in keys if k not in better]
+        if unknown:
+            sys.exit(f"not a per_layer key in BENCHMARK.json: {', '.join(unknown)}")
+        metrics = [(k, better[k]) for k in keys]
+    else:
+        metrics = [(m["name"], m["better"]) for m in spec["end_to_end"]]
     # SIGTERM unwinds like Ctrl-C, so the finally below removes the export
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     tmp = Path(tempfile.mkdtemp(prefix="ab-base-"))
@@ -89,7 +107,10 @@ def main():
                 order.reverse()
             got = {}
             for side, root in order:
-                got[side] = bench(root, a.workload, seed, a.seconds)
+                got[side] = bench(root, a.workload, seed, a.seconds, trace)
+                missing = [n for n, _ in metrics if got[side] is not None and n not in got[side]["metrics"]]
+                if missing:
+                    sys.exit(f"{a.workload} does not report {', '.join(missing)}")
             for side in runs:
                 runs[side].append(got[side])
             cells = []
@@ -109,7 +130,8 @@ def main():
           f"change {sum(not c['correct'] for _, c in ok)}")
     if not ok:
         sys.exit(1)
-    print(f"{'metric':20s} {'base median [q1, q3]':>30s} {'change median [q1, q3]':>30s} {'wins':>6s}  claim")
+    width = max(20, *(len(n) for n, _ in metrics))
+    print(f"{'metric':{width}s} {'base median [q1, q3]':>30s} {'change median [q1, q3]':>30s} {'wins':>6s}  claim")
     for name, better in metrics:
         pairs = [(b["metrics"][name]["value"], c["metrics"][name]["value"]) for b, c in ok]
         bs, cs = [b for b, _ in pairs], [c for _, c in pairs]
@@ -118,7 +140,7 @@ def main():
         bm, cm = statistics.median(bs), statistics.median(cs)
         bq, cq = quartiles(bs), quartiles(cs)
         holds = wins >= math.ceil(0.9 * a.pairs) and sign * (cm - bm) > bq[1] - bq[0]
-        print(f"{name:20s} {bm:12.4g} [{bq[0]:.4g}, {bq[1]:.4g}] {cm:12.4g} [{cq[0]:.4g}, {cq[1]:.4g}]"
+        print(f"{name:{width}s} {bm:12.4g} [{bq[0]:.4g}, {bq[1]:.4g}] {cm:12.4g} [{cq[0]:.4g}, {cq[1]:.4g}]"
               f" {wins:3d}/{len(ok)}  {'holds' if holds else 'no'}")
 
 
