@@ -5,6 +5,8 @@ import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.sniff.MimeSniffer
 import extractous.text.{BlockSink, Normalize}
 
+import scala.collection.mutable
+
 /** RFC-822 / MIME email (.eml) extraction — the reference covers email through
   * Tika (/root/reference/README.md:14 "60+ formats"; crawls carry mailing-list
   * archives). Scope: header block with folding, multipart bodies split on
@@ -23,17 +25,21 @@ object MailExtractor {
   // RFC 2045 parameter names are case-insensitive (Boundary=…)
   private val BoundaryParam = "(?i)boundary=\"?([^\";]+)\"?".r
 
-  private def splitHeadersBody(s: String): (Map[String, String], String) = {
-    val norm = s.replace("\r\n", "\n")
-    val at = norm.indexOf("\n\n")
-    val (head, body) = if (at < 0) (norm, "") else (norm.substring(0, at), norm.substring(at + 2))
+  /** The headers of the part `s[start, end)` and where its body starts: the
+    * headers end at the part's first blank line; without one the whole part
+    * is headers and the body is empty.
+    */
+  private def splitHeadersBody(s: String, start: Int, end: Int): (Map[String, String], Int) = {
+    var at = start
+    while (at + 1 < end && !(s.charAt(at) == '\n' && s.charAt(at + 1) == '\n')) at += 1
+    val (headEnd, bodyStart) = if (at + 1 < end) (at, at + 2) else (end, end)
     // unfold continuation lines, then split on first ':'
-    val unfolded = Folding.matcher(head).replaceAll(" ")
+    val unfolded = Folding.matcher(s.substring(start, headEnd)).replaceAll(" ")
     val headers = unfolded.split("\n").iterator.flatMap { line =>
       val c = line.indexOf(':')
       if (c <= 0) None else Some(Normalize.lowerAscii(line.substring(0, c).trim) -> line.substring(c + 1).trim)
     }.toMap
-    (headers, body)
+    (headers, bodyStart)
   }
 
   /** The part's declared charset, honoring it during byte decode — an
@@ -80,61 +86,122 @@ object MailExtractor {
   private def isMultipart(headers: Map[String, String]): Boolean =
     Normalize.lowerAscii(headers.getOrElse("content-type", "")).startsWith("multipart/")
 
-  /** The parts of a multipart body: the pieces between `--boundary` lines
-    * after the preamble, up to the close delimiter, as (headers, body).
+  /** Where the multipart delimiters occur in one normalized message. A
+    * delimiter starts with `--`, so only the positions that do are indexed,
+    * grouped by a rolling hash of the `len` chars there; each distinct
+    * delimiter length costs one pass over the message. A level's
+    * delimiters are then found without rescanning the levels nested in it,
+    * which `indexOf` over the level's range would do at every depth.
     */
-  private def partsOf(headers: Map[String, String], body: String): Seq[(Map[String, String], String)] = {
+  private final class Delimiters(s: String) {
+    private val M = 0x01000193
+    private val byLength = mutable.HashMap.empty[Int, Map[Int, Array[Int]]]
+
+    private def hash(t: String, from: Int, len: Int): Int = {
+      var h = 0
+      var k = 0
+      while (k < len) { h = h * M + t.charAt(from + k); k += 1 }
+      h
+    }
+
+    private def positions(len: Int) = byLength.getOrElseUpdate(len, {
+      val at = mutable.HashMap.empty[Int, mutable.ArrayBuilder.ofInt]
+      if (len <= s.length) {
+        var top = 1 // M^(len-1): the weight of the char leaving the window
+        (1 until len).foreach(_ => top *= M)
+        var h = hash(s, 0, len)
+        var p = 0
+        while (p + len <= s.length) {
+          if (s.charAt(p) == '-' && s.charAt(p + 1) == '-')
+            at.getOrElseUpdate(h, new mutable.ArrayBuilder.ofInt) += p
+          if (p + len < s.length) h = (h - s.charAt(p) * top) * M + s.charAt(p + len)
+          p += 1
+        }
+      }
+      at.iterator.map { case (h, ps) => h -> ps.result() }.toMap
+    })
+
+    /** The first position `p >= from` where `d` occurs with `p + d.length <=
+      * end`, or -1 — `indexOf` confined to `[from, end)`.
+      */
+    def next(d: String, from: Int, end: Int): Int = {
+      val ps = positions(d.length).getOrElse(hash(d, 0, d.length), Array.emptyIntArray)
+      var i = java.util.Arrays.binarySearch(ps, from)
+      if (i < 0) i = -i - 1
+      while (i < ps.length && ps(i) + d.length <= end) {
+        if (s.startsWith(d, ps(i))) return ps(i)
+        i += 1
+      }
+      -1
+    }
+  }
+
+  /** The parts of the multipart body `s[start, end)`: the pieces between
+    * `--boundary` delimiters after the preamble, up to the close delimiter,
+    * as (headers, body start, body end).
+    */
+  private def partsOf(headers: Map[String, String], s: String, start: Int, end: Int,
+      delims: Delimiters): Seq[(Map[String, String], Int, Int)] = {
     val delim = "--" + BoundaryParam.findFirstMatchIn(headers.getOrElse("content-type", ""))
       .getOrElse(throw new IllegalArgumentException("eml: multipart without boundary"))
       .group(1)
     // the pieces between delimiters, trailing empty ones dropped (what
     // String.split returns)
-    val pieces = scala.collection.mutable.ArrayBuffer.empty[String]
-    var from = 0
-    var at = body.indexOf(delim)
+    val pieces = mutable.ArrayBuffer.empty[(Int, Int)]
+    var from = start
+    var at = delims.next(delim, from, end)
     while (at >= 0) {
-      pieces += body.substring(from, at)
+      pieces += ((from, at))
       from = at + delim.length
-      at = body.indexOf(delim, from)
+      at = delims.next(delim, from, end)
     }
-    pieces += body.substring(from)
-    while (pieces.nonEmpty && pieces.last.isEmpty) pieces.remove(pieces.length - 1)
-    pieces.iterator.drop(1).takeWhile(p => !p.startsWith("--"))
+    pieces += ((from, end))
+    while (pieces.nonEmpty && pieces.last._1 == pieces.last._2) pieces.remove(pieces.length - 1)
+    def startsWith(prefix: String, a: Int, b: Int) = b - a >= prefix.length && s.startsWith(prefix, a)
+    pieces.iterator.drop(1).takeWhile { case (a, b) => !startsWith("--", a, b) }
       // strip ONLY the boundary line's own newline — eating every leading
       // newline would consume a headerless part's header/body separator
       // and feed its first paragraph to the header parser. A part whose
       // next line is blank has NO headers (RFC 2046 allows it; defaults
       // apply): empty header map, rest is body.
-      .map { p0 =>
-        val p = if (p0.startsWith("\r\n")) p0.substring(2) else if (p0.startsWith("\n")) p0.substring(1) else p0
-        if (p.startsWith("\r\n")) (Map.empty[String, String], p.substring(2))
-        else if (p.startsWith("\n")) (Map.empty[String, String], p.substring(1))
-        else splitHeadersBody(p)
+      .map { case (a0, b) =>
+        val a = if (startsWith("\r\n", a0, b)) a0 + 2 else if (startsWith("\n", a0, b)) a0 + 1 else a0
+        if (startsWith("\r\n", a, b)) (Map.empty[String, String], a + 2, b)
+        else if (startsWith("\n", a, b)) (Map.empty[String, String], a + 1, b)
+        else {
+          val (h, bodyStart) = splitHeadersBody(s, a, b)
+          (h, bodyStart, b)
+        }
       }.toVector
   }
 
-  /** Decoded text of the best body part. Nested multiparts
-    * (multipart/mixed wrapping multipart/alternative is the STANDARD shape
-    * of any email with an attachment) are walked in preorder on an explicit
-    * stack, so nesting depth costs heap, never thread stack. Preference at
-    * every level: first text/plain, else first text/html (as text), else
-    * the first nested multipart that yields either.
+  /** Decoded text of the best body part of the message `s` whose top-level
+    * body is `s[start, end)`. Nested multiparts (multipart/mixed wrapping
+    * multipart/alternative is the STANDARD shape of any email with an
+    * attachment) are walked in preorder on an explicit stack, so nesting
+    * depth costs heap, never thread stack; every part is a range of `s`,
+    * and only the chosen body is copied out, so nesting costs no copies of
+    * the levels below it either. Preference at every level: first
+    * text/plain, else first text/html (as text), else the first nested
+    * multipart that yields either.
     */
-  private def bestBody(headers: Map[String, String], body: String): String = {
-    if (!isMultipart(headers))
-      return decodeBody(body, headers.getOrElse("content-transfer-encoding", "7bit"), charsetOf(headers))
-    val pending = new java.util.ArrayDeque[(Map[String, String], String)]()
-    pending.push((headers, body))
+  private def bestBody(headers: Map[String, String], s: String, start: Int, end: Int): String = {
+    def decoded(h: Map[String, String], a: Int, b: Int) =
+      decodeBody(s.substring(a, b), h.getOrElse("content-transfer-encoding", "7bit"), charsetOf(h))
+    if (!isMultipart(headers)) return decoded(headers, start, end)
+    val delims = new Delimiters(s)
+    val pending = new java.util.ArrayDeque[(Map[String, String], Int, Int)]()
+    pending.push((headers, start, end))
     while (!pending.isEmpty) {
-      val (h, b) = pending.pop()
-      val parts = partsOf(h, b)
+      val (h, a, b) = pending.pop()
+      val parts = partsOf(h, s, a, b, delims)
       // RFC 2046 default for a part without Content-Type is text/plain
       def partOf(typ: String) = parts.find(p => Normalize.lowerAscii(p._1.getOrElse("content-type", "text/plain")).startsWith(typ))
       partOf("text/plain").orElse(partOf("text/html")) match {
-        case Some((ph, pb)) =>
-          val decoded = decodeBody(pb, ph.getOrElse("content-transfer-encoding", "7bit"), charsetOf(ph))
-          return if (Normalize.lowerAscii(ph.getOrElse("content-type", "")).startsWith("text/html")) htmlText(decoded)
-            else decoded
+        case Some((ph, pa, pb)) =>
+          val text = decoded(ph, pa, pb)
+          return if (Normalize.lowerAscii(ph.getOrElse("content-type", "")).startsWith("text/html")) htmlText(text)
+            else text
         case None =>
           // no direct text part at this level: its nested multiparts, the
           // first on top
@@ -157,8 +224,10 @@ object MailExtractor {
 
   def extract(bytes: Array[Byte], cfg: ExtractorConfig): ExtractResult = {
     try {
-      val (headers, body) = splitHeadersBody(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-      val text = bestBody(headers, body)
+      // CRLF is normalized once per message; every part is a range of `s`
+      val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8).replace("\r\n", "\n")
+      val (headers, bodyStart) = splitHeadersBody(s, 0, s.length)
+      val text = bestBody(headers, s, bodyStart, s.length)
       val sink = new BlockSink(cfg)
       headers.get("subject").foreach(sink.add("h1", _))
       sink.addLines("p", text)

@@ -67,31 +67,30 @@ object Decontam {
 
   /** Per-document contamination report against `bench`.
     *
-    * @param docs     corpus frame with (`idCol`, `textCol`)
+    * @param docs     corpus frame with (`idCol`, `textCol`); `idCol` is a key
     * @param bench    benchmark frame with a `textCol` column
     * @param n        n-gram order (real runs: 8–13; small corpora: 3)
     * @param pctThreshold contaminated iff matched-gram instances × 100 ≥
     *                 threshold × total-gram instances (integer arithmetic —
     *                 oracle-exact, no floats)
-    * @return (`idCol`, n_grams, n_matched, contaminated) — every input doc
-    *         present, zero-gram docs reported clean
+    * @return (`idCol`, n_grams, n_matched, contaminated) — one row per
+    *         distinct id, zero-gram and null-text docs reported clean
+    *
+    * `docs` is read once: `explode_outer` keeps a gram-less document as one
+    * null-gram row, which the aggregate counts as zero grams and zero hits.
+    * Joining the counts back to `docs.select(idCol)` would put a second copy
+    * of the whole upstream plan into every caller's query.
     */
   def flag(docs: DataFrame, bench: DataFrame, textCol: String, idCol: String,
       n: Int = 8, pctThreshold: Int = 30): DataFrame = {
     val benchGrams = bench
       .select(explode(ngramKeys(col(textCol), n)).as("gh"))
       .distinct()
-    val docGrams = docs
-      .select(col(idCol), explode(ngramKeys(col(textCol), n)).as("gh"))
-    val counts = docGrams
+    docs
+      .select(col(idCol), explode_outer(ngramKeys(col(textCol), n)).as("gh"))
       .join(broadcast(benchGrams.withColumn("hit", lit(1))), Seq("gh"), "left")
       .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_grams"), count(col("hit")).as("n_matched"))
-    docs.select(col(idCol))
-      .join(counts, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_matched"), lit(0L)).as("n_matched"))
+      .agg(count(col("gh")).as("n_grams"), count(col("hit")).as("n_matched"))
       .withColumn("contaminated",
         (col("n_matched") * 100 >= col("n_grams") * pctThreshold && col("n_grams") > 0).cast("long"))
   }

@@ -85,6 +85,6 @@ object Retrieval {
     * from Column-function tokenization.
     */
   private[extractous] def termFreqsHof(c: Column, terms: Seq[String]): Seq[Column] =
-    TextStats.tokenCount(c).cast("long") +:
+    TextStats.tokenCountHof(c).cast("long") +:
       terms.map(t => size(filter(TextStats.tokens(c), w => w === t)).cast("long"))
 }

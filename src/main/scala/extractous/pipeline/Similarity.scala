@@ -1,7 +1,8 @@
 package extractous.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -98,18 +99,32 @@ object Similarity {
       .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"), col("neighbor_id"))
   }
 
-  /** IVF centroids by element-wise mean per cell. Seeded deterministically by
-    * an existing coarse key (here: the label column — at production scale this
-    * would be a k-means output; the inverted-file mechanics are identical).
+  /** IVF centroid table: the element-wise mean of each cell's vectors,
+    * as cell ids in ascending order and their centroids. Seeded
+    * deterministically by an existing coarse key (here: the label column —
+    * at production scale this would be a k-means output; the inverted-file
+    * mechanics are identical).
+    *
+    * One aggregate stage: the (cell, pos) means are collected as they are
+    * (cells × dim rows, model-sized) and assembled here, so the build runs
+    * one shuffle and no sort.
     */
-  def centroids(corpus: DataFrame, cellCol: String = "label",
-      vecCol: String = "embedding"): DataFrame = {
-    corpus
+  private[extractous] def centroidTable(corpus: DataFrame, cellCol: String,
+      vecCol: String): (Array[Int], Array[Array[Double]]) = {
+    val means = corpus
       .select(col(cellCol).as("cell"), posexplode(col(vecCol).cast("array<double>")).as(Seq("pos", "v")))
       .groupBy(col("cell"), col("pos")).agg(avg(col("v")).as("m"))
-      .groupBy(col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => s.getField("m")).as("centroid"))
+      .collect()
+    val byCell = means.groupBy(_.get(0)).toArray.map { case (cell, rows) =>
+      val id = cell match {
+        case i: Int => i
+        case l: Long => l.toInt
+        case x => x.toString.toInt
+      }
+      // a position whose elements are all null has a null mean: 0.0
+      id -> rows.sortBy(_.getInt(1)).map(r => if (r.isNullAt(2)) 0.0 else r.getDouble(2))
+    }.sortBy(_._1)
+    (byCell.map(_._1), byCell.map(_._2))
   }
 
   /** IVF top-k: assign corpus vectors to their true nearest centroid, probe
@@ -133,14 +148,7 @@ object Similarity {
   def ivfKnn(corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       cellCol: String = "label"): DataFrame = {
-    val centRows = centroids(corpus, cellCol, vecCol).orderBy(col("cell")).collect()
-    val cells: Array[Int] = centRows.map(r => r.get(0) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case x => x.toString.toInt
-    })
-    val cents: Array[Array[Double]] =
-      centRows.map(_.getSeq[Double](1).toArray)
+    val (cells, cents) = centroidTable(corpus, cellCol, vecCol)
 
     val vd = col(vecCol).cast("array<double>")
     val assigned = corpus.select(
@@ -174,7 +182,7 @@ object Similarity {
     * as one anti-join and replayable 1:1 in SQL.
     *
     * Scale shape: centroid build + argmax assignment are the IVF machinery
-    * ([[centroids]] / `nearest_cells` — narrow, model embedded in the
+    * ([[centroidTable]] / `nearest_cells` — narrow, model embedded in the
     * expression); the only corpus exchange hashes on `cell` and carries
     * `(id, vec, norm, csim)` embedding-sized rows; the within-cell pairwise
     * cost is Σ|cluster|² — the knob is cluster count (the paper runs ~100k
@@ -184,14 +192,7 @@ object Similarity {
   def semDedup(corpus: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       cellCol: String = "label"): DataFrame = {
-    val centDf = centroids(corpus, cellCol, vecCol)
-    val centRows = centDf.orderBy(col("cell")).collect()
-    val cells: Array[Int] = centRows.map(r => r.get(0) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case x => x.toString.toInt
-    })
-    val cents: Array[Array[Double]] = centRows.map(_.getSeq[Double](1).toArray)
+    val (cells, cents) = centroidTable(corpus, cellCol, vecCol)
     val vd = col(vecCol).cast("array<double>")
     val assigned = corpus.select(col(idCol).as("id"), vd.as("v"),
         element_at(extractous.spark.vectors.nearest_cells(vd, cells, cents, 1), 1).as("cell"))
@@ -201,7 +202,8 @@ object Similarity {
     // LocalRelation instead of running the corpus-wide centroid aggregation
     // a second time for the join side; values (hence csim) are identical
     val centSide = broadcast(corpus.sparkSession.createDataFrame(
-        java.util.Arrays.asList(centRows: _*), centDf.schema)
+        java.util.Arrays.asList(cells.indices.map(i => Row(cells(i), cents(i).toSeq)): _*),
+        StructType(Seq(StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType)))))
       .withColumn("cn0", norm(col("centroid"))))
     val prio = assigned.join(centSide, Seq("cell"))
       .withColumn("csim", cosineWithNorms(col("v"), col("vn"), col("centroid"), col("cn0")))

@@ -3,10 +3,10 @@ package extractous.pipeline
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Text-analysis operators for a training-data pipeline, built entirely from
-  * codegen'd `org.apache.spark.sql.functions` (no UDFs): token counting,
-  * quality scoring, stopword-based language ID, and a polynomial document
-  * fingerprint. Every operator is a narrow per-row expression — no shuffle.
+/** Text-analysis operators for a training-data pipeline, built from
+  * codegen'd `org.apache.spark.sql.functions` and `StaticInvoke` kernels
+  * (no UDFs): token counting, quality scoring, stopword-based language ID,
+  * and a polynomial document fingerprint. Every operator is a narrow per-row expression — no shuffle.
   */
 object TextStats {
 
@@ -29,7 +29,16 @@ object TextStats {
   def tokens(c: Column): Column =
     filter(split(trim(c), "\\s+"), w => w =!= "")
 
-  def tokenCount(c: Column): Column = size(tokens(c))
+  /** The number of [[tokens]], counted in one byte pass by
+    * [[extractous.spark.TextGate]]; `tokens` builds the array, and its
+    * `filter` lambda is interpreted per row outside whole-stage codegen.
+    */
+  def tokenCount(c: Column): Column = extractous.spark.signatures.token_count(c)
+
+  /** The `functions` formulation of [[tokenCount]] — spec-side reference for
+    * the kernel's property test; not on any wired query path.
+    */
+  private[extractous] def tokenCountHof(c: Column): Column = size(tokens(c))
 
   /** Gram-family tokenization (shared by [[Dsir]] and [[LmQuality]] so the
     * convention cannot silently diverge): plain `\s+` split over the
@@ -94,17 +103,28 @@ object TextStats {
       .withColumn("rarity_mean_x1e6", expr("rarity_sum div greatest(n_words, 1)"))
   }
 
-  /** Punctuation character count. */
-  def punctCount(c: Column): Column =
+  /** Punctuation character count (`.,!?;:`). */
+  def punctCount(c: Column): Column = extractous.spark.signatures.punct_count(c)
+
+  /** Simple quality gate: 5..100000 tokens, at least 20 characters, at most
+    * one punctuation mark per 10 characters. Returns 1/0 (BIGINT-friendly for
+    * oracles). One kernel call counts all three in one pass over the bytes:
+    * as a filter it is pushed into every scan of its input, so its per-row
+    * cost is paid once per scan.
+    */
+  def isGood(c: Column): Column = extractous.spark.signatures.is_good(c)
+
+  /** The `functions` formulations of [[punctCount]] and [[isGood]] —
+    * spec-side references for the kernel's property test; not on any wired
+    * query path.
+    */
+  private[extractous] def punctCountHof(c: Column): Column =
     length(regexp_replace(c, "[^.,!?;:]", ""))
 
-  /** Simple quality gate: token count in range, bounded punctuation density,
-    * mean token length sane. Returns 1/0 (BIGINT-friendly for oracles).
-    */
-  def isGood(c: Column): Column = {
-    val nt = tokenCount(c)
+  private[extractous] def isGoodHof(c: Column): Column = {
+    val nt = tokenCountHof(c)
     val nc = length(c)
-    (nt >= 5 && nt <= 100000 && punctCount(c) * 10 <= nc && nc >= 20).cast("int")
+    (nt >= 5 && nt <= 100000 && punctCountHof(c) * 10 <= nc && nc >= 20).cast("int")
   }
 
   /** PII scrubbing — the standard pre-training redaction pass (emails, phone
@@ -192,9 +212,7 @@ object TextStats {
     * composition helper, not a new semantic.
     */
   def fusedQualityReport(content: Column, minWords: Int = 50): Seq[(String, Column)] =
-    // token count rides along as gopher's n_words (the imperative kernel) —
-    // adding the HOF tokenCount here would drop the whole projection out of
-    // whole-stage codegen (lambda HOFs are CodegenFallback)
+    // token count rides along as gopher's n_words
     Seq("pred_lang" -> LangId.predict(coalesce(content, lit("")))) ++
       gopherReport(content, minWords) ++ c4Report(content) ++ entropyReport(content)
 

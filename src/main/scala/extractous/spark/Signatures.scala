@@ -392,6 +392,70 @@ object SpanCoverage {
   }
 }
 
+/** The quality gate's counts over the UTF-8 bytes, one pass each, no
+  * decoding and no allocation. Bit-identical to the `functions` formulation
+  * they replaced (QualitySpec property-tests it, invalid UTF-8 included):
+  *   - tokens: `size(filter(split(trim(s), "\\s+"), _ =!= ""))` counts the
+  *     maximal runs outside Java's `\s` = `[ \t\n\x0B\f\r]`, all ASCII, so a
+  *     byte run is a token (no multi-byte or malformed sequence contains a
+  *     byte below 0x80, and each decodes to non-whitespace);
+  *   - punctuation: `length(regexp_replace(s, "[^.,!?;:]", ""))` counts the
+  *     six ASCII bytes;
+  *   - characters: `length(s)` is `numChars()`, stepped by lead byte here.
+  * The `StaticInvoke` returns null for a null text, as `size` and `length`
+  * do under ANSI mode (Spark 4's default).
+  */
+object TextGate {
+  @inline private def isSpace(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+  @inline private def isPunct(b: Byte): Boolean =
+    b == '.' || b == ',' || b == '!' || b == '?' || b == ';' || b == ':'
+
+  def tokenCount(s: UTF8String): Int = {
+    var n = 0
+    var inToken = false
+    var i = 0
+    while (i < s.numBytes) {
+      val space = isSpace(s.getByte(i))
+      if (!space && !inToken) n += 1
+      inToken = !space
+      i += 1
+    }
+    n
+  }
+
+  def punctCount(s: UTF8String): Int = {
+    var n = 0
+    var i = 0
+    while (i < s.numBytes) {
+      if (isPunct(s.getByte(i))) n += 1
+      i += 1
+    }
+    n
+  }
+
+  /** 1 when the text has 5..100000 tokens, at least 20 characters and at
+    * most one punctuation mark per 10 characters, else 0.
+    */
+  def isGood(s: UTF8String): Int = {
+    var tokens = 0
+    var punct = 0
+    var chars = 0
+    var nextChar = 0
+    var inToken = false
+    var i = 0
+    while (i < s.numBytes) {
+      val b = s.getByte(i)
+      if (i == nextChar) { chars += 1; nextChar = i + UTF8String.numBytesForFirstByte(b) }
+      val space = isSpace(b)
+      if (!space && !inToken) tokens += 1
+      inToken = !space
+      if (isPunct(b)) punct += 1
+      i += 1
+    }
+    if (tokens >= 5 && tokens <= 100000 && punct.toLong * 10 <= chars && chars >= 20) 1 else 0
+  }
+}
+
 object signatures {
   private val Longs = ArrayType(LongType, containsNull = false)
   private def fields(names: Seq[String], t: DataType): StructType =
@@ -414,6 +478,9 @@ object signatures {
     ColumnBridge.invoke(LangSample, "compute", StringType)(id, n)
   def bpe_count(c: Column): Column =
     ColumnBridge.invoke(extractous.pipeline.BpeModel, "countTokens", LongType)(c)
+  def token_count(c: Column): Column = ColumnBridge.invoke(TextGate, "tokenCount", IntegerType)(c)
+  def punct_count(c: Column): Column = ColumnBridge.invoke(TextGate, "punctCount", IntegerType)(c)
+  def is_good(c: Column): Column = ColumnBridge.invoke(TextGate, "isGood", IntegerType)(c)
   def ngram_keys(c: Column, n: Int): Column =
     ColumnBridge.invoke(NgramKeys, "compute", Longs)(c, n)
   def cut_spans(text: Column, ps: Column, k: Int): Column =

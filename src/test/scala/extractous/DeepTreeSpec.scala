@@ -141,6 +141,22 @@ class DeepTreeSpec extends AnyFunSuite {
     assert(large < 10, f"80k: $large%.2f s")
   }
 
+  test("nested multipart mail extracts in time linear in its depth") {
+    def secs(mail: Array[Byte]): Double = (1 to 3).map { _ =>
+      val t0 = System.nanoTime()
+      val r = Extract(mail, cfg)
+      assert(r.status == ExtractStatus.Ok && r.text.contains("mime marker"), r.error)
+      (System.nanoTime() - t0) / 1e9
+    }.min
+    val (shallow, deep) = (nestedMail(1000), nestedMail(8000))
+    secs(shallow) // warm-up
+    val (small, large) = (secs(shallow), secs(deep))
+    // 8x the depth and about 8x the bytes: linear time reads about 8x, a
+    // copy or a scan of each level's whole body 64x
+    assert(large / small < 12, f"1000 levels: $small%.4f s, 8000 levels: $large%.4f s")
+    assert(large < 10, f"8000 levels: $large%.2f s")
+  }
+
   test("a PDF page tree whose /Kids lists its own node still yields its page") {
     val pdf = PdfWriter.assembleObjects(Seq(
       "<< /Type /Catalog /Pages 2 0 R >>",

@@ -71,6 +71,9 @@ class KernelPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "shingles" -> signatures.shingles(text, 2),
       "gopher_report" -> signatures.gopher_report(text, 3),
       "c4_clean" -> signatures.c4_clean(text),
+      "token_count" -> signatures.token_count(text),
+      "punct_count" -> signatures.punct_count(text),
+      "is_good" -> signatures.is_good(text),
       "nearest_cells" -> vectors.nearest_cells(vec, Array(3, 1), Array(Array(1.0, 0.0), Array(0.0, 1.0)), 2),
       "hyperplane_bands" -> vectors.hyperplane_bands(vec, 3, 4, 2),
       "vec_dot" -> vectors.vec_dot(vec, vec),
@@ -110,6 +113,9 @@ class KernelPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "struct<n_words:bigint!,mean_word_len_x100:bigint!,symbol_ratio_x1000:bigint!,bullet_frac_x1000:bigint!,ellipsis_frac_x1000:bigint!,dup_line_frac_x1000:bigint!,dup_char_frac_x1000:bigint!,alpha_frac_x1000:bigint!,stop_hits:bigint!,gopher_pass:bigint!>!"),
     ("c4_clean", "struct<clean_text:string!,n_sentences:bigint!,kept_lines:bigint!,total_lines:bigint!>",
       "struct<clean_text:string!,n_sentences:bigint!,kept_lines:bigint!,total_lines:bigint!>!"),
+    ("token_count", "int", "int!"),
+    ("punct_count", "int", "int!"),
+    ("is_good", "int", "int!"),
     ("nearest_cells", "array<int!>", "array<int!>"),
     ("hyperplane_bands", "array<bigint!>", "array<bigint!>"),
     ("vec_dot", "double", "double"),

@@ -1,14 +1,21 @@
 package extractous
 
 import extractous.pipeline.{Decontam, TextStats}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test => Check}
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Decontamination (benchmark n-gram overlap) and the Gopher-style quality
   * report: closed-form hand cases + plan-shape assertions (the benchmark side
   * must broadcast; both ops must stay narrow / codegen-friendly).
   */
-class QualitySpec extends AnyFunSuite {
+class QualitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
   test("decontam flags exact and partial benchmark overlap, passes clean docs") {
@@ -43,6 +50,84 @@ class QualitySpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"bench side must broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin"), s"gram join must not sort-merge:\n$plan")
+  }
+
+  test("decontam reads docs once, broadcasts the gram set, and reports each distinct id once") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("decontam-docs").toString
+    try {
+      Seq[(Long, String)](
+        (1L, "alpha beta gamma delta epsilon"), // full copy
+        (2L, null),                             // null text
+        (3L, "two words"),                      // fewer than n tokens: zero grams
+        (4L, "alpha beta gamma unrelated"),     // one id on two rows
+        (4L, "nothing shared here at all")
+      ).toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+      val docs = spark.read.parquet(dir)
+      val bench = Seq("alpha beta gamma delta epsilon").toDF("text")
+      val out = Decontam.flag(docs, bench, "text", "doc_id", n = 3, pctThreshold = 30)
+      val rows = out.orderBy("doc_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(rows == Seq((1L, 3L, 3L, 1L), (2L, 0L, 0L, 0L), (3L, 0L, 0L, 0L), (4L, 5L, 1L, 0L)))
+      val plan = out.queryExecution.executedPlan
+      val docScans = collectWithSubqueries(plan) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(dir)) => s
+      }
+      assert(docScans.size == 1, s"docs scanned ${docScans.size} times:\n$plan")
+      assert(plan.toString.contains("BroadcastHashJoin"), s"bench side must broadcast:\n$plan")
+      assert(!plan.toString.contains("SortMergeJoin"), s"no sort-merge join:\n$plan")
+    } finally {
+      val root = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+    }
+  }
+
+  test("quality gate kernels equal their functions formulation on any text, invalid UTF-8 and null included") {
+    // the pieces that decide a token, a character or a punctuation count:
+    // Java's \s whitespace, whitespace it does not cover (NBSP, em space,
+    // NEL, U+001C), CJK, a supplementary code point, the six punctuation
+    // marks and their look-alikes
+    val pieces = Gen.oneOf("a", "word", "the", " ", "  ", "\t", "\n", "\r\n", "\u000b", "\f", "\u00a0", "\u2003",
+      "\u0085", "\u001c", "北京", "一个", "\ud83d\ude00", "é", ".", ",", "!", "?", ";", ":", "...", "-", "'", "。")
+    val valid = Gen.listOf(pieces).map(_.mkString.getBytes(UTF_8))
+    // raw bytes, biased to whitespace, punctuation and UTF-8 lead bytes
+    val raw = Gen.listOf(Gen.frequency(
+      4 -> Gen.choose(Byte.MinValue, Byte.MaxValue),
+      3 -> Gen.oneOf(Seq(0x20, 0x09, 0x0b, 0x0c, 0x2e, 0x61, 0xc3, 0xe4, 0xf0, 0x80).map(_.toByte))))
+      .map(_.toArray)
+    val text: Gen[Array[Byte]] = Gen.frequency(
+      1 -> Gen.const(null), 1 -> Gen.const(Array.emptyByteArray), 8 -> valid, 6 -> raw)
+    // the token bounds of the gate, exactly
+    val edges: Seq[Array[Byte]] = Seq(
+      "a " * 4 + "abcdefghijklmnopqrst", "a " * 5 + "abcdefghij", "a " * 100000, "a " * 100001,
+      "a b c d e f g h i j.", "a b c d e f g h i .,").map(_.getBytes(UTF_8))
+    val schema = StructType(Seq(StructField("b", BinaryType)))
+    val gates = Seq(
+      ("tokenCount", TextStats.tokenCount _, TextStats.tokenCountHof _),
+      ("punctCount", TextStats.punctCount _, TextStats.punctCountHof _),
+      ("isGood", TextStats.isGood _, TextStats.isGoodHof _))
+    def mismatches(rows: Seq[Array[Byte]]): Seq[String] = {
+      val t = spark.createDataFrame(spark.sparkContext.parallelize(rows.map(Row(_)), 2), schema)
+        .select(col("b").cast("string").as("t"))
+      gates.flatMap { case (name, kernel, hof) =>
+        val both = t.select(col("t"), kernel(col("t")).as("k"), hof(col("t")).as("h"))
+        val types = both.schema.fields.drop(1).map(f => (f.dataType, f.nullable))
+        (if (types(0) != types(1)) Seq(s"$name: type ${types(0)} vs ${types(1)}") else Nil) ++
+          both.filter(!(col("k") <=> col("h"))).take(3).map(r => s"$name: ${r.get(1)} vs ${r.get(2)} on ${r.get(0)}")
+      }
+    }
+    assert(mismatches(edges).isEmpty, mismatches(edges).mkString("\n"))
+    // each case is a Spark query over 200 texts, so no shrinking: a failure
+    // reports the first three mismatching rows of each gate
+    val prop = Prop.forAllNoShrink(Gen.listOfN(200, text)) { rows =>
+      val bad = mismatches(rows)
+      Prop(bad.isEmpty) :| bad.mkString("\n")
+    }
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(6).withWorkers(1), prop)
+    assert(result.passed, result.status match {
+      case Check.Failed(_, labels) => labels.mkString("\n")
+      case other => other.toString
+    })
   }
 
   test("url blocklist: suffix-correct matching, narrow zero-join plan") {

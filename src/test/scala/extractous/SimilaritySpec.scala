@@ -1,14 +1,18 @@
 package extractous
 
 import extractous.pipeline.Similarity
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-3 similarity-family contracts: banded-LSH recall on pairs whose
   * hyperplane signs MAY flip (not just scaled copies), IVF plan shape (no
   * window shuffles), and AQE skew-join evidence for the band-bucket joins.
   */
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
   private lazy val embs = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -100,6 +104,51 @@ class SimilaritySpec extends AnyFunSuite {
     assert(shuffles <= 1, s"IVF plan has $shuffles shuffles (expected ≤1: the top-k agg):\n$plan")
     assert(plan.contains("topk_by_score"), s"bounded top-k aggregate missing:\n$plan")
     assert(plan.contains("VectorMath.nearestCells("), s"map-side argmax assignment missing:\n$plan")
+  }
+
+  test("centroid table: one shuffle and no sort, bit-identical to the collect_list formulation") {
+    // the formulation the table replaced: the per-cell means gathered by a
+    // second aggregate into a sorted array, then a range-sorted collect
+    val old = embs
+      .select(col("label").as("cell"), posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "v")))
+      .groupBy(col("cell"), col("pos")).agg(avg(col("v")).as("m"))
+      .groupBy(col("cell"))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))), s => s.getField("m")).as("centroid"))
+      .orderBy(col("cell")).collect()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (cells, cents) =
+      try {
+        val table = Similarity.centroidTable(embs, "label", "embedding")
+        // listeners hear of a finished query on the listener bus
+        val deadline = System.nanoTime() + 10000000000L
+        while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+        table
+      } finally spark.listenerManager.unregister(listener)
+    assert(cells.toSeq == old.map(_.getInt(0)).toSeq)
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    assert(cents.map(c => bits(c.toSeq)).toSeq == old.map(r => bits(r.getSeq[Double](1))).toSeq)
+    assert(plans.size == 1, s"${plans.size} queries build the table")
+    val plan = plans.peek()
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, s"one shuffle:\n$plan")
+    assert(collect(plan) { case s: SortExec => s }.isEmpty, s"no sort:\n$plan")
+  }
+
+  test("ivf knn and semdedup rows on the fixture are the ones the collect_list centroid table gave") {
+    // digests of the sorted rows, taken with the collect_list table; at 0.4
+    // semdedup removes 21 of the 500 rows, so the keep-priority order (the
+    // similarity to each centroid) decides rows
+    def digest(df: org.apache.spark.sql.DataFrame): String = {
+      val rows = df.collect().map(_.toString).sorted
+      s"${rows.length}:" + java.security.MessageDigest.getInstance("MD5")
+        .digest(rows.mkString("\n").getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    }
+    assert(digest(Similarity.ivfKnn(embs, embs.filter(col("vec_id") < 20), k = 5, nprobe = 3)) == "100:c1de4af032f92427fb0bcb2dd513a431")
+    assert(digest(Similarity.semDedup(embs, threshold = 0.4)) == "500:d052e01b645638aeabb9dbb598b234fb")
   }
 
   test("brute knn plan: bounded top-k aggregate, no Window") {

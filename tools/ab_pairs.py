@@ -15,10 +15,12 @@ engine into its own `.bench_build/`; the runner refuses a REV whose
 benchmark code.
 
 For every end-to-end metric in BENCHMARK.json it prints each side's median
-and quartiles, the change's wins (ties count for neither side) and whether a
+and quartiles, the change's wins (ties count for neither side), whether a
 gain claim holds: at least nine tenths of the pairs run won (a failed pair is
 no win), and the medians apart by more than the base's quartile distance, in
-the better direction.
+the better direction; and the change's median shift from the base's median,
+as a signed fraction, marked `within` or `beyond` the metric's `bound` (the
+largest shift in the worse direction the benchmark allows).
 
 With `--trace-keys k1,k2,...` every run is traced (`perfbench/run.py --trace
 1`) and the same table is printed for those per-layer keys instead, each
@@ -92,8 +94,10 @@ def main():
         if unknown:
             sys.exit(f"not a per_layer key in BENCHMARK.json: {', '.join(unknown)}")
         metrics = [(k, better[k]) for k in keys]
+        bounds = {}
     else:
         metrics = [(m["name"], m["better"]) for m in spec["end_to_end"]]
+        bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     # SIGTERM unwinds like Ctrl-C, so the finally below removes the export
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     tmp = Path(tempfile.mkdtemp(prefix="ab-base-"))
@@ -131,7 +135,8 @@ def main():
     if not ok:
         sys.exit(1)
     width = max(20, *(len(n) for n, _ in metrics))
-    print(f"{'metric':{width}s} {'base median [q1, q3]':>30s} {'change median [q1, q3]':>30s} {'wins':>6s}  claim")
+    print(f"{'metric':{width}s} {'base median [q1, q3]':>30s} {'change median [q1, q3]':>30s} {'wins':>6s}  claim"
+          f"  {'shift':>7s}  bound")
     for name, better in metrics:
         pairs = [(b["metrics"][name]["value"], c["metrics"][name]["value"]) for b, c in ok]
         bs, cs = [b for b, _ in pairs], [c for _, c in pairs]
@@ -140,8 +145,11 @@ def main():
         bm, cm = statistics.median(bs), statistics.median(cs)
         bq, cq = quartiles(bs), quartiles(cs)
         holds = wins >= math.ceil(0.9 * a.pairs) and sign * (cm - bm) > bq[1] - bq[0]
+        shift = (cm - bm) / bm if bm else 0.0
+        bound = bounds.get(name)
+        verdict = "-" if bound is None else f"{'beyond' if -sign * shift > bound else 'within'} {bound:g}"
         print(f"{name:{width}s} {bm:12.4g} [{bq[0]:.4g}, {bq[1]:.4g}] {cm:12.4g} [{cq[0]:.4g}, {cq[1]:.4g}]"
-              f" {wins:3d}/{len(ok)}  {'holds' if holds else 'no'}")
+              f" {wins:3d}/{len(ok)}  {'holds' if holds else 'no':5s}  {shift:+7.1%}  {verdict}")
 
 
 if __name__ == "__main__":
