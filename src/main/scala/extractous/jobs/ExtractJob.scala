@@ -25,9 +25,9 @@ import scala.concurrent.duration._
   * Scale design (north rule):
   *   - input is a `warc_day`-partitioned table; every pass carries a day
   *     predicate, so Catalyst partition pruning keeps unread days off disk;
-  *   - the hot path is scan → project(extract_doc) → write: NO shuffle. Skew
-  *     and memory budgeting are handled at the file level
-  *     (`spark.sql.files.maxPartitionBytes` caps bytes/task for the
+  *   - the hot path is scan → project(extract_doc) in one codegen stage →
+  *     write: NO shuffle. Skew and memory budgeting are handled at the file
+  *     level (`spark.sql.files.maxPartitionBytes` caps bytes/task for the
   *     binary-heavy html column) — not by repartitioning extracted rows;
   *   - optional `salt`: pre-extraction repartition by hash(url), for runs that
   *     need output files balanced despite host-skewed inputs (host-0 carries

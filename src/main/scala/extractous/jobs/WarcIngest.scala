@@ -42,7 +42,7 @@ object WarcIngest {
   /** Ingest observability: record counts by type — `response`/`conversion`/
     * `resource` are pages; `file_error`/`response_error` are ACCOUNTED
     * losses (torn crawl files, malformed HTTP messages) that
-    * [[WarcRecordsExpr]] surfaces as rows instead of dropping silently.
+    * [[extractous.spark.WarcRecords]] surfaces as rows instead of dropping silently.
     * NOTE: this is its own pass over the crawl files — [[run]] decodes each
     * file exactly once for the table write; call this separately (or on a
     * sample) when the accounting is worth a second decode.

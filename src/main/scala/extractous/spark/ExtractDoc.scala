@@ -6,23 +6,24 @@ import extractous.model.{ExtractResult, ExtractedDoc, WebPage}
 import extractous.sniff.MimeSniffer
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.xbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The extraction surface exposed to Spark SQL / DataFrames.
+/** The extraction kernels behind the Spark SQL / DataFrame surface.
   *
-  * `extract_doc(html)` is a custom Catalyst scalar expression — not a Scala UDF
-  * — so Catalyst sees a normal null-safe, deterministic, prunable expression
-  * (SURVEY.md §4.4): column pruning keeps the scan at `url, html`, the hot path
-  * stays one narrow `ProjectExec`, and a poison row maps to a status column
-  * instead of a task failure. Per-document parsing is row-at-a-time by nature,
-  * so codegen falls back to `eval` (CodegenFallback) while the surrounding
-  * project/filter stages still fuse into whole-stage codegen.
+  * `extract_doc`, `extract_stream`, `sniff_mime` and `warc_records` are
+  * `StaticInvoke` calls of the methods below (the same kernel pattern as the
+  * pipeline kernels), each under its own SQL function name through
+  * [[ColumnBridge.function]]. Catalyst sees a null-safe, deterministic,
+  * prunable expression over a BINARY column (SURVEY.md §4.4): column pruning
+  * keeps the scan at `url, html`, the hot path is one narrow `ProjectExec`
+  * fused into the scan's whole-stage codegen span, and a poison row maps to
+  * a status column instead of a task failure. The configuration and chunk
+  * size are plan constants. A null payload reaches the kernel (the calls do
+  * not propagate nulls): it is a valid, empty document.
   */
 object ExtractDocExpr {
   val metadataType: DataType = MapType(StringType, ArrayType(StringType, containsNull = false), valueContainsNull = false)
@@ -34,6 +35,10 @@ object ExtractDocExpr {
     StructField("error", StringType, nullable = false),
     StructField("content_type", StringType, nullable = false),
     StructField("extractor_version", StringType, nullable = false)))
+  val streamSchema: StructType = StructType(Seq(
+    StructField("text", StringType, nullable = false),
+    StructField("n_chunks", IntegerType, nullable = false),
+    StructField("n_bytes", IntegerType, nullable = false)))
 
   def toInternalRow(r: ExtractResult): InternalRow = {
     val keys = r.metadata.keys.toArray.sorted
@@ -50,61 +55,27 @@ object ExtractDocExpr {
       UTF8String.fromString(r.contentType),
       UTF8String.fromString(ExtractResult.Version)))
   }
-}
 
-final case class ExtractDocExpr(child: Expression, cfg: ExtractorConfig)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ExtractDocExpr.schema
-  override def nullable: Boolean = false
-  override def prettyName: String = "extract_doc"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == BinaryType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"extract_doc expects BINARY input, got ${child.dataType.sql}")
-
-  /** Null payload is a valid document (empty fast path), so eval is overridden
-    * rather than nullSafeEval (/root/reference/extractor.go:457-459).
+  /** `extract_doc`: one document's [[schema]] row. A null payload is the
+    * empty document, status 0 (reference extractor.go:457-459).
     */
-  override def eval(input: InternalRow): Any = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    ExtractDocExpr.toInternalRow(Extract(bytes, cfg))
-  }
-  override protected def withNewChildInternal(newChild: Expression): ExtractDocExpr = copy(child = newChild)
-}
+  def extract(bytes: Array[Byte], cfg: ExtractorConfig): InternalRow = toInternalRow(Extract(bytes, cfg))
 
-/** Cheap magic-byte MIME sniff as its own expression — the dispatch predicate
-  * exposed standalone so corpus-level routing (e.g. "only OCR the image rows")
-  * can be expressed as a Catalyst filter that prunes work before the expensive
-  * parse (SURVEY.md §4, OCR-Auto analogue).
-  */
-final case class SniffMimeExpr(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def prettyName: String = "sniff_mime"
-  override def eval(input: InternalRow): Any = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
-    UTF8String.fromString(MimeSniffer.sniff(bytes))
-  }
-  override protected def withNewChildInternal(newChild: Expression): SniffMimeExpr = copy(child = newChild)
-}
+  /** `sniff_mime`: the cheap magic-byte MIME sniff — the dispatch predicate
+    * exposed standalone so corpus-level routing (e.g. "only OCR the image
+    * rows") can be a Catalyst filter that prunes work before the expensive
+    * parse (SURVEY.md §4, OCR-Auto analogue).
+    */
+  def sniff(bytes: Array[Byte]): UTF8String = UTF8String.fromString(MimeSniffer.sniff(bytes))
 
-/** Extraction through the chunked-stream consumer (reference stream path:
-  * ExtractBytesToStream + Read loop, #3/#32/#33 in SURVEY §2.1): reassembles
-  * the text from bounded chunks and reports the chunk count — the EOF/partial-
-  * read contract is exercised per row, and the result must equal the string
-  * path byte-for-byte.
-  */
-final case class ExtractStreamExpr(child: Expression, cfg: ExtractorConfig, chunkSize: Int)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StructType(Seq(
-    StructField("text", StringType, nullable = false),
-    StructField("n_chunks", IntegerType, nullable = false),
-    StructField("n_bytes", IntegerType, nullable = false)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "extract_stream"
-
-  override def eval(input: InternalRow): Any = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
+  /** `extract_stream`: extraction through the chunked-stream consumer
+    * (reference stream path: ExtractBytesToStream + Read loop, #3/#32/#33 in
+    * SURVEY §2.1) — the text reassembled from bounded chunks, with the chunk
+    * count and byte count ([[streamSchema]]). The EOF/partial-read contract
+    * is exercised per row, and the text must equal the string path
+    * byte-for-byte.
+    */
+  def stream(bytes: Array[Byte], cfg: ExtractorConfig, chunkSize: Int): InternalRow = {
     val r = Extract(bytes, cfg)
     val out = new java.io.ByteArrayOutputStream()
     var n = 0
@@ -116,17 +87,17 @@ final case class ExtractStreamExpr(child: Expression, cfg: ExtractorConfig, chun
     new GenericInternalRow(Array[Any](
       UTF8String.fromBytes(out.toByteArray), n, out.size()))
   }
-  override protected def withNewChildInternal(newChild: Expression): ExtractStreamExpr = copy(child = newChild)
 }
 
-/** WARC ingest surface: one Common-Crawl `.warc`/`.warc.gz` file → the array
-  * of its records as `(url, warc_date, rec_type, content_type, payload)`
-  * structs, HTTP responses already decoded to their entity bytes (chunked
-  * framing removed, gzip Content-Encoding inflated). `explode(warc_records(
-  * content))` over a `binaryFile` scan is the ingest plan that POPULATES the
-  * corpus table the rest of the engine reads (north rule: "Iceberg table of
-  * Common-Crawl-style web pages") — a narrow per-file transform: no shuffle,
-  * parallel over files, each file decoded once on the executor that read it.
+/** The `warc_records` kernel, the WARC ingest surface: one Common-Crawl
+  * `.warc`/`.warc.gz` file → the array of its records as `(url, warc_date,
+  * rec_type, content_type, payload)` structs, HTTP responses already decoded
+  * to their entity bytes (chunked framing removed, gzip Content-Encoding
+  * inflated). `explode(warc_records(content))` over a `binaryFile` scan is
+  * the ingest plan that POPULATES the corpus table the rest of the engine
+  * reads (north rule: "Iceberg table of Common-Crawl-style web pages") — a
+  * narrow per-file transform: no shuffle, parallel over files, each file
+  * decoded once on the executor that read it.
   *
   * Error posture matches ingest reality — losses are ACCOUNTED, never
   * silent, and never a task failure: structural corruption truncates the
@@ -137,14 +108,14 @@ final case class ExtractStreamExpr(child: Expression, cfg: ExtractorConfig, chun
   * ingest observability is one `groupBy(rec_type).count()` away and the
   * page path is a simple `rec_type = 'response'` filter.
   */
-final case class WarcRecordsExpr(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(WarcRecordsExpr.recordType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "warc_records"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == BinaryType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"warc_records expects BINARY input, got ${child.dataType.sql}")
+object WarcRecords {
+  val recordType: StructType = StructType(Seq(
+    StructField("url", StringType, nullable = false),
+    StructField("warc_date", StringType, nullable = false),
+    StructField("rec_type", StringType, nullable = false),
+    StructField("content_type", StringType, nullable = false),
+    StructField("payload", BinaryType, nullable = false)))
+  val dataType: DataType = ArrayType(recordType, containsNull = false)
 
   private def row(url: String, date: String, recType: String, ctype: String,
       payload: Array[Byte]): GenericInternalRow =
@@ -158,8 +129,7 @@ final case class WarcRecordsExpr(child: Expression) extends UnaryExpression with
   private def trimMsg(e: Exception): String =
     trimMsg(if (e.getMessage == null) e.toString else e.getMessage)
 
-  override def eval(input: InternalRow): Any = {
-    val bytes = child.eval(input).asInstanceOf[Array[Byte]]
+  def records(bytes: Array[Byte]): ArrayData = {
     // SQL NULL carried no file at all — not a loss, no phantom accounting
     if (bytes == null) return new GenericArrayData(Array.empty[Any])
     if (bytes.isEmpty)
@@ -196,26 +166,24 @@ final case class WarcRecordsExpr(child: Expression) extends UnaryExpression with
     } ++ fileErr.map(msg => row("", "", "file_error", trimMsg(msg), Array.emptyByteArray))
     new GenericArrayData(rows.toArray[Any])
   }
-  override protected def withNewChildInternal(newChild: Expression): WarcRecordsExpr = copy(child = newChild)
-}
-
-object WarcRecordsExpr {
-  val recordType: StructType = StructType(Seq(
-    StructField("url", StringType, nullable = false),
-    StructField("warc_date", StringType, nullable = false),
-    StructField("rec_type", StringType, nullable = false),
-    StructField("content_type", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = false)))
 }
 
 /** Column-level API + typed Dataset API + SQL registration. */
 object functions {
+  /** A payload kernel as the SQL function `name` over one BINARY column; a
+    * null payload reaches the kernel.
+    */
+  private def payload(name: String, kernel: AnyRef, method: String, dataType: DataType)(args: Any*): Column =
+    ColumnBridge.function(name, Seq(BinaryType), kernel, method, dataType, propagateNull = false)(args: _*)
+
   def extract_doc(c: Column, cfg: ExtractorConfig = ExtractorConfig.default): Column =
-    ColumnBridge.column(ExtractDocExpr(ColumnBridge.expression(c), cfg))
+    payload("extract_doc", ExtractDocExpr, "extract", ExtractDocExpr.schema)(c, cfg)
 
   def extract_stream(c: Column, cfg: ExtractorConfig = ExtractorConfig.default,
-      chunkSize: Int = 65536): Column =
-    ColumnBridge.column(ExtractStreamExpr(ColumnBridge.expression(c), cfg, chunkSize))
+      chunkSize: Int = 65536): Column = {
+    require(chunkSize > 0, s"extract_stream chunkSize must be positive, got $chunkSize")
+    payload("extract_stream", ExtractDocExpr, "stream", ExtractDocExpr.streamSchema)(c, cfg, chunkSize)
+  }
 
   /** Status code → human message (reference errors.rs:61-80 / SURVEY §2.1 #42)
     * as a pure codegen'd CASE expression.
@@ -227,21 +195,17 @@ object functions {
     }
   }
 
-  def sniff_mime(c: Column): Column =
-    ColumnBridge.column(SniffMimeExpr(ColumnBridge.expression(c)))
+  def sniff_mime(c: Column): Column = payload("sniff_mime", ExtractDocExpr, "sniff", StringType)(c)
 
-  def warc_records(c: Column): Column =
-    ColumnBridge.column(WarcRecordsExpr(ColumnBridge.expression(c)))
+  def warc_records(c: Column): Column = payload("warc_records", WarcRecords, "records", WarcRecords.dataType)(c)
 
-  /** Register `extract_doc` / `sniff_mime` for SQL use with a fixed config. */
-  def register(spark: SparkSession, cfg: ExtractorConfig = ExtractorConfig.default): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "extract_doc", exprs => ExtractDocExpr(exprs.head, cfg), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sniff_mime", exprs => SniffMimeExpr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "warc_records", exprs => WarcRecordsExpr(exprs.head), "scala_udf")
-  }
+  /** Register `extract_doc` / `sniff_mime` / `warc_records` for SQL use with a fixed config. */
+  def register(spark: SparkSession, cfg: ExtractorConfig = ExtractorConfig.default): Unit =
+    Seq[(String, Column => Column)]("extract_doc" -> (extract_doc(_, cfg)), "sniff_mime" -> sniff_mime,
+        "warc_records" -> warc_records).foreach { case (name, f) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, exprs => ColumnBridge.expression(f(ColumnBridge.column(exprs.head))), "scala_udf")
+    }
 
   /** Typed flagship map stage: `Dataset[WebPage] → Dataset[ExtractedDoc]` — a
     * narrow per-row transform; no shuffle on the hot path (north rule).

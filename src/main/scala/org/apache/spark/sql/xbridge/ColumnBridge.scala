@@ -1,10 +1,10 @@
 package org.apache.spark.sql.xbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{DataType, ObjectType}
+import org.apache.spark.sql.types.{AbstractDataType, DataType, ObjectType}
 
 /** Spark 4 split the public `Column` API from Catalyst; the supported bridge
   * (`org.apache.spark.sql.classic.ExpressionUtils`) is `private[sql]`, so this
@@ -38,4 +38,33 @@ object ColumnBridge {
       case v @ (_: Int | _: Long | _: Double | _: Boolean) => Literal(v)
       case o: AnyRef => Literal(o, ObjectType(o.getClass))
     }, propagateNull = propagateNull, returnNullable = returnNullable))
+
+  /** [[invoke]] as the SQL function `name` (a [[KernelFunction]]): the
+    * column arguments, typed `inputTypes`, lead the kernel's parameters and
+    * the constants follow.
+    */
+  def function(name: String, inputTypes: Seq[AbstractDataType], kernel: AnyRef, method: String,
+      dataType: DataType, propagateNull: Boolean = true)(args: Any*): Column = {
+    val (columns, constants) = args.partition(_.isInstanceOf[Column])
+    val call = expression(invoke(kernel, method, dataType, propagateNull)(constants: _*)).asInstanceOf[StaticInvoke]
+    column(KernelFunction(name, columns.map { case c: Column => expression(c) }, inputTypes, call))
+  }
+}
+
+/** A kernel call under its own SQL function name — Spark's pattern for a
+  * built-in function implemented by a static method (`luhn_check`,
+  * `url_decode`). Analysis sees `name(children)`: the children are the
+  * column arguments, checked against `inputTypes` without implicit casts.
+  * The optimizer's first batch swaps in `replacement` — `call` with the
+  * children prepended to its constant arguments — so optimized and physical
+  * plans hold the bare `StaticInvoke`, which whole-stage codegen fuses.
+  */
+case class KernelFunction(name: String, children: Seq[Expression],
+    inputTypes: Seq[AbstractDataType], call: StaticInvoke)
+    extends RuntimeReplaceable with ExpectsInputTypes {
+  override lazy val replacement: Expression = call.copy(arguments = children ++ call.arguments)
+  override def prettyName: String = name
+  override def toString: String = s"$name(${children.mkString(", ")})"
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): KernelFunction =
+    copy(children = newChildren)
 }

@@ -1,22 +1,28 @@
 package extractous
 
+import extractous.gen.CorpusGen
 import extractous.pipeline.{BloomDedup, Cms, Dsir, LmQuality, Similarity, TextStats, UrlFilter}
 import extractous.spark._
+import extractous.spark.{functions => xf}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** Every pipeline row kernel is one `StaticInvoke` of its kernel object:
+/** Every pipeline row kernel and extraction function is one `StaticInvoke`
+  * of its kernel object:
   * no kernel falls back to interpreted `eval`, every kernel call sits inside
   * a whole-stage codegen span, interpreted plans return the same rows, and
-  * each kernel column and pipeline op keeps the output type and nullability
-  * it had as a hand-written Catalyst expression (pinned below).
+  * each kernel column, pipeline op and extraction frame keeps the output
+  * type and nullability it had as a hand-written Catalyst expression
+  * (pinned below).
   */
 class KernelPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
@@ -186,6 +192,38 @@ class KernelPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     "dsir.scored" -> "doc_id:bigint!,score:bigint!",
     "robotsBlocked" -> "id:bigint!,url:string,blocked:bigint")
 
+  /** One payload per extraction route — HTML, PDF, DOCX, a gzip-wrapped page,
+    * a `.warc.gz` file — and a null payload, as a parquet table (url, html).
+    */
+  private lazy val payloadPath: String = {
+    import spark.implicits._
+    val text = "the cat sat on the mat and the dog sat on the log"
+    val p = Files.createTempDirectory("payloads").toString
+    Seq("html" -> CorpusGen.payload(1, text, "en"), "pdf" -> CorpusGen.payload(70, text, "en"),
+      "docx" -> CorpusGen.payload(82, text, "en"), "gzip" -> CorpusGen.gzMember(CorpusGen.payload(2, text, "en")),
+      "warc" -> CorpusGen.warcPayload(100, text, "en"), "none" -> null)
+      .toDF("url", "html").write.mode("overwrite").parquet(p)
+    p
+  }
+
+  /** The extraction functions over the payloads. */
+  private def extraction: Seq[(String, DataFrame)] = {
+    val (payloads, html) = (spark.read.parquet(payloadPath), col("html"))
+    Seq(
+      "extractFrame" -> xf.extractFrame(payloads, CorpusGen.flagshipConfig),
+      "sniff_mime" -> payloads.select(col("url"), xf.sniff_mime(html).as("mime")),
+      "extract_stream" -> payloads.select(col("url"), xf.extract_stream(html, CorpusGen.flagshipConfig, 64).as("s")),
+      "warc_records" -> payloads.select(col("url"), explode(xf.warc_records(html)).as("rec")))
+  }
+
+  /** Output columns of every extraction frame. */
+  private val extractionShapes: Seq[(String, String)] = Seq(
+    "extractFrame" -> ("url:string,text:string!,xml:string!,metadata:map<string,array<string>>!,status:int!," +
+      "error:string!,content_type:string!,extractor_version:string!"),
+    "sniff_mime" -> "url:string,mime:string!",
+    "extract_stream" -> "url:string,s:struct<text:string!,n_chunks:int!,n_bytes:int!>!",
+    "warc_records" -> "url:string,rec:struct<url:string!,warc_date:string!,rec_type:string!,content_type:string!,payload:binary!>!")
+
   /** Every node of the executed plan, through adaptive stages and subqueries. */
   private def planNodes(df: DataFrame): Seq[SparkPlan] = {
     df.collect()
@@ -205,8 +243,10 @@ class KernelPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("pipeline ops keep their output columns; no row kernel falls back to interpreted eval, every call is fused") {
     val kernelFrame = input(nullable = true, texts).select(kernels.map { case (n, c) => c.as(n) }: _*)
-    assert(ops.map { case (n, df) => n -> df.schema.fields.map(named).mkString(",") } == opShapes)
-    val failures = (("kernel columns" -> kernelFrame) +: ops).flatMap { case (n, df) =>
+    def shapes(frames: Seq[(String, DataFrame)]) = frames.map { case (n, df) => n -> df.schema.fields.map(named).mkString(",") }
+    assert(shapes(ops) == opShapes)
+    assert(shapes(extraction) == extractionShapes)
+    val failures = ((("kernel columns" -> kernelFrame) +: ops) ++ extraction).flatMap { case (n, df) =>
       val nodes = planNodes(df)
       // aggregate functions (the top-k and Misra–Gries buffers) are evaluated
       // by the aggregate operator, never inside a projection
@@ -237,5 +277,65 @@ class KernelPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val generated = run()
     assert(generated == run("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
     assert(generated.last == Seq.fill(kernels.size - 1)("null").mkString("[", ",", ",ArraySeq()]"))
+  }
+
+  /** A collected value as text, binary as its length and content hash. */
+  private def render(v: Any): String = v match {
+    case b: Array[Byte] => s"bytes(${b.length},${java.util.Arrays.hashCode(b)})"
+    case r: Row => r.toSeq.map(render).mkString("[", ",", "]")
+    case m: scala.collection.Map[_, _] => m.toSeq.map { case (k, x) => s"$k->${render(x)}" }.sorted.mkString("{", ",", "}")
+    case s: scala.collection.Seq[_] => s.map(render).mkString("(", ",", ")")
+    case o => String.valueOf(o)
+  }
+
+  test("interpreted extraction plans return the rows generated code returns; a null payload is the empty document") {
+    def run(conf: (String, String)*): Seq[Seq[String]] = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try extraction.map(_._2.collect().map(render).toSeq.sorted)
+      finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val generated = run()
+    assert(generated == run("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    val rows = extraction.map(_._1).zip(generated).toMap
+    def none(n: String) = rows(n).filter(_.startsWith("[none,"))
+    assert(none("extractFrame") == Seq(
+      "[none,,,{Content-Type->(application/octet-stream)},0,,application/octet-stream,extractous-spark/0.1.0]"))
+    assert(none("sniff_mime") == Seq("[none,application/octet-stream]"))
+    assert(none("extract_stream") == Seq("[none,[,0,0]]"))
+    assert(none("warc_records").isEmpty) // a null file has no records and no loss to account
+    // every payload extracts with status 0 and sniffs as its own type
+    assert(extraction.head._2.select("status").collect().map(_.getInt(0)).toSet == Set(0))
+    assert(rows("sniff_mime") == Seq("[docx,application/vnd.openxmlformats-officedocument.wordprocessingml.document]",
+      "[gzip,application/gzip]", "[html,text/html]", "[none,application/octet-stream]", "[pdf,application/pdf]",
+      "[warc,application/gzip]"))
+    assert(rows("warc_records").map(_.split(",").take(4).mkString(",")) == Seq(
+      "[docx,[,,file_error", "[gzip,[,,file_error", "[html,[,,file_error", "[pdf,[,,file_error",
+      "[warc,[https://host-2.example/doc/100,2024-01-01T00:00:00Z,response",
+      "[warc,[https://host-2.example/doc/100note,2024-01-01T00:00:00Z,response",
+      "[warc,[https://host-2.example/doc/100text,2024-01-01T00:00:00Z,conversion"))
+  }
+
+  test("extractFrame is one codegen span from scan to project, with one extract_doc kernel call") {
+    val nodes = planNodes(extraction.head._2)
+    val spans = nodes.collect { case w: WholeStageCodegenExec => w }
+    assert(spans.size == 1, nodes.mkString("\n"))
+    val outside = nodes.filterNot(p => p.isInstanceOf[WholeStageCodegenExec] || p.isInstanceOf[InputAdapter] ||
+      p.isInstanceOf[FileSourceScanExec] || fused(spans.head).exists(_ eq p))
+    assert(outside.isEmpty, outside.mkString("\n"))
+    // the kernel result is computed once, not copied into each of the seven field reads
+    assert(nodes.flatMap(kernelCalls).map(s => s"${s.staticObject.getSimpleName}.${s.functionName}") ==
+      Seq("ExtractDocExpr$.extract"))
+  }
+
+  test("no class under extractous falls back to interpreted eval, aggregate functions aside") {
+    val root = Paths.get(ExtractDocExpr.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val classes = Files.walk(root.resolve("extractous")).iterator.asScala.map(root.relativize(_).toString)
+      .filter(_.endsWith(".class")).map(n => Class.forName(
+        n.stripSuffix(".class").replace(java.io.File.separatorChar, '.'), false, getClass.getClassLoader)).toSeq
+    val fallbacks = classes.filter(classOf[CodegenFallback].isAssignableFrom)
+    // the typed imperative aggregates (top-k, Misra-Gries) are found, so the walk sees the classes
+    assert(fallbacks.nonEmpty)
+    assert(fallbacks.filterNot(classOf[AggregateFunction].isAssignableFrom).isEmpty,
+      fallbacks.map(_.getName).mkString(", "))
   }
 }

@@ -58,6 +58,52 @@ class SparkPlanSpec extends AnyFunSuite {
       "SELECT url, extract_doc(html).text AS t, sniff_mime(html) AS m FROM corpus_v WHERE sniff_mime(html) = 'text/html'")
       .count()
     assert(n > 0)
+    // un-aliased columns are named after the function and its column argument
+    val corpus = spark.read.parquet(corpusPath)
+    assert(corpus.select(xf.extract_doc(col("html"))).columns.toSeq == Seq("extract_doc(html)"))
+    assert(corpus.select(xf.sniff_mime(col("html"))).columns.toSeq == Seq("sniff_mime(html)"))
+    assert(spark.sql("SELECT extract_doc(html), sniff_mime(html), warc_records(html) FROM corpus_v").columns.toSeq ==
+      Seq("extract_doc(html)", "sniff_mime(html)", "warc_records(html)"))
+  }
+
+  test("extraction functions take BINARY only: a STRING column fails analysis; a zero chunk size fails at column build") {
+    xf.register(spark, CorpusGen.flagshipConfig)
+    val strings = spark.read.parquet(corpusPath).select(col("url"))
+    strings.createOrReplaceTempView("strings_v")
+    def rejected(df: => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](df)
+      assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
+    }
+    Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
+      xf.extract_doc(_), xf.sniff_mime, xf.extract_stream(_), xf.warc_records)
+      .foreach(f => rejected(strings.select(f(col("url")))))
+    Seq("extract_doc", "sniff_mime", "warc_records")
+      .foreach(f => rejected(spark.sql(s"SELECT $f(url) FROM strings_v")))
+    // building the column throws, so no plan that fails every row is made
+    intercept[IllegalArgumentException](xf.extract_stream(col("html"), chunkSize = 0))
+  }
+
+  /** `bit_xor(xxhash64(…))` over every output column of `extractFrame` on the
+    * sf0.001 corpus (`metadata` as its sorted entries); taken when
+    * `extract_doc` was a hand-written interpreted expression.
+    */
+  private val ExtractFrameDigest = 969987358756167427L
+
+  test("extractFrame rows are the same at any input partitioning and with whole-stage codegen off") {
+    def digest(df: org.apache.spark.sql.DataFrame): Long = {
+      val out = xf.extractFrame(df, CorpusGen.flagshipConfig)
+      val cols = out.columns.map(c => if (c == "metadata") map_entries(col(c)) else col(c))
+      val r = out.agg(bit_xor(xxhash64(cols: _*)), count(lit(1))).head
+      assert(r.getLong(1) == 500)
+      r.getLong(0)
+    }
+    val corpus = spark.read.parquet(corpusPath)
+    assert(digest(corpus) == ExtractFrameDigest)
+    assert(digest(corpus.repartition(1)) == ExtractFrameDigest)
+    assert(digest(corpus.repartition(7)) == ExtractFrameDigest)
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try assert(digest(corpus) == ExtractFrameDigest)
+    finally spark.conf.unset("spark.sql.codegen.wholeStage")
   }
 
   test("extraction composes with Structured Streaming (incremental crawl ingest)") {
