@@ -1,8 +1,7 @@
 package extractous.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -178,48 +177,46 @@ object Similarity {
     * paper's default) with id as tie-break, and item j is REMOVED iff some
     * higher-priority i in its cluster has cos(i, j) ≥ threshold — the
     * upper-triangle max-similarity test of the reference code, a set-based
-    * rule (no sequential greedy chain), which is what makes it expressible
-    * as one anti-join and replayable 1:1 in SQL.
+    * rule (no sequential greedy chain), so it is replayable 1:1 in SQL.
     *
     * Scale shape: centroid build + argmax assignment are the IVF machinery
     * ([[centroidTable]] / `nearest_cells` — narrow, model embedded in the
-    * expression); the only corpus exchange hashes on `cell` and carries
-    * `(id, vec, norm, csim)` embedding-sized rows; the within-cell pairwise
-    * cost is Σ|cluster|² — the knob is cluster count (the paper runs ~100k
-    * clusters at web scale so clusters stay small). Returns
-    * `(id, cell, kept)` for every row.
+    * expression). Then one aggregate: the only exchange hashes on `cell` and
+    * carries `(id, vec, norm)` embedding-sized rows; each cell's rows meet
+    * in one [[extractous.spark.vectors.semdedup_cell]] call, which scores the
+    * similarities to the centroid and applies the rule per pair — no join.
+    * Within-cell cost is Σ|cluster|², memory one cluster's rows; the knob is
+    * cluster count (the paper runs ~100k clusters at web scale so clusters
+    * stay small). Returns `(id, cell, kept)` for every row with an embedding.
+    *
+    * `idCol` is a key: duplicate or null ids are outside the contract.
     */
   def semDedup(corpus: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       cellCol: String = "label"): DataFrame = {
     val (cells, cents) = centroidTable(corpus, cellCol, vecCol)
     val vd = col(vecCol).cast("array<double>")
-    val assigned = corpus.select(col(idCol).as("id"), vd.as("v"),
+    // a null embedding has no cell; dropped before the exchange, null-cell
+    // rows never gather into one group
+    val assigned = corpus.filter(col(vecCol).isNotNull).select(col(idCol).as("id"), vd.as("v"),
         element_at(extractous.spark.vectors.nearest_cells(vd, cells, cents, 1), 1).as("cell"))
       .withColumn("vn", norm(col("v")))
-    // the centroid table is already on the driver (model-sized, just
-    // collected for the assignment expression) — re-ship it as a broadcast
-    // LocalRelation instead of running the corpus-wide centroid aggregation
-    // a second time for the join side; values (hence csim) are identical
-    val centSide = broadcast(corpus.sparkSession.createDataFrame(
-        java.util.Arrays.asList(cells.indices.map(i => Row(cells(i), cents(i).toSeq)): _*),
-        StructType(Seq(StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType)))))
-      .withColumn("cn0", norm(col("centroid"))))
-    val prio = assigned.join(centSide, Seq("cell"))
-      .withColumn("csim", cosineWithNorms(col("v"), col("vn"), col("centroid"), col("cn0")))
-      .select(col("cell"), col("id"), col("v"), col("vn"), col("csim"))
-    val lhs = prio.select(col("cell"), col("id").as("id_a"), col("v").as("va"),
-      col("vn").as("na"), col("csim").as("ca"))
-    val rhs = prio.select(col("cell"), col("id").as("id_b"), col("v").as("vb"),
-      col("vn").as("nb"), col("csim").as("cb"))
-    val removed = lhs.join(rhs, Seq("cell"))
-      .filter(col("ca") < col("cb") || (col("ca") === col("cb") && col("id_a") < col("id_b")))
-      .withColumn("sim", cosineWithNorms(col("va"), col("na"), col("vb"), col("nb")))
-      .filter(col("sim") >= threshold)
-      .select(col("id_b").as("rid")).distinct()
-    prio.join(removed, col("id") === col("rid"), "left_outer")
-      .select(col("id"), col("cell").cast("long").as("cell"),
-        when(col("rid").isNull, lit(1L)).otherwise(lit(0L)).as("kept"))
+    dedupCells(assigned, cells, cents, threshold)
+  }
+
+  /** The per-cell step of [[semDedup]] over `assigned` rows
+    * `(id, v: array<double>, cell, vn)` and the centroid table: one
+    * `groupBy(cell)`, one kernel call per cell. Rows whose cell is null or not
+    * in `cells` yield nothing.
+    */
+  private[extractous] def dedupCells(assigned: DataFrame, cells: Array[Int],
+      cents: Array[Array[Double]], threshold: Double): DataFrame = {
+    val marked = extractous.spark.vectors.semdedup_cell(col("cell"), col("rows"),
+      assigned.schema("id"), cells, cents, threshold)
+    assigned.groupBy(col("cell"))
+      .agg(collect_list(struct(col("id"), col("v"), col("vn"))).as("rows"))
+      .select(col("cell").cast("long").as("cell"), explode(marked).as("r"))
+      .select(col("r.id").as("id"), col("cell"), col("r.kept").as("kept"))
   }
 
   /** Exact near-duplicate pairs by cosine ≥ threshold (brute force — the

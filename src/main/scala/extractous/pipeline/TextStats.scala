@@ -72,32 +72,34 @@ object TextStats {
     * longs, which is order-free — unlike a float sum, whose value depends
     * on partial-aggregation order and could never hash-match an oracle.
     *
-    * Scale shape: token explode is narrow; the vocabulary count aggregates
-    * with map-side partial combine (the exchange carries (token, count),
-    * zipf-collapsed); the count table joins back broadcast (a web-scale
-    * type vocabulary of ~10⁸ rows would switch this to a shuffle join on
-    * the token — same knob pattern as the robots gate); the per-doc
-    * aggregate exchanges (id, partial sums) longs.
+    * Scale shape: one read of `docs`. The token rows (`explode_outer`, so a
+    * document without words keeps one row, with a null token) are counted
+    * per (token, doc), combined map-side before their exchange. The
+    * vocabulary count, the corpus total (a one-row aggregate of the counts)
+    * and the scoring join all read those pairs, so every branch reuses that
+    * one exchange. The count table joins back broadcast — a web-scale type
+    * vocabulary of ~10⁸ rows would drop the hint and join on the token
+    * instead. The per-doc aggregate exchanges (id, partial sums) longs.
+    *
+    * `idCol` is a key: a duplicated id yields one row with the counts of all
+    * its rows.
     */
   def rarityReport(docs: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String): org.apache.spark.sql.DataFrame = {
-    val toks = docs.select(col(idCol).as("id"),
-      explode(filter(split(col(textCol), "\\s+"), w => w =!= "")).as("w"))
-    val counts = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-    // sum() over zero rows is NULL — an empty/whitespace-only corpus must
-    // yield the all-zeros report, not a driver NPE
-    val totalRow = counts.agg(sum(col("cnt"))).head
-    val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
-    val scored = toks.join(broadcast(counts), Seq("w"))
-      .select(col("id"),
-        floor(lit(1000000.0) * total / col("cnt")).cast("long").as("term"))
+    // (token, doc, occurrences); a wordless document's null token counts 0
+    val pairs = docs.select(col(idCol).as("id"),
+        explode_outer(filter(split(col(textCol), "\\s+"), w => w =!= "")).as("w"))
+      .groupBy(col("w"), col("id")).agg(count(col("w")).as("c"))
+    val counts = pairs.groupBy(col("w").as("tw")).agg(sum(col("c")).as("cnt"))
+    val total = counts.agg(sum(col("cnt")).as("total"))
+    // null-safe, so the null token meets its zero count and no not-null
+    // filter is inferred into the table's side, which would part it from
+    // the shared pairs exchange
+    pairs.join(broadcast(counts.crossJoin(total)), col("w") <=> col("tw"))
+      .select(col("id"), col("c"),
+        when(col("cnt") > 0, col("c") * floor(lit(1000000.0) * col("total") / col("cnt"))).as("term"))
       .groupBy(col("id"))
-      .agg(count(lit(1)).as("n"), sum(col("term")).as("rarity_sum"))
-    docs.select(col(idCol).as("id"))
-      .join(scored, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("n"), lit(0L)).as("n_words"),
-        coalesce(col("rarity_sum"), lit(0L)).as("rarity_sum"))
+      .agg(coalesce(sum(col("c")), lit(0L)).as("n_words"), coalesce(sum(col("term")), lit(0L)).as("rarity_sum"))
       // integral `div`, not float `/`: a double quotient of big longs would
       // lose bits past 2^53 and truncate differently than the oracle
       .withColumn("rarity_mean_x1e6", expr("rarity_sum div greatest(n_words, 1)"))

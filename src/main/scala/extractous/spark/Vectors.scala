@@ -1,8 +1,8 @@
 package extractous.spark
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.xbridge.ColumnBridge
 
@@ -114,6 +114,69 @@ object VectorMath {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
+  /** One SemDeDup cell: `(id, kept)` for each of `rows` (structs of
+    * `(id, v, vn)`) — see [[vectors.semdedup_cell]]. A cell missing from
+    * `cells` yields no rows.
+    */
+  def semDedupCell(cell: Int, rows: ArrayData, idType: DataType, cells: Array[Int],
+      cents: Array[Array[Double]], centNorms: Array[Double], threshold: Double): ArrayData = {
+    val c = java.util.Arrays.binarySearch(cells, cell)
+    val n = rows.numElements()
+    if (c < 0) return new GenericArrayData(Array.empty[Any])
+    val ids = new Array[Any](n)
+    // a null vector, or one with a null element, makes every vec_dot of it
+    // null: its slot stays null, as does its norm's
+    val vs = new Array[Array[Double]](n)
+    val ns = new Array[java.lang.Double](n)
+    var i = 0
+    while (i < n) {
+      val r = rows.getStruct(i, 3)
+      if (!r.isNullAt(0)) ids(i) = r.get(0, idType)
+      if (!r.isNullAt(1)) {
+        val a = r.getArray(1)
+        var k = 0
+        while (k < a.numElements() && !a.isNullAt(k)) k += 1
+        if (k == a.numElements()) vs(i) = a.toDoubleArray()
+      }
+      if (!r.isNullAt(2)) ns(i) = r.getDouble(2)
+      i += 1
+    }
+    // cosineWithNorms: the zero-norm guard, then vec_dot over the norm product
+    def cosine(a: Array[Double], na: java.lang.Double, b: Array[Double], nb: Double): java.lang.Double =
+      if (na == null) null
+      else {
+        val den = na * nb
+        if (den == 0.0) 0.0
+        else if (a == null || b == null || a.length != b.length) null
+        else dot(a, b) / den
+      }
+    val cs = Array.tabulate[java.lang.Double](n)(j => cosine(vs(j), ns(j), cents(c), centNorms(c)))
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    // i outranks j: lower similarity to the centroid, then the lower id;
+    // a null on either side outranks nothing, as in SQL
+    def outranks(i: Int, j: Int): Boolean = cs(i) != null && cs(j) != null && {
+      val cmp = SQLOrderingUtil.compareDoubles(cs(i), cs(j))
+      cmp < 0 || cmp == 0 && ids(i) != null && ids(j) != null && ord.lt(ids(i), ids(j))
+    }
+    val out = new Array[Any](n)
+    var j = 0
+    while (j < n) {
+      var removed = false
+      i = 0
+      while (!removed && i < n) {
+        // a row that outranks or is outranked has a non-null norm
+        if (outranks(i, j)) {
+          val sim = cosine(vs(i), ns(i), vs(j), ns(j))
+          removed = sim != null && SQLOrderingUtil.compareDoubles(sim, threshold) >= 0
+        }
+        i += 1
+      }
+      out(j) = new GenericInternalRow(Array[Any](ids(j), if (removed) 0L else 1L))
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
+
   /** Sequential dot product of two `array<double>` values; null on unequal
     * lengths or a null element — see [[vectors.vec_dot]].
     */
@@ -152,6 +215,31 @@ object vectors {
     val centNorms = cents.map(c => math.sqrt(VectorMath.dot(c, c)))
     ColumnBridge.invoke(VectorMath, "nearestCells", ArrayType(IntegerType, containsNull = false),
       returnNullable = true)(vec, cells, cents, centNorms, n)
+  }
+
+  /** `semdedup_cell(cell, rows)` → `array<struct<id, kept>>`: the SemDeDup
+    * rule over one cell's `rows` (`collect_list(struct(id, v, vn))`, `v` an
+    * `array<double>`, `vn` its norm), one `(id, kept)` per row in row order.
+    *
+    * Row `j` is removed (`kept = 0`) iff some row `i` of the cell outranks it
+    * and `cos(i, j) ≥ threshold`. `i` outranks `j` when its similarity to the
+    * cell's centroid is lower, or equal with the lower id. Both rules are
+    * evaluated per pair, never by position, so the output does not depend on
+    * the rows' order. Similarities are the [[extractous.pipeline.Similarity.cosineWithNorms]]
+    * fold bit for bit, and compare as Spark SQL compares doubles (NaN above
+    * everything, −0.0 = 0.0). A null similarity (a null element, unequal
+    * lengths) outranks nothing and removes nothing. The centroid table and
+    * its norms are plan constants, as for [[nearest_cells]]. Cost is |rows|²
+    * similarity tests, memory one cell's rows.
+    */
+  def semdedup_cell(cell: Column, rows: Column, id: StructField, cells: Array[Int],
+      cents: Array[Array[Double]], threshold: Double): Column = {
+    require(cells.length == cents.length, "centroid table must have one centroid per cell")
+    val centNorms = cents.map(c => math.sqrt(VectorMath.dot(c, c)))
+    val out = StructType(Seq(StructField("id", id.dataType, id.nullable),
+      StructField("kept", LongType, nullable = false)))
+    ColumnBridge.invoke(VectorMath, "semDedupCell", ArrayType(out, containsNull = false))(
+      cell, rows, id.dataType, cells, cents, centNorms, threshold)
   }
 
   /** `hyperplane_bands(vec)` → array<bigint> of `bands` bucket keys: band

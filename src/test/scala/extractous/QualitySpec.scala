@@ -1,6 +1,8 @@
 package extractous
 
 import extractous.pipeline.{Decontam, TextStats}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -421,6 +423,47 @@ class QualitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val plan = TextStats.rarityReport(docs, "text", "doc_id")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"count table must broadcast:\n$plan")
+  }
+
+  test("rarity report reads docs once, in one query of 7 jobs; a duplicated id and a wordless doc get one row each") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("rarity-docs").toString
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    try {
+      Seq[(Long, String)]((1L, "a a a"), (2L, "b"), (3L, ""), (4L, null), (5L, "a"), (5L, "c b"))
+        .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+      val docs = spark.read.parquet(dir)
+      ListenerBusDrain.drain(sc)
+      sc.addSparkListener(listener)
+      val (df, rows) = try {
+        val df = TextStats.rarityReport(docs, "text", "doc_id")
+        val rows = df.collect().sortBy(_.getLong(0))
+        ListenerBusDrain.drain(sc)
+        (df, rows)
+      } finally sc.removeSparkListener(listener)
+      // the (token, doc) pairs exchange, the vocabulary and total
+      // exchanges, two broadcasts, the id exchange and the result; none
+      // before the query
+      assert(jobs.get == 7, s"${jobs.get} jobs")
+      assert(df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}${if (f.nullable) "" else "!"}").toSeq ==
+        Seq("id:bigint", "n_words:bigint!", "rarity_sum:bigint!", "rarity_mean_x1e6:bigint"))
+      // total 7: cnt(a)=4, cnt(b)=2, cnt(c)=1
+      assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq == Seq(
+        (1L, 3L, 3L * 1750000L, 1750000L), (2L, 1L, 3500000L, 3500000L), (3L, 0L, 0L, 0L), (4L, 0L, 0L, 0L),
+        (5L, 3L, 1750000L + 7000000L + 3500000L, (1750000L + 7000000L + 3500000L) / 3)))
+      val plan = df.queryExecution.executedPlan
+      val scans = collectWithSubqueries(plan) {
+        case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.toString.contains(dir)) => f
+      }
+      assert(scans.size == 1, s"docs scanned ${scans.size} times:\n$plan")
+    } finally {
+      val root = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+    }
   }
 
   test("KMV sketch: exact below k, duplicate-invariant, estimate within KMV error above k") {

@@ -1,11 +1,18 @@
 package extractous
 
 import extractous.pipeline.Similarity
-import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalacheck.{Gen, Prop, Test => Check}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-3 similarity-family contracts: banded-LSH recall on pairs whose
@@ -219,13 +226,150 @@ class SimilaritySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(out.toMap.apply(3L) == 1L, s"distinct member must survive: $out")
     assert(out.toMap.apply(4L) == 1L, s"lone cluster member must survive: $out")
     assert(out.count(_._2 == 1L) == 3)
+  }
 
-    // plan: no Window (the priority rule is an anti-join, not row_number),
-    // centroid attach broadcasts
-    val plan = extractous.pipeline.Similarity.semDedup(rows, threshold = 0.99)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"no row_number window:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"), s"centroid side must broadcast:\n$plan")
+  test("semdedup plan: one exchange, hashed on cell; no join, no Window, no local relation") {
+    val df = Similarity.semDedup(embs, threshold = 0.95)
+    df.collect() // AQE finalizes the plan only after execution
+    val plan = df.queryExecution.executedPlan
+    val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, s"one exchange:\n$plan")
+    val keys = shuffles.head.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+      case other => Seq(other.toString)
+    }
+    assert(keys == Seq("cell"), s"the exchange hashes on cell:\n$plan")
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, s"no join:\n$plan")
+    assert(collect(plan) { case w: WindowExec => w }.isEmpty, s"no Window:\n$plan")
+    assert(collect(plan) { case l: LocalTableScanExec => l }.isEmpty, s"no local relation:\n$plan")
+    assert(df.queryExecution.optimizedPlan.collect { case l: LocalRelation => l }.isEmpty)
+  }
+
+  /** semDedup's assignment: each vector's nearest cell and its norm. */
+  private def assign(corpus: DataFrame, cells: Array[Int], cents: Array[Array[Double]]): DataFrame = {
+    val vd = col("embedding").cast("array<double>")
+    corpus.select(col("vec_id").as("id"), vd.as("v"),
+        element_at(extractous.spark.vectors.nearest_cells(vd, cells, cents, 1), 1).as("cell"))
+      .withColumn("vn", Similarity.norm(col("v")))
+  }
+
+  /** The join formulation semDedup ran before its per-cell kernel, kept as
+    * the kernel's reference over the same input as `Similarity.dedupCells`:
+    * the centroids as a broadcast local relation, a `cell` self-join, a
+    * `distinct` of the removed ids and a left-outer join back.
+    */
+  private def dedupCellsJoin(assigned: DataFrame, cells: Array[Int], cents: Array[Array[Double]],
+      threshold: Double): DataFrame = {
+    val centSide = broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(cells.indices.map(i => Row(cells(i), cents(i).toSeq)): _*),
+        StructType(Seq(StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType)))))
+      .withColumn("cn0", Similarity.norm(col("centroid"))))
+    val prio = assigned.join(centSide, Seq("cell"))
+      .withColumn("csim", Similarity.cosineWithNorms(col("v"), col("vn"), col("centroid"), col("cn0")))
+      .select(col("cell"), col("id"), col("v"), col("vn"), col("csim"))
+    val lhs = prio.select(col("cell"), col("id").as("id_a"), col("v").as("va"),
+      col("vn").as("na"), col("csim").as("ca"))
+    val rhs = prio.select(col("cell"), col("id").as("id_b"), col("v").as("vb"),
+      col("vn").as("nb"), col("csim").as("cb"))
+    val removed = lhs.join(rhs, Seq("cell"))
+      .filter(col("ca") < col("cb") || (col("ca") === col("cb") && col("id_a") < col("id_b")))
+      .withColumn("sim", Similarity.cosineWithNorms(col("va"), col("na"), col("vb"), col("nb")))
+      .filter(col("sim") >= threshold)
+      .select(col("id_b").as("rid")).distinct()
+    prio.join(removed, col("id") === col("rid"), "left_outer")
+      .select(col("id"), col("cell").cast("long").as("cell"),
+        when(col("rid").isNull, lit(1L)).otherwise(lit(0L)).as("kept"))
+  }
+
+  /** Sorted rows, after checking the column types and nullability. */
+  private def sortedRows(df: DataFrame, reference: DataFrame): Seq[String] = {
+    assert(df.schema == reference.schema)
+    df.collect().map(_.toString).sorted.toSeq
+  }
+
+  test("semdedup kernel equals the join formulation on the fixture at 0.95, 0.5 and 0.2") {
+    val (cells, cents) = Similarity.centroidTable(embs, "label", "embedding")
+    for (t <- Seq(0.95, 0.5, 0.2)) {
+      val ref = dedupCellsJoin(assign(embs, cells, cents), cells, cents, t)
+      val got = sortedRows(Similarity.semDedup(embs, t), ref)
+      assert(got == ref.collect().map(_.toString).sorted.toSeq, s"threshold $t")
+      if (t == 0.2) assert(got.exists(_.endsWith(",0]")), "0.2 removes rows")
+    }
+  }
+
+  private val assignedSchema = StructType(Seq(StructField("id", LongType), StructField("v", ArrayType(DoubleType)),
+    StructField("cell", IntegerType), StructField("vn", DoubleType)))
+
+  /** Assigned rows `(id, v, cell)`, the norm computed as semDedup computes it. */
+  private def assignedFrame(rows: Seq[(Long, Seq[Double], Int)], partitions: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map { case (id, v, c) => Row(id, v, c) }, partitions),
+      StructType(assignedSchema.fields.take(3))).withColumn("vn", Similarity.norm(col("v")))
+
+  test("property: the cell kernel equals the join formulation on random cells, in any row order") {
+    // components from a small grid and copies from a small pool, so exact
+    // duplicates (similarity ties), scaled copies (cos ≈ 1), zero vectors and
+    // zero centroids are common
+    val comp = Gen.oneOf(-1.0, -0.5, 0.0, 0.25, 0.5, 1.0, 2.0)
+    val vec = Gen.listOfN(3, comp)
+    val fixture = for {
+      threshold <- Gen.oneOf(-0.5, 0.0, 0.5, 0.8, 0.95, 1.0)
+      nCells <- Gen.choose(1, 5)
+      cents <- Gen.listOfN(nCells, vec)
+      pool <- Gen.listOfN(4, vec)
+      member = Gen.frequency(2 -> vec, 3 -> Gen.oneOf(pool), 1 -> Gen.oneOf(pool).map(_.map(_ * 2.0)))
+      rows <- Gen.listOf(Gen.zip(Gen.choose(0, nCells - 1), member))
+      seed <- Gen.long
+    } yield (threshold, cents, rows.take(60), seed)
+    val prop = Prop.forAllNoShrink(fixture) { case (threshold, cents, rows, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((0 until rows.size).map(_ * 7L + 3))
+      val assigned = rows.zip(ids).map { case ((c, v), id) => (id, v, c) }
+      val cells = cents.indices.toArray
+      val table = cents.map(_.toArray).toArray
+      val ref = dedupCellsJoin(assignedFrame(assigned, 2), cells, table, threshold)
+      val want = ref.collect().map(_.toString).sorted.toSeq
+      val got = sortedRows(Similarity.dedupCells(assignedFrame(assigned, 2), cells, table, threshold), ref)
+      val shuffled = sortedRows(Similarity.dedupCells(assignedFrame(rnd.shuffle(assigned), 3), cells, table, threshold), ref)
+      (Prop(got == want) :| s"kernel $got vs reference $want") &&
+        (Prop(shuffled == want) :| s"shuffled rows $shuffled vs $want")
+    }
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(12).withWorkers(1), prop)
+    assert(result.passed, result.status match {
+      case Check.Failed(_, labels) => labels.mkString("\n")
+      case other => other.toString
+    })
+  }
+
+  test("semdedup edge cells: null, wrong-length and NaN vectors, ±0.0 and exact ties, a single-row cell") {
+    val cells = Array(0, 1, 2)
+    val cents = Array(Array(1.0, 0.0), Array(0.0, 1.0), Array(1.0, 1.0))
+    def row(id: Long, v: Seq[Double], cell: Integer, vn: java.lang.Double): Row = Row(id, v, cell, vn)
+    def n(v: Seq[Double]): java.lang.Double = math.sqrt(v.map(x => x * x).sum)
+    val rows = Seq(
+      row(1, Seq(1.0, 0.1), 0, n(Seq(1.0, 0.1))),
+      row(2, Seq(1.0, 0.1), 0, n(Seq(1.0, 0.1))),     // exact copy of 1: tie, the higher id goes
+      row(3, Seq(1.0, Double.NaN), 0, Double.NaN),     // NaN similarity: ranks last, NaN ≥ threshold
+      row(4, Seq(1.0, 0.0, 0.0), 0, 1.0),              // wrong length: null similarity
+      row(5, null, 0, null),                           // null embedding: null similarity
+      row(6, Seq(0.0, 0.0), 0, 0.0),                   // zero norm: similarity 0.0
+      row(7, Seq(0.0, 1.0), 0, 1.0),                   // orthogonal: 0.0
+      row(9, Seq(0.0, -2.0), 0, -2.0),                 // a negative norm gives −0.0, which ties 0.0
+      row(20, Seq(0.3, 0.7), 1, n(Seq(0.3, 0.7))),     // single-row cell
+      row(21, Seq(1.0, 0.0), 2, 1.0),
+      row(22, Seq(0.0, 1.0), 2, 1.0),                  // ties 21, not near it
+      row(23, Seq(2.0, 0.0), 2, 2.0),                  // ties 21 and is near it
+      row(30, Seq(1.0, 0.0), null, 1.0),               // no cell
+      row(40, Seq(1.0, 0.0), 5, 1.0))                  // a cell the table lacks
+    val assigned = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), assignedSchema)
+    for (t <- Seq(0.9, 0.0, -1.0)) {
+      val ref = dedupCellsJoin(assigned, cells, cents, t)
+      val got = sortedRows(Similarity.dedupCells(assigned, cells, cents, t), ref)
+      assert(got == ref.collect().map(_.toString).sorted.toSeq, s"threshold $t")
+      // 2 and 23 lose an exact tie to a lower id, 3 has a NaN similarity to
+      // every row above it, and 9 ties 7 (−0.0 = 0.0) and is near it
+      if (t == 0.9) assert(got.toSet == Set("[1,0,1]", "[2,0,0]", "[3,0,0]", "[4,0,1]", "[5,0,1]", "[6,0,1]",
+        "[7,0,1]", "[9,0,0]", "[20,1,1]", "[21,2,1]", "[22,2,1]", "[23,2,0]"))
+    }
   }
 
   test("AQE splits a planted hot bucket in the band-bucket self-join shape") {
