@@ -4,7 +4,7 @@ import extractous.config.ExtractorConfig
 import extractous.gen.CorpusGen
 import extractous.model.ExtractResult
 import extractous.spark.{functions => xf}
-import extractous.table.{LineageRow, SnapshotTable}
+import extractous.table.{LineageRow, NioLocalFileSystem, SnapshotTable}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.expressions.Aggregator
@@ -56,7 +56,10 @@ import scala.concurrent.duration._
   *     write per group: provenance columns (`part_id`, `input_file`) ride in
   *     the output table, and lineage rows and status counts are folded by the
   *     write job itself (`Dataset.observe`), so neither the raw corpus nor
-  *     the staged output is read a second time.
+  *     the staged output is read a second time;
+  *   - the staging write goes through [[NioLocalFileSystem]], which sets file
+  *     modes in-process instead of forking a `chmod` per file and stages no
+  *     `.crc` or `_SUCCESS` files that the commit would only delete.
   */
 object ExtractJob {
 
@@ -127,7 +130,8 @@ object ExtractJob {
         totalDocs += lineage.map(_.doc_count).sum
         snapshots += table.commit(g.staging.toString, g.days, lineage, ExtractResult.Version, statusCounts)
         inFlight.dequeue()
-        // drop the drained staging dir (only _SUCCESS/empty day dirs remain)
+        // drop the drained staging dir (the commit moved every part file out;
+        // only the empty day dirs remain)
         try SnapshotTable.deleteRecursively(g.staging) catch { case _: Exception => () }
       }
     } catch { case e: Throwable =>
@@ -187,9 +191,9 @@ object ExtractJob {
       .withColumn("n_bytes", octet_length(col("text")))
     // the observe node sits above any salt exchange, where Spark applies each
     // task's accumulator update once even under retries or speculation
-    out.observe(obs, udaf(GroupTally).apply(col("part_id"), col("input_file"),
-        coalesce(col("n_bytes").cast("long"), lit(0L)), col("status")).as("tally"))
-      .write.mode("overwrite").partitionBy("warc_day").parquet(staging)
+    val tallied = out.observe(obs, udaf(GroupTally).apply(col("part_id"), col("input_file"),
+      coalesce(col("n_bytes").cast("long"), lit(0L)), col("status")).as("tally"))
+    NioLocalFileSystem.write(tallied).mode("overwrite").partitionBy("warc_day").parquet(staging)
   }
 
   /** `Observation.get` waits without limit. The write has already returned when
@@ -297,17 +301,16 @@ object CorpusWriter {
     // (url hash, never rand() — see SPARK-38388). The unreplicated corpus
     // (oracle/Verify scale) keeps the one-file-per-day layout of a real
     // day-partitioned crawl table.
-    if (replicate <= 1) {
-      corpus.repartition(col("warc_day"))
-        .write.mode("overwrite").partitionBy("warc_day").parquet(outDir)
-    } else {
-      val days = math.max(1L, base.select("warc_day").distinct().count())
-      val filesPerDay = math.max(1L, math.min(32L,
-        (6L * spark.sparkContext.defaultParallelism + days - 1) / days))
-      corpus.repartition((days * filesPerDay).toInt, col("warc_day"),
+    val files =
+      if (replicate <= 1) corpus.repartition(col("warc_day"))
+      else {
+        val days = math.max(1L, base.select("warc_day").distinct().count())
+        val filesPerDay = math.max(1L, math.min(32L,
+          (6L * spark.sparkContext.defaultParallelism + days - 1) / days))
+        corpus.repartition((days * filesPerDay).toInt, col("warc_day"),
           pmod(xxhash64(col("url")), lit(filesPerDay)))
-        .write.mode("overwrite").partitionBy("warc_day").parquet(outDir)
-    }
+      }
+    NioLocalFileSystem.write(files).mode("overwrite").partitionBy("warc_day").parquet(outDir)
     spark.read.parquet(outDir).count()
   }
 

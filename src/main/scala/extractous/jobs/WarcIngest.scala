@@ -1,6 +1,7 @@
 package extractous.jobs
 
 import extractous.spark.{functions => xf}
+import extractous.table.NioLocalFileSystem
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +62,7 @@ object WarcIngest {
     val good = pages(spark, warcDir)
       .filter(!col("rec_type").endsWith("_error"))
       .select("url", "html", "warc_day")
-    good.write.mode("overwrite").partitionBy("warc_day").parquet(corpusDir)
+    NioLocalFileSystem.write(good).mode("overwrite").partitionBy("warc_day").parquet(corpusDir)
     // re-read with the KNOWN schema: an all-error crawl writes zero part
     // files, and schema inference on an empty directory would throw instead
     // of reporting the honest count of 0 (losses stay countable via

@@ -17,7 +17,9 @@ import scala.jdk.CollectionConverters._
   *     per-partition lineage rows) committed by write-temp + atomic rename;
   *     `CURRENT` is an atomically-swapped pointer file;
   *   - time travel = read any snapshot id; incremental resume = the set of
-  *     committed `warc_day` partitions in the current snapshot chain.
+  *     committed `warc_day` partitions in the current snapshot chain;
+  *   - `compact` and `merge` stage their parquet through [[NioLocalFileSystem]]
+  *     (modes set in-process, no `chmod` fork, no `.crc` or `_SUCCESS` files).
   *
   * The interface is deliberately narrow so a real Iceberg catalog could be
   * dropped in behind it.
@@ -215,10 +217,10 @@ final class SnapshotTable(val root: String) {
         val abs = fs.map(f => Paths.get(root, f).toString)
         val totalBytes = fs.map(f => Files.size(Paths.get(root, f))).sum
         val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-        spark.read.option("basePath", dataDir.toString).parquet(abs: _*)
+        val rows = spark.read.option("basePath", dataDir.toString).parquet(abs: _*)
           .drop("warc_day") // path layout carries the partition value
           .coalesce(nOut)
-          .write.mode("overwrite").parquet(staging.resolve(s"warc_day=$day").toString)
+        NioLocalFileSystem.write(rows).mode("overwrite").parquet(staging.resolve(s"warc_day=$day").toString)
       }
       val days = toCompact.keys.toSeq.sorted
       commit(staging.toString, days, lineage = Seq.empty,
@@ -287,7 +289,7 @@ final class SnapshotTable(val root: String) {
             .drop("_cur_ts")
           (survivors.select(cols.map(col): _*).unionByName(inserted.select(cols.map(col): _*)), days)
         }
-      staged.write.mode("overwrite").partitionBy("warc_day").parquet(staging.toString)
+      NioLocalFileSystem.write(staged).mode("overwrite").partitionBy("warc_day").parquet(staging.toString)
       commit(staging.toString, days, lineage = Seq.empty, version = extractorVersion,
         statusCounts = Map.empty, replacedDays = days)
     } finally deleteRecursively(staging)

@@ -4,7 +4,11 @@ import extractous.core.Extract
 import extractous.gen.CorpusGen
 import extractous.jobs.{CorpusWriter, ExtractJob}
 import extractous.model.ExtractResult
-import extractous.table.{LineageRow, SnapshotTable}
+import extractous.table.{LineageRow, NioLocalFileSystem, SnapshotTable}
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
@@ -14,7 +18,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Paths}
+import java.net.URI
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -449,5 +455,111 @@ class TableSpec extends AnyFunSuite {
     assert(table.committedDays == Set(last, empty))
     val again = ExtractJob.run(spark, input, tableDir, groupSize = 1, fromDay = Some(last))
     assert(again.daysProcessed.isEmpty && again.snapshots.isEmpty)
+  }
+
+  /** The command of every process the JVM starts while `body` runs, read back
+    * from a JFR recording of `jdk.ProcessStart` alone. A `true` started inside
+    * the recording shows that it sees process starts at all.
+    */
+  private def processesStartedBy(body: => Unit): Seq[String] = {
+    val rec = new Recording()
+    val cmds =
+      try {
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        body
+        new ProcessBuilder("true").start().waitFor()
+        rec.stop()
+        val dump = Files.createTempFile("forks", ".jfr")
+        try {
+          rec.dump(dump)
+          RecordingFile.readAllEvents(dump).asScala.map(_.getString("command")).toSeq
+        } finally Files.delete(dump)
+      } finally rec.close()
+    assert(cmds.contains("true"), s"the recording missed a process start: $cmds")
+    cmds.filterNot(_ == "true")
+  }
+
+  private def chmodsIn(body: => Unit): Int = processesStartedBy(body).count(_.startsWith("chmod"))
+
+  private def mergeBase: org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    def ts(s: String) = java.sql.Timestamp.valueOf(s + " 00:00:00")
+    Seq(("u/a", ts("2024-01-01"), "a v1"), ("u/b", ts("2024-01-02"), "b v1")).toDF("url", "warc_ts", "text")
+  }
+
+  private def mergeIncrement: org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    def ts(s: String) = java.sql.Timestamp.valueOf(s + " 00:00:00")
+    Seq(("u/a", ts("2024-01-05"), "a v2"), ("u/c", ts("2024-01-02"), "c new")).toDF("url", "warc_ts", "text")
+  }
+
+  test("the job, compact and merge start no chmod process") {
+    val input = corpusDir // written before any recording starts
+    val tableDir = Files.createTempDirectory("tforks").toString
+    val table = new SnapshotTable(tableDir)
+    // salt=true spreads each day over several files, so compact rewrites
+    val job = chmodsIn(ExtractJob.run(spark, input, tableDir, groupSize = 5, salt = true))
+    val before = table.currentSnapshotId.get
+    val compact = chmodsIn(assert(table.compact(spark) > before))
+    val merged = new SnapshotTable(Files.createTempDirectory("tforksm").toString)
+    val merge = chmodsIn {
+      merged.merge(spark, mergeBase, "v1")
+      merged.merge(spark, mergeIncrement, "v2")
+    }
+    assert(merged.read(spark).count() == 3)
+    assert(Seq(job, compact, merge) == Seq(0, 0, 0), "chmod processes started by ExtractJob.run, compact, merge")
+  }
+
+  test("written files and day dirs keep Hadoop's default modes, and no side files are left") {
+    val dirMode = PosixFilePermissions.fromString("rwxr-xr-x")
+    val fileMode = PosixFilePermissions.fromString("rw-r--r--")
+    def list(p: Path): Seq[Path] = SnapshotTable.listed(Files.list(p))(_.toSeq.sortBy(_.toString))
+    /** Every entry of `root` is a `warc_day=` dir holding only files named by
+      * `file`; returns the number of files.
+      */
+    def checkDays(root: Path, file: scala.util.matching.Regex): Int = {
+      val days = list(root)
+      assert(days.nonEmpty && days.forall(_.getFileName.toString.startsWith("warc_day=")), days)
+      days.map { d =>
+        assert(Files.getPosixFilePermissions(d) == dirMode, d)
+        val fs = list(d)
+        fs.foreach { f =>
+          assert(file.matches(f.getFileName.toString), s"unexpected file $f")
+          assert(Files.isRegularFile(f) && Files.getPosixFilePermissions(f) == fileMode, f)
+        }
+        fs.size
+      }.sum
+    }
+    // the corpus is written straight into its dir by Hadoop: its day dirs and
+    // part files got their modes from the write's file system
+    assert(checkDays(Paths.get(corpusDir), "part-.*\\.parquet".r) == 30)
+
+    val tableDir = Files.createTempDirectory("tmodes").toString
+    val table = new SnapshotTable(tableDir)
+    ExtractJob.run(spark, corpusDir, tableDir, groupSize = 5, salt = true)
+    val committed = "snap-\\d{5}-part-.*\\.parquet".r
+    assert(checkDays(Paths.get(tableDir, "data"), committed) == table.allFiles().size)
+    table.compact(spark)
+    checkDays(Paths.get(tableDir, "data"), committed)
+    assert(stagingLeft(tableDir).isEmpty && list(Paths.get(tableDir)).map(_.getFileName.toString) ==
+      Seq("data", "manifests"))
+
+    val merged = new SnapshotTable(Files.createTempDirectory("tmodesm").toString)
+    merged.merge(spark, mergeBase, "v1")
+    merged.merge(spark, mergeIncrement, "v2")
+    assert(checkDays(Paths.get(merged.root, "data"), committed) > 0)
+
+    // the writes bind their file system per write: the JVM's cached file:
+    // file system that reads use is still Hadoop's checksummed one
+    assert(FileSystem.get(new URI("file:///"), spark.sparkContext.hadoopConfiguration)
+      .isInstanceOf[LocalFileSystem])
+  }
+
+  test("the in-process permission map equals Hadoop's rwx string for all 512 modes") {
+    (0 until 512).foreach { m =>
+      val hadoop = PosixFilePermissions.fromString(new FsPermission(m.toShort).toString)
+      assert(NioLocalFileSystem.posix(m.toShort) == hadoop, f"mode $m%03o")
+    }
   }
 }
