@@ -1,7 +1,5 @@
 package extractous.core
 
-import java.io.ByteArrayOutputStream
-
 /** Brotli (RFC 7932) decoder, from scratch — stream/meta-block framing,
   * simple and complex canonical prefix codes, block-type switching for all
   * three symbol categories, literal context modeling (LSB6/MSB6/UTF8/Signed),
@@ -430,7 +428,7 @@ object Brotli {
         }
       }
     val windowSize = (1L << wbits) - 16
-    val out = new Out(maxOut)
+    val out = new LayerBuffer("brotli", maxOut, in.length)
     // last four distances, most recent first; §4's initial values with the
     // LAST distance being 4 (then 11, 15, 16)
     val ring = new Array[Int](4)
@@ -470,7 +468,7 @@ object Brotli {
             b.align()
             val start = b.byteIndex
             b.skipBytes(mlen)
-            out.appendRaw(in, start, mlen)
+            out.append(in, start, mlen)
           } else {
             decodeCompressedBlock(b, out, ring, mlen, windowSize)
           }
@@ -482,42 +480,7 @@ object Brotli {
     out.result()
   }
 
-  /** Growable output with the last-two-byte context and bounded size. */
-  private final class Out(maxOut: Int) {
-    private var buf = new Array[Byte](64 * 1024)
-    var pos = 0
-    private def ensure(n: Int): Unit = {
-      val need = pos.toLong + n
-      if (need > maxOut) bad("output exceeds cap")
-      if (need > buf.length) {
-        var cap = buf.length.toLong
-        while (cap < need) cap *= 2
-        buf = java.util.Arrays.copyOf(buf, math.min(cap, maxOut.toLong).toInt)
-      }
-    }
-    def p1: Int = if (pos > 0) buf(pos - 1) & 0xFF else 0
-    def p2: Int = if (pos > 1) buf(pos - 2) & 0xFF else 0
-    def byteAt(i: Int): Int = buf(i) & 0xFF
-    def setByte(i: Int, v: Int): Unit = buf(i) = v.toByte
-    def byte(v: Int): Unit = { ensure(1); buf(pos) = v.toByte; pos += 1 }
-    def appendRaw(src: Array[Byte], off: Int, len: Int): Unit = {
-      ensure(len)
-      System.arraycopy(src, off, buf, pos, len)
-      pos += len
-    }
-    /** Overlap-safe backward copy. */
-    def copy(distance: Int, len: Int): Unit = {
-      ensure(len)
-      var s = pos - distance
-      var d = pos
-      var i = 0
-      while (i < len) { buf(d) = buf(s); d += 1; s += 1; i += 1 }
-      pos += len
-    }
-    def result(): Array[Byte] = java.util.Arrays.copyOf(buf, pos)
-  }
-
-  private def decodeCompressedBlock(b: Bits, out: Out, ring: Array[Int],
+  private def decodeCompressedBlock(b: Bits, out: LayerBuffer, ring: Array[Int],
       mlenIn: Int, windowSize: Long): Unit = {
     var mlen = mlenIn
     // block types / counts for the three categories (§9.2)
@@ -558,9 +521,13 @@ object Brotli {
       while (insLen > 0) {
         lit.tick(b)
         val mode = cmodes(lit.btype)
-        val ctx = (ctxLut(mode * 512 + out.p1) | ctxLut(mode * 512 + 256 + out.p2)) & 0xFF
+        // context from the last two output bytes (0 before the stream start)
+        val n = out.size
+        val p1 = if (n > 0) out(n - 1) else 0
+        val p2 = if (n > 1) out(n - 2) else 0
+        val ctx = (ctxLut(mode * 512 + p1) | ctxLut(mode * 512 + 256 + p2)) & 0xFF
         val tree = litTrees(cmapL(lit.btype * 64 + ctx) & 0xFF)
-        out.byte(tree.decode(b))
+        out.append(tree.decode(b))
         insLen -= 1
       }
       if (mlen == 0) return // copy part of the last command is absent
@@ -602,10 +569,10 @@ object Brotli {
           pushToRing = true
         }
       }
-      val maxDistance = math.min(out.pos.toLong, windowSize)
+      val maxDistance = math.min(out.size.toLong, windowSize)
       if (distance <= maxDistance) {
         if (cpyLen > mlen) bad("copy length exceeds meta-block")
-        out.copy(distance, cpyLen)
+        out.copy(distance, cpyLen, floor = 0)
         mlen -= cpyLen
         // pushed for every decoded symbol except 0 ("last distance"); never
         // for implicit distances or dictionary references
@@ -630,19 +597,19 @@ object Brotli {
   /** Copy dictionary word `len`@`off` through transform `tId`; returns the
     * emitted byte count (§8: prefix + transformed word + suffix).
     */
-  private def emitTransformedWord(out: Out, off: Int, len: Int, tId: Int): Int = {
+  private def emitTransformedWord(out: LayerBuffer, off: Int, len: Int, tId: Int): Int = {
     val pre = tPrefix(tId)
     val suf = tSuffix(tId)
     val op = tOp(tId)
-    out.appendRaw(pre, 0, pre.length)
+    out.append(pre, 0, pre.length)
     var start = off
     var n = len
     if (op >= 12) { val omit = math.min(op - 11, n); start += omit; n -= omit }
     else if (op >= 1 && op <= 9) n -= math.min(op, n)
-    val wordStart = out.pos
-    out.appendRaw(dict, start, n)
+    val wordStart = out.size
+    out.append(dict, start, n)
     if (op == T_UPF || op == T_UPA) ferment(out, wordStart, op == T_UPA)
-    out.appendRaw(suf, 0, suf.length)
+    out.append(suf, 0, suf.length)
     pre.length + n + suf.length
   }
 
@@ -650,21 +617,19 @@ object Brotli {
     * ASCII a-z flip bit 5; 2-byte UTF-8 sequences flip bit 5 of byte 2;
     * 3-byte sequences XOR byte 3 with 5. First char only, or the whole word.
     */
-  private def ferment(out: Out, from: Int, all: Boolean): Unit = {
-    // operate on the Out buffer in place via a tiny reflection-free window:
-    // Out exposes byteAt/setByte for this one transform
+  private def ferment(out: LayerBuffer, from: Int, all: Boolean): Unit = {
     var i = from
     var done = false
-    while (i < out.pos && !done) {
-      val c = out.byteAt(i)
+    while (i < out.size && !done) {
+      val c = out(i)
       if (c < 0xC0) {
-        if (c >= 'a' && c <= 'z') out.setByte(i, c ^ 32)
+        if (c >= 'a' && c <= 'z') out(i) = c ^ 32
         i += 1
       } else if (c < 0xE0) {
-        if (i + 1 < out.pos) out.setByte(i + 1, out.byteAt(i + 1) ^ 32)
+        if (i + 1 < out.size) out(i + 1) = out(i + 1) ^ 32
         i += 2
       } else {
-        if (i + 2 < out.pos) out.setByte(i + 2, out.byteAt(i + 2) ^ 5)
+        if (i + 2 < out.size) out(i + 2) = out(i + 2) ^ 5
         i += 3
       }
       if (!all) done = true

@@ -78,7 +78,7 @@ object Bzip2 {
     */
   def decode(bytes: Array[Byte], cap: Int = Extract.MaxLayerBytes): Array[Byte] = {
     if (!looksLikeBzip2(bytes)) throw new IllegalArgumentException("bzip2: bad magic")
-    val out = new java.io.ByteArrayOutputStream(math.min(bytes.length.toLong * 4, 1L << 20).toInt)
+    val out = new LayerBuffer("bzip2", cap, bytes.length)
     var streamStart = 0
     while (streamStart < bytes.length) {
       if (bytes.length - streamStart < 10 ||
@@ -102,22 +102,19 @@ object Bzip2 {
             throw new IllegalArgumentException("bzip2: combined CRC mismatch")
           done = true
         } else if (hi == 0x314159 && lo == 0x265359) {
-          val blockCrc = decodeBlock(br, maxBlock, out, cap)
+          val blockCrc = decodeBlock(br, maxBlock, out)
           combined = ((combined << 1) | (combined >>> 31)) ^ blockCrc
-          if (out.size() > cap)
-            throw new IllegalStateException(s"bzip2: output exceeds cap $cap")
         } else throw new IllegalArgumentException("bzip2: bad block magic")
       }
       streamStart = ((br.pos + 7) >>> 3).toInt // footer is bit-packed; next stream is byte-aligned
     }
-    out.toByteArray
+    out.result()
   }
 
   /** One block: header → Huffman symbol stream → BWT⁻¹ → RLE1 → `out`.
     * Returns the verified block CRC.
     */
-  private def decodeBlock(br: Br, maxBlock: Int,
-                          out: java.io.ByteArrayOutputStream, cap: Int): Int = {
+  private def decodeBlock(br: Br, maxBlock: Int, out: LayerBuffer): Int = {
     val storedCrc = (br.bits(16) << 16) | br.bits(16)
     if (br.bits(1) != 0)
       throw new UnsupportedArchiveException(
@@ -311,7 +308,6 @@ object Bzip2 {
     // final RLE1 (4 equal bytes + count) fused with the BWT walk + CRC
     val crc = new Crc
     var p = tt(origPtr)
-    var emitted = 0
     var prev = -1
     var rle = 0
     i = 0
@@ -321,15 +317,12 @@ object Bzip2 {
       if (rle == 4) {
         // the 5th stream byte after 4 equal ones is a repeat count, not data
         var k = 0
-        while (k < b) { out.write(prev); crc.update(prev); k += 1 }
-        emitted += b
+        while (k < b) { out.append(prev); crc.update(prev); k += 1 }
         rle = 0; prev = -1
       } else {
         if (b == prev) rle += 1 else { rle = 1; prev = b }
-        out.write(b); crc.update(b)
-        emitted += 1
+        out.append(b); crc.update(b)
       }
-      if (emitted > cap) throw new IllegalStateException(s"bzip2: output exceeds cap $cap")
       i += 1
     }
     if (rle == 4) throw new IllegalArgumentException("bzip2: block ends inside an RLE run")

@@ -58,7 +58,8 @@ object Extract {
 
   /** Decoded-output budget of one wrapper layer (a codec stream or a
     * compressed HTTP body): a decompression bomb hits it and fails the row,
-    * never the executor.
+    * never the executor. [[LayerBuffer]], the output array of every
+    * streaming decoder, is where it is enforced.
     */
   private[extractous] val MaxLayerBytes: Int = 256 * 1024 * 1024
 
@@ -175,25 +176,14 @@ object Extract {
     }.takeWhile(_ != null)
   }
 
-  /** Bounded gunzip — a decompression bomb hits the cap and fails the row,
-    * never the executor.
+  /** Bounded gunzip (every member of a multi-member stream): a decompression
+    * bomb hits the cap and fails the row, never the executor.
     */
   private[extractous] def gunzip(bytes: Array[Byte], maxOut: Int): Array[Byte] = {
+    val out = new LayerBuffer("gzip", maxOut, bytes.length)
     val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(bytes))
-    // Long math: bytes.length * 4 overflows Int at >= 512 MB inputs (crawl
-    // .warc.gz files are that big) and a negative initial size throws
-    val out = new java.io.ByteArrayOutputStream(math.min(bytes.length.toLong * 4, 1L << 20).toInt)
-    val buf = new Array[Byte](65536)
-    var total = 0
-    var n = in.read(buf)
-    while (n >= 0) {
-      total += n
-      if (total > maxOut) throw new IllegalStateException(s"gzip output exceeds $maxOut bytes")
-      out.write(buf, 0, n)
-      n = in.read(buf)
-    }
-    in.close()
-    out.toByteArray
+    try out.drain(in) finally in.close()
+    out.result()
   }
 
   /** Plain text: charset-aware decode (UTF-16 BOMs, UTF-8 default) +

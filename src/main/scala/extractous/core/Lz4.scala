@@ -1,7 +1,5 @@
 package extractous.core
 
-import java.io.ByteArrayOutputStream
-
 /** From-scratch LZ4 decoder — frame format (lz4 Frame Format spec v1.6.x,
   * magic 0x184D2204), the legacy frame (0x184C2102, fixed 8 MiB blocks) and
   * skippable frames (0x184D2A5x), over the public LZ4 block format (token
@@ -11,9 +9,10 @@ import java.io.ByteArrayOutputStream
   * commons-compress (format breadth claim /root/reference/README.md:269-273).
   * Same posture as [[Zstd]]: every structural checksum (header HC byte,
   * optional block checksums, content checksum) is XXH32-verified, bombs hit
-  * the global `maxOut` budget, valid-but-out-of-scope features (dictionary
-  * IDs) refuse with [[UnsupportedArchiveException]] (−8), and structural
-  * damage throws plain exceptions that map to −4 — never silent garbage.
+  * the global `maxOut` budget of one [[LayerBuffer]], valid-but-out-of-scope
+  * features (dictionary IDs) refuse with [[UnsupportedArchiveException]]
+  * (−8), and structural damage throws plain exceptions that map to −4 —
+  * never silent garbage.
   * Validated against real `lz4` CLI goldens (Lz4Spec) and the CLI accepts
   * the fixture writer's frames back, the two-implementation proof pattern
   * ZstdSpec established.
@@ -41,31 +40,32 @@ object Lz4 {
     * `maxOut` budget, so N frames can't multiply a bomb.
     */
   def decode(bytes: Array[Byte], maxOut: Long = Extract.MaxLayerBytes): Array[Byte] = {
-    val out = new AccessibleBaos(math.min(bytes.length.toLong * 3, 1 << 20).toInt)
+    val out = new LayerBuffer("lz4", maxOut, bytes.length)
     var p = 0
     while (p < bytes.length) {
       if (p + 4 > bytes.length) {
         // trailing garbage shorter than a magic: only legal if nothing at all
-        if (out.size() == 0) bad("truncated magic") else return out.toByteArray
+        if (out.size == 0) bad("truncated magic") else return out.result()
       }
       val magic = readIntLE(bytes, p)
-      if (magic == FrameMagic) p = decodeFrame(bytes, p + 4, out, maxOut)
-      else if (magic == LegacyMagic) p = decodeLegacy(bytes, p + 4, out, maxOut)
+      if (magic == FrameMagic) p = decodeFrame(bytes, p + 4, out)
+      else if (magic == LegacyMagic) p = decodeLegacy(bytes, p + 4, out)
       else if (magic >= SkippableMin && magic <= SkippableMax) {
         if (p + 8 > bytes.length) bad("truncated skippable frame")
         val sz = readIntLE(bytes, p + 4)
         if (sz < 0 || p + 8 + sz.toLong > bytes.length) bad("skippable frame overruns input")
         p = p + 8 + sz
-      } else if (out.size() > 0) return out.toByteArray // trailing non-lz4 bytes after ≥1 frame
+      } else if (out.size > 0) return out.result() // trailing non-lz4 bytes after ≥1 frame
       else bad(f"bad magic 0x$magic%08x")
     }
-    out.toByteArray
+    out.result()
   }
 
   /** One general frame starting just after the magic; returns the offset
-    * past the frame.
+    * past the frame. Frames are independent: no match reaches before the
+    * frame's first byte.
     */
-  private def decodeFrame(b: Array[Byte], start: Int, out: AccessibleBaos, maxOut: Long): Int = {
+  private def decodeFrame(b: Array[Byte], start: Int, out: LayerBuffer): Int = {
     var p = start
     if (p + 3 > b.length) bad("truncated frame descriptor")
     val flg = b(p) & 0xff
@@ -91,7 +91,7 @@ object Lz4 {
     if (hc != want) bad(f"frame header checksum mismatch (got $hc%02x want $want%02x)")
     p += descLen + 1
     val maxBlock = 1 << (8 + 2 * bmax) // 4→64 KiB … 7→4 MiB
-    val frameStartSize = out.size().toLong
+    val frameStart = out.size
     var done = false
     while (!done) {
       if (p + 4 > b.length) bad("truncated block size word")
@@ -107,20 +107,18 @@ object Lz4 {
           val got = readIntLE(b, p + len)
           if (got != Xxh32.hash(b, p, len, 0)) bad("block checksum mismatch")
         }
-        if (stored) {
-          if (out.size().toLong + len > maxOut) bad("decoded size exceeds budget")
-          out.write(b, p, len)
-        } else decompressBlock(b, p, len, out, maxOut)
+        if (stored) out.append(b, p, len)
+        else decompressBlock(b, p, len, out, frameStart)
         p += len + (if (blockChecksum) 4 else 0)
       }
     }
-    val produced = out.size().toLong - frameStartSize
+    val produced = out.size - frameStart
     if (declaredSize >= 0 && produced != declaredSize)
       bad(s"content size mismatch (declared $declaredSize got $produced)")
     if (contentChecksum) {
       if (p + 4 > b.length) bad("truncated content checksum")
       val got = readIntLE(b, p); p += 4
-      val want2 = out.hashRegion(frameStartSize.toInt, produced.toInt)
+      val want2 = out.read(frameStart)(Xxh32.hash(_, _, _, 0))
       if (got != want2) bad("content checksum mismatch")
     }
     p
@@ -129,8 +127,9 @@ object Lz4 {
   /** Legacy frame (lz4 ≤ r90 / `lz4 -l`): raw 8 MiB-block stream, no
     * terminator — runs to EOF or the next magic number.
     */
-  private def decodeLegacy(b: Array[Byte], start: Int, out: AccessibleBaos, maxOut: Long): Int = {
+  private def decodeLegacy(b: Array[Byte], start: Int, out: LayerBuffer): Int = {
     var p = start
+    val frameStart = out.size
     var done = false
     while (!done) {
       if (p + 4 > b.length) { done = true }
@@ -142,9 +141,9 @@ object Lz4 {
         else {
           p += 4
           if (word < 0 || p + word.toLong > b.length) bad("legacy block overruns input")
-          val before = out.size()
-          decompressBlock(b, p, word, out, maxOut)
-          if (out.size() - before > LegacyBlockSize) bad("legacy block exceeds 8 MiB")
+          val before = out.size
+          decompressBlock(b, p, word, out, frameStart)
+          if (out.size - before > LegacyBlockSize) bad("legacy block exceeds 8 MiB")
           p += word
         }
       }
@@ -154,12 +153,11 @@ object Lz4 {
 
   /** The LZ4 block format: token nibbles, 255-extension lengths, 16-bit LE
     * match offsets, min-match 4, overlap-capable copies. Matches may reach
-    * back across block boundaries within the frame (blocks here are decoded
+    * back across block boundaries to `frameStart` (blocks here are decoded
     * into one contiguous buffer, which covers both linked and independent
     * encoder modes).
     */
-  private[core] def decompressBlock(b: Array[Byte], start: Int, len: Int,
-      buf: AccessibleBaos, maxOut: Long): Unit = {
+  private def decompressBlock(b: Array[Byte], start: Int, len: Int, out: LayerBuffer, frameStart: Int): Unit = {
     var p = start
     val end = start + len
     while (p < end) {
@@ -174,8 +172,7 @@ object Lz4 {
         }
       }
       if (p + litLen > end) bad("literals overrun block")
-      if (buf.size().toLong + litLen > maxOut) bad("decoded size exceeds budget")
-      buf.write(b, p, litLen)
+      out.append(b, p, litLen)
       p += litLen
       if (p < end) {
         if (p + 2 > end) bad("truncated match offset")
@@ -190,31 +187,9 @@ object Lz4 {
             matchLen += x
           }
         }
-        if (buf.size().toLong + matchLen > maxOut) bad("decoded size exceeds budget")
-        buf.copyWithin(offset, matchLen)
+        out.copy(offset, matchLen, frameStart)
       }
     }
-  }
-
-  /** Growable output with random read-back for LZ4's overlapping matches
-    * and in-place region hashing for the content checksum.
-    */
-  private[core] final class AccessibleBaos(cap: Int) extends ByteArrayOutputStream(cap) {
-    def copyWithin(offset: Int, len: Int): Unit = {
-      if (offset > count) bad(s"match offset $offset reaches before output start")
-      // grow once, then byte-wise copy (handles overlap like the spec demands)
-      val need = count + len
-      if (need > buf.length) {
-        val cap2 = math.max(buf.length * 2, need)
-        buf = java.util.Arrays.copyOf(buf, cap2)
-      }
-      var src = count - offset
-      var dst = count
-      var i = 0
-      while (i < len) { buf(dst) = buf(src); src += 1; dst += 1; i += 1 }
-      count = need
-    }
-    def hashRegion(off: Int, len: Int): Int = Xxh32.hash(buf, off, len, 0)
   }
 }
 

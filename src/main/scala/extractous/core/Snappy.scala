@@ -1,7 +1,5 @@
 package extractous.core
 
-import java.io.ByteArrayOutputStream
-
 /** From-scratch Snappy decoder — the raw block format (google/snappy
   * format_description.txt: varint preamble + literal / 1-, 2-, 4-byte-offset
   * copy elements) under the public framing format (framing_format.txt:
@@ -43,7 +41,7 @@ object Snappy {
   /** Decode a framed `.sz` payload. */
   def decodeFramed(bytes: Array[Byte], maxOut: Long = Extract.MaxLayerBytes): Array[Byte] = {
     if (!looksLikeFramedSnappy(bytes)) bad("missing sNaPpY stream identifier")
-    val out = new ByteArrayOutputStream(math.min(bytes.length.toLong * 3, 1 << 20).toInt)
+    val out = new LayerBuffer("snappy", maxOut, bytes.length)
     var p = 10
     while (p < bytes.length) {
       if (p + 4 > bytes.length) bad("truncated chunk header")
@@ -57,16 +55,14 @@ object Snappy {
           // decode the chunk standalone (chunks are ≤64 KiB by spec) so the
           // CRC verifies without re-copying the whole accumulated output
           val chunk = rawDecode(bytes, p + 4, len - 4, maxOut = 65536)
-          if (out.size().toLong + chunk.length > maxOut) bad("decoded size exceeds budget")
           if (maskedCrc32c(chunk, 0, chunk.length) != readIntLE4(bytes, p))
             bad("compressed chunk CRC mismatch")
-          out.write(chunk, 0, chunk.length)
+          out.append(chunk, 0, chunk.length)
         case 0x01 => // uncompressed data
           if (len < 4) bad("uncompressed chunk shorter than its CRC")
-          if (out.size().toLong + (len - 4) > maxOut) bad("decoded size exceeds budget")
           if (maskedCrc32c(bytes, p + 4, len - 4) != readIntLE4(bytes, p))
             bad("uncompressed chunk CRC mismatch")
-          out.write(bytes, p + 4, len - 4)
+          out.append(bytes, p + 4, len - 4)
         case 0xff => // stream identifier may legally repeat (concatenation)
           if (len != 6) bad("stream identifier chunk must be 6 bytes")
         case t if t >= 0x80 => // skippable reserved + padding (0xfe)
@@ -75,18 +71,13 @@ object Snappy {
       }
       p += len
     }
-    out.toByteArray
+    out.result()
   }
 
-  /** Decode one raw snappy block (varint preamble + elements). */
-  def rawDecode(bytes: Array[Byte], off: Int, len: Int, maxOut: Long = Extract.MaxLayerBytes): Array[Byte] = {
-    val out = new ByteArrayOutputStream(math.min(len.toLong * 3, 1 << 20).toInt)
-    rawDecodeInto(bytes, off, len, out, maxOut)
-    out.toByteArray
-  }
-
-  private def rawDecodeInto(b: Array[Byte], off: Int, len: Int,
-      out: ByteArrayOutputStream, maxOut: Long): Unit = {
+  /** Decode one raw snappy block (varint preamble + elements). Its size is
+    * declared, so it is checked against `maxOut` before anything is allocated.
+    */
+  def rawDecode(b: Array[Byte], off: Int, len: Int, maxOut: Long = Extract.MaxLayerBytes): Array[Byte] = {
     var p = off
     val end = off + len
     // varint uncompressed length
@@ -100,7 +91,7 @@ object Snappy {
       shift += 7
       cont = (x & 0x80) != 0
     }
-    if (out.size().toLong + expected > maxOut) bad("decoded size exceeds budget")
+    if (expected > maxOut) bad("decoded size exceeds budget")
     val dst = new Array[Byte](expected.toInt)
     var d = 0
     while (p < end) {
@@ -140,7 +131,7 @@ object Snappy {
       }
     }
     if (d != dst.length) bad(s"decoded ${d} bytes, preamble declared ${dst.length}")
-    out.write(dst, 0, dst.length)
+    dst
   }
 
   private def copy(dst: Array[Byte], d: Int, offset: Int, n: Int): Unit = {

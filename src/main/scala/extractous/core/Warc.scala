@@ -211,22 +211,18 @@ object WarcExtractor {
     * long tail of historical servers sent raw DEFLATE under the same name —
     * try zlib first, fall back to raw, exactly as browsers do.
     */
-  private def inflate(b: Array[Byte]): Array[Byte] = {
+  private[extractous] def inflate(b: Array[Byte], maxOut: Int = Extract.MaxLayerBytes): Array[Byte] = {
     def run(nowrap: Boolean): Array[Byte] = {
       val inf = new java.util.zip.Inflater(nowrap)
       try {
         inf.setInput(b)
-        val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
-        val buf = new Array[Byte](64 * 1024)
-        while (!inf.finished()) {
-          val n = inf.inflate(buf)
-          if (n == 0 && !inf.finished()) throw new IllegalArgumentException("http: truncated deflate body")
-          out.write(buf, 0, n)
-          if (out.size() > Extract.MaxLayerBytes) throw new IllegalStateException("http: deflate body exceeds cap")
-        }
-        out.toByteArray
+        val out = new LayerBuffer("deflate", maxOut, b.length)
+        out.drain(inf)
+        if (!inf.finished()) throw new IllegalArgumentException("http: truncated deflate body")
+        out.result()
       } finally inf.end()
     }
+    // a budget breach is an IllegalStateException: a bomb is never run twice
     try run(nowrap = false)
     catch { case _: java.util.zip.DataFormatException | _: IllegalArgumentException =>
       run(nowrap = true)

@@ -1,7 +1,5 @@
 package extractous.core
 
-import java.io.ByteArrayOutputStream
-
 /** Zstandard (RFC 8878) decoder, from scratch — frame parsing, raw/RLE/
   * compressed blocks, Huffman-coded literals (direct and FSE-compressed
   * weights, 1- and 4-stream), interleaved-FSE sequence decoding with the
@@ -359,7 +357,7 @@ object Zstd {
   /** Low 32 bits of XXH64(seed 0) — the frame content-checksum function
     * (exposed for the fixture writer).
     */
-  def xxh64low32(b: Array[Byte]): Long = Xxh64.hash(b, b.length, 0L) & 0xFFFFFFFFL
+  def xxh64low32(b: Array[Byte]): Long = Xxh64.hash(b, 0, b.length, 0L) & 0xFFFFFFFFL
 
   private object Xxh64 {
     private val P1 = 0x9E3779B185EBCA87L
@@ -375,12 +373,13 @@ object Zstd {
       v
     }
     private def u32l(b: Array[Byte], i: Int): Long = BinUtil.u32le(b, i)
-    def hash(b: Array[Byte], len: Int, seed: Long): Long = {
-      var i = 0
+    def hash(b: Array[Byte], off: Int, len: Int, seed: Long): Long = {
+      var i = off
+      val end = off + len
       var acc =
         if (len >= 32) {
           var v1 = seed + P1 + P2; var v2 = seed + P2; var v3 = seed; var v4 = seed - P1
-          while (i + 32 <= len) {
+          while (i + 32 <= end) {
             v1 = r(v1 + u64(b, i) * P2, 31) * P1
             v2 = r(v2 + u64(b, i + 8) * P2, 31) * P1
             v3 = r(v3 + u64(b, i + 16) * P2, 31) * P1
@@ -393,9 +392,9 @@ object Zstd {
           a
         } else seed + P5
       acc += len
-      while (i + 8 <= len) { acc = r(acc ^ (r(u64(b, i) * P2, 31) * P1), 27) * P1 + P4; i += 8 }
-      if (i + 4 <= len) { acc = r(acc ^ (u32l(b, i) * P1), 23) * P2 + P3; i += 4 }
-      while (i < len) { acc = r(acc ^ ((b(i) & 0xFFL) * P5), 11) * P1; i += 1 }
+      while (i + 8 <= end) { acc = r(acc ^ (r(u64(b, i) * P2, 31) * P1), 27) * P1 + P4; i += 8 }
+      if (i + 4 <= end) { acc = r(acc ^ (u32l(b, i) * P1), 23) * P2 + P3; i += 4 }
+      while (i < end) { acc = r(acc ^ ((b(i) & 0xFFL) * P5), 11) * P1; i += 1 }
       acc ^= acc >>> 33; acc *= P2; acc ^= acc >>> 29; acc *= P3; acc ^= acc >>> 32
       acc
     }
@@ -404,27 +403,6 @@ object Zstd {
   // --------------------------------------------------------------- frame --
 
   /** Per-frame decoder state persisting across blocks. */
-  /** Growable frame-output buffer that exposes its backing array, so match
-    * copies index the history in place — a ByteArrayOutputStream here would
-    * force a full `toByteArray` snapshot per block (quadratic in frame size).
-    */
-  private final class Hist(initial: Int) {
-    var a = new Array[Byte](math.max(initial, 64))
-    var len = 0
-    private def ensure(n: Int): Unit = {
-      if (len.toLong + n > a.length) {
-        var cap = a.length.toLong * 2
-        while (cap < len.toLong + n) cap *= 2
-        if (cap > Int.MaxValue - 8) cap = Int.MaxValue - 8
-        if (cap < len.toLong + n) bad("frame output exceeds array limit")
-        a = java.util.Arrays.copyOf(a, cap.toInt)
-      }
-    }
-    def write(src: Array[Byte], off: Int, n: Int): Unit = {
-      ensure(n); System.arraycopy(src, off, a, len, n); len += n
-    }
-  }
-
   private final class FrameState {
     var huffman: HufTable = null
     var llTable: FseTable = null
@@ -435,9 +413,12 @@ object Zstd {
     var rep3 = 8L
   }
 
-  /** Decode a (possibly multi-frame) zstd payload. */
+  /** Decode a (possibly multi-frame) zstd payload. The budget is GLOBAL:
+    * concatenated frames share one `maxOut`, so N frames each just under the
+    * cap cannot multiply it.
+    */
   def decode(bytes: Array[Byte], maxOut: Long = Extract.MaxLayerBytes): Array[Byte] = {
-    val out = new ByteArrayOutputStream(math.min(bytes.length.toLong * 4, 1L << 20).toInt)
+    val out = new LayerBuffer("zstd", maxOut, bytes.length)
     var p = 0
     var sawFrame = false
     while (p < bytes.length) {
@@ -450,14 +431,17 @@ object Zstd {
         p += 8 + sz.toInt
       } else if (magic == Magic) {
         sawFrame = true
-        p = decodeFrame(bytes, p + 4, out, maxOut)
+        p = decodeFrame(bytes, p + 4, out)
       } else bad("bad magic")
     }
     if (!sawFrame) bad("no zstd frame present")
-    out.toByteArray
+    out.result()
   }
 
-  private def decodeFrame(bytes: Array[Byte], start: Int, out: ByteArrayOutputStream, maxOut: Long): Int = {
+  /** One frame, decoded onto the end of `out`; matches and the checksum see
+    * only this frame's bytes. Returns the offset past the frame.
+    */
+  private def decodeFrame(bytes: Array[Byte], start: Int, out: LayerBuffer): Int = {
     var p = start
     if (p >= bytes.length) bad("truncated frame header")
     val fhd = bytes(p) & 0xFF; p += 1
@@ -495,18 +479,14 @@ object Zstd {
     }
     if (singleSegment) windowSize = if (contentSize >= 0) contentSize else 0
     if (windowSize > MaxWindow) bad("window size exceeds decoder limit")
-    // the budget is GLOBAL: concatenated frames share one maxOut, so N
-    // frames each just under the cap cannot multiply it (the bomb gate the
-    // bzip2 and xz decoders also enforce across streams)
-    val budget = maxOut - out.size()
-    if (contentSize > budget) bad("content size exceeds budget")
+    // a declared size (-1 when absent) past the budget is refused before any
+    // block decodes
+    out.reserve(contentSize)
 
     val st = new FrameState
-    // frame history buffer: we keep the whole frame output (bounded by the
-    // budget) in one growable array — simpler than a ring, correct for our
-    // in-memory use, and match copies index it directly with zero per-block
-    // snapshot copies
-    val hist = new Hist(math.min(1 << 16, math.max(budget, 64L)).toInt)
+    // the frame's history is the output itself (simpler than a ring, correct
+    // for in-memory use): match copies index it directly above `frameStart`
+    val frameStart = out.size
 
     var last = false
     while (!last) {
@@ -519,29 +499,25 @@ object Zstd {
       btype match {
         case 0 =>
           if (p + bsize > bytes.length) bad("raw block overruns")
-          if (hist.len.toLong + bsize > budget) bad("output budget exceeded")
-          hist.write(bytes, p, bsize)
+          out.append(bytes, p, bsize)
           p += bsize
         case 1 =>
           if (p >= bytes.length) bad("rle block overruns")
-          if (hist.len.toLong + bsize > budget) bad("output budget exceeded")
-          val fill = new Array[Byte](bsize)
-          java.util.Arrays.fill(fill, bytes(p))
-          hist.write(fill, 0, bsize)
+          var i = 0
+          while (i < bsize) { out.append(bytes(p)); i += 1 }
           p += 1
         case 2 =>
           if (p + bsize > bytes.length) bad("compressed block overruns")
-          decodeBlock(bytes, p, p + bsize, st, hist, budget)
+          decodeBlock(bytes, p, p + bsize, st, out, frameStart)
           p += bsize
         case _ => bad("reserved block type")
       }
     }
-    if (contentSize >= 0 && hist.len != contentSize) bad("content size mismatch")
-    out.write(hist.a, 0, hist.len)
+    if (contentSize >= 0 && out.size - frameStart != contentSize) bad("content size mismatch")
     if (checksum) {
       if (p + 4 > bytes.length) bad("truncated checksum")
       val want = u32(bytes, p)
-      val got = Xxh64.hash(hist.a, hist.len, 0L) & 0xFFFFFFFFL
+      val got = out.read(frameStart)(Xxh64.hash(_, _, _, 0L)) & 0xFFFFFFFFL
       if (want != got) bad("content checksum mismatch")
       p += 4
     }
@@ -551,7 +527,7 @@ object Zstd {
   // --------------------------------------------------------------- block --
 
   private def decodeBlock(buf: Array[Byte], start: Int, end: Int, st: FrameState,
-      hist: Hist, maxOut: Long): Unit = {
+      out: LayerBuffer, frameStart: Int): Unit = {
     var p = start
     // ---- literals section (§3.1.1.3.1) ----
     if (p >= end) bad("literals: empty block")
@@ -570,7 +546,6 @@ object Zstd {
             if (p + 3 > end) bad("literals: header overruns")
             val v = (b0 >> 4) | ((buf(p + 1) & 0xFF) << 4) | ((buf(p + 2) & 0xFF) << 12); p += 3; v
         }
-        if (regen > maxOut) bad("literals exceed budget")
         literals = new Array[Byte](regen)
         if (litType == 0) {
           if (p + regen > end) bad("raw literals overrun")
@@ -615,7 +590,6 @@ object Zstd {
           st.huffman = tab
           q += used
         } else if (st.huffman == null) bad("treeless literals with no previous tree")
-        if (regen > maxOut) bad("literals exceed budget")
         literals = new Array[Byte](regen)
         if (!fourStreams) {
           hufStream(st.huffman, buf, q, qEnd - q, literals, 0, regen)
@@ -651,8 +625,7 @@ object Zstd {
       nSeq = (buf(p + 1) & 0xFF) + ((buf(p + 2) & 0xFF) << 8) + 0x7F00; p += 3
     }
     if (nSeq == 0) {
-      if (hist.len.toLong + literals.length > maxOut) bad("output budget exceeded")
-      hist.write(literals, 0, literals.length)
+      out.append(literals, 0, literals.length)
       if (p != end) bad("sequences: trailing bytes after empty section")
       return
     }
@@ -688,19 +661,7 @@ object Zstd {
     var ofState = bb.read(ofT.accuracyLog).toInt
     var mlState = bb.read(mlT.accuracyLog).toInt
 
-    val histLen = hist.len // frame history length so far (the match window)
     var litPos = 0
-    var cur = new Array[Byte](math.max(literals.length * 2, 1024))
-    var curLen = 0
-    def ensure(n: Int): Unit = {
-      if (curLen + n > cur.length) {
-        var cap = cur.length * 2
-        while (cap < curLen + n) cap *= 2
-        cur = java.util.Arrays.copyOf(cur, cap)
-      }
-    }
-    def emit(b: Byte): Unit = { ensure(1); cur(curLen) = b; curLen += 1 }
-
     var seq = 0
     while (seq < nSeq) {
       val ofCode = ofT.symbol(ofState)
@@ -730,22 +691,9 @@ object Zstd {
         }
       }
       if (litLen > literals.length - litPos) bad("literal run overruns literals")
-      if (histLen.toLong + curLen + litLen + matchLen > maxOut) bad("output budget exceeded")
-      ensure(litLen)
-      System.arraycopy(literals, litPos, cur, curLen, litLen)
-      curLen += litLen
+      out.append(literals, litPos, litLen)
       litPos += litLen
-      // match copy, byte-by-byte (overlap is the normal case)
-      val total = histLen.toLong + curLen
-      var src = total - offset
-      if (src < 0) bad("match offset beyond frame start")
-      var k = 0
-      while (k < matchLen) {
-        val b = if (src < histLen) hist.a(src.toInt) else cur((src - histLen).toInt)
-        emit(b)
-        src += 1
-        k += 1
-      }
+      out.copy(offset, matchLen, frameStart)
       seq += 1
       if (seq < nSeq) {
         llState = llT.baseline(llState) + bb.read(llT.nbBits(llState)).toInt
@@ -754,12 +702,7 @@ object Zstd {
       }
     }
     // trailing literals
-    val rest = literals.length - litPos
-    if (histLen.toLong + curLen + rest > maxOut) bad("output budget exceeded")
-    ensure(rest)
-    System.arraycopy(literals, litPos, cur, curLen, rest)
-    curLen += rest
+    out.append(literals, litPos, literals.length - litPos)
     if (bb.remaining != 0) bad("sequences: bitstream not fully consumed")
-    hist.write(cur, 0, curLen)
   }
 }

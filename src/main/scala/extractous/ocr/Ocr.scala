@@ -159,18 +159,19 @@ object Png {
       "PNG dims out of range")
     require(bitDepth == 8 && colorType == 0, s"unsupported PNG depth=$bitDepth color=$colorType")
     val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
     val raw = new Array[Byte]((width + 1) * height)
-    var off = 0
-    while (!inf.finished() && off < raw.length) {
-      val n = inf.inflate(raw, off, raw.length - off)
-      if (n == 0 && inf.needsInput()) throw new IllegalArgumentException("truncated PNG IDAT")
-      // FDICT zlib streams return 0 with needsInput()==false forever — an
-      // exception maps to status -4; an unbroken loop pins an executor core
-      if (n == 0 && inf.needsDictionary()) throw new IllegalArgumentException("PNG IDAT needs preset dictionary")
-      off += n
-    }
-    inf.end()
+    try {
+      inf.setInput(idat.toByteArray)
+      var off = 0
+      while (!inf.finished() && off < raw.length) {
+        val n = inf.inflate(raw, off, raw.length - off)
+        if (n == 0 && inf.needsInput()) throw new IllegalArgumentException("truncated PNG IDAT")
+        // FDICT zlib streams return 0 with needsInput()==false forever — an
+        // exception maps to status -4; an unbroken loop pins an executor core
+        if (n == 0 && inf.needsDictionary()) throw new IllegalArgumentException("PNG IDAT needs preset dictionary")
+        off += n
+      }
+    } finally inf.end()
     val px = new Array[Byte](width * height)
     var y = 0
     var prevRow = new Array[Int](width)

@@ -1,7 +1,7 @@
 package extractous.office
 
 import extractous.config.ExtractorConfig
-import extractous.core.Extract
+import extractous.core.{Extract, LayerBuffer}
 import extractous.html.{HElem, HtmlDom}
 import extractous.html.HtmlDom.{outermost, textOf}
 import extractous.model.{ExtractResult, ExtractStatus}
@@ -36,18 +36,11 @@ object ZipUtil {
       var entry = zis.getNextEntry
       while (entry != null) {
         if (!entry.isDirectory) {
-          val bos = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          var entryTotal = 0L
-          var n = zis.read(buf)
-          while (n >= 0) {
-            entryTotal += n; total += n
-            if (entryTotal > maxEntry || total > maxTotal)
-              throw new IllegalStateException(s"zip entry '${entry.getName}' exceeds inflate budget")
-            bos.write(buf, 0, n)
-            n = zis.read(buf)
-          }
-          out += (entry.getName -> bos.toByteArray)
+          val data = new LayerBuffer(s"zip entry '${entry.getName}'",
+            math.min(maxEntry, maxTotal - total), entry.getCompressedSize)
+          data.drain(zis)
+          total += data.size
+          out += (entry.getName -> data.result())
         }
         seen += 1
         entry = zis.getNextEntry

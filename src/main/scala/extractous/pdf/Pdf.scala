@@ -1,6 +1,7 @@
 package extractous.pdf
 
 import extractous.config.{ExtractorConfig, PdfOcrStrategy}
+import extractous.core.{Extract, LayerBuffer}
 import extractous.model.{ExtractResult, ExtractStatus}
 import extractous.ocr.Ocr
 import extractous.text.{BlockSink, Normalize}
@@ -436,25 +437,17 @@ object PdfExtractor {
 
   /** Output-bounded FlateDecode — a decompression bomb hits the cap and fails
     * the row with an exception (mapped to status -4 upstream), never the
-    * executor JVM (same bounded-output pattern as Extract.gunzip).
+    * executor JVM. A truncated stream yields what it decoded.
     */
-  def inflate(data: Array[Byte], maxOut: Int = 256 * 1024 * 1024): Array[Byte] = {
+  def inflate(data: Array[Byte], maxOut: Int = Extract.MaxLayerBytes): Array[Byte] = {
     val inf = new java.util.zip.Inflater()
-    inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream(math.min(math.max(64, data.length * 4), 1 << 20))
-    val chunk = new Array[Byte](8192)
-    var total = 0L
-    while (!inf.finished() && !inf.needsInput()) {
-      val n = inf.inflate(chunk)
-      if (n > 0) {
-        total += n
-        if (total > maxOut) { inf.end(); throw new IllegalStateException(s"FlateDecode output exceeds $maxOut bytes") }
-        out.write(chunk, 0, n)
-      }
-      else if (n == 0 && inf.needsDictionary()) throw new java.util.zip.DataFormatException("needs dict")
-    }
-    inf.end()
-    out.toByteArray
+    try {
+      inf.setInput(data)
+      val out = new LayerBuffer("FlateDecode", maxOut, data.length)
+      out.drain(inf)
+      if (inf.needsDictionary()) throw new java.util.zip.DataFormatException("needs dict")
+      out.result()
+    } finally inf.end()
   }
 
   private def streamData(st: StreamObj, objs: Map[Int, V]): Array[Byte] = {

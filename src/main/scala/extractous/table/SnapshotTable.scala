@@ -255,7 +255,7 @@ final class SnapshotTable(val root: String) {
     val incDay = incoming.withColumn("warc_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
     val cols = incDay.columns.toSeq
     // one winner per url WITHIN the increment: (warc_ts, content hash) order
-    val ord = struct(col("warc_ts"), xxhash64(concat_ws(" ", cols.map(col): _*)))
+    val ord = struct(col("warc_ts"), xxhash64(concat_ws("\u0000", cols.map(col): _*)))
     val incW = incDay.groupBy(col("url"))
       .agg(max_by(struct(cols.map(col): _*), ord).as("_r"))
       .select(col("_r.*"))

@@ -1,6 +1,6 @@
 package extractous
 
-import extractous.core.Brotli
+import extractous.core.{Brotli, BudgetExceededException}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Brotli decoder vs the REAL Google encoder: the goldens under
@@ -52,8 +52,8 @@ class BrotliSpec extends AnyFunSuite {
   }
 
   test("output cap: a decodable stream refuses to exceed maxOut") {
-    val e = intercept[IllegalArgumentException](Brotli.decode(gold("repeat_q5.br"), maxOut = 1000))
-    assert(e.getMessage.contains("cap"))
+    val e = intercept[BudgetExceededException](Brotli.decode(gold("repeat_q5.br"), maxOut = 1000))
+    assert(e.getMessage.contains("budget"))
   }
 
   test("truncation: every golden prefix throws cleanly, never hangs or crashes") {

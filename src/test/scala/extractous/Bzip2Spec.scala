@@ -1,7 +1,7 @@
 package extractous
 
 import org.scalatest.funsuite.AnyFunSuite
-import extractous.core.{Bzip2, Extract}
+import extractous.core.{BudgetExceededException, Bzip2, Extract}
 import extractous.gen.{BzipWriter, CorpusGen, TarWriter}
 import extractous.model.ExtractStatus
 import extractous.sniff.MimeSniffer
@@ -140,7 +140,7 @@ class Bzip2Spec extends AnyFunSuite {
 
   test("bomb cap: output beyond the cap is refused mid-emit") {
     val packed = BzipWriter.bz2(sample)
-    val e = intercept[IllegalStateException](Bzip2.decode(packed, cap = 16))
-    assert(e.getMessage.contains("cap"))
+    val e = intercept[BudgetExceededException](Bzip2.decode(packed, cap = 16))
+    assert(e.getMessage.contains("budget"))
   }
 }

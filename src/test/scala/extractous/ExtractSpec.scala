@@ -167,7 +167,7 @@ class ExtractSpec extends AnyFunSuite {
       val html = "<html><body>" + Seq.fill(40)(bits(rnd.nextInt(bits.length))).mkString + "</body></html>"
       val r = Extract(html.getBytes("UTF-8"))
       assert(r.status == 0)
-      assert(!r.text.contains(' '))
+      assert(!r.text.contains('\u0000'))
     }
   }
 

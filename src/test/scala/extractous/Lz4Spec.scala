@@ -1,6 +1,6 @@
 package extractous
 
-import extractous.core.{Extract, Lz4, UnsupportedArchiveException}
+import extractous.core.{BudgetExceededException, Extract, Lz4, UnsupportedArchiveException}
 import extractous.gen.Lz4Writer
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -86,7 +86,19 @@ class Lz4Spec extends AnyFunSuite {
   test("decompression bomb hits the budget, never OOM") {
     val bomb = Lz4Writer.lz4(new Array[Byte](4 * 1024 * 1024))
     assert(bomb.length < 20000) // zeros compress hard
-    assertThrows[IllegalArgumentException](Lz4.decode(bomb, maxOut = 1024 * 1024))
+    assertThrows[BudgetExceededException](Lz4.decode(bomb, maxOut = 1024 * 1024))
+  }
+
+  test("frames are independent: a match never reaches into the previous frame") {
+    // FLG 0x40 / BD 0x40: no checksums, 64 KiB blocks; 0xC0 is the header checksum
+    def frame(block: Int*): Array[Byte] =
+      Array(0x04, 0x22, 0x4D, 0x18, 0x40, 0x40, 0xC0).map(_.toByte) ++ block.map(_.toByte) ++ new Array[Byte](4)
+    val f1 = frame(Seq(0x08, 0x00, 0x00, 0x80) ++ "abcdefgh".map(_.toInt): _*) // stored block
+    val f2 = frame(0x03, 0x00, 0x00, 0x00, 0x00, 0x08, 0x00) // no literals, a 4-byte match at offset 8
+    assert(new String(Lz4.decode(f1), "UTF-8") == "abcdefgh")
+    val e = intercept[IllegalArgumentException](Lz4.decode(f1 ++ f2))
+    assert(e.getMessage == "lz4: match offset 8 reaches before frame start")
+    assert(Extract(f1 ++ f2).status == extractous.model.ExtractStatus.ExtractionFailed)
   }
 
   test("writer frames round-trip through the independent decoder (shapes incl. stored blocks)") {

@@ -1,6 +1,7 @@
 package extractous
 
 import extractous.config.{ExtractorConfig, OfficeConfig}
+import extractous.core.BudgetExceededException
 import extractous.gen.DocxWriter
 import extractous.model.ExtractStatus
 import extractous.office.{OfficeExtractor, ZipUtil}
@@ -100,8 +101,8 @@ class OfficeSpec extends AnyFunSuite {
     assert(bomb.length < 64 * 1024) // deflated zeros: the budget, not the input size, is what bounds memory
     assert(ZipUtil.members(bomb, maxEntry = 4 * MB).map(_._2.length) == Seq(4 * MB))
     Seq[Array[Byte] => Any](ZipUtil.members(_, maxEntry = MB), ZipUtil.entries(_, maxEntry = MB)).foreach { walk =>
-      val e = intercept[IllegalStateException](walk(bomb))
-      assert(e.getMessage == "zip entry 'zeros.bin' exceeds inflate budget")
+      val e = intercept[BudgetExceededException](walk(bomb))
+      assert(e.getMessage == s"zip entry 'zeros.bin': output exceeds $MB-byte budget")
     }
   }
 
@@ -110,8 +111,9 @@ class OfficeSpec extends AnyFunSuite {
     val zip = DocxWriter.zip((1 to 5).map(i => s"part$i.bin" -> new Array[Byte](300 * KB)))
     assert(ZipUtil.members(zip, maxTotal = 1500 * KB).map(_._1) == (1 to 5).map(i => s"part$i.bin"))
     Seq[Array[Byte] => Any](ZipUtil.members(_, maxTotal = 1000 * KB), ZipUtil.entries(_, maxTotal = 1000 * KB)).foreach { walk =>
-      val e = intercept[IllegalStateException](walk(zip))
-      assert(e.getMessage == "zip entry 'part4.bin' exceeds inflate budget")
+      val e = intercept[BudgetExceededException](walk(zip))
+      // the entry's budget is what the first three entries left of the archive's
+      assert(e.getMessage == s"zip entry 'part4.bin': output exceeds ${100 * KB}-byte budget")
     }
   }
 

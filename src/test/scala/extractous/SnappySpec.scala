@@ -1,6 +1,6 @@
 package extractous
 
-import extractous.core.{Extract, Snappy, UnsupportedArchiveException}
+import extractous.core.{BudgetExceededException, Extract, Snappy, UnsupportedArchiveException}
 import extractous.gen.SnappyWriter
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -68,7 +68,7 @@ class SnappySpec extends AnyFunSuite {
 
   test("decompression bomb hits the budget, never OOM") {
     val bomb = SnappyWriter.sz(new Array[Byte](4 * 1024 * 1024))
-    assertThrows[IllegalArgumentException](Snappy.decodeFramed(bomb, maxOut = 1024 * 1024))
+    assertThrows[BudgetExceededException](Snappy.decodeFramed(bomb, maxOut = 1024 * 1024))
   }
 
   test("fuzz: random corruption throws or returns, never hangs/OOMs") {

@@ -1,6 +1,6 @@
 package extractous
 
-import extractous.core.Zstd
+import extractous.core.{BudgetExceededException, Zstd}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Zstandard decoder vs REAL `zstd` CLI output (v1.5.7): the embedded
@@ -469,7 +469,7 @@ class ZstdSpec extends AnyFunSuite {
     // crafted concatenation cannot multiply the bomb cap frame by frame
     val cap = text.length + 64L
     assert(java.util.Arrays.equals(Zstd.decode(g1, maxOut = cap), text))
-    val e = intercept[IllegalArgumentException](Zstd.decode(g1 ++ g5, maxOut = cap))
+    val e = intercept[BudgetExceededException](Zstd.decode(g1 ++ g5, maxOut = cap))
     assert(e.getMessage.contains("budget"))
   }
 
